@@ -127,9 +127,9 @@ def bench_pip(spark, cores):
 
 
 def bench_pip_poly(spark, cores):
-    """Exact polygon PIP (bbox prefilter + Arrow ray-cast refine) over the
-    full extracted corpus x 100 hotspot polygons — the vectorized-UDF scale
-    path, not just the bbox join."""
+    """Exact polygon PIP (broadcast bbox prefilter + unrolled codegen
+    ray-cast refine) over the full extracted corpus x 100 hotspot
+    polygons — the exact refine, not just the bbox join."""
     from cloudtile_spark.operators.joins import pip_join
     from cloudtile_spark.sources.zones import synth_zones
 
@@ -138,16 +138,14 @@ def bench_pip_poly(spark, cores):
 
 
 def bench_pip_poly_sql(spark, cores):
-    """Same exact-PIP workload as bench_pip_poly but through the all-JVM
-    unrolled ray-cast path (pip_join_codegen): no Python workers, no Arrow
-    round trips — measures what moving the refine into WholeStageCodegen
-    buys, and is immune to the Python-worker wakeup jitter documented in
-    BENCH/BANDWIDTH.md."""
-    from cloudtile_spark.operators.joins import pip_join_codegen
+    """The same code as bench_pip_poly (pip_join routes 8-vertex zones to
+    the all-JVM codegen refine); the leg key stays for the frozen JSON
+    contract."""
+    from cloudtile_spark.operators.joins import pip_join
     from cloudtile_spark.sources.zones import synth_zones
 
     feats = spark.read.parquet(FEATURES_DIR)
-    return pip_join_codegen(feats, synth_zones(100)).count()
+    return pip_join(feats, synth_zones(100)).count()
 
 
 def bench_pip_shuffle_sql(spark, cores):
@@ -190,17 +188,18 @@ def bench_knn(spark, cores):
 
 
 def bench_pip_shuffle(spark, cores, n_zones=None):
-    """No-broadcast PIP (rings as rows, cogroup on cell) over the full
-    corpus x BENCH_ZONES polygons — the 'both sides 100 TB' path added in
-    round 3. Zone count is env-tunable so the zone-scaling experiment
-    (BENCH/SHUFFLE_JOIN.md) runs the same leg at 10x zones."""
-    from cloudtile_spark.operators.joins import pip_join_shuffle, zones_to_df
+    """No-broadcast PIP (pip_join_shuffle_codegen) over the full corpus x
+    BENCH_ZONES polygons at the default broadcast threshold; the operator
+    plans no broadcast at any threshold, so this runs the same code as
+    bench_pip_shuffle_sql. Zone count is env-tunable so the zone-scaling
+    experiment (BENCH/SHUFFLE_JOIN.md) runs the same leg at 10x zones."""
+    from cloudtile_spark.operators.joins import pip_join_shuffle_codegen
     from cloudtile_spark.sources.zones import synth_zones
 
     n_zones = n_zones or int(os.environ.get("BENCH_ZONES", "400"))
     feats = spark.read.parquet(FEATURES_DIR)
-    zdf = zones_to_df(spark, synth_zones(n_zones))
-    return pip_join_shuffle(feats, zdf, res=7, salt_buckets=8).count()
+    return pip_join_shuffle_codegen(feats, synth_zones(n_zones),
+                                    res=7).count()
 
 
 def main() -> None:
@@ -244,8 +243,8 @@ def main() -> None:
         throughput["codegen_pip_rows_per_sec"] = round(n_rows / t, 1)
 
     if want("pip_shuffle_2m"):
-        # cogroup Arrow leg: same Python-worker + Arrow warm-up cost as
-        # pip_poly/knn (WARM_LEGS rationale above)
+        # first no-broadcast PIP leg: one untimed run compiles its plan
+        # (WARM_LEGS rationale above)
         t, n_rows = timed(lambda: bench_pip_shuffle(spark, cores),
                           warmup=True)
         times["pip_shuffle_2m"] = round(t, 3)

@@ -1,14 +1,18 @@
 """Spatial joins: point-in-polygon and kNN.
 
 The reference contains NO joins (single-input subprocess pipeline — SURVEY.md
-§2.C); these are the operators the north rule adds: PIP via cell-prefilter +
-exact ray-cast refine, kNN via cell k-ring expansion with a certified-exact
-fallback. All coarse stages are JVM-side equi/range joins; Python appears
-only as Arrow-batched pandas UDFs for the exact geometry refine.
+§2.C); these are the operators the north rule adds: PIP via a coarse
+bbox/cell candidate join + exact even-odd refine, kNN via cell k-ring
+expansion with a certified-exact fallback. All coarse stages are JVM-side
+equi/range joins; the PIP refine is an unrolled JVM expression, and Python
+appears only as an Arrow-batched pandas kernel for rings too wide to unroll.
 
 Scale design:
-- The polygon / query side is the SMALL side -> broadcast (matches
-  `df.join(broadcast(dim))`); the 100 TB point side never shuffles for PIP.
+- PIP has one entry point per join contract, built from the same ring
+  table, cell cover and refine router: :func:`pip_join` broadcasts the
+  (small) zone side, so the 100 TB point side never shuffles;
+  :func:`pip_join_shuffle_codegen` shuffles the point side once on its
+  cell id and plans no broadcast at all.
 - kNN shuffles points once on cell id (the k-ring join key). Skewed metro
   cells are split by AQE skew-join; candidate lists per query are bounded
   by ring size, then window top-k runs on the (small) candidate set.
@@ -20,13 +24,14 @@ Scale design:
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .. import caching, geom, tiles
+from .. import caching, cells, geom, tiles
 
 EARTH_R = geom.EARTH_RADIUS_M
 
@@ -35,176 +40,119 @@ EARTH_R = geom.EARTH_RADIUS_M
 # Point-in-polygon join
 # ---------------------------------------------------------------------------
 
-def pip_join_bbox(points: DataFrame, zones: DataFrame) -> DataFrame:
-    """Coarse PIP: point in zone bbox. zones(zone_id, xmin, xmax, ymin, ymax)
-    broadcast; the point side streams through without shuffling."""
-    return points.join(
-        F.broadcast(zones),
-        (points.lon >= zones.xmin) & (points.lon < zones.xmax)
-        & (points.lat >= zones.ymin) & (points.lat < zones.ymax),
-    )
-
-
-# pip_join routing: the all-JVM unrolled ray-cast (pip_join_codegen) is
-# bit-identical to the Arrow refine and measured ~4x faster on the bench
-# corpus (driver BENCH_r05: 8.9s Arrow vs 1.5s codegen for the same leg),
-# so it is the DEFAULT strategy whenever the flattened-ring broadcast
-# table stays sane. The Arrow kernel remains the parity oracle
-# (tests/test_joins.py) and the fallback for vertex counts that would
-# blow up the unrolled expression or the broadcast row width.
+# Refine routing: the all-JVM unrolled ray cast runs inside WholeStageCodegen
+# and beat the Arrow refine in both join forms at 4 cores
+# (BENCH/PIP_STRATEGIES.md), so it is used whenever the rings fit the
+# unrolled-expression budget and the zone table stays sane. Wider rings go
+# to one Arrow kernel that holds the rings in its closure.
 PIP_CODEGEN_MAX_VERTS = 128       # terms in the unrolled even-odd expr
-PIP_CODEGEN_MAX_CELLS = 4_000_000  # zones x verts: broadcast-table doubles
+PIP_CODEGEN_MAX_CELLS = 4_000_000  # zones x verts: zone-table doubles
+
+_PIP_COLS = ("feature_id", "lon", "lat", "zone_id")
+_PIP_SCHEMA = "feature_id long, lon double, lat double, zone_id long"
+# inclusive on every side: a prefilter must keep any point the ray cast
+# could accept
+_BBOX_SQL = "lon >= xmin AND lon <= xmax AND lat >= ymin AND lat <= ymax"
 
 
-def pip_join(points: DataFrame, zones_pdf: pd.DataFrame) -> DataFrame:
-    """Exact point-in-polygon join — strategy router.
+class _Rings(NamedTuple):
+    zone_id: np.ndarray  # (Z,) int64
+    bbox: np.ndarray     # (Z, 4): xmin, xmax, ymin, ymax
+    xy: np.ndarray       # (Z, 2V): x0..x{V-1}, y0..y{V-1}
+    max_v: int           # V
 
-    Routes to :func:`pip_join_codegen` (broadcast flattened-ring table +
-    unrolled even-odd ray cast, zero Python operators) when every ring
-    fits the unrolled-expression budget; falls back to
-    :func:`pip_join_arrow` (bbox broadcast join + Arrow ray-cast refine)
-    for pathological vertex counts. Both strategies produce bit-identical
-    output (same IEEE ops in the same order — parity pytest + oracle hash
-    47bc2b56e254 across all variants).
+
+def _ring_table(zones_pdf: pd.DataFrame) -> _Rings:
+    """Flatten the zone rings (zone_id, ring as an (n, 2) array) into fixed
+    coordinate columns. A closing vertex is dropped; shorter rings repeat
+    vertex 0, and those padded zero-length edges add no crossings. All
+    rings go through one concatenated vertex array: bboxes and padding are
+    array ops, not a per-zone loop."""
+    rings = [np.asarray(r, dtype=np.float64).reshape(-1, 2)
+             for r in zones_pdf.get("ring", ())]
+    n = np.array([len(r) for r in rings], dtype=np.int64)
+    flat = np.concatenate(rings) if rings else np.empty((0, 2))
+    start = np.cumsum(n) - n
+    n -= (flat[start] == flat[start + n - 1]).all(axis=1)
+    max_v = int(n.max(initial=0))
+    col = np.arange(max_v)
+    idx = start[:, None] + np.where(col < n[:, None], col, 0)
+    xs, ys = flat[idx, 0], flat[idx, 1]
+    bbox = np.column_stack([xs.min(1, initial=np.inf),
+                            xs.max(1, initial=-np.inf),
+                            ys.min(1, initial=np.inf),
+                            ys.max(1, initial=-np.inf)])
+    zone_id = np.asarray(zones_pdf.get("zone_id", ()), dtype=np.int64)
+    return _Rings(zone_id, bbox, np.hstack([xs, ys]), max_v)
+
+
+def _codegen_fits(rt: _Rings) -> bool:
+    return (rt.max_v <= PIP_CODEGEN_MAX_VERTS
+            and rt.max_v * len(rt.zone_id) <= PIP_CODEGEN_MAX_CELLS)
+
+
+def _zone_frame(spark, rt: _Rings, rep: np.ndarray, codegen: bool,
+                cell: np.ndarray | None = None) -> DataFrame:
+    """One zone-table row per index in ``rep``: the cover ``cell`` if
+    given, zone_id, the bbox and, on the codegen route, the vertex
+    columns. Shipped through the Arrow pandas path (a LocalRelation; a
+    list of tuples would be pickled row by row and plan as an RDD scan)."""
+    data = {} if cell is None else {"cell": cell}
+    data["zone_id"] = rt.zone_id[rep]
+    data.update(zip(("xmin", "xmax", "ymin", "ymax"), rt.bbox[rep].T))
+    if codegen:
+        names = ([f"x{i}" for i in range(rt.max_v)]
+                 + [f"y{i}" for i in range(rt.max_v)])
+        data.update(zip(names, rt.xy[rep].T))
+    schema = ", ".join(f"{c} {'long' if v.dtype.kind == 'i' else 'double'}"
+                       for c, v in data.items())
+    return spark.createDataFrame(pd.DataFrame(data), schema)
+
+
+def _cell_cover(bbox: np.ndarray, res: int, width: int):
+    """(eff, rep, cell): every zone's bbox tile cover at resolution ``eff``
+    as zone-row indices and cell ids, built with array ops (same corner
+    calls and x-outer/y-inner order as tiles.bbox_tile_cover).
+
+    ``eff`` is the finest of res+2 .. res whose cover keeps rows x
+    ``width`` under PIP_CODEGEN_MAX_CELLS: at a coarse res the equi-join
+    key has few distinct hot cells (metro hotspots), so a handful of
+    shuffle partitions carry the whole candidate stream — measured 5.1s at
+    res 7 vs 1.0s at res 9 for the SAME ~110M candidates (skew, not
+    volume). Output is invariant to the cover resolution.
     """
-    max_v = 0
-    for _, r in zones_pdf.iterrows():
-        ring = np.asarray(r.ring, dtype=np.float64)
-        if len(ring) and np.array_equal(ring[0], ring[-1]):
-            ring = ring[:-1]
-        max_v = max(max_v, len(ring))
-    if (max_v <= PIP_CODEGEN_MAX_VERTS
-            and max_v * len(zones_pdf) <= PIP_CODEGEN_MAX_CELLS):
-        return pip_join_codegen(points, zones_pdf)
-    return pip_join_arrow(points, zones_pdf)
+    def ranges(r: int):
+        # (lon_min, lat_min) -> (x0, y1); (lon_max, lat_max) -> (x1, y0)
+        x0, y1 = tiles.lonlat_to_tile(bbox[:, 0], bbox[:, 2], r)
+        x1, y0 = tiles.lonlat_to_tile(bbox[:, 1], bbox[:, 3], r)
+        return x0, x1, y0, y1
+
+    eff = res
+    for cand_res in range(min(res + 2, 14), res - 1, -1):
+        x0, x1, y0, y1 = ranges(cand_res)
+        if int(np.sum((x1 - x0 + 1) * (y1 - y0 + 1))) * width \
+                <= PIP_CODEGEN_MAX_CELLS:
+            eff = cand_res
+            break
+    x0, x1, y0, y1 = ranges(eff)
+    per_zone = ((x1 - x0 + 1) * (y1 - y0 + 1)).astype(np.int64)
+    rep = np.repeat(np.arange(len(bbox)), per_zone)
+    offs = (np.arange(int(per_zone.sum()), dtype=np.int64)
+            - np.repeat(np.cumsum(per_zone) - per_zone, per_zone))
+    nyr = (y1 - y0 + 1)[rep]
+    xx = x0[rep] + offs // nyr
+    yy = y0[rep] + offs % nyr
+    return eff, rep, (tiles.morton(xx, yy) << cells.RES_BITS) | eff
 
 
-def pip_join_arrow(points: DataFrame, zones_pdf: pd.DataFrame) -> DataFrame:
-    """Exact point-in-polygon join (Arrow refine strategy).
-
-    ``zones_pdf`` is a driver-side pandas frame (zone_id, ring) where ring is
-    an (n, 2) float64 array — the polygon side of a PIP join is the small
-    dimension (reference-scale: admin boundaries), so it ships to executors
-    inside the UDF closure (the broadcast pattern), while the point side is
-    filtered by a broadcast bbox join first (coarse) and refined by
-    vectorized ray casting (geom.points_in_polygon) in Arrow batches.
-
-    Returns points columns + zone_id (inner join semantics, multi-match on
-    overlapping zones preserved).
-    """
-    rows = []
-    for _, r in zones_pdf.iterrows():
-        xmin, ymin, xmax, ymax = geom.polygon_bbox(r.ring)
-        rows.append((int(r.zone_id), xmin, xmax, ymin, ymax))
-    spark = points.sparkSession
-    bbox = spark.createDataFrame(
-        rows, "zone_id long, xmin double, xmax double, ymin double, ymax double"
-    )
-    cand = pip_join_bbox(points, bbox).select(
-        "feature_id", "lon", "lat", "zone_id"
-    )
-    rings = {int(r.zone_id): np.asarray(r.ring, dtype=np.float64)
-             for _, r in zones_pdf.iterrows()}
-
-    out_schema = T.StructType([
-        T.StructField("feature_id", T.LongType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("zone_id", T.LongType()),
-    ])
-
-    def refine(batches):
-        for pdf in batches:
-            keep = np.zeros(len(pdf), dtype=bool)
-            for zid, grp in pdf.groupby("zone_id"):
-                mask = geom.points_in_polygon(
-                    grp.lon.values, grp.lat.values, rings[int(zid)]
-                )
-                keep[grp.index.values] = mask
-            yield pdf.loc[keep, ["feature_id", "lon", "lat", "zone_id"]]
-
-    # mapInPandas keeps the refine streaming (no per-row Python, no shuffle)
-    return cand.mapInPandas(refine, schema=out_schema)
-
-
-def pip_join_cells(
-    points: DataFrame,
-    zones_pdf: pd.DataFrame,
-    res: int = 7,
-) -> DataFrame:
-    """Exact PIP via CELL-PREFILTER EQUI-JOIN — the north star's named shape
-    (``df.join(broadcast(polys), on=cell, 'inner')`` + exact refine):
-
-      1. driver-side (zones are the small dim): each zone's bbox tile-cover
-         at resolution ``res`` -> (cell, zone_id) table, broadcast;
-      2. point side gets its cell id (pure column math) and EQUI-joins on
-         cell — unlike the range-predicate bbox join this is a hash join,
-         so it also works un-broadcast (sort-merge + AQE skew split) when
-         the zone side outgrows the broadcast threshold;
-      3. exact ray-cast refine in Arrow batches (same kernel as pip_join).
-
-    Output equals :func:`pip_join` exactly (asserted in tests + oracle).
-    """
-    spark = points.sparkSession
-    cover_rows = []
-    for _, r in zones_pdf.iterrows():
-        xmin, ymin, xmax, ymax = geom.polygon_bbox(r.ring)
-        for x, y in tiles.bbox_tile_cover(xmin, ymin, xmax, ymax, res):
-            cell_id = (int(tiles.morton(np.array([x]), np.array([y]))[0])
-                       << 5) | res
-            cover_rows.append((cell_id, int(r.zone_id)))
-    cover = spark.createDataFrame(cover_rows, "cell long, zone_id long")
-
-    from .. import cells as _cells
-
-    pts = points.withColumn("cell", F.expr(_cells.cell_sql("lon", "lat", res)))
-    cand = pts.join(F.broadcast(cover), "cell").select(
-        "feature_id", "lon", "lat", "zone_id"
-    )
-    rings = {int(r.zone_id): np.asarray(r.ring, dtype=np.float64)
-             for _, r in zones_pdf.iterrows()}
-
-    out_schema = T.StructType([
-        T.StructField("feature_id", T.LongType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("zone_id", T.LongType()),
-    ])
-
-    def refine(batches):
-        for pdf in batches:
-            keep = np.zeros(len(pdf), dtype=bool)
-            for zid, grp in pdf.groupby("zone_id"):
-                keep[grp.index.values] = geom.points_in_polygon(
-                    grp.lon.values, grp.lat.values, rings[int(zid)])
-            yield pdf.loc[keep, ["feature_id", "lon", "lat", "zone_id"]]
-
-    return cand.mapInPandas(refine, schema=out_schema)
-
-
-def _flat_rings(zones_pdf: pd.DataFrame):
-    """Flatten zone rings for the unrolled JVM ray-cast: per zone a tuple
-    (zone_id, xmin, xmax, ymin, ymax, x0..x{V-1}, y0..y{V-1}) with vertex-0
-    padding (padded zero-length edges contribute no crossings), plus the
-    even-odd crossing test as ONE generic SQL expression over those
-    columns (same IEEE op order as geom.points_in_polygon).
-
-    Returns (rows, max_v, inside_expr)."""
-    rows = []
-    max_v = 0
-    rings = []
-    for _, r in zones_pdf.iterrows():
-        ring = np.asarray(r.ring, dtype=np.float64)
-        if np.array_equal(ring[0], ring[-1]):
-            ring = ring[:-1]
-        rings.append((int(r.zone_id), ring))
-        max_v = max(max_v, len(ring))
-    for zid, ring in rings:
-        xmin, ymin, xmax, ymax = geom.polygon_bbox(ring)
-        xs = list(ring[:, 0]) + [float(ring[0, 0])] * (max_v - len(ring))
-        ys = list(ring[:, 1]) + [float(ring[0, 1])] * (max_v - len(ring))
-        rows.append((zid, xmin, xmax, ymin, ymax,
-                     *[float(v) for v in xs], *[float(v) for v in ys]))
+def _inside_sql(max_v: int) -> str:
+    """The even-odd ray cast over the vertex columns as ONE unrolled SQL
+    expression. Each edge term evaluates
+    ``lon < x1 + (lat - y1) / (y2 - y1) * (x2 - x1)``: the same IEEE
+    operations in the same order as geom.points_in_polygon, so both refine
+    routes agree on every double."""
+    if max_v == 0:
+        return "false"  # no zones: no vertex columns to test
     terms = []
     for i in range(max_v):
         j = (i + 1) % max_v
@@ -213,145 +161,88 @@ def _flat_rings(zones_pdf: pd.DataFrame):
             f"AND (lon < x{i} + (lat - y{i}) / (y{j} - y{i})"
             f" * (x{j} - x{i})) THEN 1 ELSE 0 END)"
         )
-    inside = f"(({' + '.join(terms)}) % 2) = 1"
-    return rows, max_v, inside
+    return f"(({' + '.join(terms)}) % 2) = 1"
 
 
-def _flat_ring_table(spark, zones_pdf: pd.DataFrame):
-    """(zone table DataFrame, inside-test SQL expr) — see _flat_rings."""
-    rows, max_v, inside = _flat_rings(zones_pdf)
-    cols = (
-        "zone_id long, xmin double, xmax double, ymin double, ymax double, "
-        + ", ".join(f"x{i} double" for i in range(max_v)) + ", "
-        + ", ".join(f"y{i} double" for i in range(max_v))
-    )
-    zt = spark.createDataFrame(rows, cols)
-    return zt, inside
+def _refine(cand: DataFrame, rt: _Rings, codegen: bool) -> DataFrame:
+    """Exact refine of (point, zone) bbox candidates.
 
-
-def pip_join_codegen(points: DataFrame, zones_pdf: pd.DataFrame) -> DataFrame:
-    """Exact polygon PIP with the refine stage ENTIRELY JVM-side — the
-    third physical strategy beside :func:`pip_join` (Arrow refine) and
-    :func:`pip_join_shuffle` (cogroup refine), same output bit-for-bit.
-
-    The ring table is flattened to fixed coordinate columns
-    (x0..x{V-1}, y0..y{V-1}, padded by repeating vertex 0 — padded edges
-    are zero-length and contribute no crossings) and broadcast; the
-    even-odd ray cast is ONE generic unrolled expression over those
-    columns (V conditional terms + a parity test), so the whole join +
-    refine runs inside WholeStageCodegen: no Python workers, no Arrow
-    round trips, codegen size independent of the zone count.
-
-    Bit-exactness: each edge term evaluates
-    ``lon < x1 + (lat - y1) / (y2 - y1) * (x2 - x1)`` — the same IEEE
-    operations in the same order as geom.points_in_polygon's numpy
-    kernel, so the two paths agree on every double (parity pytest).
-    Scale: the point side streams (bbox range-join prefilter, broadcast
-    zone side only); at 1000 executors this is scan -> broadcast-join ->
-    filter with zero extra shuffles.
+    codegen: a filter on the unrolled ray cast over the vertex columns the
+    zone table carries, so join and refine run inside WholeStageCodegen
+    with no Python worker. Otherwise: one mapInPandas kernel
+    (geom.points_in_polygon per zone group) with the ring table in its
+    closure, keyed by zone_id; it streams the candidates with no extra
+    exchange.
     """
-    zt, inside = _flat_ring_table(points.sparkSession, zones_pdf)
-    return (
-        points.join(
-            F.broadcast(zt),
-            (points.lon >= zt.xmin) & (points.lon < zt.xmax)
-            & (points.lat >= zt.ymin) & (points.lat < zt.ymax),
-        )
-        .where(F.expr(inside))
-        .select("feature_id", "lon", "lat", "zone_id")
-    )
+    if codegen:
+        return cand.where(F.expr(_inside_sql(rt.max_v))).select(*_PIP_COLS)
+    row = {int(z): i for i, z in enumerate(rt.zone_id)}
+    xy, v = rt.xy, rt.max_v
+
+    def kernel(batches):
+        for pdf in batches:
+            lon, lat = pdf.lon.to_numpy(), pdf.lat.to_numpy()
+            keep = np.zeros(len(pdf), dtype=bool)
+            for zid, idx in pdf.groupby("zone_id").indices.items():
+                ring = xy[row[int(zid)]].reshape(2, v).T
+                keep[idx] = geom.points_in_polygon(lon[idx], lat[idx], ring)
+            yield pdf[keep]
+
+    return cand.select(*_PIP_COLS).mapInPandas(kernel, schema=_PIP_SCHEMA)
+
+
+def pip_join(points: DataFrame, zones_pdf: pd.DataFrame) -> DataFrame:
+    """Exact point-in-polygon join, broadcast form.
+
+    ``zones_pdf`` is a driver-side pandas frame (zone_id, ring) where ring
+    is an (n, 2) float64 array — the polygon side of a PIP join is the
+    small dimension (admin boundaries), so its ring table is broadcast and
+    the point side streams through a bbox range join (scan ->
+    broadcast-join -> filter, zero shuffles), then the exact refine.
+
+    Returns (feature_id, lon, lat, zone_id): inner-join semantics,
+    multi-match on overlapping zones preserved. Same rows as
+    :func:`pip_join_shuffle_codegen`.
+    """
+    rt = _ring_table(zones_pdf)
+    codegen = _codegen_fits(rt)
+    zt = _zone_frame(points.sparkSession, rt, np.arange(len(rt.zone_id)),
+                     codegen)
+    return _refine(points.join(F.broadcast(zt), F.expr(_BBOX_SQL)),
+                   rt, codegen)
 
 
 def pip_join_shuffle_codegen(
     points: DataFrame, zones_pdf: pd.DataFrame, res: int = 7,
 ) -> DataFrame:
-    """Exact polygon PIP with NO broadcast and NO Python: the shuffle-only
-    twin of :func:`pip_join_codegen` and the all-JVM twin of
-    :func:`pip_join_shuffle` — same output as both, bit-for-bit.
+    """Exact point-in-polygon join with NO broadcast: the form for zone
+    sides too large to broadcast. Same rows as :func:`pip_join`.
 
-    Plan: the ring coordinates are DENORMALIZED into the cell-cover table
-    driver-side — (cell, zone_id, x0..x{V-1}, y0..y{V-1}), one row per
-    (cover cell, zone), still a tiny table — so the whole join is ONE
-    equi-join on the point's cell id (SortMergeJoin when broadcast is
-    disabled) followed by the unrolled even-odd ray-cast filter. Exactly
-    one shuffle of the point side, keyed on the high-cardinality cell id;
-    nothing to broadcast; no Python workers to wake (the construct
-    BENCH/BANDWIDTH.md shows dominates local-mode scaling noise in the
-    cogroup variant). A first cut joined a separate flattened-ring table
-    on zone_id — that re-shuffles the full candidate set on a
-    |zones|-cardinality key (measured 4.5x slower than the cogroup path
-    at 200 zones / 94M candidates); the denormalized cover keeps the ring
-    constants on the small side where they belong.
+    Plan: the ring table is DENORMALIZED into the cell-cover table
+    driver-side — (cell, zone_id, bbox, vertex columns), one row per
+    (cover cell, zone), still a small table — so the whole join is ONE
+    salted equi-join on the point's cell id followed by the bbox test and
+    the refine. Exactly one shuffle of the point side, keyed on the
+    high-cardinality cell id. A first cut joined a separate ring table on
+    zone_id — that re-shuffles the full candidate set on a
+    |zones|-cardinality key (measured 4.5x slower at 200 zones / 94M
+    candidates); the denormalized cover keeps the ring constants on the
+    small side. Over-budget rings take the Arrow refine, whose rings ride
+    in the kernel's closure, so they never broadcast either.
     """
     spark = points.sparkSession
-    zrows, max_v, inside = _flat_rings(zones_pdf)
-    # Cover at a FINER resolution than the caller's base `res` when the
-    # cover table stays small: at coarse res the equi-join key has few
-    # distinct hot cells (metro hotspots), so a handful of shuffle
-    # partitions carry the whole candidate stream — measured 5.1s at
-    # res 7 vs 1.0s at res 9 for the SAME ~110M candidates (skew, not
-    # volume). Output is invariant to the cover resolution; the cap
-    # bounds the driver-built table (rows x ring width).
-    #
-    # The cover is built VECTORIZED and shipped via the Arrow pandas
-    # path: the first cut looped bbox_tile_cover + a 1-element morton()
-    # per cell and pickled 55k 22-wide tuples through createDataFrame —
-    # ~4 s of driver-side Python inside the timed leg at 400 zones /
-    # res 9 (guide §5: the driver should do almost no data work). Same
-    # rows, same schema (int64 -> long, float64 -> double).
-    cols = ("cell long, zone_id long, xmin double, xmax double, "
-            "ymin double, ymax double, "
-            + ", ".join(f"x{i} double" for i in range(max_v)) + ", "
-            + ", ".join(f"y{i} double" for i in range(max_v)))
-    if not zrows:
-        cover = spark.createDataFrame([], cols)
-    else:
-        zids = np.asarray([r[0] for r in zrows], dtype=np.int64)
-        za = np.asarray([r[1:5] for r in zrows], dtype=np.float64)
-        coords = np.asarray([r[5:] for r in zrows], dtype=np.float64)
-        width = 2 * max_v + 6
-
-        def _ranges(r: int):
-            # same corner calls as tiles.bbox_tile_cover, batched:
-            # (lon_min, lat_min) -> (x0, y1); (lon_max, lat_max) -> (x1, y0)
-            x0, y1 = tiles.lonlat_to_tile(za[:, 0], za[:, 2], r)
-            x1, y0 = tiles.lonlat_to_tile(za[:, 1], za[:, 3], r)
-            return x0, x1, y0, y1
-
-        eff = res
-        for cand_res in range(min(res + 2, 14), res - 1, -1):
-            x0, x1, y0, y1 = _ranges(cand_res)
-            total = int(np.sum((x1 - x0 + 1) * (y1 - y0 + 1)))
-            if total * width <= PIP_CODEGEN_MAX_CELLS:
-                eff = cand_res
-                break
-        x0, x1, y0, y1 = _ranges(eff)
-        per_zone = ((x1 - x0 + 1) * (y1 - y0 + 1)).astype(np.int64)
-        rep = np.repeat(np.arange(len(zids)), per_zone)
-        offs = (np.arange(int(per_zone.sum()), dtype=np.int64)
-                - np.repeat(np.cumsum(per_zone) - per_zone, per_zone))
-        nyr = (y1 - y0 + 1)[rep]
-        xx = x0[rep] + offs // nyr   # bbox_tile_cover order: x outer,
-        yy = y0[rep] + offs % nyr    # y inner
-        data = {"cell": (tiles.morton(xx, yy) << 5) | eff,
-                "zone_id": zids[rep],
-                "xmin": za[rep, 0], "xmax": za[rep, 1],
-                "ymin": za[rep, 2], "ymax": za[rep, 3]}
-        for i in range(max_v):
-            data[f"x{i}"] = coords[rep, i]
-        for i in range(max_v):
-            data[f"y{i}"] = coords[rep, max_v + i]
-        cover = spark.createDataFrame(pd.DataFrame(data))
-
-    from .. import cells as _cells
-
-    pts = points.withColumn("cell", F.expr(_cells.cell_sql("lon", "lat", eff)))
+    rt = _ring_table(zones_pdf)
+    codegen = _codegen_fits(rt)
+    # the width cap bounds the driver-built cover (rows x columns)
+    width = 6 + (2 * rt.max_v if codegen else 0)
+    eff, rep, cell = _cell_cover(rt.bbox, res, width)
+    cover = _zone_frame(spark, rt, rep, codegen, cell=cell)
+    pts = points.withColumn("cell", F.expr(cells.cell_sql("lon", "lat", eff)))
     # salt the join key: even at the refined cover resolution a few metro
-    # cells hold a large share of the points, and the post-join ray-cast
-    # filter runs inside the join stage — a deterministic per-row salt on
-    # the point side (cover rows replicate to every salt) spreads each hot
-    # cell's candidates over `salt` reducers (same trick as
-    # pip_join_shuffle's cogroup; results salt-invariant).
+    # cells hold a large share of the points, and the post-join refine runs
+    # inside the join stage — a deterministic per-row salt on the point
+    # side (cover rows replicate to every salt) spreads each hot cell's
+    # candidates over `salt` reducers (results salt-invariant).
     salt = max(2, min(16, spark.sparkContext.defaultParallelism // 2))
     # explode (not a broadcast crossJoin): keeps the plan free of ANY
     # BroadcastExchange, preserving the operator's no-broadcast contract
@@ -359,21 +250,17 @@ def pip_join_shuffle_codegen(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
     pts = pts.withColumn(
         "_salt", F.pmod(F.col("feature_id"), F.lit(salt)).cast("int"))
-    # bbox short-circuit BEFORE the unrolled ray cast: a cover cell is up
-    # to a full cell wider than the zone's bbox, so cheap compares drop
-    # those candidates before the V-term even-odd expression evaluates
-    # (AND short-circuits in codegen) — the same prefilter the cogroup
-    # refine applies NumPy-side.
+    # bbox short-circuit BEFORE the refine: a cover cell is up to a full
+    # cell wider than the zone's bbox, so cheap compares drop those
+    # candidates before the V-term even-odd expression evaluates (the two
+    # filters combine into one AND, which short-circuits in codegen).
     # shuffle_hash on the cover side: builds the per-partition hash map on
     # the small side instead of sorting the full point side (SortMergeJoin)
     # — measured ~8% faster at 4M points / 200 zones — and pins the
     # operator to its no-broadcast contract at ANY threshold setting.
-    bbox = ("lon >= xmin AND lon <= xmax AND lat >= ymin AND lat <= ymax")
-    return (
-        pts.join(cover.hint("shuffle_hash"), ["cell", "_salt"])
-        .where(F.expr(f"({bbox}) AND ({inside})"))
-        .select("feature_id", "lon", "lat", "zone_id")
-    )
+    cand = pts.join(cover.hint("shuffle_hash"), ["cell", "_salt"]) \
+        .where(F.expr(_BBOX_SQL))
+    return _refine(cand, rt, codegen)
 
 
 # ---------------------------------------------------------------------------
@@ -752,189 +639,8 @@ def knn_join_adaptive(
 
 
 # ---------------------------------------------------------------------------
-# Fully-shuffled variants: no broadcast, no driver-side ring closure
-# (the "100 TB on BOTH sides" path — round-2 verdict Missing #1)
+# No-broadcast kNN: the path for query sides too large to broadcast
 # ---------------------------------------------------------------------------
-
-def zones_to_df(spark, zones_pdf: pd.DataFrame) -> DataFrame:
-    """Zone rings as DataFrame ROWS (zone_id, ring flattened [x0,y0,x1,...])
-    — the representation that scales past the broadcast threshold: rings
-    travel through shuffles like any other column instead of shipping to
-    every executor inside a UDF closure."""
-    rows = [
-        (int(r.zone_id),
-         [float(v) for v in np.asarray(r.ring, dtype=np.float64).ravel()])
-        for _, r in zones_pdf.iterrows()
-    ]
-    return spark.createDataFrame(rows, "zone_id long, ring array<double>")
-
-
-def zone_cell_cover(zones: DataFrame, res: int) -> DataFrame:
-    """Distributed (cell, zone_id, ring) cover: each zone row expands to the
-    cells its bbox covers at ``res`` — an Arrow map over the ZONE side (work
-    scales with the zone table, never the driver)."""
-    out_schema = T.StructType([
-        T.StructField("cell", T.LongType()),
-        T.StructField("zone_id", T.LongType()),
-        T.StructField("ring", T.ArrayType(T.DoubleType())),
-        T.StructField("xmin", T.DoubleType()),
-        T.StructField("ymin", T.DoubleType()),
-        T.StructField("xmax", T.DoubleType()),
-        T.StructField("ymax", T.DoubleType()),
-    ])
-
-    def cover(batches):
-        for pdf in batches:
-            cells, zids, rings, boxes = [], [], [], []
-            for zid, flat in zip(pdf.zone_id, pdf.ring):
-                arr = np.asarray(flat, dtype=np.float64).reshape(-1, 2)
-                bbox = geom.polygon_bbox(arr)
-                xmin, ymin, xmax, ymax = bbox
-                for x, y in tiles.bbox_tile_cover(xmin, ymin, xmax, ymax,
-                                                  res):
-                    mort = int(tiles.morton(np.array([x]), np.array([y]))[0])
-                    cells.append((mort << 5) | res)
-                    zids.append(int(zid))
-                    rings.append(list(flat))
-                    boxes.append(bbox)
-            bx = np.asarray(boxes, dtype=np.float64).reshape(-1, 4)
-            yield pd.DataFrame(
-                {"cell": pd.Series(cells, dtype="int64"),
-                 "zone_id": pd.Series(zids, dtype="int64"),
-                 "ring": pd.Series(rings, dtype=object),
-                 "xmin": bx[:, 0], "ymin": bx[:, 1],
-                 "xmax": bx[:, 2], "ymax": bx[:, 3]})
-
-    return zones.mapInPandas(cover, schema=out_schema)
-
-
-def pip_join_shuffle(
-    points: DataFrame,
-    zones: DataFrame,
-    res: int = 7,
-    salt_buckets: int = 1,
-) -> DataFrame:
-    """Exact PIP with NO broadcast and NO driver-side state — both sides
-    can be 100 TB:
-
-      1. zone side expands to its cell cover at ``res`` WITH the ring as a
-         column (zone_cell_cover — distributed, rings stay rows);
-      2. point side gets its cell id (pure column math);
-      3. COGROUP on cell: both sides hash-shuffle on the cell key, each
-         task sees one cell's points + that cell's candidate (zone, ring)
-         rows, and refines with the same vectorized ray-cast kernel
-         (geom.points_in_polygon) in Arrow batches.
-
-    ``salt_buckets > 1`` splits hot cells: points take a per-row salt and
-    the (small relative to points) cover rows replicate to every salt, so
-    a metro cell's refine spreads over ``salt_buckets`` tasks. Results are
-    salt-invariant (asserted in tests).
-
-    Output equals :func:`pip_join` exactly (multi-match preserved). Skew
-    beyond salting is AQE's job; `res` trades cover size (4^res cells max)
-    against per-group width.
-    """
-    from .. import cells as _cells
-
-    # Cover one level FINER than the caller's base `res`: halved cell
-    # width spreads the hotspot cells over ~4x more cogroup keys (less
-    # refine skew, tighter bbox candidates) — interleaved A/B at 2M
-    # points x 400 zones: res 7 -> 7.98s, res 8 -> 6.32s, res 9 -> 8.95s
-    # (finer still loses to per-group Python batch overhead). Output is
-    # invariant to the cover resolution (tests assert res 5/7 equality).
-    eff = min(res + 1, 12)
-    # stage the cover: it is consumed by TWO subtrees (the distinct-cell
-    # semi-join prefilter and the cogroup side), and without the persist
-    # the zone-side Python mapInPandas stage executes twice per action —
-    # measured 10.5s -> 4.0s on the cold first invocation at 2M x 400
-    # zones (warm delta ~0.15s; guide §5: cache only what is reused and
-    # expensive to recompute — a Python stage is both).
-    cover = caching.stage(zone_cell_cover(zones, eff))
-    pts = points.withColumn("cell", F.expr(_cells.cell_sql("lon", "lat", eff)))
-    # semi-join prefilter (pure JVM): only points in cells some zone covers
-    # reach the Python cogroup. Without this, every empty point-cell group
-    # still pays an Arrow+Python round trip — measured as a ~25s flat cost
-    # at 200k points regardless of zone count. The distinct cover-cell set
-    # is bounded by 4^res rows no matter how large the zone table is.
-    pts = pts.join(cover.select("cell").distinct(), "cell", "left_semi")
-    if salt_buckets > 1:
-        salts = points.sparkSession.range(salt_buckets) \
-            .select(F.col("id").cast("int").alias("_salt"))
-        # the salt table is a literal <= salt_buckets rows — broadcasting it
-        # is not a scale assumption about either data side
-        cover = cover.crossJoin(F.broadcast(salts))
-        pts = pts.withColumn(
-            "_salt",
-            F.pmod(F.col("feature_id"), F.lit(salt_buckets)).cast("int"))
-        keys = ["cell", "_salt"]
-    else:
-        keys = ["cell"]
-
-    # Arrow-NATIVE cogroup refine (applyInArrow, not applyInPandas): the
-    # refine only needs NumPy views of the point columns and emits plain
-    # arrays, so the pandas DataFrame layer on both sides of the boundary
-    # was pure conversion overhead on the (large) match output —
-    # interleaved A/B at 2M points x 400 zones / 93M matches: pandas
-    # 3.77s -> arrow 2.46s, identical rows (guide §4.2: hand whole
-    # batches to vectorized native code, skip row/frame wrappers).
-    import pyarrow as pa
-
-    _EMPTY = pa.table({
-        "feature_id": pa.array([], pa.int64()),
-        "lon": pa.array([], pa.float64()),
-        "lat": pa.array([], pa.float64()),
-        "zone_id": pa.array([], pa.int64()),
-    })
-
-    def refine(left: "pa.Table", right: "pa.Table") -> "pa.Table":
-        if left.num_rows == 0 or right.num_rows == 0:
-            return _EMPTY
-        lons = left.column("lon").to_numpy(zero_copy_only=False)
-        lats = left.column("lat").to_numpy(zero_copy_only=False)
-        fids = left.column("feature_id").to_numpy(zero_copy_only=False)
-        zids = right.column("zone_id").to_numpy(zero_copy_only=False)
-        rings = right.column("ring").to_pylist()
-        xmins = right.column("xmin").to_numpy(zero_copy_only=False)
-        ymins = right.column("ymin").to_numpy(zero_copy_only=False)
-        xmaxs = right.column("xmax").to_numpy(zero_copy_only=False)
-        ymaxs = right.column("ymax").to_numpy(zero_copy_only=False)
-        idx_parts: list[np.ndarray] = []
-        zid_parts: list[np.ndarray] = []
-        for i in range(len(zids)):
-            # bbox prefilter: a cell can be far wider than the zone, so
-            # cheap compares cut the expensive ray-cast to bbox candidates
-            pre = ((lons >= xmins[i]) & (lons <= xmaxs[i])
-                   & (lats >= ymins[i]) & (lats <= ymaxs[i]))
-            if not pre.any():
-                continue
-            arr = np.asarray(rings[i], dtype=np.float64).reshape(-1, 2)
-            idx = np.nonzero(pre)[0]
-            mask = geom.points_in_polygon(lons[idx], lats[idx], arr)
-            if mask.any():
-                hit = idx[mask]
-                idx_parts.append(hit)
-                zid_parts.append(
-                    np.full(len(hit), int(zids[i]), dtype=np.int64))
-        if not idx_parts:
-            return _EMPTY
-        # single NumPy gather — per-zone copies + concat were the hot
-        # path at multi-million-row match volumes
-        ii = np.concatenate(idx_parts)
-        return pa.table({
-            "feature_id": pa.array(fids[ii], pa.int64()),
-            "lon": pa.array(lons[ii], pa.float64()),
-            "lat": pa.array(lats[ii], pa.float64()),
-            "zone_id": pa.array(np.concatenate(zid_parts), pa.int64()),
-        })
-
-    return (
-        pts.select(*keys, "feature_id", "lon", "lat").groupBy(*keys)
-        .cogroup(cover.groupBy(*keys))
-        .applyInArrow(
-            refine,
-            schema="feature_id long, lon double, lat double, zone_id long")
-    )
-
 
 def knn_join_shuffle(
     points: DataFrame,

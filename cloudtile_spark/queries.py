@@ -1081,91 +1081,77 @@ def _pip_poly_oracle() -> str:
     )
 
 
-@_register(
-    "pip_poly_join",
-    _pip_poly_oracle(),
-    doc="exact point-in-polygon join via the pip_join strategy router "
-        "(operators/joins.pip_join): broadcast flattened-ring table + "
-        "unrolled all-JVM ray cast by default, Arrow-batch refine fallback "
-        "for pathological vertex counts — both bit-identical; the oracle "
-        "checks it independently via convex half-plane tests",
-)
-def _pip_poly_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.joins import pip_join
+def _pip_zone_stats(spark: SparkSession, sf_dir: str, pip) -> DataFrame:
+    """Per-zone (n_points, min_fid, max_fid) of ``pip(points, zones)`` over
+    docs_geo x synth_zones(25): the shape _pip_poly_oracle computes."""
     from .sources.zones import synth_zones
 
     pts = docs_geo(spark, sf_dir).withColumnRenamed("doc_id", "feature_id")
-    res = pip_join(pts, synth_zones(25))
+    res = pip(pts, synth_zones(25))
     return res.groupBy("zone_id").agg(
         F.count("*").alias("n_points"),
         F.min("feature_id").alias("min_fid"),
         F.max("feature_id").alias("max_fid"),
     )
+
+
+@_register(
+    "pip_poly_join",
+    _pip_poly_oracle(),
+    doc="exact point-in-polygon join, broadcast form (operators/joins."
+        "pip_join): broadcast ring table + bbox range join + unrolled "
+        "all-JVM even-odd ray cast (8-vertex zones fit the codegen "
+        "budget); the oracle checks it independently via convex "
+        "half-plane tests",
+)
+def _pip_poly_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.joins import pip_join
+
+    return _pip_zone_stats(spark, sf_dir, pip_join)
 
 
 @_register(
     "pip_codegen_join",
     _pip_poly_oracle(),
-    doc="exact PIP with the ray-cast refine as ONE unrolled JVM expression "
-        "over a broadcast flattened-ring table (operators/joins."
-        "pip_join_codegen): whole-stage codegen end-to-end, zero Python/"
-        "Arrow round trips — fourth physical strategy, same independent "
-        "convex-half-plane oracle, bit-identical to pip_poly_join",
+    doc="the same broadcast-form PIP as pip_poly_join (operators/joins."
+        "pip_join, codegen refine route: whole-stage codegen end-to-end, "
+        "zero Python/Arrow round trips); kept as a second name on the "
+        "same independent convex-half-plane oracle",
 )
 def _pip_codegen_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.joins import pip_join_codegen
-    from .sources.zones import synth_zones
-
-    pts = docs_geo(spark, sf_dir).withColumnRenamed("doc_id", "feature_id")
-    res = pip_join_codegen(pts, synth_zones(25))
-    return res.groupBy("zone_id").agg(
-        F.count("*").alias("n_points"),
-        F.min("feature_id").alias("min_fid"),
-        F.max("feature_id").alias("max_fid"),
-    )
+    return _pip_poly_join(spark, sf_dir)
 
 
 @_register(
     "pip_shuffle_codegen_join",
     _pip_poly_oracle(),
-    doc="exact PIP with NO broadcast and NO Python: cell-cover equi-join + "
-        "flattened-ring equi-join + unrolled JVM ray-cast (operators/joins."
-        "pip_join_shuffle_codegen) — the shuffle-only twin of "
-        "pip_codegen_join and the all-JVM twin of pip_shuffle_join; same "
-        "independent oracle",
+    doc="exact PIP with NO broadcast and NO Python, base res 7 "
+        "(operators/joins.pip_join_shuffle_codegen): salted shuffle-hash "
+        "equi-join of the points on a cell cover that carries the ring "
+        "coordinates, then the unrolled JVM ray cast; same independent "
+        "oracle",
 )
 def _pip_shuffle_codegen_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.joins import pip_join_shuffle_codegen
-    from .sources.zones import synth_zones
 
-    pts = docs_geo(spark, sf_dir).withColumnRenamed("doc_id", "feature_id")
-    res = pip_join_shuffle_codegen(pts, synth_zones(25), res=7)
-    return res.groupBy("zone_id").agg(
-        F.count("*").alias("n_points"),
-        F.min("feature_id").alias("min_fid"),
-        F.max("feature_id").alias("max_fid"),
-    )
+    return _pip_zone_stats(
+        spark, sf_dir, lambda p, z: pip_join_shuffle_codegen(p, z, res=7))
 
 
 @_register(
     "pip_cells_join",
     _pip_poly_oracle(),
     doc="PIP via cell-prefilter EQUI-join (the north star's named join "
-        "shape: broadcast (cell, zone) cover + hash join + ray-cast refine) "
-        "— second physical strategy, same independent oracle as "
-        "pip_poly_join",
+        "shape) at a coarse base res 5: operators/joins."
+        "pip_join_shuffle_codegen, so it gates a different cover "
+        "resolution than pip_shuffle_codegen_join; same independent "
+        "oracle as pip_poly_join",
 )
 def _pip_cells_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.joins import pip_join_cells
-    from .sources.zones import synth_zones
+    from .operators.joins import pip_join_shuffle_codegen
 
-    pts = docs_geo(spark, sf_dir).withColumnRenamed("doc_id", "feature_id")
-    res = pip_join_cells(pts, synth_zones(25), res=7)
-    return res.groupBy("zone_id").agg(
-        F.count("*").alias("n_points"),
-        F.min("feature_id").alias("min_fid"),
-        F.max("feature_id").alias("max_fid"),
-    )
+    return _pip_zone_stats(
+        spark, sf_dir, lambda p, z: pip_join_shuffle_codegen(p, z, res=5))
 
 
 _KNN_BRUTE_ORACLE = f"""
@@ -1209,24 +1195,16 @@ def _knn_cell_k5(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "pip_shuffle_join",
     _pip_poly_oracle(),
-    doc="exact PIP with NO broadcast and no driver-side ring closure: zone "
-        "rings travel as DataFrame rows, distributed cell cover, cogroup on "
-        "cell + Arrow ray-cast refine (operators/joins.pip_join_shuffle — "
-        "the 'both sides 100 TB' path); same independent convex-half-plane "
+    doc="exact PIP with NO broadcast at a fine base res 9 (operators/"
+        "joins.pip_join_shuffle_codegen): the finest cell cover of the "
+        "three no-broadcast queries; same independent convex-half-plane "
         "oracle as pip_poly_join",
 )
 def _pip_shuffle_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.joins import pip_join_shuffle, zones_to_df
-    from .sources.zones import synth_zones
+    from .operators.joins import pip_join_shuffle_codegen
 
-    pts = docs_geo(spark, sf_dir).withColumnRenamed("doc_id", "feature_id")
-    res = pip_join_shuffle(pts, zones_to_df(spark, synth_zones(25)), res=7,
-                           salt_buckets=4)
-    return res.groupBy("zone_id").agg(
-        F.count("*").alias("n_points"),
-        F.min("feature_id").alias("min_fid"),
-        F.max("feature_id").alias("max_fid"),
-    )
+    return _pip_zone_stats(
+        spark, sf_dir, lambda p, z: pip_join_shuffle_codegen(p, z, res=9))
 
 
 @_register(

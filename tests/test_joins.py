@@ -2,13 +2,17 @@
 force including the uncertified-fallback path; determinism across
 parallelism."""
 
+from collections import Counter
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F, Window
 
 from cloudtile_spark import geom
 from cloudtile_spark.operators.extract import extract_features
-from cloudtile_spark.operators.joins import knn_join, pip_join, pip_join_arrow
+from cloudtile_spark.operators import joins
+from cloudtile_spark.operators.joins import (
+    knn_join, pip_join, pip_join_shuffle_codegen)
 from cloudtile_spark.sources.pages import synth_pages
 from cloudtile_spark.sources.zones import synth_zones, zone_predicate_sql
 
@@ -21,23 +25,44 @@ def feats(spark):
     return df
 
 
-@pytest.mark.parametrize("impl", [pip_join, pip_join_arrow])
-def test_pip_join_matches_numpy_oracle(spark, feats, impl):
-    zones = synth_zones(25)
-    got = sorted(
-        (r.feature_id, r.zone_id)
-        for r in impl(feats, zones).collect()
-    )
+def _numpy_pairs(feats, zones):
+    """(feature_id, zone_id) pairs from geom.points_in_polygon, zone by
+    zone: the reference both PIP forms must equal exactly."""
     pts = feats.orderBy("feature_id").toPandas()
     expect = []
     for _, z in zones.iterrows():
         mask = geom.points_in_polygon(pts.lon.values, pts.lat.values, z.ring)
         expect += [(int(f), int(z.zone_id)) for f in pts.feature_id.values[mask]]
-    assert got == sorted(expect)
+    return sorted(expect)
+
+
+def _pairs(df):
+    return sorted((r.feature_id, r.zone_id) for r in df.collect())
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+_PYTHON_OPS = ("MapInPandas", "ArrowEval", "BatchEval", "PythonUDF")
+
+
+@pytest.mark.parametrize("impl", [pip_join, pip_join_shuffle_codegen])
+@pytest.mark.parametrize("route", ["codegen", "arrow"])
+def test_pip_join_matches_numpy_oracle(spark, feats, impl, route):
+    """Both PIP forms equal the NumPy ray cast on both refine routes:
+    8-vertex zones fit the unrolled codegen budget; one vertex over it
+    takes the Arrow kernel."""
+    if route == "codegen":
+        zones = synth_zones(25)
+    else:
+        zones = synth_zones(2, verts=joins.PIP_CODEGEN_MAX_VERTS + 1)
+    got = _pairs(impl(feats, zones))
+    assert got == _numpy_pairs(feats, zones)
     assert len(got) > 100  # zones sit on hotspots: plenty of matches
-    # multi-match exercised (a feature in >= 2 overlapping zones)
-    from collections import Counter
-    assert Counter(f for f, _ in got).most_common(1)[0][1] >= 2
+    if route == "codegen":
+        # multi-match exercised (a feature in >= 2 overlapping zones)
+        assert Counter(f for f, _ in got).most_common(1)[0][1] >= 2
 
 
 def test_zone_predicate_sql_matches_raycast():
@@ -91,8 +116,6 @@ def test_knn_fallback_engages_on_sparse_queries(spark, feats):
     """At a fine resolution, isolated uniform-region queries cannot certify
     from a 3x3 ring — assert the fallback actually fires AND the result is
     still exact."""
-    from cloudtile_spark.operators import joins
-
     qs = feats.filter(F.col("feature_id") % 151 == 0).select(
         F.col("feature_id").alias("query_id"),
         F.col("lon").alias("qlon"), F.col("lat").alias("qlat"),
@@ -122,83 +145,41 @@ def test_knn_adaptive_equals_brute_force(spark, feats):
 
 
 def test_pip_cells_equals_pip_bbox_path(spark, feats):
-    from cloudtile_spark.operators.joins import pip_join_cells
-
-    zones = synth_zones(25)
-    a = sorted((r.feature_id, r.zone_id)
-               for r in pip_join(feats, zones).collect())
+    """The cell-cover equi-join form equals the bbox range-join form at
+    every base resolution: the cover resolution changes the candidates,
+    never the output."""
+    a = _pairs(pip_join(feats, synth_zones(25)))
     for res in (5, 7, 9):
-        b = sorted((r.feature_id, r.zone_id)
-                   for r in pip_join_cells(feats, zones, res=res).collect())
+        b = _pairs(pip_join_shuffle_codegen(feats, synth_zones(25), res=res))
         assert a == b, f"res={res}"
 
 
-def test_pip_codegen_equals_arrow_path(spark, feats):
-    """The all-JVM unrolled ray-cast (pip_join_codegen) must equal the
-    Arrow-refine path bit-for-bit — same IEEE ops in the same order — and
-    its plan must contain zero Python/Arrow operators (the refine runs
-    inside codegen, immune to Python-worker wakeup jitter)."""
-    from cloudtile_spark.operators.joins import pip_join_codegen
-
-    zones = synth_zones(25)
-    a = sorted(map(tuple, pip_join_arrow(feats, zones).collect()))
-    b = sorted(map(tuple, pip_join_codegen(feats, zones).collect()))
-    assert a == b
-    # uneven vertex counts: a triangle zone forces vertex-0 padding; the
-    # padded zero-length edges must contribute no crossings
-    tri = zones.head(2).copy()
+def test_pip_codegen_equals_arrow_path(spark, feats, monkeypatch):
+    """Uneven vertex counts: a triangle zone forces vertex-0 padding, and
+    the padded zero-length edges must contribute no crossings on either
+    refine route of either form (the Arrow route forced by shrinking the
+    budget)."""
+    tri = synth_zones(25).head(2).copy()
     tri.at[1, "ring"] = tri.at[1, "ring"][:4]  # 3 verts + close
-    a = sorted(map(tuple, pip_join_arrow(feats, tri).collect()))
-    b = sorted(map(tuple, pip_join_codegen(feats, tri).collect()))
-    assert a == b
-    plan = pip_join_codegen(feats, zones)._jdf.queryExecution() \
-        .executedPlan().toString()
-    for marker in ("MapInPandas", "ArrowEval", "BatchEval", "PythonUDF"):
-        assert marker not in plan
+    expect = _numpy_pairs(feats, tri)
+    for impl in (pip_join, pip_join_shuffle_codegen):
+        assert _pairs(impl(feats, tri)) == expect, impl.__name__
+    monkeypatch.setattr(joins, "PIP_CODEGEN_MAX_VERTS", 2)
+    for impl in (pip_join, pip_join_shuffle_codegen):
+        arrow = impl(feats, tri)
+        assert "MapInPandas" in _plan(arrow)
+        assert _pairs(arrow) == expect, impl.__name__
 
 
 def test_pip_join_router_defaults_to_codegen(spark, feats):
-    """pip_join must route small-vertex zone sets to the all-JVM codegen
-    plan (no Python operators) and fall back to the Arrow refine when the
+    """pip_join routes small-vertex zone sets to the all-JVM codegen plan
+    (no Python operators) and falls back to the Arrow refine when the
     unrolled expression budget is exceeded."""
-    from cloudtile_spark.operators import joins
-
-    zones = synth_zones(25)
-    plan = pip_join(feats, zones)._jdf.queryExecution() \
-        .executedPlan().toString()
-    for marker in ("MapInPandas", "ArrowEval", "BatchEval", "PythonUDF"):
+    plan = _plan(pip_join(feats, synth_zones(25)))
+    for marker in _PYTHON_OPS:
         assert marker not in plan
-    # a ring wider than the unrolled budget falls back to the Arrow path
     big = synth_zones(2, verts=joins.PIP_CODEGEN_MAX_VERTS + 1)
-    plan = pip_join(feats, big)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "MapInPandas" in plan
-    # and the two strategies agree on that input too
-    a = sorted(map(tuple, pip_join_arrow(feats, big).collect()))
-    b = sorted(map(tuple, pip_join(feats, big).collect()))
-    assert a == b
-
-
-def test_pip_shuffle_codegen_no_broadcast_no_python(spark, feats,
-                                                    no_broadcast):
-    """The shuffle-only all-JVM PIP must (a) equal the broadcast Arrow path
-    exactly, (b) plan with ZERO BroadcastExchange at threshold=-1, and
-    (c) contain zero Python/Arrow operators — no broadcast to build, no
-    Python workers to wake (the two latency-sensitive constructs)."""
-    from cloudtile_spark.operators.joins import pip_join_shuffle_codegen
-
-    zones = synth_zones(25)
-    a = sorted(map(tuple, pip_join(feats, zones).collect()))
-    for res in (6, 8):
-        b = sorted(map(tuple,
-                       pip_join_shuffle_codegen(feats, zones,
-                                                res=res).collect()))
-        assert a == b, f"res={res}"
-    plan = pip_join_shuffle_codegen(feats, zones, res=7) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" not in plan
-    for marker in ("MapInPandas", "ArrowEval", "BatchEval", "PythonUDF"):
-        assert marker not in plan
+    assert "MapInPandas" in _plan(pip_join(feats, big))
 
 
 @pytest.fixture()
@@ -211,25 +192,35 @@ def no_broadcast(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_pip_shuffle_equals_broadcast_paths(spark, feats, no_broadcast):
-    """pip_join_shuffle (rings as rows, cogroup on cell, NO broadcast and
-    no driver closure) must equal the broadcast pip_join exactly — with
-    autoBroadcastJoinThreshold=-1 so nothing silently broadcasts, and with
-    hot-cell salting on and off."""
-    from cloudtile_spark.operators.joins import pip_join_shuffle, zones_to_df
-
-    zones = synth_zones(25)
-    a = sorted((r.feature_id, r.zone_id)
-               for r in pip_join(feats, zones).collect())
-    zdf = zones_to_df(spark, zones)
-    for res, salt in ((5, 1), (7, 1), (7, 8)):
-        out = pip_join_shuffle(feats, zdf, res=res, salt_buckets=salt)
-        b = sorted((r.feature_id, r.zone_id) for r in out.collect())
-        assert a == b, f"res={res} salt={salt}"
-    # plan audit: the unsalted shuffle path must not REQUIRE a broadcast
-    plan = pip_join_shuffle(feats, zdf, res=7)._jdf.queryExecution() \
-        .executedPlan().toString()
+def test_pip_shuffle_codegen_no_broadcast_no_python(spark, feats,
+                                                    no_broadcast):
+    """At threshold=-1 the cell-cover form plans ZERO BroadcastExchange on
+    both refine routes (over-budget rings ride in the Arrow kernel's
+    closure, not in a broadcast), and its codegen route has zero
+    Python/Arrow operators — no broadcast to build, no Python workers to
+    wake."""
+    plan = _plan(pip_join_shuffle_codegen(feats, synth_zones(25), res=7))
     assert "BroadcastExchange" not in plan
+    for marker in _PYTHON_OPS:
+        assert marker not in plan
+    big = synth_zones(2, verts=joins.PIP_CODEGEN_MAX_VERTS + 1)
+    plan = _plan(pip_join_shuffle_codegen(feats, big, res=7))
+    assert "BroadcastExchange" not in plan
+    assert "MapInPandas" in plan
+
+
+@pytest.mark.parametrize("impl", [pip_join, pip_join_shuffle_codegen])
+@pytest.mark.parametrize("route", ["codegen", "arrow"])
+def test_pip_empty_zone_set(spark, feats, impl, route, monkeypatch):
+    """An empty zone set yields an empty join with the usual schema on
+    both refine routes (the Arrow route forced by a negative budget)."""
+    if route == "arrow":
+        monkeypatch.setattr(joins, "PIP_CODEGEN_MAX_VERTS", -1)
+    for zones in (synth_zones(0), synth_zones(25).head(0)):
+        out = impl(feats, zones)
+        assert out.schema.simpleString() == (
+            "struct<feature_id:bigint,lon:double,lat:double,zone_id:bigint>")
+        assert out.count() == 0
 
 
 def test_knn_shuffle_equals_brute_force(spark, feats, no_broadcast):

@@ -107,7 +107,7 @@ def prepare_input() -> None:
 
 def run_pip(cores: int, verts: int, measure_bytes: bool = False) -> dict:
     """One subprocess-level run of the no-broadcast PIP leg."""
-    from cloudtile_spark.operators.joins import pip_join_shuffle, zones_to_df
+    from cloudtile_spark.operators.joins import pip_join_shuffle_codegen
     from cloudtile_spark.session import get_spark
     from cloudtile_spark.sources.zones import synth_zones
 
@@ -123,14 +123,14 @@ def run_pip(cores: int, verts: int, measure_bytes: bool = False) -> dict:
     spark = get_spark(f"bw_{cores}", cores=cores, shuffle_partitions=cores,
                       extra_conf=extra)
     feats = spark.read.parquet(INPUT_DIR)
-    zdf = zones_to_df(spark, synth_zones(200, verts=verts))
-    pip_join_shuffle(feats.limit(50_000), zdf, res=7,
-                     salt_buckets=8).count()  # warm codegen + Arrow
+    zones = synth_zones(200, verts=verts)
+    pip_join_shuffle_codegen(feats.limit(50_000), zones,
+                             res=7).count()  # warm codegen
     times, n = [], 0
     before = _ui_shuffle_totals(port) if measure_bytes else None
     for _ in range(3):
         t0 = time.time()
-        n = pip_join_shuffle(feats, zdf, res=7, salt_buckets=8).count()
+        n = pip_join_shuffle_codegen(feats, zones, res=7).count()
         times.append(time.time() - t0)
     out = {"cores": cores, "verts": verts, "rows": n,
            "sec": round(min(times), 2),
@@ -190,7 +190,7 @@ def main() -> None:
 
 Three measurements upgrading BASELINE.md's bandwidth-ceiling *argument*
 to numbers (r4 verdict Next #6). Input: {PAGES_N:,} pages -> features;
-200 zones; res 7; salt 8; min-of-3 per level; fresh JVM per level with
+200 zones; res 7; min-of-3 per level; fresh JVM per level with
 ActiveProcessorCount pinned.
 
 ## 1. STREAM-like triad sweep (aggregate GB/s by process count)

@@ -131,30 +131,12 @@ def run_at(cores: int) -> dict:
         ).count()
         jt.append(time.time() - t0)
     t_join = min(jt)
-    # no-broadcast PIP leg (round 3): rings as rows, cogroup refine — the
-    # operator whose scaling story is 'both sides 100 TB'
-    from cloudtile_spark.operators.joins import pip_join_shuffle, zones_to_df
-    from cloudtile_spark.sources.zones import synth_zones
-    zdf = zones_to_df(spark, synth_zones(200))
-    pip_join_shuffle(feats.limit(50_000), zdf, res=7,
-                     salt_buckets=8).count()  # warmup
-    st, n_sh = [], 0
-    for _ in range(3):  # min-of-3: this Arrow-heavy leg shows the widest
-        t0 = time.time()  # run-to-run variance on the shared VM
-        n_sh = pip_join_shuffle(feats, zdf, res=7, salt_buckets=8).count()
-        st.append(time.time() - t0)
-    t_shuffle = min(st)
-    # no-broadcast ALL-JVM PIP leg (round 5): the same shuffle-only regime
-    # with the refine as an unrolled codegen expression — zero broadcast
-    # AND zero Python workers. BENCH/BANDWIDTH.md attributes the cogroup
-    # leg's sub-0.8 local readings to hypervisor wakeup jitter against its
-    # Python round trips; this leg is the controlled experiment (same
-    # join keys, same output, no Python) — if the attribution is right,
-    # it should hold the bar when the cogroup leg doesn't.
+    # no-broadcast PIP leg: the 'both sides 100 TB' regime — zero
+    # broadcast AND zero Python workers (unrolled codegen refine)
     from cloudtile_spark.operators.joins import pip_join_shuffle_codegen
-    from cloudtile_spark.sources.zones import synth_zones as _sz
+    from cloudtile_spark.sources.zones import synth_zones
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    zpdf = _sz(200)
+    zpdf = synth_zones(200)
     pip_join_shuffle_codegen(feats.limit(50_000), zpdf, res=7).count()
     jt2, n_sh2 = [], 0
     for _ in range(3):
@@ -196,9 +178,6 @@ def run_at(cores: int) -> dict:
         "join_sec": round(t_join, 2),
         "join_rows": n_join,
         "join_rows_per_sec": round(n_join / t_join, 1),
-        "shuffle_pip_sec": round(t_shuffle, 2),
-        "shuffle_pip_rows": n_sh,
-        "shuffle_pip_rows_per_sec": round(n_sh / t_shuffle, 1),
         "shuffle_cg_sec": round(t_shuffle_cg, 2),
         "shuffle_cg_rows": n_sh2,
         "shuffle_cg_rows_per_sec": round(n_sh2 / t_shuffle_cg, 1),
@@ -226,14 +205,11 @@ def main() -> None:
     ratio = hi["cores"] / lo["cores"]
     eff_pyr = (lo["pyramid_sec"] / hi["pyramid_sec"]) / ratio
     eff_join = (lo["join_sec"] / hi["join_sec"]) / ratio
-    eff_sh = (lo["shuffle_pip_sec"] / hi["shuffle_pip_sec"]) / ratio
     eff_cg = (lo["shuffle_cg_sec"] / hi["shuffle_cg_sec"]) / ratio
     eff_asof = (lo["asof_sec"] / hi["asof_sec"]) / ratio
     identical = lo["fingerprint"] == hi["fingerprint"] and \
         lo["pyramid_tiles"] == hi["pyramid_tiles"] and \
-        lo["shuffle_pip_rows"] == hi["shuffle_pip_rows"] and \
-        lo["shuffle_cg_rows"] == lo["shuffle_pip_rows"] and \
-        hi["shuffle_cg_rows"] == hi["shuffle_pip_rows"] and \
+        lo["shuffle_cg_rows"] == hi["shuffle_cg_rows"] and \
         lo["asof_rows"] == hi["asof_rows"]
     os.makedirs("BENCH", exist_ok=True)
     with open("BENCH/BASELINE.md", "w") as f:
@@ -243,7 +219,7 @@ North rule: throughput scaling efficiency >= 0.8 between cluster sizes N
 and 4N. Sandbox proxy (BASELINE.md): identical deterministic job at
 local[{lo['cores']}] vs local[{hi['cores']}] ({PAGES_N:,} synthetic pages,
 z0-12 pyramid + 200-zone broadcast PIP join + 200-zone NO-BROADCAST
-cogroup PIP join + as-of temporal join).
+PIP join + as-of temporal join).
 
 | leg | local[{lo['cores']}] | local[{hi['cores']}] | efficiency |
 |---|---|---|---|
@@ -252,10 +228,8 @@ cogroup PIP join + as-of temporal join).
 | pyramid features/sec | {lo['pyramid_features_per_sec']:,} | {hi['pyramid_features_per_sec']:,} | |
 | PIP join (sec) | {lo['join_sec']} | {hi['join_sec']} | {eff_join:.2f} |
 | PIP join rows/sec | {lo['join_rows_per_sec']:,} | {hi['join_rows_per_sec']:,} | |
-| no-broadcast PIP (sec) | {lo['shuffle_pip_sec']} | {hi['shuffle_pip_sec']} | {eff_sh:.2f} |
-| no-broadcast PIP rows/sec | {lo['shuffle_pip_rows_per_sec']:,} | {hi['shuffle_pip_rows_per_sec']:,} | |
-| no-bcast ALL-JVM PIP (sec) | {lo['shuffle_cg_sec']} | {hi['shuffle_cg_sec']} | {eff_cg:.2f} |
-| no-bcast ALL-JVM PIP rows/sec | {lo['shuffle_cg_rows_per_sec']:,} | {hi['shuffle_cg_rows_per_sec']:,} | |
+| no-broadcast PIP (sec) | {lo['shuffle_cg_sec']} | {hi['shuffle_cg_sec']} | {eff_cg:.2f} |
+| no-broadcast PIP rows/sec | {lo['shuffle_cg_rows_per_sec']:,} | {hi['shuffle_cg_rows_per_sec']:,} | |
 | as-of join (sec) | {lo['asof_sec']} | {hi['asof_sec']} | {eff_asof:.2f} |
 | as-of facts/sec | {lo['asof_facts_per_sec']:,} | {hi['asof_facts_per_sec']:,} | |
 
@@ -268,7 +242,6 @@ Raw: ```{json.dumps(results)}```
     print(json.dumps({
         "efficiency_pyramid": round(eff_pyr, 3),
         "efficiency_join": round(eff_join, 3),
-        "efficiency_shuffle_pip": round(eff_sh, 3),
         "efficiency_shuffle_cg": round(eff_cg, 3),
         "efficiency_asof": round(eff_asof, 3),
         "identical_output": identical,

@@ -1,4 +1,4 @@
-"""WEAK-scaling evidence for the two no-broadcast PIP twins (r5 VERDICT
+"""WEAK-scaling evidence for the no-broadcast PIP join (r5 VERDICT
 Next #5): double the candidate volume WITH the cores.
 
 The strong-scaling proxy (bench_scaling.py) is confounded by the measured
@@ -50,8 +50,7 @@ def prepare_inputs() -> None:
 
 def run_at(cores: int, mult: int) -> dict:
     from pyspark.sql import functions as F  # noqa: F401
-    from cloudtile_spark.operators.joins import (
-        pip_join_shuffle, pip_join_shuffle_codegen, zones_to_df)
+    from cloudtile_spark.operators.joins import pip_join_shuffle_codegen
     from cloudtile_spark.session import get_spark
     from cloudtile_spark.sources.zones import synth_zones
 
@@ -66,16 +65,6 @@ def run_at(cores: int, mult: int) -> dict:
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     feats = spark.read.parquet(INPUT_TMPL.format(mult=mult))
     zones = synth_zones(N_ZONES)
-    zdf = zones_to_df(spark, zones)
-
-    pip_join_shuffle(feats.limit(50_000), zdf, res=7,
-                     salt_buckets=8).count()  # warmup
-    ts, n_sh = [], 0
-    for _ in range(3):
-        t0 = time.time()
-        n_sh = pip_join_shuffle(feats, zdf, res=7, salt_buckets=8).count()
-        ts.append(time.time() - t0)
-    t_cogroup = min(ts)
 
     pip_join_shuffle_codegen(feats.limit(50_000), zones, res=7).count()
     ts2, n_cg = [], 0
@@ -88,7 +77,6 @@ def run_at(cores: int, mult: int) -> dict:
     return {
         "cores": cores, "mult": mult,
         "pages": SMALL_PAGES * mult,
-        "cogroup_sec": round(t_cogroup, 2), "cogroup_rows": n_sh,
         "codegen_sec": round(t_codegen, 2), "codegen_rows": n_cg,
     }
 
@@ -107,9 +95,8 @@ def main() -> None:
         )
         results.append(json.loads(out.stdout.strip().splitlines()[-1]))
     lo, hi = results
-    eff_co = lo["cogroup_sec"] / hi["cogroup_sec"]
     eff_cg = lo["codegen_sec"] / hi["codegen_sec"]
-    rows_ratio_co = hi["cogroup_rows"] / max(1, lo["cogroup_rows"])
+    rows_ratio = hi["codegen_rows"] / max(1, lo["codegen_rows"])
     table = f"""
 
 ## Weak scaling (r6, VERDICT Next #5): cores x4 AND input x4
@@ -118,24 +105,21 @@ Per-core work constant — separates shared-socket row-production
 saturation (which poisons the strong-scaling proxy) from true
 parallelization loss. Efficiency = T_small / T_big, ideal 1.0, bar 0.8.
 local[{lo['cores']}] @ {lo['pages']:,} pages vs local[{hi['cores']}] @
-{hi['pages']:,} pages, {N_ZONES} zones, both no-broadcast twins
+{hi['pages']:,} pages, {N_ZONES} zones, no-broadcast PIP
 (autoBroadcastJoinThreshold=-1).
 
 | leg | local[{lo['cores']}] @1x (sec) | local[{hi['cores']}] @4x (sec) | weak efficiency |
 |---|---|---|---|
-| no-broadcast cogroup PIP | {lo['cogroup_sec']} | {hi['cogroup_sec']} | {eff_co:.2f} |
 | no-broadcast ALL-JVM PIP | {lo['codegen_sec']} | {hi['codegen_sec']} | {eff_cg:.2f} |
 
-Output rows scale with input ({lo['cogroup_rows']:,} -> {hi['cogroup_rows']:,},
-x{rows_ratio_co:.2f}); cogroup and codegen twins agree at both levels:
-{lo['cogroup_rows'] == lo['codegen_rows']} / {hi['cogroup_rows'] == hi['codegen_rows']}.
+Output rows scale with input ({lo['codegen_rows']:,} -> {hi['codegen_rows']:,},
+x{rows_ratio:.2f}).
 
 Raw: ```{json.dumps(results)}```
 """
     with open("BENCH/BASELINE.md", "a") as f:
         f.write(table)
     print(json.dumps({
-        "weak_efficiency_cogroup": round(eff_co, 3),
         "weak_efficiency_codegen": round(eff_cg, 3),
         "results": results,
     }))

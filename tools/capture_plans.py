@@ -54,14 +54,9 @@ def bench_leg_df(spark, name: str, cores: int):
             F.broadcast(B.det_zones(spark)),
             (F.col("lon") >= F.col("xmin")) & (F.col("lon") < F.col("xmax"))
             & (F.col("lat") >= F.col("ymin")) & (F.col("lat") < F.col("ymax")))
-    if name == "pip_poly_2m":
+    if name in ("pip_poly_2m", "pip_poly_sql_2m"):
         return J.pip_join(feats, synth_zones(100))
-    if name == "pip_poly_sql_2m":
-        return J.pip_join_codegen(feats, synth_zones(100))
-    if name == "pip_shuffle_2m":
-        zdf = J.zones_to_df(spark, synth_zones(400))
-        return J.pip_join_shuffle(feats, zdf, res=7, salt_buckets=8)
-    if name == "pip_shuffle_sql_2m":
+    if name in ("pip_shuffle_2m", "pip_shuffle_sql_2m"):
         return J.pip_join_shuffle_codegen(feats, synth_zones(400), res=7)
     if name == "knn_512q":
         pts = spark.read.parquet(B.FEATURES_DIR + "_knn")

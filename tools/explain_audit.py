@@ -91,19 +91,14 @@ def main() -> None:
     # no-broadcast joins (round 3): with the broadcast threshold disabled,
     # the shuffle PIP/kNN plans must contain ZERO BroadcastExchange over
     # data-derived sides (literal frames — ring offsets, salt ids — are the
-    # only permitted hints, and pip_join_shuffle uses none at salt=1)
+    # only permitted hints, and pip_join_shuffle_codegen uses none)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    from cloudtile_spark.operators.joins import pip_join_shuffle, zones_to_df
-    from cloudtile_spark.sources.zones import synth_zones
-
-    pts = docs_geo(spark, sf).withColumnRenamed("doc_id", "feature_id")
-    s = plan_of(pip_join_shuffle(pts, zones_to_df(spark, synth_zones(25)),
-                                 res=7, salt_buckets=1))
+    s = plan_of(REGISTRY["pip_shuffle_codegen_join"].spark_fn(spark, sf))
     out.append(
-        f"## pip_join_shuffle unsalted (no-broadcast, threshold=-1)\n\n"
+        f"## pip_shuffle_codegen_join (no-broadcast, threshold=-1)\n\n"
         f"- BroadcastExchange operators: **{s.count('BroadcastExchange')}** "
-        f"(0 = nothing in the plan requires a broadcast; the salted variant "
-        f"adds exactly the literal salt-id frame)\n"
+        f"(0 = nothing in the plan requires a broadcast; salt ids come "
+        f"from an explode, not a broadcast frame)\n"
         f"- join strategies: "
         f"{sorted({w for w in s.split() if w.endswith('Join')})}\n"
     )
