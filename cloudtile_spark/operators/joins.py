@@ -13,13 +13,20 @@ Scale design:
   (small) zone side, so the 100 TB point side never shuffles;
   :func:`pip_join_shuffle_codegen` shuffles the point side once on its
   cell id and plans no broadcast at all.
-- kNN shuffles points once on cell id (the k-ring join key). Skewed metro
-  cells are split by AQE skew-join; candidate lists per query are bounded
-  by ring size, then window top-k runs on the (small) candidate set.
-- Exactness: a k-ring answer for a query is provably exact iff its k-th
-  candidate distance <= a conservative lower bound of the distance to the
-  ring boundary; queries that fail the certificate fall back to brute force
-  (a tiny minority), so results match the brute-force oracle EXACTLY.
+- kNN likewise has one entry point per join contract, built from the same
+  ring offsets, window top-k and certificate: :func:`knn_join_adaptive`
+  broadcasts the (small) query side and picks a cell resolution per
+  query; :func:`knn_join_shuffle` broadcasts nothing data-derived and
+  shuffles both sides at one fixed resolution. Candidate lists per query
+  are bounded by ring size, then window top-k runs on the (small)
+  candidate set.
+- Exactness: a k-ring answer for a query is provably exact iff it has k
+  candidates and its k-th candidate distance <= a conservative lower bound
+  of the distance to the ring boundary; queries that fail the certificate
+  fall back to brute force (a tiny minority), so results match the
+  brute-force oracle EXACTLY. The brute-force branch is always planned,
+  with no row-count probe, so building or explaining a join plan starts
+  no Spark job; AQE prunes the branch at run time when it is empty.
 """
 
 from __future__ import annotations
@@ -326,23 +333,65 @@ def _with_cell_xy(df: DataFrame, lon: str, lat: str, res: int) -> DataFrame:
              .withColumn("cy", F.expr(tiles.tile_y_sql(lat, str(res))))
 
 
+_KNN_COLS = ("query_id", "feature_id", "dist", "rank")
+
+
+def _ring_offsets(spark, ring: int) -> DataFrame:
+    """The (dx, dy) cell offsets of a (2*ring+1)^2 k-ring, as a literal
+    frame (safe to broadcast: its size depends on ``ring`` only)."""
+    offsets = [(dx, dy) for dx in range(-ring, ring + 1)
+               for dy in range(-ring, ring + 1)]
+    return spark.createDataFrame(offsets, "dx int, dy int")
+
+
+def _top_k(cand: DataFrame, k: int) -> DataFrame:
+    """The k nearest candidates per query: drops self-pairs, adds the
+    haversine ``dist`` and keeps ``rank <= k`` in (dist, feature_id) order,
+    the brute-force oracle's tie-break, so output is deterministic."""
+    w = Window.partitionBy("query_id").orderBy("dist", "feature_id")
+    return (
+        cand.filter(F.col("feature_id") != F.col("query_id"))
+        .withColumn("dist",
+                    F.expr(geom.haversine_sql("qlon", "qlat", "lon", "lat")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def _certify(
+    topk: DataFrame, k: int, ring: int, n_sql: str, deg_sql: str,
+) -> tuple[DataFrame, DataFrame]:
+    """(exact top-k rows, ids) of the queries whose ring answer is provably
+    exact: >= k candidates and a k-th distance within the exact-spherical
+    lower bound of the distance to the ring boundary (_ring_bound_sql at
+    ``n_sql`` cells per side, ``deg_sql`` degrees per cell).
+
+    Window columns over ``topk``, which the rank window already
+    partitioned by query_id, so the certificate adds zero exchanges. A
+    certified query has n_cand >= k >= 1 rows, so its rank-1 row names it
+    exactly once."""
+    wq = Window.partitionBy("query_id")
+    bound = F.expr(_ring_bound_sql(ring, n_sql, deg_sql))
+    ok = (
+        topk.withColumn("n_cand", F.count("*").over(wq))
+        .withColumn("kth_dist", F.max("dist").over(wq))
+        .filter((F.col("n_cand") >= k) & (F.col("kth_dist") <= bound))
+    )
+    return ok.select(*_KNN_COLS), ok.filter("rank = 1").select("query_id")
+
+
 def _ring_pass(
     points: DataFrame, qs: DataFrame, k: int, res: int, ring: int,
 ) -> tuple[DataFrame, DataFrame]:
-    """One certified k-ring pass at (res, ring): returns (exact top-k rows
-    for certified queries, certified query ids). qs must carry
-    (query_id, qlon, qlat, cx, cy). The certificate is computed as window
-    columns over the top-k rows (already partitioned by query_id from the
-    rank window) — zero extra exchanges, no broadcast-rejoin; callers
-    decide how to join the certified-id frame."""
+    """One certified k-ring pass at (res, ring): (exact top-k rows for
+    certified queries, certified query ids); callers decide how to join
+    the certified-id frame. qs must carry (query_id, qlon, qlat, cx,
+    cy)."""
     pts = _with_cell_xy(points, "lon", "lat", res) \
         .withColumnRenamed("cx", "px").withColumnRenamed("cy", "py")
     n = 1 << res
-    offsets = [(dx, dy) for dx in range(-ring, ring + 1)
-               for dy in range(-ring, ring + 1)]
-    off = points.sparkSession.createDataFrame(offsets, "dx int, dy int")
     q_cells = (
-        qs.crossJoin(F.broadcast(off))
+        qs.crossJoin(F.broadcast(_ring_offsets(points.sparkSession, ring)))
         .withColumn("nx", (F.col("cx") + F.col("dx") + n) % n)
         .withColumn("ny", F.col("cy") + F.col("dy"))
         .filter((F.col("ny") >= 0) & (F.col("ny") < n))
@@ -350,79 +399,8 @@ def _ring_pass(
     cand = q_cells.join(
         pts,
         (q_cells.nx == pts.px) & (q_cells.ny == pts.py),
-    ).filter(F.col("feature_id") != F.col("query_id")) \
-     .withColumn("dist", F.expr(geom.haversine_sql("qlon", "qlat", "lon", "lat")))
-
-    w = Window.partitionBy("query_id").orderBy("dist", "feature_id")
-    topk = (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
     )
-    # exact-spherical lower bound of the distance from the query point to
-    # the k-ring outer boundary (see _ring_bound_sql)
-    bound = _ring_bound_sql(ring, f"{n}.0", str(360.0 / n))
-    wq = Window.partitionBy("query_id")
-    flagged = (
-        topk.withColumn("n_cand", F.count("*").over(wq))
-        .withColumn("kth_dist", F.max("dist").over(wq))
-        .withColumn("bound_m", F.expr(bound))
-        .withColumn(
-            "cert_ok",
-            (F.col("n_cand") >= k) & (F.col("kth_dist") <= F.col("bound_m")))
-    )
-    exact = flagged.filter("cert_ok") \
-                   .select("query_id", "feature_id", "dist", "rank")
-    certified = flagged.filter("cert_ok").select("query_id").distinct()
-    return exact, certified
-
-
-def knn_join(
-    points: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    res: int = 6,
-    ring: int = 1,
-) -> DataFrame:
-    """Exact kNN join: for each query (query_id, qlon, qlat) return the k
-    nearest points (feature_id, lon, lat) by haversine distance.
-
-    Plan:
-      1. cell-index both sides at resolution ``res``; explode each query to
-         its (2*ring+1)^2 k-ring cells (x wraps at the date line; y rows
-         beyond the poles are dropped);
-      2. equi-join on cell id -> bounded candidate sets; window top-k;
-      3. exactness certificate per query: kth distance <= conservative
-         lower bound of distance to the ring boundary AND >= k candidates;
-      4. failed queries RETRY with a 3x-wider ring (bounded candidates,
-         still certified) before the final brute-force fallback — the
-         unbounded cross join is the last resort, not the first response
-         to a sparse neighborhood. Each escalation set is typically a tiny
-         minority; AQE prunes the empty branches at runtime.
-
-    Ties broken by (dist, feature_id) so output is deterministic and equal
-    to the brute-force oracle.
-    """
-    qs = _with_cell_xy(queries, "qlon", "qlat", res)
-
-    exact1, cert1 = _ring_pass(points, qs, k, res, ring)
-    failed1 = qs.join(F.broadcast(cert1), "query_id", "left_anti")
-
-    # escalation: widen the ring 3x for the failures (sparse regions need
-    # reach, not a full scan)
-    exact2, cert2 = _ring_pass(points, failed1, k, res, 3 * ring + 1)
-    failed2 = failed1.join(F.broadcast(cert2), "query_id", "left_anti") \
-                     .select("query_id", "qlon", "qlat")
-
-    w = Window.partitionBy("query_id").orderBy("dist", "feature_id")
-    brute = (
-        points.crossJoin(F.broadcast(failed2))
-        .filter(F.col("feature_id") != F.col("query_id"))
-        .withColumn("dist", F.expr(geom.haversine_sql("qlon", "qlat", "lon", "lat")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "feature_id", "dist", "rank")
-    )
-    return exact1.unionByName(exact2).unionByName(brute)
+    return _certify(_top_k(cand, k), k, ring, f"{n}.0", str(360.0 / n))
 
 
 def knn_join_adaptive(
@@ -433,7 +411,9 @@ def knn_join_adaptive(
     target: int = 64,
     ring: int = 1,
 ) -> DataFrame:
-    """Skew-aware exact kNN: per-QUERY resolution selection, single plan.
+    """Exact kNN join: for each query (query_id, qlon, qlat) the k nearest
+    points (feature_id, lon, lat) by haversine distance, with a per-QUERY
+    cell resolution picked from ``res_levels``, in a single plan.
 
     A fixed cell resolution dies under skew — a metro-hotspot query at a
     coarse res drags 10^5+ candidates into its ring, while a rural query at
@@ -449,11 +429,17 @@ def knn_join_adaptive(
          query ring cells equi-joined on (res, x, y); window top-k;
       4. per-query exactness certificate (kth dist <= conservative distance
          to the chosen ring boundary); the few failures brute-force in ONE
-         final pass. Output equals brute force exactly.
+         final pass. Output equals brute force exactly, ties broken by
+         (dist, feature_id).
+
+    A single level, ``res_levels=(r,)``, is a fixed-resolution cell kNN:
+    every query whose ring holds any point takes level r, and the
+    certificate plus the brute-force pass keep sparse regions exact.
 
     Cost profile: 2 scans of the point side (counts + candidates join) plus
     a fallback scan; no driver-side collect; all joins against the (small)
-    query side are broadcast.
+    query side are broadcast. Building or explaining the plan runs no
+    Spark job.
 
     SIZE CONTRACT — the QUERY side must be broadcastable (same contract
     as pip_join's zone side): the query ring-cell table is shipped to
@@ -464,9 +450,8 @@ def knn_join_adaptive(
     BOTH so the trade is measured, not assumed.
     """
     spark = points.sparkSession
-    offsets = [(dx, dy) for dx in range(-ring, ring + 1)
-               for dy in range(-ring, ring + 1)]
-    off = spark.createDataFrame(offsets, "dx int, dy int")
+    # the pick loops below assume ascending levels
+    res_levels = tuple(sorted(set(res_levels)))
     levels = spark.createDataFrame([(r,) for r in res_levels], "res int")
 
     n_sql = "cast(pow(2.0, res) as bigint)"
@@ -513,7 +498,7 @@ def knn_join_adaptive(
     # 2. ring cells per (query, res); pick finest res with enough candidates
     q_ring = (
         with_cells(queries, "qlon", "qlat")
-        .crossJoin(F.broadcast(off))
+        .crossJoin(F.broadcast(_ring_offsets(spark, ring)))
         .withColumn("nx", F.expr(f"pmod(cx + dx, {n_sql})"))
         .withColumn("ny", F.col("cy") + F.col("dy"))
         .filter((F.col("ny") >= 0) & (F.col("ny") < F.expr(n_sql)))
@@ -573,69 +558,27 @@ def knn_join_adaptive(
         .drop("fx", "fy")
         .withColumnRenamed("res", "pres")
     )
-    cand = (
-        pts.join(
-            F.broadcast(q_cells),
-            (pts.pres == q_cells.res) & (pts.px == q_cells.nx)
-            & (pts.py == q_cells.ny),
-        )
-        .filter(F.col("feature_id") != F.col("query_id"))
-        .withColumn("dist",
-                    F.expr(geom.haversine_sql("qlon", "qlat", "lon", "lat")))
+    cand = pts.join(
+        F.broadcast(q_cells),
+        (pts.pres == q_cells.res) & (pts.px == q_cells.nx)
+        & (pts.py == q_cells.ny),
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "feature_id")
     # persist: topk is tiny (|queries| * k rows) but sits downstream of the
-    # expensive candidates join, and is consumed twice (certificate + output)
-    # — without this the join lineage recomputes.
-    topk = caching.stage(
-        cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    # expensive candidates join, and is consumed twice (certified rows +
+    # failed ids) — without this the join lineage recomputes.
+    topk = caching.stage(_top_k(cand, k))
 
-    # 4. certificate with res-dependent geometry (n = 2^res as a column);
-    # exact-spherical bound, see _ring_bound_sql. Computed as WINDOW
-    # columns over topk — topk is already partitioned by query_id from
-    # the rank window, so the certificate adds ZERO exchanges and the
-    # certified rows select with a plain filter instead of the former
-    # groupBy + broadcast-rejoin round trip (one shuffle + one broadcast
-    # job saved; bit-identical: same per-query count/max/bound).
-    bound = _ring_bound_sql(ring, "pow(2.0, res)", "(360.0 / pow(2.0, res))")
-    wq = Window.partitionBy("query_id")
-    flagged = (
-        topk.withColumn("n_cand", F.count("*").over(wq))
-        .withColumn("kth_dist", F.max("dist").over(wq))
-        .withColumn("bound_m", F.expr(bound))
-        .withColumn(
-            "cert_ok",
-            (F.col("n_cand") >= k) & (F.col("kth_dist") <= F.col("bound_m")))
-    )
-    exact_part = flagged.filter("cert_ok") \
-                        .select("query_id", "feature_id", "dist", "rank")
-    certified = flagged.filter("cert_ok").select("query_id").distinct()
-
+    # 4. certificate with res-dependent geometry (n = 2^res as a column).
+    exact, certified = _certify(topk, k, ring, "pow(2.0, res)",
+                                "(360.0 / pow(2.0, res))")
     failed = queries.join(F.broadcast(certified), "query_id", "left_anti") \
                     .select("query_id", "qlon", "qlat")
-    # Scalar probe (same class of driver check as connected_components'
-    # convergence checksum): when EVERY query certifies — the designed
-    # common case — skip the brute-force branch entirely instead of
-    # unioning a provably-empty subtree. Even empty, that branch costs a
-    # broadcast job plus a nested-loop-join stage over the full point
-    # side at plan time (AQE prunes it only after the broadcast runs);
-    # measured 0.25-0.8s of pure scheduling at bench scale. The probe
-    # itself reads the PERSISTED topk (one tiny anti-join job), so no
-    # upstream work runs twice; when any query fails, the union is built
-    # exactly as before. Output identical in both branches.
-    if failed.isEmpty():
-        return exact_part
-    brute = (
-        points.join(F.broadcast(failed),
-                    F.col("feature_id") != F.col("query_id"))
-        .withColumn("dist",
-                    F.expr(geom.haversine_sql("qlon", "qlat", "lon", "lat")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "feature_id", "dist", "rank")
-    )
-    return exact_part.unionByName(brute)
+    # The brute-force branch is always planned: probing `failed` for rows
+    # here would run the whole counts -> candidates -> top-k pipeline
+    # while the plan is only being built. When every query certifies, AQE
+    # prunes the empty branch once its broadcast side comes back empty.
+    brute = _top_k(points.crossJoin(F.broadcast(failed)), k)
+    return exact.unionByName(brute.select(*_KNN_COLS))
 
 
 # ---------------------------------------------------------------------------
@@ -653,19 +596,24 @@ def knn_join_shuffle(
     query sides too large to broadcast (e.g. a kNN SELF-join for geo
     near-dup, where "queries" IS the 100 TB point table).
 
-    Same certified ring-escalation as :func:`knn_join`, but:
+    Plan, at one fixed cell resolution ``res``: each query explodes to
+    its (2*ring+1)^2 k-ring cells (x wraps at the date line; rows beyond
+    the poles are dropped) and equi-joins the points on the cell; window
+    top-k; per-query certificate (see the module docstring). Failures
+    retry once with a 3x-wider ring — a sparse neighborhood needs reach,
+    not a full scan — and those that still fail take a SALTED REPLICATED
+    brute force, not a broadcast cross join: every residual query
+    replicates to ``S = 2 x defaultParallelism`` salt buckets, points take
+    pmod(hash, S), and an equi-join on the salt spreads the all-pairs work
+    over S reducers. AQE prunes the empty escalation branches at run time.
 
-    * the certificate / anti joins carry no broadcast hint (both sides
-      shuffle on query_id; AQE still picks broadcast at runtime when one
-      side happens to be small — the plan never REQUIRES it);
-    * the final fallback for certificate failures is a SALTED REPLICATED
-      brute force, not a broadcast cross join: every residual query
-      replicates to ``S = 2 x defaultParallelism`` salt buckets, points
-      take pmod(hash, S), and an equi-join on the salt spreads the
-      all-pairs work over S reducers. Only literal frames (ring offsets,
-      salt ids) are ever broadcast.
+    The certificate / anti joins carry no broadcast hint (both sides
+    shuffle on query_id; AQE still picks broadcast at runtime when one
+    side happens to be small — the plan never REQUIRES it). Only literal
+    frames (ring offsets, salt ids) are ever broadcast.
 
-    Output equals :func:`knn_join` / the brute-force oracle exactly.
+    Output equals :func:`knn_join_adaptive` / the brute-force oracle
+    exactly.
     """
     spark = points.sparkSession
     qs = _with_cell_xy(queries, "qlon", "qlat", res)
@@ -681,14 +629,5 @@ def knn_join_shuffle(
     q_rep = failed2.crossJoin(F.broadcast(salts))
     pts_s = points.withColumn(
         "_salt", F.pmod(F.xxhash64("feature_id"), F.lit(n_salt)).cast("int"))
-    w = Window.partitionBy("query_id").orderBy("dist", "feature_id")
-    brute = (
-        pts_s.join(q_rep, "_salt")
-        .filter(F.col("feature_id") != F.col("query_id"))
-        .withColumn("dist",
-                    F.expr(geom.haversine_sql("qlon", "qlat", "lon", "lat")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "feature_id", "dist", "rank")
-    )
+    brute = _top_k(pts_s.join(q_rep, "_salt"), k).select(*_KNN_COLS)
     return exact1.unionByName(exact2).unionByName(brute)

@@ -23,6 +23,7 @@ Spark plan and the oracle (driver hashes after sorting columns by name).
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Callable
 from dataclasses import dataclass
 from typing import Optional
@@ -57,20 +58,24 @@ def _hint_documents(sql: str, spark: SparkSession, count: int = 1) -> str:
         count)
 
 
-# Session-scoped memo of the lazy table-scan DataFrames, keyed on
-# (application id, resolved dir, per-file mtime+size). This caches NO
-# data and NO results — a DataFrame here is only the resolved scan plan
-# (schema + file index), exactly what a metastore catalog entry holds;
-# every query against the view still reads the parquet files in full.
-# What it avoids is re-resolving all 10 relations on EVERY query
-# invocation: spark.read.parquet() costs ~70 ms per table warm (py4j +
-# footer/schema resolution + file listing), so the old body burned
-# ~0.7 s inside every timed registry leg — ~14 s of the 43 s bench suite
-# was catalog setup, not query work (the DuckDB oracle harness registers
-# its tables once per session, so this also restores parity with how the
-# oracle side is timed). The mtime/size key auto-invalidates if a file
-# is regenerated in place; re-registration below still runs every call.
-_TABLE_DFS: dict[tuple, dict[str, DataFrame]] = {}
+# Session-scoped memo of the lazy table-scan DataFrames: per session
+# object, keyed on (application id, resolved dir, per-file mtime_ns+size).
+# This caches NO data and NO results — a DataFrame here is only the
+# resolved scan plan (schema + file index), exactly what a metastore
+# catalog entry holds; every query against the view still reads the
+# parquet files in full. What it avoids is re-resolving all 10 relations
+# on EVERY query invocation: spark.read.parquet() costs ~70 ms per table
+# warm (py4j + footer/schema resolution + file listing), so the old body
+# burned ~0.7 s inside every timed registry leg — ~14 s of the 43 s bench
+# suite was catalog setup, not query work (the DuckDB oracle harness
+# registers its tables once per session, so this also restores parity with
+# how the oracle side is timed). The nanosecond mtime/size key
+# auto-invalidates if a file is rewritten in place, even within the same
+# second at the same size; re-registration below still runs every call.
+# Temp views are session-scoped, so a memoized DataFrame is only
+# re-registered into the session object that created it: keyed by the
+# object itself, so a dead session's recycled id() can never match.
+_TABLE_DFS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def load_views(spark: SparkSession, sf_dir: str) -> None:
@@ -96,21 +101,19 @@ def load_views(spark: SparkSession, sf_dir: str) -> None:
     paths = [f"{base}/{t}.parquet" for t in TABLES]
     try:
         stamp = tuple(
-            (int(_os.path.getmtime(p)), _os.path.getsize(p)) for p in paths)
+            (st.st_mtime_ns, st.st_size) for st in map(_os.stat, paths))
     except OSError:
         stamp = None  # missing file: fall through, let Spark raise
-    # id(spark) guards the (unused today) newSession() case: temp views
-    # are session-scoped, so a memoized DataFrame must only be
-    # re-registered into the session that created it
-    key = (id(spark), spark.sparkContext.applicationId, base, stamp)
-    dfs = _TABLE_DFS.get(key) if stamp is not None else None
+    memo = _TABLE_DFS.setdefault(spark, {})
+    key = (spark.sparkContext.applicationId, base, stamp)
+    dfs = memo.get(key) if stamp is not None else None
     if dfs is None:
         dfs = {t: spark.read.parquet(p) for t, p in zip(TABLES, paths)}
         if stamp is not None:
-            while len(_TABLE_DFS) >= 8:  # bound growth (tests alternate
-                # a few sf dirs in one session; 8 covers them all)
-                _TABLE_DFS.pop(next(iter(_TABLE_DFS)))
-            _TABLE_DFS[key] = dfs
+            while len(memo) >= 8:  # bound growth (tests alternate a few
+                # sf dirs in one session; 8 covers them all)
+                memo.pop(next(iter(memo)))
+            memo[key] = dfs
     for t, df in dfs.items():
         df.createOrReplaceTempView(t)
 
@@ -1172,12 +1175,13 @@ _KNN_BRUTE_ORACLE = f"""
 @_register(
     "knn_cell_k5",
     _KNN_BRUTE_ORACLE,
-    doc="scale-path kNN: cell k-ring expansion join with per-query exactness "
-        "certificate + brute-force fallback (operators/joins.knn_join); "
-        "oracle is plain brute force — the operator must equal it exactly",
+    doc="fixed-resolution kNN: knn_join_adaptive at the single level res 6 "
+        "(operators/joins) — one cell k-ring candidate join, per-query "
+        "exactness certificate + broadcast brute-force fallback; oracle is "
+        "plain brute force — the operator must equal it exactly",
 )
 def _knn_cell_k5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.joins import knn_join
+    from .operators.joins import knn_join_adaptive
 
     g = docs_geo(spark, sf_dir)
     pts = g.withColumnRenamed("doc_id", "feature_id")
@@ -1186,7 +1190,7 @@ def _knn_cell_k5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("query_id"),
                 F.col("lon").alias("qlon"), F.col("lat").alias("qlat"))
     )
-    out = knn_join(pts, qs, k=5, res=6, ring=1)
+    out = knn_join_adaptive(pts, qs, k=5, res_levels=(6,))
     return out.select(
         "query_id", F.col("feature_id").alias("neighbor_id"), "rank"
     )

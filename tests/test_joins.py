@@ -1,18 +1,19 @@
 """Spatial-join tests: PIP vs NumPy brute oracle; kNN cell-path vs brute
-force including the uncertified-fallback path; determinism across
-parallelism."""
+force including the uncertified-fallback path; no Spark job while a join
+plan is only being built."""
 
+import uuid
 from collections import Counter
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F, Window
 
-from cloudtile_spark import geom
+from cloudtile_spark import caching, geom
 from cloudtile_spark.operators.extract import extract_features
 from cloudtile_spark.operators import joins
 from cloudtile_spark.operators.joins import (
-    knn_join, pip_join, pip_join_shuffle_codegen)
+    knn_join_adaptive, knn_join_shuffle, pip_join, pip_join_shuffle_codegen)
 from cloudtile_spark.sources.pages import synth_pages
 from cloudtile_spark.sources.zones import synth_zones, zone_predicate_sql
 
@@ -98,50 +99,89 @@ def _brute_knn(spark, feats, qs, k):
     )
 
 
-@pytest.mark.parametrize("res,ring", [(6, 1), (4, 1), (8, 2)])
-def test_knn_join_equals_brute_force(spark, feats, res, ring):
-    """Cell kNN must equal brute force at several resolutions — including
-    coarse/fine ones where many queries need the fallback path."""
-    qs = feats.filter(F.col("feature_id") % 151 == 0).select(
+def _queries(feats):
+    return feats.filter(F.col("feature_id") % 151 == 0).select(
         F.col("feature_id").alias("query_id"),
         F.col("lon").alias("qlon"), F.col("lat").alias("qlat"),
     )
-    got = sorted(map(tuple, knn_join(feats, qs, k=5, res=res, ring=ring)
-                     .select("query_id", "feature_id", "rank").collect()))
-    expect = sorted(map(tuple, _brute_knn(spark, feats, qs, 5).collect()))
-    assert got == expect
+
+
+def _knn_rows(df):
+    return sorted(map(tuple, df.select("query_id", "feature_id", "rank")
+                      .collect()))
+
+
+@pytest.mark.parametrize("res_levels,ring", [
+    pytest.param((4, 6, 8, 10, 12), 1, id="default"),
+    pytest.param((8, 6, 4), 1, id="descending"),
+    pytest.param((6,), 1, id="6-1"),
+    pytest.param((4,), 1, id="4-1"),
+    pytest.param((8,), 2, id="8-2"),
+])
+def test_knn_adaptive_equals_brute_force(spark, feats, res_levels, ring):
+    """Adaptive kNN equals brute force for any level set: several levels
+    in either order, and single fixed levels — coarse and fine ones where
+    many queries need the fallback path, at ring 1 and 2."""
+    qs = _queries(feats)
+    got = _knn_rows(knn_join_adaptive(feats, qs, k=5, res_levels=res_levels,
+                                      ring=ring))
+    assert got == _knn_rows(_brute_knn(spark, feats, qs, 5))
 
 
 def test_knn_fallback_engages_on_sparse_queries(spark, feats):
-    """At a fine resolution, isolated uniform-region queries cannot certify
-    from a 3x3 ring — assert the fallback actually fires AND the result is
-    still exact."""
-    qs = feats.filter(F.col("feature_id") % 151 == 0).select(
-        F.col("feature_id").alias("query_id"),
-        F.col("lon").alias("qlon"), F.col("lat").alias("qlat"),
-    )
-    # instrument: count certified queries at res=10 (tiny cells)
-    pts = joins._with_cell_xy(feats, "lon", "lat", 10) \
-        .withColumnRenamed("cx", "px").withColumnRenamed("cy", "py")
-    n_q = qs.count()
-    out = knn_join(feats, qs, k=5, res=10, ring=1)
-    got = sorted(map(tuple, out.select("query_id", "feature_id", "rank").collect()))
-    expect = sorted(map(tuple, _brute_knn(spark, feats, qs, 5).collect()))
-    assert got == expect
-    assert len(got) == n_q * 5
+    """A query at (0, -85) lies 25 degrees of latitude beyond every point
+    (they span -60..69), so no ring at any level can certify it: both kNN
+    forms must return its 5 brute-force rows, and stay exact for the rest
+    at a fine resolution where many rings come back sparse."""
+    polar = spark.createDataFrame(
+        [(-1, 0.0, -85.0)], "query_id long, qlon double, qlat double")
+    qs = _queries(feats).unionByName(polar)
+    expect = _knn_rows(_brute_knn(spark, feats, qs, 5))
+    assert sum(r[0] == -1 for r in expect) == 5
+    for out in (knn_join_adaptive(feats, qs, k=5, res_levels=(10,)),
+                knn_join_shuffle(feats, qs, k=5, res=10)):
+        assert _knn_rows(out) == expect
 
 
-def test_knn_adaptive_equals_brute_force(spark, feats):
-    from cloudtile_spark.operators.joins import knn_join_adaptive
+_JOIN_PLANS = {
+    "pip_join": lambda f, q: pip_join(f, synth_zones(25)),
+    "pip_join_shuffle_codegen":
+        lambda f, q: pip_join_shuffle_codegen(f, synth_zones(25)),
+    "knn_join_adaptive": lambda f, q: knn_join_adaptive(f, q, k=5),
+    "knn_join_shuffle": lambda f, q: knn_join_shuffle(f, q, k=5),
+}
 
-    qs = feats.filter(F.col("feature_id") % 151 == 0).select(
-        F.col("feature_id").alias("query_id"),
-        F.col("lon").alias("qlon"), F.col("lat").alias("qlat"),
-    )
-    got = sorted(map(tuple, knn_join_adaptive(feats, qs, k=5)
-                     .select("query_id", "feature_id", "rank").collect()))
-    expect = sorted(map(tuple, _brute_knn(spark, feats, qs, 5).collect()))
-    assert got == expect
+
+@pytest.mark.parametrize("name", list(_JOIN_PLANS))
+def test_join_plan_builds_without_jobs(spark, feats, name):
+    """Building a join plan and explaining it starts no Spark job: no
+    operator probes its data while the plan is only being built."""
+    sc = spark.sparkContext
+    group = f"plan-{name}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build and explain a join plan")
+    try:
+        _JOIN_PLANS[name](feats, _queries(feats)).explain()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_knn_adaptive_stages_topk(spark, feats):
+    """The adaptive top-k frame feeds both the certified rows and the
+    failed-query ids, so it stays persisted: both readers scan the cache
+    instead of recomputing the candidates join."""
+    caching.release_staged()
+    try:
+        out = knn_join_adaptive(feats, _queries(feats), k=5)
+        topk = [e[1] for e in caching._STAGED
+                if e[0] == "persist" and "rank" in e[1].columns]
+        assert len(topk) == 1 and topk[0].is_cached
+        plan = out._jdf.queryExecution().withCachedData().toString()
+        reads = [ln for ln in plan.splitlines()
+                 if "InMemoryRelation [" in ln and "rank#" in ln]
+        assert len(reads) == 2  # certified rows + failed ids
+    finally:
+        caching.release_staged()
 
 
 def test_pip_cells_equals_pip_bbox_path(spark, feats):
@@ -228,15 +268,8 @@ def test_knn_shuffle_equals_brute_force(spark, feats, no_broadcast):
     fallback joins shuffle), exact vs brute force under
     autoBroadcastJoinThreshold=-1 — including a fine res where the salted
     replicated fallback must engage."""
-    from cloudtile_spark.operators.joins import knn_join_shuffle
-
-    qs = feats.filter(F.col("feature_id") % 151 == 0).select(
-        F.col("feature_id").alias("query_id"),
-        F.col("lon").alias("qlon"), F.col("lat").alias("qlat"),
-    )
-    expect = sorted(map(tuple, _brute_knn(spark, feats, qs, 5).collect()))
+    qs = _queries(feats)
+    expect = _knn_rows(_brute_knn(spark, feats, qs, 5))
     for res in (6, 10):  # res=10: sparse rings -> fallback engages
-        got = sorted(map(
-            tuple, knn_join_shuffle(feats, qs, k=5, res=res)
-            .select("query_id", "feature_id", "rank").collect()))
+        got = _knn_rows(knn_join_shuffle(feats, qs, k=5, res=res))
         assert got == expect, f"res={res}"

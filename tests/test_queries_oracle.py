@@ -323,3 +323,39 @@ def test_round5_queries_safe_on_empty_tables(spark, monkeypatch):
         q = REGISTRY[name]
         fn = getattr(q.spark_fn, "__wrapped__", q.spark_fn)
         assert fn(spark, "unused").count() == 0, name
+
+
+def test_load_views_rescans_a_table_rewritten_in_place(spark, tmp_path,
+                                                       monkeypatch):
+    """The scan memo stamps each file with its nanosecond mtime: a table
+    rewritten in place at the same size within the same second still gets
+    a fresh scan, while an untouched directory is a memo hit."""
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    import cloudtile_spark.queries as Q
+
+    for t in TABLES:
+        shutil.copy(f"{SF_DIR}/{t}.parquet", tmp_path)
+    doc = tmp_path / "documents.parquet"
+    t0 = 1_700_000_000 * 10**9 + 500_000_000  # mid-second
+    os.utime(doc, ns=(t0, t0))
+    scans = []
+    real = DataFrameReader.parquet
+
+    def counted(self, *paths, **kw):
+        scans.extend(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counted)
+    try:
+        Q.load_views(spark, str(tmp_path))
+        Q.load_views(spark, str(tmp_path))
+        assert len(scans) == len(TABLES)  # second call: memo hit
+        os.utime(doc, ns=(t0 + 1000, t0 + 1000))  # +1 us, same size
+        Q.load_views(spark, str(tmp_path))
+        assert len(scans) == 2 * len(TABLES)
+    finally:
+        monkeypatch.undo()
+        Q.load_views(spark, SF_DIR)  # don't leave views on tmp_path
