@@ -217,9 +217,9 @@ def main(argv: Optional[list[str]] = None) -> int:
         if args.pmtiles:
             from .operators.pmtiles import (
                 sorted_tile_stream, tilestats, write_pmtiles_stream)
-            # streamed assembly: range-partitioned tid-sorted iterator, one
-            # partition of payloads in driver memory at a time — a z0-12
-            # pyramid (1.5M tiles) archives without a driver collect
+            # streamed assembly: one global tid sort, walked one
+            # AQE-coalesced range partition of payloads at a time — a
+            # z0-12 pyramid (1.5M tiles) archives without a driver collect
             tiles_src = spark.read.parquet(out).select("z", "x", "y", "mvt")
             pm = f"{name}.pmtiles"
             meta = {"name": stem,

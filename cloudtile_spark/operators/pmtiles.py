@@ -20,11 +20,14 @@ ordering by tile_id (Hilbert), run-length coalescing of identical
 consecutive tiles, and offset dedup for byte-identical payloads.
 
 Assembly is STREAMED: ``write_pmtiles_stream`` consumes a tid-sorted
-iterator (the CLI feeds it a range-partitioned, partition-sorted
-``toLocalIterator`` — never a ``collect``), spills the data section to a
-sidecar file as it goes, and holds only the directory entries (16 B/tile
-logical) plus a content-hash dedup map in driver memory — a z0-z12 pyramid
-(~1.5M tiles) assembles in O(entries) memory, not O(bytes).
+iterator (the CLI feeds it ``sorted_tile_stream``: one global ``orderBy``
+on tid walked with ``toLocalIterator`` — never a ``collect``), spills the
+data section to a sidecar file as it goes, and holds only the directory
+entries (16 B/tile logical) plus a content-hash dedup map in driver
+memory — a z0-z12 pyramid (~1.5M tiles) assembles in O(entries) memory,
+not O(bytes). Tile payloads arrive one AQE-coalesced range partition at a
+time: about max(AQE's coalescing byte target, archive bytes /
+``spark.sql.shuffle.partitions``) of payload, never less than one tile.
 """
 
 from __future__ import annotations
@@ -307,13 +310,19 @@ def write_pmtiles(
     write_pmtiles_stream(path, entries_raw, minzoom, maxzoom, metadata)
 
 
-def sorted_tile_stream(tiles_df, parts: int = 64) -> Iterator[tuple[int, bytes]]:
+def sorted_tile_stream(tiles_df) -> Iterator[tuple[int, bytes]]:
     """tiles(z, x, y, mvt) DataFrame -> tid-ascending (tile_id, bytes)
     iterator WITHOUT a driver collect: tile ids are computed by an
-    Arrow-batched pandas UDF, the frame is range-partitioned and sorted
-    within partitions on tid, and ``toLocalIterator`` walks the partitions
-    in range order — one partition of tile payloads in driver memory at a
-    time, so archive size is bounded by disk, not driver heap."""
+    Arrow-batched pandas UDF, one global ``orderBy("tid")`` range-shuffles
+    the frame into ``spark.sql.shuffle.partitions`` sorted ranges, and AQE
+    merges contiguous ranges up to its coalescing byte target (at most
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``; merging keeps
+    range order). ``toLocalIterator`` then walks the coalesced partitions
+    in order, one Spark job each: a small archive streams from one
+    partition in one job, and a large one holds one coalesced partition of
+    payloads in driver memory at a time — about max(byte target, archive
+    bytes / shuffle partitions), never less than one tile — so archive
+    size is bounded by disk, not driver heap."""
     import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
@@ -338,8 +347,7 @@ def sorted_tile_stream(tiles_df, parts: int = 64) -> Iterator[tuple[int, bytes]]
     ordered = (
         tiles_df.select(
             _tid(F.col("z"), F.col("x"), F.col("y")).alias("tid"), "mvt")
-        .repartitionByRange(parts, "tid")
-        .sortWithinPartitions("tid")
+        .orderBy("tid")
     )
     for row in ordered.toLocalIterator():
         yield int(row.tid), bytes(row.mvt)

@@ -1,6 +1,10 @@
 """CLI behavior + PMTiles archive roundtrip tests (mirrors the reference's
 CLI/parser tests, reference tests/test_cli.py + test_parsers.py)."""
 
+import contextlib
+import struct
+import uuid
+
 import numpy as np
 import pytest
 
@@ -78,6 +82,22 @@ def test_cli_single_step_end_to_end(tmp_path, spark, monkeypatch):
     z0 = arch["tiles"][pmtiles.tile_id(0, 0, 0)]
     dec = mvt.decode_tile(z0)
     assert len(dec["features"]) == 150
+    _assert_archive_matches_table(spark, tmp_path, "pages-0-4", 0, 4)
+
+
+def _assert_archive_matches_table(spark, tmp_path, name, minz, maxz):
+    """The CLI's streamed ``<name>.pmtiles`` equals, byte for byte, the
+    in-memory writer over the collected rows of its tiles table, given the
+    metadata read back from the archive."""
+    arch = str(tmp_path / f"{name}.pmtiles")
+    rows = [(r.z, r.x, r.y, bytes(r.mvt)) for r in
+            spark.read.parquet(str(tmp_path / name))
+            .select("z", "x", "y", "mvt").collect()]
+    ref = str(tmp_path / "reference.pmtiles")
+    pmtiles.write_pmtiles(ref, rows, minz, maxz,
+                          metadata=pmtiles.read_pmtiles(arch)["metadata"])
+    with open(arch, "rb") as a, open(ref, "rb") as b:
+        assert a.read() == b.read()
 
 
 def test_cli_catalog_table_source(tmp_path, spark, monkeypatch):
@@ -112,11 +132,12 @@ def test_cli_csv_source_dispatch(tmp_path, spark, monkeypatch):
         for i in range(40)))
     out = str(tmp_path / "pts-0-2")
     rc = main(["convert", "features2tiles", str(p), "0", "2",
-               "--cores", "2", "--out", out])
+               "--cores", "2", "--out", out, "--pmtiles"])
     assert rc == 0
     total = (spark.read.parquet(out)
              .where("z = 0").agg({"feature_count": "sum"}).collect()[0][0])
     assert total == 40
+    _assert_archive_matches_table(spark, tmp_path, "pts-0-2", 0, 2)
 
 
 def test_pmtiles_roundtrip_and_dedup():
@@ -169,19 +190,131 @@ def test_pmtiles_stream_rejects_unsorted(tmp_path):
             str(tmp_path / "bad.pmtiles"), [(5, b"a"), (3, b"b")], 1, 1)
 
 
-def test_sorted_tile_stream_matches_collect(tmp_path, spark):
+_TILE_SCHEMA = "z int, x int, y int, mvt binary"
+_COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
+
+
+@pytest.fixture(scope="module")
+def tile_rows(spark):
+    """The 43 tiles of a z0-3 pyramid over 300 synthetic pages, as local
+    (z, x, y, mvt) rows."""
     from cloudtile_spark.operators.extract import extract_features
     from cloudtile_spark.operators.mvt import encode_point_tiles
     from cloudtile_spark.sources.pages import synth_pages
 
     feats = extract_features(
         synth_pages(spark, 300, partitions=4).drop("page_id"))
-    tiles_df = encode_point_tiles(feats, 0, 3)
-    got = list(pmtiles.sorted_tile_stream(tiles_df, parts=8))
-    want = sorted((pmtiles.tile_id(r.z, r.x, r.y), bytes(r.mvt))
-                  for r in tiles_df.collect())
+    rows = [(r.z, r.x, r.y, bytes(r.mvt))
+            for r in encode_point_tiles(feats, 0, 3).collect()]
+    assert len(rows) == 43
+    return rows
+
+
+@contextlib.contextmanager
+def _coalescing(spark, enabled: bool):
+    """AQE partition coalescing on or off for the block, then restored."""
+    prev = spark.conf.get(_COALESCE)
+    spark.conf.set(_COALESCE, str(enabled).lower())
+    try:
+        yield
+    finally:
+        spark.conf.set(_COALESCE, prev)
+
+
+def _drain(spark, tiles_df) -> tuple[list[tuple[int, bytes]], int]:
+    """Drain ``sorted_tile_stream`` under a unique job group; returns the
+    streamed (tid, bytes) pairs and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"stream-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "drain sorted_tile_stream")
+    try:
+        got = list(pmtiles.sorted_tile_stream(tiles_df))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return got, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("coalesce", [True, False], ids=["coalesce_on",
+                                                          "coalesce_off"])
+def test_sorted_tile_stream_matches_collect(spark, tile_rows, coalesce):
+    """The stream is globally tid-ascending and carries every tile. With
+    coalescing off the tiles arrive from the session's 8 range partitions,
+    so the order is checked across partition boundaries."""
+    with _coalescing(spark, coalesce):
+        got, jobs = _drain(spark, spark.createDataFrame(tile_rows,
+                                                        _TILE_SCHEMA))
+    want = sorted((pmtiles.tile_id(z, x, y), b) for z, x, y, b in tile_rows)
     assert [t for t, _ in got] == [t for t, _ in want]
     assert got == want
+    if not coalesce:
+        # sample + map stage + one result job per range partition
+        assert jobs > 3
+
+
+def test_sorted_tile_stream_job_count(spark, tile_rows):
+    """A small archive streams from one coalesced partition: the range
+    bounds sample, the shuffle map stage and one result job."""
+    with _coalescing(spark, True):
+        got, jobs = _drain(spark, spark.createDataFrame(tile_rows,
+                                                        _TILE_SCHEMA))
+    assert len(got) == 43
+    assert jobs <= 3
+
+
+def _root_entries(path: str) -> list[tuple[int, int, int, int]]:
+    """(tile_id, offset, length, run_length) of an archive's root
+    directory."""
+    with open(path, "rb") as f:
+        buf = f.read()
+    root_off, root_len = struct.unpack_from("<2Q", buf, 8)
+    return pmtiles._decode_directory(buf[root_off:root_off + root_len])
+
+
+def test_archive_from_empty_tile_frame(tmp_path, spark):
+    got, _ = _drain(spark, spark.createDataFrame([], _TILE_SCHEMA))
+    assert got == []
+    p = str(tmp_path / "empty.pmtiles")
+    stats = pmtiles.write_pmtiles_stream(p, got, 0, 0)
+    assert stats == {"n_addressed": 0, "n_entries": 0, "n_contents": 0,
+                     "leaves": 0}
+    back = pmtiles.read_pmtiles(p)
+    assert back["n_addressed"] == 0 and back["tiles"] == {}
+    assert (back["minzoom"], back["maxzoom"]) == (0, 0)
+
+
+def test_archive_from_one_tile_frame(tmp_path, spark):
+    got, _ = _drain(spark, spark.createDataFrame([(5, 3, 7, b"only")],
+                                                 _TILE_SCHEMA))
+    tid = pmtiles.tile_id(5, 3, 7)
+    assert got == [(tid, b"only")]
+    p = str(tmp_path / "one.pmtiles")
+    pmtiles.write_pmtiles_stream(p, got, 5, 5)
+    back = pmtiles.read_pmtiles(p)
+    assert back["tiles"] == {tid: b"only"}
+    assert (back["n_addressed"], back["n_entries"],
+            back["n_contents"]) == (1, 1, 1)
+
+
+def test_archive_dedups_payloads_across_range_partitions(tmp_path, spark):
+    """The first and last tile of a z3 level share a payload. With
+    coalescing off they stream from different range partitions, and the
+    archive still stores that payload once, at one offset."""
+    level = sorted((pmtiles.tile_id(3, x, y), x, y)
+                   for x in range(8) for y in range(8))
+    first, last = level[0][0], level[-1][0]
+    rows = [(3, x, y, b"dup" if t in (first, last) else b"u%d" % t)
+            for t, x, y in level]
+    with _coalescing(spark, False):
+        got, jobs = _drain(spark, spark.createDataFrame(rows, _TILE_SCHEMA))
+    assert jobs > 3  # more than one range partition was streamed
+    assert [t for t, _ in got] == [t for t, _, _ in level]
+    p = str(tmp_path / "dup.pmtiles")
+    stats = pmtiles.write_pmtiles_stream(p, got, 3, 3)
+    assert stats["n_addressed"] == 64 and stats["n_contents"] == 63
+    by_tid = {tid: (off, ln) for tid, off, ln, _ in _root_entries(p)}
+    assert by_tid[first] == by_tid[last]
+    back = pmtiles.read_pmtiles(p)
+    assert back["tiles"][first] == back["tiles"][last] == b"dup"
 
 
 def test_pmtiles_tile_id_spec_values():
