@@ -14,12 +14,12 @@ Scale design:
   :func:`pip_join_shuffle_codegen` shuffles the point side once on its
   cell id and plans no broadcast at all.
 - kNN likewise has one entry point per join contract, built from the same
-  ring offsets, window top-k and certificate: :func:`knn_join_adaptive`
-  broadcasts the (small) query side and picks a cell resolution per
-  query; :func:`knn_join_shuffle` broadcasts nothing data-derived and
-  shuffles both sides at one fixed resolution. Candidate lists per query
-  are bounded by ring size, then window top-k runs on the (small)
-  candidate set.
+  ring-offset generator, window top-k and certificate:
+  :func:`knn_join_adaptive` broadcasts the (small) query side and picks a
+  cell resolution per query; :func:`knn_join_shuffle` broadcasts nothing
+  data-derived and shuffles both sides at one fixed resolution. Candidate
+  lists per query are bounded by ring size, then window top-k runs on the
+  (small) candidate set.
 - Exactness: a k-ring answer for a query is provably exact iff it has k
   candidates and its k-th candidate distance <= a conservative lower bound
   of the distance to the ring boundary; queries that fail the certificate
@@ -35,7 +35,7 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import caching, cells, geom, tiles
@@ -336,12 +336,16 @@ def _with_cell_xy(df: DataFrame, lon: str, lat: str, res: int) -> DataFrame:
 _KNN_COLS = ("query_id", "feature_id", "dist", "rank")
 
 
-def _ring_offsets(spark, ring: int) -> DataFrame:
-    """The (dx, dy) cell offsets of a (2*ring+1)^2 k-ring, as a literal
-    frame (safe to broadcast: its size depends on ``ring`` only)."""
-    offsets = [(dx, dy) for dx in range(-ring, ring + 1)
-               for dy in range(-ring, ring + 1)]
-    return spark.createDataFrame(offsets, "dx int, dy int")
+def _ring_offsets(ring: int) -> Column:
+    """The (dx, dy) cell offsets of a (2*ring+1)^2 k-ring, as a JVM
+    generator over literals: ``df.select("*", _ring_offsets(r))`` fans each
+    row out to its ring cells with no literal frame to scan or broadcast
+    (a list-of-tuples frame plans as an RDD scan, one Python-worker task
+    per core on every read)."""
+    return F.inline(F.array(*[
+        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
+        for dx in range(-ring, ring + 1) for dy in range(-ring, ring + 1)
+    ]))
 
 
 def _top_k(cand: DataFrame, k: int) -> DataFrame:
@@ -391,7 +395,7 @@ def _ring_pass(
         .withColumnRenamed("cx", "px").withColumnRenamed("cy", "py")
     n = 1 << res
     q_cells = (
-        qs.crossJoin(F.broadcast(_ring_offsets(points.sparkSession, ring)))
+        qs.select("*", _ring_offsets(ring))
         .withColumn("nx", (F.col("cx") + F.col("dx") + n) % n)
         .withColumn("ny", F.col("cy") + F.col("dy"))
         .filter((F.col("ny") >= 0) & (F.col("ny") < n))
@@ -437,9 +441,12 @@ def knn_join_adaptive(
     certificate plus the brute-force pass keep sparse regions exact.
 
     Cost profile: 2 scans of the point side (counts + candidates join) plus
-    a fallback scan; no driver-side collect; all joins against the (small)
-    query side are broadcast. Building or explaining the plan runs no
-    Spark job.
+    a fallback scan; ONE read of the caller's query side, staged for the
+    ring counts, the candidates join and the certificate anti-join; no
+    literal frames (levels and ring offsets are generator expressions on
+    the query rows, so no Python worker and no literal broadcast); no
+    driver-side collect; all joins against the (small) query side are
+    broadcast. Building or explaining the plan runs no Spark job.
 
     SIZE CONTRACT — the QUERY side must be broadcastable (same contract
     as pip_join's zone side): the query ring-cell table is shipped to
@@ -449,19 +456,14 @@ def knn_join_adaptive(
     equi-join formulation with identical output — bench.py headlines
     BOTH so the trade is measured, not assumed.
     """
-    spark = points.sparkSession
     # the pick loops below assume ascending levels
     res_levels = tuple(sorted(set(res_levels)))
-    levels = spark.createDataFrame([(r,) for r in res_levels], "res int")
-
     n_sql = "cast(pow(2.0, res) as bigint)"
-
-    def with_cells(df: DataFrame, lon: str, lat: str) -> DataFrame:
-        return (
-            df.crossJoin(F.broadcast(levels))
-            .withColumn("cx", F.expr(tiles.tile_x_sql(lon, "res")))
-            .withColumn("cy", F.expr(tiles.tile_y_sql(lat, "res")))
-        )
+    # the query side feeds the ring counts, the candidates join and the
+    # certificate anti-join: read it once (the size contract already
+    # requires it to fit executor memory; persist is lazy, so building the
+    # plan still runs no job)
+    qs = caching.stage(queries.select("query_id", "qlon", "qlat"))
 
     # 1. cell counts at every resolution — hierarchically: ONE scan of the
     # point side at the FINEST resolution, then every coarser level derives
@@ -497,8 +499,10 @@ def knn_join_adaptive(
 
     # 2. ring cells per (query, res); pick finest res with enough candidates
     q_ring = (
-        with_cells(queries, "qlon", "qlat")
-        .crossJoin(F.broadcast(_ring_offsets(spark, ring)))
+        qs.withColumn("res", F.explode(F.array(*map(F.lit, res_levels))))
+        .withColumn("cx", F.expr(tiles.tile_x_sql("qlon", "res")))
+        .withColumn("cy", F.expr(tiles.tile_y_sql("qlat", "res")))
+        .select("*", _ring_offsets(ring))
         .withColumn("nx", F.expr(f"pmod(cx + dx, {n_sql})"))
         .withColumn("ny", F.col("cy") + F.col("dy"))
         .filter((F.col("ny") >= 0) & (F.col("ny") < F.expr(n_sql)))
@@ -571,8 +575,7 @@ def knn_join_adaptive(
     # 4. certificate with res-dependent geometry (n = 2^res as a column).
     exact, certified = _certify(topk, k, ring, "pow(2.0, res)",
                                 "(360.0 / pow(2.0, res))")
-    failed = queries.join(F.broadcast(certified), "query_id", "left_anti") \
-                    .select("query_id", "qlon", "qlat")
+    failed = qs.join(F.broadcast(certified), "query_id", "left_anti")
     # The brute-force branch is always planned: probing `failed` for rows
     # here would run the whole counts -> candidates -> top-k pipeline
     # while the plan is only being built. When every query certifies, AQE
@@ -609,13 +612,14 @@ def knn_join_shuffle(
 
     The certificate / anti joins carry no broadcast hint (both sides
     shuffle on query_id; AQE still picks broadcast at runtime when one
-    side happens to be small — the plan never REQUIRES it). Only literal
-    frames (ring offsets, salt ids) are ever broadcast.
+    side happens to be small — the plan never REQUIRES it). Ring offsets
+    and salt ids are generator expressions on the query rows, so nothing
+    is ever broadcast by hint. The query side is not staged: it may be as
+    large as the point side.
 
     Output equals :func:`knn_join_adaptive` / the brute-force oracle
     exactly.
     """
-    spark = points.sparkSession
     qs = _with_cell_xy(queries, "qlon", "qlat", res)
 
     exact1, cert1 = _ring_pass(points, qs, k, res, ring)
@@ -624,9 +628,12 @@ def knn_join_shuffle(
     failed2 = failed1.join(cert2, "query_id", "left_anti") \
                      .select("query_id", "qlon", "qlat")
 
-    n_salt = max(8, min(1024, 2 * spark.sparkContext.defaultParallelism))
-    salts = spark.range(n_salt).select(F.col("id").cast("int").alias("_salt"))
-    q_rep = failed2.crossJoin(F.broadcast(salts))
+    sc = points.sparkSession.sparkContext
+    n_salt = max(8, min(1024, 2 * sc.defaultParallelism))
+    # explode (not a broadcast crossJoin of a salt frame): the plan holds
+    # no BroadcastExchange at all when the threshold is off
+    q_rep = failed2.withColumn(
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
     pts_s = points.withColumn(
         "_salt", F.pmod(F.xxhash64("feature_id"), F.lit(n_salt)).cast("int"))
     brute = _top_k(pts_s.join(q_rep, "_salt"), k).select(*_KNN_COLS)

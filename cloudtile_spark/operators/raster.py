@@ -47,13 +47,24 @@ def zone_tile_cover(zones_pdf: pd.DataFrame, z: int) -> list[tuple[int, int, int
     return out
 
 
+def _work_frame(spark: SparkSession, cover: list) -> DataFrame:
+    """The (zone_id, x, y) work list shipped as an Arrow table, so it plans
+    as a LocalTableScan even when empty (a list of tuples, or an empty
+    pandas frame, plans as an RDD scan: one Python-worker task per core on
+    every read)."""
+    import pyarrow as pa
+
+    cols = np.asarray(cover, dtype=np.int64).reshape(-1, 3).T
+    table = pa.table(dict(zip(("zone_id", "x", "y"), cols)))
+    return spark.createDataFrame(table, "zone_id long, x long, y long")
+
+
 def rasterize_zones(
     spark: SparkSession, zones_pdf: pd.DataFrame, z: int,
     size: int = GRID_SIZE,
 ) -> DataFrame:
     """One row per (tile, zone) with the zone's coverage mask in that tile."""
-    cover = zone_tile_cover(zones_pdf, z)
-    work = spark.createDataFrame(cover, "zone_id long, x long, y long") \
+    work = _work_frame(spark, zone_tile_cover(zones_pdf, z)) \
         .repartition("x", "y")
     rings = {int(r.zone_id): np.asarray(r.ring, dtype=np.float64)
              for _, r in zones_pdf.iterrows()}
@@ -369,8 +380,7 @@ def rasterize_zones_arrow(
     shuffle when the work list is already tile-partitioned."""
     import pyarrow as pa
 
-    cover = zone_tile_cover(zones_pdf, z)
-    work = spark.createDataFrame(cover, "zone_id long, x long, y long")
+    work = _work_frame(spark, zone_tile_cover(zones_pdf, z))
     rings = {int(r.zone_id): np.asarray(r.ring, dtype=np.float64)
              for _, r in zones_pdf.iterrows()}
 

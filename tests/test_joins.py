@@ -2,8 +2,10 @@
 force including the uncertified-fallback path; no Spark job while a join
 plan is only being built."""
 
+import re
 import uuid
 from collections import Counter
+from itertools import product
 
 import numpy as np
 import pytest
@@ -184,6 +186,39 @@ def test_knn_adaptive_stages_topk(spark, feats):
         caching.release_staged()
 
 
+def test_knn_adaptive_stages_query_side(spark, feats):
+    """The adaptive form reads the caller's query side once: one persisted
+    (query_id, qlon, qlat) stage feeds the ring counts, the candidates
+    join and the certificate anti-join."""
+    caching.release_staged()
+    try:
+        out = knn_join_adaptive(feats, _queries(feats), k=5)
+        staged = [e[1] for e in caching._STAGED if e[0] == "persist"
+                  and e[1].columns == ["query_id", "qlon", "qlat"]]
+        assert len(staged) == 1 and staged[0].is_cached
+        plan = out._jdf.queryExecution().withCachedData().toString()
+        reads = re.findall(
+            r"InMemoryRelation \[query_id#\d+L?, qlon#\d+, qlat#\d+\]", plan)
+        assert len(reads) >= 2
+    finally:
+        caching.release_staged()
+
+
+@pytest.mark.parametrize("impl", [knn_join_adaptive, knn_join_shuffle])
+def test_knn_plan_no_rdd_scan_no_python(spark, feats, impl):
+    """On inputs without an RDD scan, neither kNN form adds one: levels,
+    ring offsets and salt ids are JVM generator expressions, not literal
+    frames (a list-of-tuples frame plans as an RDD scan whose every read
+    wakes one Python worker per core), and no Python operator runs."""
+    try:
+        plan = _plan(impl(feats, _queries(feats), k=5))
+    finally:
+        caching.release_staged()
+    assert "ExistingRDD" not in plan
+    for marker in _PYTHON_OPS:
+        assert marker not in plan
+
+
 def test_pip_cells_equals_pip_bbox_path(spark, feats):
     """The cell-cover equi-join form equals the bbox range-join form at
     every base resolution: the cover resolution changes the candidates,
@@ -263,6 +298,16 @@ def test_pip_empty_zone_set(spark, feats, impl, route, monkeypatch):
         assert out.count() == 0
 
 
+def test_knn_shuffle_no_broadcast_no_python(spark, feats, no_broadcast):
+    """At threshold=-1 the no-broadcast kNN plans ZERO BroadcastExchange:
+    ring offsets and salt ids are generators on the query rows, and the
+    certificate and anti joins carry no hint. No Python operator either."""
+    plan = _plan(knn_join_shuffle(feats, _queries(feats), k=5))
+    assert "BroadcastExchange" not in plan
+    for marker in _PYTHON_OPS:
+        assert marker not in plan
+
+
 def test_knn_shuffle_equals_brute_force(spark, feats, no_broadcast):
     """knn_join_shuffle: no data-derived broadcast anywhere (certificate and
     fallback joins shuffle), exact vs brute force under
@@ -273,3 +318,58 @@ def test_knn_shuffle_equals_brute_force(spark, feats, no_broadcast):
     for res in (6, 10):  # res=10: sparse rings -> fallback engages
         got = _knn_rows(knn_join_shuffle(feats, qs, k=5, res=res))
         assert got == expect, f"res={res}"
+
+
+_PTS = "feature_id long, lon double, lat double"
+_QS = "query_id long, qlon double, qlat double"
+_GRID = [(i, -60.0 + 12.0 * (i % 11), -50.0 + 10.0 * (i // 11))
+         for i in range(110)]
+_EDGE = [(i, *c) for i, c in enumerate(product(
+    (179.0, 179.9, 179.999, -179.999, -179.9, -179.0), (-10.0, 0.0, 10.0)))]
+_POLAR = [(i, *c) for i, c in enumerate(product(
+    (-120.0, 0.0, 45.0, 170.0), (-89.5, -88.0, -80.0, 0.0, 80.0, 88.0, 89.5)))]
+
+# (points, queries) at k=5: query ids live apart from feature ids except
+# where a query IS a point (its self-pair must drop out)
+_DEGENERATE = {
+    "empty_queries": (_GRID, []),
+    "empty_points": ([], [(1000, 0.0, 0.0), (1001, 120.0, -30.0)]),
+    "k_above_points": (_GRID[:3], [(1000, 0.0, 0.0), (1001, -70.0, 40.0)]),
+    "single_point": ([(7, 10.0, 10.0)], [(1000, 10.0, 10.0),
+                                          (1001, -120.0, 50.0),
+                                          (7, 10.0, 10.0)]),
+    "duplicate_coords": ([(i, 12.5, 41.9) for i in range(50)] + _GRID[:20],
+                         [(1000, 12.5, 41.9), (3, 12.5, 41.9)]),
+    "antimeridian": (_EDGE + _GRID,
+                     [(1000, 180.0, 0.0), (1001, -180.0, 0.0),
+                      (1002, 180.0, 10.0), (1003, -180.0, -5.0)]),
+    "poles": (_POLAR, [(1000, 0.0, 90.0), (1001, 45.0, -90.0),
+                       (1002, 180.0, 90.0), (1003, -180.0, -90.0)]),
+    # 70 points at the east end of the query's res-6 ring fill it past
+    # k and the adaptive target, while the nearest point sits just west
+    # of the ring: only the certificate stops the ring answer
+    "outside_ring": ([(i, 11.0, 0.01 * i) for i in range(70)]
+                     + [(70, -5.7, 0.0)], [(1000, 0.01, 0.01)]),
+}
+
+
+@pytest.mark.parametrize("impl", [knn_join_adaptive, knn_join_shuffle])
+@pytest.mark.parametrize("case", list(_DEGENERATE))
+def test_knn_degenerate_inputs(spark, case, impl):
+    """Both kNN forms equal brute force on degenerate inputs: an empty
+    side, k above the point count, a single point, 50 points on one
+    coordinate (ties broken by feature_id, the self-pair dropped),
+    queries on the antimeridian with points on both sides of it,
+    queries on the poles, and a full ring whose answer misses a nearer
+    point just outside it."""
+    rows, qrows = _DEGENERATE[case]
+    pts = spark.createDataFrame(rows, _PTS)
+    qs = spark.createDataFrame(qrows, _QS)
+    try:
+        got = _knn_rows(impl(pts, qs, k=5))
+    finally:
+        caching.release_staged()
+    assert got == _knn_rows(_brute_knn(spark, pts, qs, 5))
+    # every query gets min(k, its non-self points) rows
+    assert len(got) == sum(min(5, sum(p[0] != q[0] for p in rows))
+                           for q in qrows)

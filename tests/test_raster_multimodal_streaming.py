@@ -673,6 +673,19 @@ def test_rasterize_arrow_equals_pandas_path(spark):
     assert a == b and a
 
 
+@pytest.mark.parametrize("n_zones", [10, 0])
+def test_rasterize_work_list_plans_no_rdd_scan(spark, n_zones):
+    """Both rasterizers ship the zone-tile work list as a local table, so
+    the plan holds no RDD scan (whose every read wakes one Python worker
+    per core), also for an empty cover."""
+    for impl in (raster.rasterize_zones, raster.rasterize_zones_arrow):
+        df = impl(spark, synth_zones(n_zones), z=7, size=64)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, impl.__name__
+        assert "LocalTableScan" in plan, impl.__name__
+        assert (df.count() > 0) == (n_zones > 0)
+
+
 def test_streaming_sliding_window_equals_batch(spark, events_stream_dir):
     """Sliding (overlapping) windows: the SAME sliding_counts function run
     as a stream and as a batch plan must agree cell-for-cell — each event

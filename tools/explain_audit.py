@@ -89,9 +89,8 @@ def main() -> None:
         )
 
     # no-broadcast joins (round 3): with the broadcast threshold disabled,
-    # the shuffle PIP/kNN plans must contain ZERO BroadcastExchange over
-    # data-derived sides (literal frames — ring offsets, salt ids — are the
-    # only permitted hints, and pip_join_shuffle_codegen uses none)
+    # the shuffle PIP/kNN plans must contain ZERO BroadcastExchange (ring
+    # offsets and salt ids are generator expressions, not broadcast frames)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s = plan_of(REGISTRY["pip_shuffle_codegen_join"].spark_fn(spark, sf))
     out.append(
@@ -105,10 +104,11 @@ def main() -> None:
     s = plan_of(REGISTRY["knn_shuffle_k5"].spark_fn(spark, sf))
     out.append(
         f"## knn_shuffle_k5 (no-broadcast, threshold=-1)\n\n"
-        f"- BroadcastExchange operators: {s.count('BroadcastExchange')} — "
-        f"every F.broadcast hint in knn_join_shuffle is on a LITERAL frame "
-        f"(9-row ring offsets per pass, salt ids); certificate/anti joins "
-        f"carry no hint (hint_small=False) and plan as SortMergeJoin here\n"
+        f"- BroadcastExchange operators: **{s.count('BroadcastExchange')}** "
+        f"(0 = nothing in the plan requires a broadcast; ring offsets and "
+        f"salt ids are generator expressions on the query rows, and the "
+        f"certificate/anti joins carry no hint, so they plan as "
+        f"SortMergeJoin here)\n"
         f"- SortMergeJoin operators: {s.count('SortMergeJoin')}\n"
         f"- SIZE-CONTRACT NOTE (r4): `knn_join_adaptive` — the variant the "
         f"`knn_512q` bench leg headlines — BROADCASTS the query ring-cell "
