@@ -64,15 +64,13 @@ _STAGED: list[tuple] = []
 _SEQ = itertools.count()
 
 
-def stage(df: DataFrame, view: str | None = None) -> DataFrame:
-    """Persist ``df`` (and register it as temp view ``view`` verbatim if
-    given), recording it for a later :func:`release_staged`. Use when the
-    consumer references the returned DataFrame object; prefer
-    :func:`stage_view` when the stage is consumed by SQL text — see the
-    module docstring for why (CTE consumers miss the persist cache)."""
+def stage(df: DataFrame) -> DataFrame:
+    """Persist ``df``, recording it for a later :func:`release_staged`.
+    Use when the consumer references the returned DataFrame object;
+    prefer :func:`stage_view` when the stage is consumed by SQL text —
+    see the module docstring for why (CTE consumers miss the persist
+    cache)."""
     df.persist()
-    if view is not None:
-        df.createOrReplaceTempView(view)
     _STAGED.append(("persist", df))
     return df
 

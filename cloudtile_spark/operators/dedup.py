@@ -234,14 +234,6 @@ def minhash_shingles_from_hashed_sql(d: Dialect, hashed_tbl: str) -> str:
             f"FROM {hashed_tbl}")
 
 
-def minhash_shingles_sql(d: Dialect, corpus_cte: str, k: int = 3) -> str:
-    """Stage 0+2 fused: distinct hashed-shingle sets straight from text."""
-    return (f"WITH {corpus_cte}, hashed AS (SELECT doc_id, "
-            f"{d.shingle_hashes('text', k)} AS hashes FROM corpus) "
-            f"SELECT doc_id, {d.distinct.format(l='hashes')} AS sh "
-            f"FROM hashed")
-
-
 def minhash_verify_sql(d: Dialect, b_tbl: str, shs_tbl: str,
                        jaccard_min: float = 0.5,
                        max_bucket: int = 50) -> str:

@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 
 from .. import geom, tiles
 from ..settings import TilingSettings
+from .pmtiles import _read_varint, _varint  # LEB128, as in PMTiles dirs
 from .pyramid import assign_xy, explode_zooms, project_to_4326
 
 EXTENT = 4096
@@ -44,18 +45,6 @@ GEOM_TYPE_CODE = {"point": 1, "linestring": 2, "polygon": 3}
 # ---------------------------------------------------------------------------
 # minimal protobuf primitives (public wire format)
 # ---------------------------------------------------------------------------
-
-def _varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
 
 def _zigzag(v: int) -> int:
     return (v << 1) ^ (v >> 63)
@@ -135,17 +124,6 @@ def encode_layer(name: str, feature_blobs: list[bytes],
 # ---------------------------------------------------------------------------
 # decoder (for tests / fixture parity)
 # ---------------------------------------------------------------------------
-
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = v = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        v |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return v, pos
-        shift += 7
-
 
 def decode_tile(buf: bytes) -> dict:
     """Parse one tile -> {layer_name, extent, features:[{id,type,coords}]}."""

@@ -200,16 +200,14 @@ def capped_tile_summary(
         F.slice(F.array_sort(F.flatten(F.collect_list("_ids"))), 1, cap)
          .alias("feature_ids"),
     )
-    out = merged.withColumn(
-        "feature_count", F.least(F.col("_total"), F.lit(cap).cast("long"))
+    return merged.select(
+        "z", "x", "y",
+        F.least(F.col("_total"), F.lit(cap).cast("long"))
+         .alias("feature_count"),
+        "feature_ids",
+        F.sha2(F.concat_ws(",", F.col("feature_ids")), 256)
+         .alias("checksum"),
     )
-    if with_ids:
-        return out.select(
-            "z", "x", "y", "feature_count", "feature_ids",
-            F.sha2(F.concat_ws(",", F.col("feature_ids")), 256)
-             .alias("checksum"),
-        )
-    return out.select("z", "x", "y", "feature_count")
 
 
 def build_pyramid(

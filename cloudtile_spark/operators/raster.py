@@ -1,7 +1,6 @@
 """Raster <-> vector bridge: rasterize polygon zones into per-tile grids and
-vectorize grids back — grouped Arrow computation per tile partition
-(north-star: "raster<->vector rasterization as grouped applyInArrow over
-tile partitions").
+vectorize grids back — NumPy kernels over Arrow batches of tile rows
+(mapInPandas; polygonize groups per tile with applyInPandas).
 
 Grid convention: per (z, x, y) tile, a size x size uint8 mask, row 0 = tile
 top, pixel centers sampled (geom.rasterize_ring). Vectorize returns
@@ -365,55 +364,3 @@ def polygonize_tiles(raster_df: DataFrame, size: int = GRID_SIZE) -> DataFrame:
              F.count(F.lit(1)).alias("n_pieces"))
     )
 
-
-def rasterize_zones_arrow(
-    spark: SparkSession, zones_pdf: pd.DataFrame, z: int,
-    size: int = GRID_SIZE,
-) -> DataFrame:
-    """GROUPED applyInArrow variant of :func:`rasterize_zones` — the
-    literal north-star shape ("raster<->vector rasterization as grouped
-    applyInArrow over tile partitions"): one Arrow Table in, one Arrow
-    Table out, per (x, y) TILE group, zero pandas conversion on the
-    boundary. Output is byte-identical to the mapInPandas path
-    (parity-tested); the pandas path remains the default since both
-    kernels are NumPy inside and the mapInPandas form avoids the groupBy
-    shuffle when the work list is already tile-partitioned."""
-    import pyarrow as pa
-
-    work = _work_frame(spark, zone_tile_cover(zones_pdf, z))
-    rings = {int(r.zone_id): np.asarray(r.ring, dtype=np.float64)
-             for _, r in zones_pdf.iterrows()}
-
-    def render(table: "pa.Table") -> "pa.Table":
-        zs = table.column("zone_id").to_pylist()
-        xs = table.column("x").to_pylist()
-        ys = table.column("y").to_pylist()
-        out = {k: [] for k in ("z", "x", "y", "zone_id", "filled", "grid")}
-        for zone_id, x, y in zip(zs, xs, ys):
-            lon_min, lat_min, lon_max, lat_max = (
-                float(v[0]) for v in tiles.tile_bounds(
-                    z, np.array([x]), np.array([y]))
-            )
-            grid = geom.rasterize_ring(
-                rings[int(zone_id)], lon_min, lat_min, lon_max, lat_max,
-                size=size,
-            )
-            filled = int(grid.sum())
-            if filled == 0:
-                continue
-            out["z"].append(z)
-            out["x"].append(int(x))
-            out["y"].append(int(y))
-            out["zone_id"].append(int(zone_id))
-            out["filled"].append(filled)
-            out["grid"].append(grid.tobytes())
-        return pa.table({
-            "z": pa.array(out["z"], pa.int32()),
-            "x": pa.array(out["x"], pa.int64()),
-            "y": pa.array(out["y"], pa.int64()),
-            "zone_id": pa.array(out["zone_id"], pa.int64()),
-            "filled": pa.array(out["filled"], pa.int64()),
-            "grid": pa.array(out["grid"], pa.binary()),
-        })
-
-    return work.groupBy("x", "y").applyInArrow(render, schema=RASTER_SCHEMA)

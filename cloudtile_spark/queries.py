@@ -2187,12 +2187,11 @@ def _ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "top-10 under (sim DESC, neighbor_id) ordering is a subset of "
         "the per-salt partials under the SAME ordering, so the output "
         "is provably identical to the monolithic window (the oracle IS "
-        "the plain form). Why it exists: tools/bench_ann_scale.py "
-        "caught the plain per-query window sort going INVERSE-scaling "
-        "at 64M candidates x 32 cores (concurrent multi-GB sorts -> "
-        "spill); the salt bounds every sort slice — design principle "
-        "#2 (hash-bounded partials, never monolithic sorts) applied to "
-        "similarity search",
+        "the plain form). Why it exists: at 64M candidates x 32 cores "
+        "the plain per-query window sort scaled INVERSELY (concurrent "
+        "multi-GB sorts -> spill; BENCH/SCALE10.md); the salt bounds "
+        "every sort slice — design principle #2 (hash-bounded partials, "
+        "never monolithic sorts) applied to similarity search",
 )
 def _ann_cosine_topk_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_views(spark, sf_dir)
@@ -5239,10 +5238,8 @@ def _init_wave3_llm() -> None:
     LEFT JOIN d5 d ON d.doc_id = c.doc_id
     WHERE c.norm_len > 0
     """
-    global GOPHER_SPARK_SQL
     spark_gopher = (f"WITH {tok('')},\n    {grams_spark('t2', 2)},\n"
                     f"    {grams_spark('t5', 5)},\n" + _GOPHER_TAIL)
-    GOPHER_SPARK_SQL = spark_gopher  # reused by tools/bench_grams.py
     duck_gopher = (f"WITH {tok(_G)},"
                    f"\n    {grams_duck('t2', 2)},\n"
                    f"    {grams_duck('t5', 5)},\n" + _GOPHER_TAIL)

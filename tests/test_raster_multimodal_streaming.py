@@ -656,34 +656,16 @@ def test_polygonize_matches_stitched_mosaic_bfs(spark):
     assert sum(n for n, _ in got) == len(filled)
 
 
-def test_rasterize_arrow_equals_pandas_path(spark):
-    """The grouped applyInArrow rasterizer must be byte-identical to the
-    mapInPandas path (same grids, same filled counts, same rows)."""
-    from cloudtile_spark.operators.raster import (
-        rasterize_zones, rasterize_zones_arrow,
-    )
-    from cloudtile_spark.sources.zones import synth_zones
-
-    zones = synth_zones(10)
-    a = {(r.z, r.x, r.y, r.zone_id): (r.filled, bytes(r.grid))
-         for r in rasterize_zones(spark, zones, z=7, size=64).collect()}
-    b = {(r.z, r.x, r.y, r.zone_id): (r.filled, bytes(r.grid))
-         for r in rasterize_zones_arrow(spark, zones, z=7, size=64)
-         .collect()}
-    assert a == b and a
-
-
 @pytest.mark.parametrize("n_zones", [10, 0])
 def test_rasterize_work_list_plans_no_rdd_scan(spark, n_zones):
-    """Both rasterizers ship the zone-tile work list as a local table, so
+    """The rasterizer ships the zone-tile work list as a local table, so
     the plan holds no RDD scan (whose every read wakes one Python worker
     per core), also for an empty cover."""
-    for impl in (raster.rasterize_zones, raster.rasterize_zones_arrow):
-        df = impl(spark, synth_zones(n_zones), z=7, size=64)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" not in plan, impl.__name__
-        assert "LocalTableScan" in plan, impl.__name__
-        assert (df.count() > 0) == (n_zones > 0)
+    df = raster.rasterize_zones(spark, synth_zones(n_zones), z=7, size=64)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    assert "LocalTableScan" in plan
+    assert (df.count() > 0) == (n_zones > 0)
 
 
 def test_streaming_sliding_window_equals_batch(spark, events_stream_dir):

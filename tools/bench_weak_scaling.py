@@ -1,5 +1,5 @@
-"""WEAK-scaling evidence for the no-broadcast PIP join (r5 VERDICT
-Next #5): double the candidate volume WITH the cores.
+"""WEAK-scaling evidence for the no-broadcast PIP join: grow the
+candidate volume WITH the cores.
 
 The strong-scaling proxy (bench_scaling.py) is confounded by the measured
 per-candidate row-production plateau on this shared-socket sandbox
@@ -9,9 +9,10 @@ a weak-scaling run — cores x4 AND input x4 — per-core work is constant,
 so shared-socket saturation and true parallelization loss separate:
 efficiency = T_small / T_big (ideal 1.0; north-rule bar 0.8).
 
-Levels: local[2] @ 1x pages vs local[8] @ 4x pages, each level in its own
-subprocess with -XX:ActiveProcessorCount pinning (same discipline as
-bench_scaling.py). Appends a table to BENCH/BASELINE.md.
+Levels: local[N] @ 1x pages vs local[4N] @ (4N // N)x pages, with N and 4N
+from the host's cores as in bench_scaling.py, each level in its own
+subprocess with -XX:ActiveProcessorCount pinning. Appends a table to
+BENCH/BASELINE.md.
 
 Usage: python tools/bench_weak_scaling.py [small_pages_n]
 """
@@ -26,7 +27,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SMALL_PAGES = int(sys.argv[1]) if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else 500_000
-LEVELS = ((2, 1), (8, 4))  # (cores, input multiple)
+_CPUS = len(os.sched_getaffinity(0))
+_LO = max(1, _CPUS // 4)
+LEVELS = ((_LO, 1), (_CPUS, _CPUS // _LO))  # (cores, input multiple)
 INPUT_TMPL = "/dev/shm/weak_input_x{mult}"
 N_ZONES = 200
 
@@ -36,7 +39,7 @@ def prepare_inputs() -> None:
     from cloudtile_spark.session import get_spark
     from cloudtile_spark.sources.pages import synth_pages
 
-    spark = get_spark("weak_prep", cores=32, shuffle_partitions=32)
+    spark = get_spark("weak_prep", cores=_CPUS, shuffle_partitions=_CPUS)
     for _, mult in LEVELS:
         out = INPUT_TMPL.format(mult=mult)
         if os.path.isdir(out):
@@ -99,7 +102,7 @@ def main() -> None:
     rows_ratio = hi["codegen_rows"] / max(1, lo["codegen_rows"])
     table = f"""
 
-## Weak scaling (r6, VERDICT Next #5): cores x4 AND input x4
+## Weak scaling on a {_CPUS}-vCPU host: cores x{hi['mult']} AND input x{hi['mult']}
 
 Per-core work constant — separates shared-socket row-production
 saturation (which poisons the strong-scaling proxy) from true
@@ -108,7 +111,7 @@ local[{lo['cores']}] @ {lo['pages']:,} pages vs local[{hi['cores']}] @
 {hi['pages']:,} pages, {N_ZONES} zones, no-broadcast PIP
 (autoBroadcastJoinThreshold=-1).
 
-| leg | local[{lo['cores']}] @1x (sec) | local[{hi['cores']}] @4x (sec) | weak efficiency |
+| leg | local[{lo['cores']}] @1x (sec) | local[{hi['cores']}] @{hi['mult']}x (sec) | weak efficiency |
 |---|---|---|---|
 | no-broadcast ALL-JVM PIP | {lo['codegen_sec']} | {hi['codegen_sec']} | {eff_cg:.2f} |
 
