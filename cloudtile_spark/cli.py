@@ -155,19 +155,12 @@ def main(argv: Optional[list[str]] = None) -> int:
 
     from .operators.extract import extract_features
     from .session import get_spark
+    from .sources.readers import load_features
 
     # reuse an already-active session (embedded/test use) and leave its
     # lifecycle alone; only stop a session this CLI itself created
     active = SparkSession.getActiveSession()
     spark = active or get_spark("cloudtile_spark_cli", cores=args.cores)
-    def _read_src(src: str):
-        # table:<name> reads a catalog table (Iceberg/Hive/temp view at
-        # deploy time) via spark.read.table; file paths go through the
-        # suffix-dispatch reader factory (parquet/geojson/gpkg/csv)
-        if src.startswith("table:"):
-            return spark.read.table(src[len("table:"):])
-        from .sources.readers import load_features
-        return load_features(spark, src)
 
     def _stem(src: str) -> str:
         return src.split(":", 1)[1].split(".")[-1] \
@@ -175,7 +168,7 @@ def main(argv: Optional[list[str]] = None) -> int:
 
     try:
         if args.action == "vector2features":
-            pages = _read_src(args.src)
+            pages = load_features(spark, args.src)
             # default outputs resolve against the PROCESS cwd: Spark
             # resolves relative paths against the JVM's startup dir, which
             # silently scatters outputs when the caller has chdir'd
@@ -187,17 +180,17 @@ def main(argv: Optional[list[str]] = None) -> int:
         settings = _settings_from_args(args)
         stem = _stem(args.src)
         if args.action == "single-step":
-            pages = _read_src(args.src)
+            pages = load_features(spark, args.src)
             feats = extract_features(pages)
         else:
-            feats = _read_src(args.src)
+            feats = load_features(spark, args.src)
         keep = [c for c in ("feature_id", "lon", "lat", "props")
                 if c in feats.columns]
         feats = feats.select(*keep)
         maxz = settings["maximum-zoom"]
         if maxz == "g":
-            from .operators.pyramid import guess_max_zoom
-            maxz = guess_max_zoom(feats, settings["maximum-tile-features"])
+            from .operators.pyramid import guess_max_zoom, tile_limits
+            maxz = guess_max_zoom(feats, tile_limits(settings)[1])
         name = output_name(stem, settings["minimum-zoom"], maxz, args.suffix)
         out = args.out or str(Path.cwd() / name)  # JVM-cwd-proof default
         # force / allow-existing (tippecanoe yaml:12-13; force is the

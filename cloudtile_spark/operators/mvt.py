@@ -17,7 +17,8 @@ Geometry semantics folded into the encoder (tippecanoe option parity):
   in tile units, applied to lines/polygons)
 - tiny-polygon reduction                  (yaml:75-76: polygons under the
   size threshold become their representative point)
-- per-tile feature cap by ascending id    (yaml:107)
+- per-tile feature cap by ascending id    (yaml:105-107, read by
+                                           pyramid.tile_limits)
 - maximum-tile-bytes drop order           (yaml:106: encode stops adding
   features once the byte budget is hit)
 """
@@ -33,9 +34,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import geom, tiles
-from ..settings import TilingSettings
+from ..settings import TilingSettings, layer_name
 from .pmtiles import _read_varint, _varint  # LEB128, as in PMTiles dirs
-from .pyramid import assign_xy, explode_zooms, project_to_4326
+from .pyramid import (assign_xy, epsg_code, explode_zooms, project_to_4326,
+                      tile_limits)
 
 EXTENT = 4096
 _MOVETO, _LINETO, _CLOSEPATH = 1, 2, 7
@@ -241,24 +243,11 @@ TILE_SCHEMA = T.StructType([
 ])
 
 
-def _check_projection(settings: TilingSettings) -> None:
-    """Projection guard for the WKB-geometry path: point pipelines accept
-    EPSG:3857 via pyramid.project_to_4326; WKB geometry sources remain
-    4326-only (loud), since reprojection there would have to rewrite every
-    ring inside the Arrow cover pass."""
-    proj = settings.get("projection")
-    if proj and str(proj).upper().lstrip("EPSG:") != "4326":
-        raise NotImplementedError(
-            f"projection {proj!r} unsupported for WKB geometry sources "
-            "(EPSG:4326 only; point pipelines also accept EPSG:3857)")
-
-
 def encode_point_tiles(
     features: DataFrame,
     minz: int,
     maxz: int,
     settings: TilingSettings | None = None,
-    layer: str = "features",
 ) -> DataFrame:
     """Point features -> MVT tiles for z in [minz, maxz].
 
@@ -268,18 +257,7 @@ def encode_point_tiles(
     """
     settings = settings if settings is not None else TilingSettings()
     features = project_to_4326(features, settings)
-    # feature cap: limit-tile-feature-count[-at-maximum-zoom] override the
-    # default cap (yaml:105-107); no-feature-limit / no-tile-size-limit
-    # lift the budgets entirely
-    cap = settings["maximum-tile-features"]
-    if settings.get("limit-tile-feature-count"):
-        cap = int(settings["limit-tile-feature-count"])
-    cap_at_max = settings.get("limit-tile-feature-count-at-maximum-zoom")
-    if settings.get("no-feature-limit"):
-        cap = cap_at_max = 1 << 62
-    max_bytes = settings["maximum-tile-bytes"]
-    if settings.get("no-tile-size-limit"):
-        max_bytes = 1 << 62
+    cap, cap_at_max, max_bytes = tile_limits(settings)
     # tile resolution: full-detail d => extent 2^d (tippecanoe yaml:31-33;
     # tippecanoe default d=12 -> 4096)
     extent = 1 << int(settings.get("full-detail") or 12)
@@ -295,8 +273,7 @@ def encode_point_tiles(
     exclude_all = bool(settings.get("exclude-all"))
     include = settings.get("include")
     exclude = settings.get("exclude")
-    # named-layer (yaml: named-layer): settings override the layer name
-    layer = settings.get("named-layer") or layer
+    layer = layer_name(settings)
     # settings-driven feature filtering (tippecanoe feature-filter /
     # feature-filter-file, yaml:47-48): compiled to a Catalyst predicate
     # BEFORE the zoom explode so it pushes toward the scan
@@ -345,7 +322,7 @@ def encode_point_tiles(
 
     def enc(key, pdf: pd.DataFrame) -> pd.DataFrame:
         z, x, y = int(key[0]), int(key[1]), int(key[2])
-        eff_cap = int(cap_at_max) if (cap_at_max and z == maxz) else cap
+        eff_cap = cap_at_max if z == maxz else cap
         if order_key:
             pdf = pdf.assign(
                 _ok=pdf.props.map(lambda p: (p or {}).get(order_key, ""))
@@ -478,7 +455,12 @@ def encode_geom_tiles(
     inside the encoder discards bbox-only intersections.
     """
     settings = settings if settings is not None else TilingSettings()
-    _check_projection(settings)  # WKB path: 4326 only (loud)
+    # WKB path: 4326 only (loud) — reprojecting would rewrite every ring
+    # inside the Arrow cover pass; point pipelines also accept EPSG:3857
+    if epsg_code(settings) != "4326":
+        raise NotImplementedError(
+            f"projection {settings['projection']!r} unsupported for WKB "
+            "geometry sources (EPSG:4326 only)")
     covered = tile_cover(
         features, minz, maxz,
         no_duplication=bool(settings.get("no-duplication")))
@@ -526,7 +508,6 @@ def encode_geom_tile_batch(
     z: int, x: int, y: int,
     feats: list[tuple[int, str, bytes]],
     settings: TilingSettings,
-    layer: str = "features",
     maxz: int | None = None,
     protected: dict[int, set[tuple[int, int]]] | None = None,
 ) -> tuple[bytes, int]:
@@ -543,9 +524,9 @@ def encode_geom_tile_batch(
     ``use-source-polygon-winding`` keeps the input orientation and
     ``reverse-source-polygon-winding`` flips it (tippecanoe yaml:108-109).
     """
-    cap = settings["maximum-tile-features"]
-    max_bytes = settings["maximum-tile-bytes"]
     below_max = maxz is not None and z < maxz
+    cap, cap_at_max, max_bytes = tile_limits(settings)
+    cap = cap if below_max else cap_at_max
     # drop-lines / drop-polygons (tippecanoe yaml:57-58): drop those
     # geometry types at below-max zooms, like the drop-rate family
     drop_lines = bool(settings.get("drop-lines")) and below_max
@@ -698,4 +679,5 @@ def encode_geom_tile_batch(
         blobs.append(fb)
         total += len(fb)
         n += 1
-    return encode_layer(layer, blobs, [], [], extent=extent), n
+    return encode_layer(layer_name(settings), blobs, [], [],
+                        extent=extent), n

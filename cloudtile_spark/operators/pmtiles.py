@@ -132,7 +132,7 @@ def _decode_directory(buf: bytes) -> list[tuple[int, int, int, int]]:
     return list(zip(tids, offs, lens, rls))
 
 
-def tilestats(features_df, settings=None, layer: str = "features") -> dict:
+def tilestats(features_df, settings=None) -> dict:
     """tippecanoe-style ``tilestats`` metadata (the tile-stats-* options,
     reference tippecanoe.yaml:113-116): per-layer attribute inventory with
     sampled values, computed as Spark aggregations over the feature table
@@ -143,7 +143,7 @@ def tilestats(features_df, settings=None, layer: str = "features") -> dict:
     """
     from pyspark.sql import functions as F
 
-    from ..settings import TilingSettings
+    from ..settings import TilingSettings, layer_name
 
     settings = settings if settings is not None else TilingSettings()
     if settings.get("no-tile-stats"):
@@ -175,7 +175,7 @@ def tilestats(features_df, settings=None, layer: str = "features") -> dict:
     return {
         "layerCount": 1,
         "layers": [{
-            "layer": layer,
+            "layer": layer_name(settings),
             "count": features_df.count(),
             "geometry": "Point",
             "attributeCount": len(attributes),

@@ -9,20 +9,29 @@ Plan shape (all relational until the optional MVT encode):
     features(feature_id, lon, lat, ...)
       -> explode z in [minz, maxz]            (F.sequence + explode; narrow)
       -> x, y = web-mercator tile math        (pure column exprs, codegen)
-      -> per-tile feature cap (top-k)         (SALTED two-phase window —
+      -> per-tile feature cap (_top_cap)      (SALTED two-phase hash agg —
                                                dense metro tiles are the skew
                                                the north rule calls out)
-      -> groupBy(z, x, y) summary             (count, sorted ids, checksum)
+      -> z, x, y summary                      (count, sorted ids, checksum)
+
+The cap itself is decided once, by ``tile_limits`` (the only reader of the
+cap and byte-budget settings); every tiler — this module, plans/lineage.py,
+operators/mvt.py, the CLI's zoom guess — asks it.
 
 Scale notes (100 TB / 1000 executors):
-- The explode is a narrow map — no shuffle until the top-k.
-- Top-k is two-phase: phase 1 partitions by (z,x,y,salt) so a world-scale
-  hot tile (z0 holds EVERY feature) is spread over ``salt_buckets``
-  reducers, each keeping at most ``cap`` rows; phase 2 re-ranks the
-  <= salt_buckets*cap survivors exactly. Deterministic: priority is
-  (feature_id), unique, so results are identical at any parallelism.
-- feature_ids lists are bounded by the cap (20k default) — no unbounded
-  collect_list.
+- The explode is a narrow map — no shuffle until the top-cap.
+- ``_top_cap`` is two-phase: phase 1 groups by (z, x, y, salt) so a
+  world-scale hot tile (z0 holds EVERY feature) is spread over
+  ``salt_buckets_for`` reducers, each keeping its ``cap`` smallest keys;
+  phase 2 merges the <= salt_buckets*cap survivors per tile exactly. The
+  top-cap of a union is the top-cap of the per-slice top-caps, so the
+  result is identical to a window top-k at any salt count and parallelism
+  (keys are unique: they lead with or contain feature_id).
+- collect_list partial aggregation concatenates, so shuffle bytes carry
+  every key either way; what salting buys is memory: unsalted, the hot
+  tile's whole key list lands in ONE aggregation buffer (BENCH/SKEW.md).
+  Pure counts (``with_ids=False``) skip the kernel: one map-side-combined
+  hash agg, one row per tile shuffled.
 - AQE skew-join/partition-coalesce stays on (session.py).
 """
 
@@ -30,16 +39,19 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import caching, tiles
 from ..settings import TilingSettings
 
 DEFAULT_SALT_BUCKETS = 32  # floor; see salt_buckets_for
+_INT32_MAX = 2**31 - 1  # F.slice takes an int length: "no limit" is this
+_DENSITY_ZOOMS = 4  # density cells are tiles this many zooms deeper
+_GUESS_MAX_ZOOM, _EXTEND_MAX_ZOOM = 14, 15
 
 
-def salt_buckets_for(df: DataFrame, salt_buckets: Optional[int] = None) -> int:
+def salt_buckets_for(df: DataFrame) -> int:
     """Salt-bucket count scaled to the session's parallelism.
 
     A constant 32 funnels a z0 hot tile through 32 reducers no matter the
@@ -50,8 +62,6 @@ def salt_buckets_for(df: DataFrame, salt_buckets: Optional[int] = None) -> int:
     is salt-count-invariant (tests pin salt=8 == salt=256 output), so this
     only moves the parallelism/merge-width trade-off, never results.
     """
-    if salt_buckets is not None:
-        return salt_buckets
     try:
         par = df.sparkSession.sparkContext.defaultParallelism
     except Exception:  # session-less frame in tests
@@ -59,24 +69,55 @@ def salt_buckets_for(df: DataFrame, salt_buckets: Optional[int] = None) -> int:
     return max(DEFAULT_SALT_BUCKETS, min(4096, 2 * int(par)))
 
 
+def tile_limits(settings: Optional[TilingSettings]) -> tuple[int, int, int]:
+    """(cap below max zoom, cap at max zoom, tile byte budget) — the one
+    reading of tippecanoe's per-tile limits (reference tippecanoe.yaml:
+    105-107): ``maximum-tile-features``, overridden by
+    ``limit-tile-feature-count`` and, at the max zoom, by
+    ``limit-tile-feature-count-at-maximum-zoom``; ``no-feature-limit``
+    lifts both caps. ``maximum-tile-bytes`` unless ``no-tile-size-limit``.
+    Every value is clamped to int32, the length type of ``F.slice``."""
+    s = settings if settings is not None else TilingSettings()
+    if s.get("no-feature-limit"):
+        cap = cap_at_max = _INT32_MAX
+    else:
+        cap = int(s.get("limit-tile-feature-count")
+                  or s["maximum-tile-features"])
+        cap_at_max = int(s.get("limit-tile-feature-count-at-maximum-zoom")
+                         or cap)
+    max_bytes = (_INT32_MAX if s.get("no-tile-size-limit")
+                 else int(s["maximum-tile-bytes"]))
+    return tuple(min(v, _INT32_MAX) for v in (cap, cap_at_max, max_bytes))
+
+
+def tile_cap(settings: Optional[TilingSettings], maxz: int) -> Column:
+    """``tile_limits``' feature cap as a column of the row's zoom ``z``."""
+    cap, cap_at_max, _ = tile_limits(settings)
+    return F.when(F.col("z") == maxz, cap_at_max).otherwise(cap)
+
+
+def epsg_code(settings: Optional[TilingSettings]) -> str:
+    """The declared INPUT projection's EPSG code (tippecanoe
+    ``projection``, yaml:23-24), "4326" when unset."""
+    proj = settings.get("projection") if settings else None
+    return str(proj).upper().removeprefix("EPSG:") if proj else "4326"
+
+
 def project_to_4326(df: DataFrame, settings: Optional[TilingSettings],
                     lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """tippecanoe ``projection`` (yaml:23-24): the declared INPUT
-    projection. EPSG:4326 (default) passes through; EPSG:3857 coordinates
+    """EPSG:4326 (default) passes through; EPSG:3857 coordinates
     (web-mercator meters in the lon/lat columns) reproject with the shared
     inverse-mercator SQL builders — pure column math, codegen-friendly, no
     UDF. Anything else fails loudly rather than silently mis-projecting."""
-    proj = settings.get("projection") if settings else None
-    if not proj:
-        return df
-    code = str(proj).upper().replace("EPSG:", "")
+    code = epsg_code(settings)
     if code == "4326":
         return df
     if code == "3857":
         return df.withColumn(lon, F.expr(tiles.merc_to_lon_sql(lon))) \
                  .withColumn(lat, F.expr(tiles.merc_to_lat_sql(lat)))
     raise NotImplementedError(
-        f"projection {proj!r} unsupported (EPSG:4326 or EPSG:3857 input)")
+        f"projection {settings['projection']!r} unsupported "
+        "(EPSG:4326 or EPSG:3857 input)")
 
 
 def assign_xy(df: DataFrame, z_expr: str = "z",
@@ -105,13 +146,13 @@ def topk_per_tile(
     order_col: str = "feature_id",
     salt_buckets: Optional[int] = None,
 ) -> DataFrame:
-    """Keep the first ``cap`` features per (z, x, y), ordered by ``order_col``
-    (tippecanoe maximum-tile-features, reference tippecanoe.yaml:107).
-
-    Two-phase salted top-k (see module docstring). Exact and deterministic
-    because ``order_col`` is unique per tile.
+    """Keep the first ``cap`` rows per (z, x, y) by ``order_col`` — the
+    salted two-phase WINDOW form of ``_top_cap``, kept as the reference the
+    aggregation kernel is tested against. Exact and deterministic because
+    ``order_col`` is unique per tile.
     """
-    salt = (F.col(order_col) % salt_buckets_for(df, salt_buckets)).cast("int")
+    n_salt = salt_buckets if salt_buckets is not None else salt_buckets_for(df)
+    salt = (F.col(order_col) % n_salt).cast("int")
     w1 = Window.partitionBy("z", "x", "y", "_salt").orderBy(order_col)
     w2 = Window.partitionBy("z", "x", "y").orderBy(order_col)
     return (
@@ -139,75 +180,53 @@ def tile_summary(df: DataFrame, with_ids: bool = True) -> DataFrame:
             F.sort_array(F.collect_list("feature_id")).alias("feature_ids")
         )
     out = df.groupBy("z", "x", "y").agg(*aggs)
-    if with_ids:
-        out = out.withColumn(
-            "checksum",
-            F.sha2(F.concat_ws(",", F.col("feature_ids")), 256),
-        )
-    return out
+    return _with_checksum(out) if with_ids else out
+
+
+def _with_checksum(df: DataFrame) -> DataFrame:
+    return df.withColumn(
+        "checksum", F.sha2(F.concat_ws(",", F.col("feature_ids")), 256))
+
+
+def _top_cap(df: DataFrame, key: Column, cap: int | Column) -> DataFrame:
+    """The salted two-phase top-cap (module docstring): one row per tile,
+    (z, x, y, _total, _kept) — the row count and the ``cap`` smallest
+    values of ``key``, ascending. ``cap`` may be a column of ``z``."""
+    cap = F.lit(cap).cast("int")
+    salt = (F.col("feature_id") % salt_buckets_for(df)).cast("int")
+    part = df.groupBy("z", "x", "y", salt.alias("_salt")).agg(
+        F.count("*").alias("_n"),
+        F.slice(F.sort_array(F.collect_list(key)), 1, cap).alias("_top"),
+    )
+    return part.groupBy("z", "x", "y").agg(
+        F.sum("_n").alias("_total"),
+        F.slice(F.sort_array(F.flatten(F.collect_list("_top"))), 1, cap)
+         .alias("_kept"),
+    )
 
 
 def capped_tile_summary(
-    df: DataFrame,
-    cap: int,
-    with_ids: bool = True,
-    salt_buckets: Optional[int] = None,
+    df: DataFrame, cap: int | Column, with_ids: bool = True,
 ) -> DataFrame:
-    """Aggregation-only equivalent of topk_per_tile + tile_summary.
-
-    Semantics: feature_count = min(total, cap); feature_ids = the ``cap``
-    smallest feature_ids in the tile. Identical output to the window path
-    (asserted in tests); the physical plan is hash aggregates, never a
-    sort shuffle.
-
-    What salting does and does NOT buy (measured, BENCH/SKEW.md):
-    collect_list partial aggregation concatenates, so shuffle bytes carry
-    every id either way. UNSALTED, the hot tile's complete id list (z0 =
-    every feature on the planet) materializes in ONE reducer's aggregation
-    buffer — an OOM long before 100 TB. SALTED, each buffer holds one
-    (tile, salt) slice and phase 2 merges <= salt*cap ids per tile:
-    reducer memory is bounded, bought with one extra exchange (~2x wall at
-    test scale, where nothing is near memory limits).
-
-    The true 100 TB path for unbounded tiles is ``with_ids=False`` (pure
-    count, map-side combined, one row per tile shuffled); id lists are for
-    bounded/golden outputs.
+    """Aggregation-only equivalent of topk_per_tile + tile_summary:
+    feature_count = min(total, cap); feature_ids = the ``cap`` smallest
+    feature_ids in the tile (identical to the window path, asserted in
+    tests). ``cap`` is an int or a column of ``z`` (``tile_cap``).
     """
+    cap = F.lit(cap).cast("long")
     if not with_ids:
-        # counts only: min(total, cap) needs no ids at all — one hash agg
-        # whose shuffle is one row per tile after map-side combine.
         return (
             df.groupBy("z", "x", "y")
             .agg(F.count("*").alias("_total"))
-            .select(
-                "z", "x", "y",
-                F.least(F.col("_total"), F.lit(cap).cast("long"))
-                 .alias("feature_count"),
-            )
+            .select("z", "x", "y",
+                    F.least("_total", cap).alias("feature_count"))
         )
-    salt = (F.col("feature_id")
-            % salt_buckets_for(df, salt_buckets)).cast("int")
-    part = (
-        df.groupBy("z", "x", "y", salt.alias("_salt"))
-        .agg(
-            F.count("*").alias("_n"),
-            F.slice(F.sort_array(F.collect_list("feature_id")), 1, cap)
-             .alias("_ids"),
-        )
-    )
-    merged = part.groupBy("z", "x", "y").agg(
-        F.sum("_n").alias("_total"),
-        F.slice(F.array_sort(F.flatten(F.collect_list("_ids"))), 1, cap)
-         .alias("feature_ids"),
-    )
-    return merged.select(
+    kept = _top_cap(df, F.col("feature_id"), cap)
+    return _with_checksum(kept.select(
         "z", "x", "y",
-        F.least(F.col("_total"), F.lit(cap).cast("long"))
-         .alias("feature_count"),
-        "feature_ids",
-        F.sha2(F.concat_ws(",", F.col("feature_ids")), 256)
-         .alias("checksum"),
-    )
+        F.least("_total", cap).alias("feature_count"),
+        F.col("_kept").alias("feature_ids"),
+    ))
 
 
 def build_pyramid(
@@ -240,30 +259,25 @@ def build_pyramid(
     # otherwise misread as degrees (ADVICE r3).
     features = project_to_4326(features, settings)
     if hi == "g":
-        hi = guess_max_zoom(features, settings["maximum-tile-features"])
-    cap = settings["maximum-tile-features"]
+        hi = guess_max_zoom(features, tile_limits(settings)[1])
     df = assign_xy(explode_zooms(features, lo, hi))
-    return capped_tile_summary(df, cap, with_ids=with_ids)
+    return capped_tile_summary(df, tile_cap(settings, hi), with_ids=with_ids)
 
 
-def extend_zooms_while_dropping(
-    features: DataFrame,
-    cap: int,
-    minz: int,
-    maxz: int,
-    hard_limit: int = 15,
+def _lowest_fitting_zoom(
+    features: DataFrame, cap: int, lo: int, hi: int,
     settings: Optional[TilingSettings] = None,
 ) -> int:
-    """tippecanoe ``extend-zooms-if-still-dropping`` (reference
-    tippecanoe.yaml:27): if the deepest requested zoom still drops features
-    (densest tile > cap), extend max zoom until nothing drops or the hard
-    limit. One aggregate job over all candidate extension zooms at once —
-    a driver decision over a tiny result, not a per-zoom loop.
+    """The lowest zoom in [lo, hi] whose densest tile holds <= ``cap``
+    features after the drop strategy, else ``hi``. One aggregate job over
+    every candidate zoom at once — a driver decision over a tiny result,
+    not a per-zoom loop. Empty input fits at ``lo`` (its densest tile
+    holds 0 features).
 
-    Drop-strategy FEEDBACK (round-2 verdict B17): the density that decides
-    extension is measured AFTER the configured merge/thinning strategy,
-    not on raw counts — a zoom where clustering or gamma thinning brings
-    the densest tile under the cap is NOT "still dropping":
+    Drop-strategy FEEDBACK (round-2 verdict B17): density is measured
+    AFTER the configured merge/thinning strategy, not on raw counts — a
+    zoom where clustering or gamma thinning brings the densest tile under
+    the cap is NOT "still dropping":
 
     * ``cluster-distance`` (tippecanoe.yaml:56): features snapping to the
       same pixel-grid cell MERGE into one emitted cluster, so the
@@ -272,11 +286,8 @@ def extend_zooms_while_dropping(
     * ``gamma`` (tippecanoe.yaml:66): per pixel-bucket retention is
       ceil(n^(1/gamma)), so effective density is the sum of retained
       counts per tile.
-
-    Both still run as ONE aggregation over every candidate zoom.
     """
-    exploded = assign_xy(explode_zooms(
-        features.select("lon", "lat"), maxz, hard_limit))
+    exploded = assign_xy(explode_zooms(features.select("lon", "lat"), lo, hi))
     cd = settings.get("cluster-distance") if settings else None
     gamma = settings.get("gamma") if settings else None
     if cd:
@@ -309,75 +320,69 @@ def extend_zooms_while_dropping(
         for r in per_tile.groupBy("z")
         .agg(F.max("eff").alias("max_per_tile")).collect()
     )
-    z = maxz
-    while z < hard_limit and per_z_max.get(z, 0) > cap:
+    z = lo
+    while z < hi and per_z_max.get(z, 0) > cap:
         z += 1
     return z
 
 
-def density_capped_summary(
+def guess_max_zoom(features: DataFrame, cap: int) -> int:
+    """tippecanoe's ``maximum-zoom: g``: the lowest zoom in [0, 14] at
+    which the densest tile holds <= cap features (14 if none does)."""
+    return _lowest_fitting_zoom(features, cap, 0, _GUESS_MAX_ZOOM)
+
+
+def extend_zooms_while_dropping(
     features: DataFrame,
-    z: int,
     cap: int,
-    density_res_offset: int = 4,
-) -> DataFrame:
+    maxz: int,
+    settings: Optional[TilingSettings] = None,
+) -> int:
+    """tippecanoe ``extend-zooms-if-still-dropping`` (reference
+    tippecanoe.yaml:27): if the deepest requested zoom still drops features
+    (densest tile > cap after the drop strategy), extend max zoom until
+    nothing drops or z15."""
+    return _lowest_fitting_zoom(features, cap, maxz, _EXTEND_MAX_ZOOM,
+                                settings)
+
+
+def _with_density(features: DataFrame, z: int) -> DataFrame:
+    """features + their fine cell (fx, fy) ``_DENSITY_ZOOMS`` deeper, its
+    feature count ``density``, and their tile (z, x, y) at ``z``. The
+    density table is one hash agg (one row per non-empty fine cell)."""
+    fine = assign_xy(
+        features.withColumn("z", F.lit(z + _DENSITY_ZOOMS))
+    ).withColumnRenamed("x", "fx").withColumnRenamed("y", "fy").drop("z")
+    dens = fine.groupBy("fx", "fy").agg(F.count("*").alias("density"))
+    return assign_xy(fine.join(dens, ["fx", "fy"]).withColumn("z", F.lit(z)))
+
+
+def _densest_keep_set(df: DataFrame, cap: int) -> DataFrame:
+    """Per tile, the ``cap`` kept members of a ``_with_density`` frame in
+    (density, feature_id) order; each carries its fine cell. feature_id is
+    unique, so (fx, fy) never decides the order."""
+    return _top_cap(df, F.struct("density", "feature_id", "fx", "fy"), cap)
+
+
+def density_capped_summary(features: DataFrame, z: int, cap: int) -> DataFrame:
     """Per-tile cap with tippecanoe's densest-first drop order
     (``coalesce-densest-as-needed`` / ``drop-densest-as-needed`` priority,
     reference tippecanoe.yaml:55-62): when a tile exceeds the cap, features
     in the DENSEST sub-areas are sacrificed first, preserving spatial
-    coverage — unlike the id-priority cap, which is order-biased.
-
-    density = feature count of the containing fine cell (z + offset); keep
-    order = (density ASC, feature_id ASC), deterministic at any parallelism.
-
-    Plan: one hash-agg for the density table (small: one row per non-empty
-    fine cell), join back, then a SALTED two-phase top-k per tile — same
-    shape as capped_tile_summary. An unsalted window here would sort the z0
-    hot tile (every feature on the planet) on one reducer chain; instead
-    phase 1 takes each (tile, salt) slice's top-``cap`` by (density,
-    feature_id) and phase 2 merges <= salt_buckets * cap structs per tile,
-    so reducer memory is bounded at any input size. Top-cap of a union
-    equals top-cap of the union of per-slice top-caps, so the kept set is
-    identical to the window plan (asserted in tests).
+    coverage — unlike the id-priority cap, which is order-biased. The keep
+    set is ``coalesce_densest_summary``'s; this is its id projection.
     """
-    fine = assign_xy(
-        features.withColumn("z", F.lit(z + density_res_offset))
-    ).withColumnRenamed("x", "fx").withColumnRenamed("y", "fy").drop("z")
-    dens = fine.groupBy("fx", "fy").agg(F.count("*").alias("density"))
-    with_d = fine.join(dens, ["fx", "fy"]).drop("fx", "fy")
-    df = assign_xy(with_d.withColumn("z", F.lit(z)))
-    salt = (F.col("feature_id")
-            % salt_buckets_for(df)).cast("int")
-    part = (
-        df.groupBy("z", "x", "y", salt.alias("_salt"))
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.collect_list(F.struct("density", "feature_id"))),
-                1, cap,
-            ).alias("_top")
-        )
-    )
-    merged = part.groupBy("z", "x", "y").agg(
-        F.slice(F.array_sort(F.flatten(F.collect_list("_top"))), 1, cap)
-         .alias("_kept")
-    )
-    return merged.select(
+    kept = _densest_keep_set(_with_density(features, z), cap)
+    return _with_checksum(kept.select(
         "z", "x", "y",
         F.size("_kept").cast("long").alias("feature_count"),
         F.sort_array(F.expr("transform(_kept, s -> s.feature_id)"))
          .alias("feature_ids"),
-    ).withColumn(
-        "checksum", F.sha2(F.concat_ws(",", F.col("feature_ids")), 256)
-    )
+    ))
 
 
-def coalesce_densest_summary(
-    features: DataFrame,
-    z: int,
-    cap: int,
-    density_res_offset: int = 4,
-) -> DataFrame:
+def coalesce_densest_summary(features: DataFrame, z: int, cap: int
+                             ) -> DataFrame:
     """tippecanoe ``coalesce-densest-as-needed`` — the reference's ACTIVE
     default (tippecanoe.yaml:62, asserted by reference
     tests/test_geofile.py:143) — with true UNION-MERGE semantics: over-cap
@@ -395,39 +400,15 @@ def coalesce_densest_summary(
                    cell, else the tile's min kept feature_id
       union geom = bbox over survivor + absorbed members
 
-    Plan: hash aggregates + broadcast-able joins only — the keep set is the
-    salted two-phase top-cap (no window over a hot tile), cell/tile
-    survivor tables are <= cap rows per tile, and the final merge is a
-    groupBy on survivor id.
+    Plan: hash aggregates + broadcast-able joins only — cell/tile survivor
+    tables derive from the keep set (<= cap structs per tile), never from
+    a second pass over the feature table, and the final merge is a groupBy
+    on survivor id.
     """
-    fine = assign_xy(
-        features.withColumn("z", F.lit(z + density_res_offset))
-    ).withColumnRenamed("x", "fx").withColumnRenamed("y", "fy").drop("z")
-    dens = fine.groupBy("fx", "fy").agg(F.count("*").alias("density"))
     # persist: the feature+density table is consumed twice (keep-set agg,
     # merge join) — without it the density join recomputes per consumer
-    df = caching.stage(assign_xy(
-        fine.join(dens, ["fx", "fy"]).withColumn("z", F.lit(z))))
-
-    # salted exact top-cap membership by (density, feature_id); kept
-    # members carry their fine cell so EVERY survivor table below derives
-    # from this one tiny frame (<= 1 row per tile, <= cap structs each) —
-    # never from a second pass over the feature table
-    salt = (F.col("feature_id")
-            % salt_buckets_for(df)).cast("int")
-    part = (
-        df.groupBy("z", "x", "y", salt.alias("_salt"))
-        .agg(F.slice(
-            F.array_sort(F.collect_list(
-                F.struct("density", "feature_id", "fx", "fy"))),
-            1, cap).alias("_top"))
-    )
-    merged = (
-        part.groupBy("z", "x", "y")
-        .agg(F.slice(F.array_sort(F.flatten(F.collect_list("_top"))), 1, cap)
-             .alias("_kept"))
-    )
-    merged = caching.stage(merged)
+    df = caching.stage(_with_density(features, z))
+    merged = caching.stage(_densest_keep_set(df, cap))
     kept_ids = merged.select(
         "z", "x", "y",
         F.explode(F.expr("transform(_kept, s -> s.feature_id)"))
@@ -461,21 +442,3 @@ def coalesce_densest_summary(
         F.min("lon").alias("bbox_w"), F.max("lon").alias("bbox_e"),
         F.min("lat").alias("bbox_s"), F.max("lat").alias("bbox_n"),
     )
-
-
-def guess_max_zoom(
-    features: DataFrame, cap: int, z_lo: int = 0, z_hi: int = 14
-) -> int:
-    """tippecanoe's ``maximum-zoom: g``: the lowest zoom at which the densest
-    tile holds <= cap features (one cheap aggregate job over all candidate
-    zooms at once, not a driver loop)."""
-    per_z_max = (
-        assign_xy(explode_zooms(features.select("lon", "lat"), z_lo, z_hi))
-        .groupBy("z", "x", "y").count()
-        .groupBy("z").agg(F.max("count").alias("max_per_tile"))
-        .filter(F.col("max_per_tile") <= cap)
-        .agg(F.min("z").alias("zg"))
-        .collect()
-    )
-    zg = per_z_max[0]["zg"]
-    return int(zg) if zg is not None else z_hi

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.pyramid import assign_xy, capped_tile_summary
+from ..operators.pyramid import assign_xy, capped_tile_summary, tile_cap
 from ..settings import TilingSettings
 
 LINEAGE_SCHEMA = (
@@ -67,8 +67,7 @@ def resume_pyramid(
     (partitionOverwriteMode=dynamic).
     """
     spark = features.sparkSession
-    settings = settings if settings is not None else TilingSettings()
-    cap = settings["maximum-tile-features"]
+    cap = tile_cap(settings, maxz)
     done = committed_zooms(spark, out_dir)
     todo = [z for z in range(minz, maxz + 1) if z not in done]
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -128,6 +128,12 @@ def _check_min_zoom(s: TilingSettings, value: Any) -> None:
         raise ValueError("Minimum zoom cannot be greater than maximum zoom.")
 
 
+def layer_name(settings: Optional[TilingSettings]) -> str:
+    """The one MVT layer name: tippecanoe ``named-layer``, else "features".
+    The tile encoders and the archive's tilestats both read it here."""
+    return (settings.get("named-layer") if settings else None) or "features"
+
+
 TilingSettings._VALIDATORS = {
     "maximum-zoom": _check_max_zoom,
     "minimum-zoom": _check_min_zoom,

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import catalog
+
 GEOJSON_SCHEMA = T.StructType([
     T.StructField("type", T.StringType()),
     T.StructField("id", T.LongType()),
@@ -159,13 +161,13 @@ READERS = {
 def load_features(spark: SparkSession, path: str) -> DataFrame:
     """Suffix-dispatch reader factory (reference Converter.load_file,
     src/cloudtile/converter.py:90-130). ``table:<name>`` reads a CATALOG
-    table via spark.read.table — the deployment path for Iceberg/Hive
+    table through catalog.read_table — the deployment path for Iceberg/Hive
     catalogs of Common-Crawl-style pages (the north-rule input shape); the
     engine never assumes a file layout there, so partition pruning, hidden
     metadata columns, and snapshot reads all come from the table format.
     """
     if path.startswith("table:"):
-        return read_table(spark, path[len("table:"):])
+        return catalog.read_table(spark, path[len("table:"):])
     suffix = path.rsplit(".", 1)[-1].lower()
     if suffix not in READERS:
         raise ValueError(
@@ -173,10 +175,3 @@ def load_features(spark: SparkSession, path: str) -> DataFrame:
             f"(supported: {sorted(READERS)}, or table:<catalog table>)"
         )
     return READERS[suffix](spark, path)
-
-
-def read_table(spark: SparkSession, name: str) -> DataFrame:
-    """Catalog-table source (Iceberg/Hive/temp view — whatever the session
-    catalog resolves). Locally exercised against the built-in catalog; on a
-    cluster the same call serves an Iceberg table of pages unchanged."""
-    return spark.read.table(name)

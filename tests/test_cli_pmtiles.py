@@ -421,3 +421,47 @@ def test_catalog_contract(tmp_path, spark, monkeypatch):
     p = str(tmp_path / "ct_path.parquet")
     catalog.write_table(df, p)
     assert catalog.read_table(spark, p).count() == 2
+
+
+def test_archive_tilestats_layer_is_tile_layer(tmp_path, spark, monkeypatch):
+    """named-layer names the layer in the tiles AND in the archive's
+    tilestats metadata: both read one resolver."""
+    from cloudtile_spark.sources.pages import synth_pages
+
+    monkeypatch.chdir(tmp_path)
+    synth_pages(spark, 60, partitions=2).drop("page_id") \
+        .write.parquet(str(tmp_path / "p.parquet"))
+    assert main(["convert", "single-step", str(tmp_path / "p.parquet"),
+                 "0", "1", "--pmtiles", "--cores", "2",
+                 "--tc-kwargs", "named-layer=roads"]) == 0
+    arch = pmtiles.read_pmtiles(str(tmp_path / "p-0-1.pmtiles"))
+    tile_layers = {mvt.decode_tile(b)["name"] for b in arch["tiles"].values()}
+    ts_layers = [ly["layer"] for ly in arch["metadata"]["tilestats"]["layers"]]
+    assert tile_layers == {"roads"} and ts_layers == ["roads"]
+
+
+def test_table_sources_resolve_through_catalog(tmp_path, spark, monkeypatch):
+    """``table:<name>`` has one resolver, catalog.read_table (the one with
+    the Iceberg route): both the reader factory and the CLI call it."""
+    from cloudtile_spark.sources import catalog
+    from cloudtile_spark.sources.pages import synth_pages
+    from cloudtile_spark.sources.readers import load_features
+
+    monkeypatch.chdir(tmp_path)
+    seen = []
+    real = catalog.read_table
+
+    def spy(spark_, ref):
+        seen.append(ref)
+        return real(spark_, ref)
+
+    monkeypatch.setattr(catalog, "read_table", spy)
+    spark.createDataFrame([(1, 1.0, 2.0)], "feature_id long, lon double, "
+                          "lat double").createOrReplaceTempView("spy_feats")
+    assert load_features(spark, "table:spy_feats").count() == 1
+    assert seen == ["spy_feats"]
+    synth_pages(spark, 40, partitions=2).drop("page_id") \
+        .createOrReplaceTempView("spy_pages")
+    assert main(["convert", "single-step", "table:spy_pages", "0", "1",
+                 "--cores", "2", "--out", str(tmp_path / "t")]) == 0
+    assert seen == ["spy_feats", "spy_pages"]

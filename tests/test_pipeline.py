@@ -4,11 +4,13 @@ The analogue of the reference's golden-argv tests (reference
 tests/test_geofile.py:136-157): we pin observable outputs instead of argv.
 """
 
+import hashlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from cloudtile_spark import tiles
+from cloudtile_spark import caching, tiles
 from cloudtile_spark.operators.extract import extract_features, extracted_text
 from cloudtile_spark.operators.pyramid import (
     build_pyramid, guess_max_zoom, topk_per_tile, assign_xy, explode_zooms,
@@ -124,22 +126,25 @@ def test_topk_salted_equals_plain_window(spark, features):
     assert a == c
 
 
-def test_salt_buckets_scale_with_parallelism(spark, features):
+def test_salt_buckets_scale_with_parallelism(spark, features, monkeypatch):
+    from cloudtile_spark.operators import pyramid
     from cloudtile_spark.operators.pyramid import (
         DEFAULT_SALT_BUCKETS, capped_tile_summary, salt_buckets_for,
     )
     n = salt_buckets_for(features)
     par = spark.sparkContext.defaultParallelism
     assert n == max(DEFAULT_SALT_BUCKETS, min(4096, 2 * par))
-    assert salt_buckets_for(features, 7) == 7  # explicit override wins
     # capped summary output is salt-invariant: explicit 8 vs 256 vs default
     df = assign_xy(explode_zooms(features, 0, 2))
-    outs = [
-        sorted(map(tuple, capped_tile_summary(df, 20, salt_buckets=sb)
-                   .select("z", "x", "y", "feature_count", "checksum")
-                   .collect()))
-        for sb in (8, 256, None)
-    ]
+    outs = []
+    for sb in (8, 256, None):
+        with monkeypatch.context() as m:
+            if sb is not None:
+                m.setattr(pyramid, "salt_buckets_for", lambda _df, sb=sb: sb)
+            outs.append(sorted(map(tuple, capped_tile_summary(df, 20)
+                                   .select("z", "x", "y", "feature_count",
+                                           "checksum")
+                                   .collect())))
     assert outs[0] == outs[1] == outs[2]
 
 
@@ -211,10 +216,10 @@ def test_extend_zooms_while_dropping(features):
     from cloudtile_spark.operators.pyramid import extend_zooms_while_dropping
 
     # with a tiny cap, z3 still drops -> extended beyond
-    z = extend_zooms_while_dropping(features, cap=20, minz=0, maxz=3)
+    z = extend_zooms_while_dropping(features, cap=20, maxz=3)
     assert z > 3
     # huge cap: nothing drops at maxz -> unchanged
-    z2 = extend_zooms_while_dropping(features, cap=10**6, minz=0, maxz=3)
+    z2 = extend_zooms_while_dropping(features, cap=10**6, maxz=3)
     assert z2 == 3
 
 
@@ -225,14 +230,14 @@ def test_extend_zooms_drop_strategy_feedback(features):
     zoom is LOWER than the raw-density answer at the same cap."""
     from cloudtile_spark.operators.pyramid import extend_zooms_while_dropping
 
-    raw = extend_zooms_while_dropping(features, cap=20, minz=0, maxz=3)
+    raw = extend_zooms_while_dropping(features, cap=20, maxz=3)
     assert raw > 3
 
     s = TilingSettings()
     # 64-px snap at zoom z: a 256-px tile holds <= 16 clusters < cap=20
     s["cluster-distance"] = 64
     clustered = extend_zooms_while_dropping(
-        features, cap=20, minz=0, maxz=3, settings=s)
+        features, cap=20, maxz=3, settings=s)
     assert clustered == 3 < raw
 
     # gamma thinning: sqrt retention per pixel bucket lowers effective
@@ -241,7 +246,7 @@ def test_extend_zooms_drop_strategy_feedback(features):
     s2 = TilingSettings()
     s2["gamma"] = 2
     thinned = extend_zooms_while_dropping(
-        features, cap=20, minz=0, maxz=3, settings=s2)
+        features, cap=20, maxz=3, settings=s2)
     assert 3 <= thinned <= raw
 
 
@@ -401,3 +406,169 @@ def test_orc_reader_roundtrip_matches_parquet(spark, tmp_path):
     a = {tuple(r) for r in load_features(spark, orc_dir).collect()}
     b = {tuple(r) for r in load_features(spark, pq_dir).collect()}
     assert a == b and len(a) == 100
+
+
+_CAP_SETTINGS = {
+    "limit-tile-feature-count": {"limit-tile-feature-count": 25},
+    "at-maximum-zoom": {"limit-tile-feature-count": 25,
+                        "limit-tile-feature-count-at-maximum-zoom": 40},
+    "no-feature-limit": {"maximum-tile-features": 50,
+                         "no-feature-limit": True},
+}
+
+
+@pytest.mark.parametrize("case", list(_CAP_SETTINGS))
+def test_tilers_agree_on_cap(spark, tmp_path, case):
+    """build_pyramid, resume_pyramid, encode_point_tiles and the WKB
+    encoder apply one per-tile cap under every cap setting."""
+    from cloudtile_spark import geom
+    from cloudtile_spark.operators import mvt
+    from cloudtile_spark.plans.lineage import read_tiles, resume_pyramid
+    from cloudtile_spark.sources.pages import synth_pages
+
+    feats = extract_features(synth_pages(spark, 300, partitions=2)
+                             .drop("page_id")) \
+        .select("feature_id", "lon", "lat")
+
+    def counts(df):
+        return {(r.z, r.x, r.y): r.feature_count
+                for r in df.select("z", "x", "y", "feature_count").collect()}
+
+    s = TilingSettings(**_CAP_SETTINGS[case])
+    pyr = counts(build_pyramid(feats, settings=s, minz=0, maxz=2))
+    resume_pyramid(feats, str(tmp_path), "cap", 0, 2, settings=s)
+    assert counts(read_tiles(spark, str(tmp_path))) == pyr
+    assert counts(mvt.encode_point_tiles(feats, 0, 2, settings=s)) == pyr
+    assert pyr[(0, 0, 0)] == {"limit-tile-feature-count": 25,
+                              "at-maximum-zoom": 25,
+                              "no-feature-limit": 300}[case]
+    if case == "at-maximum-zoom":
+        assert max(n for (z, _, _), n in pyr.items() if z == 2) == 40
+    members: dict = {}
+    for r in assign_xy(explode_zooms(feats, 0, 2)).collect():
+        members.setdefault((r.z, r.x, r.y), []).append(
+            (r.feature_id, "point", geom.wkb_point(r.lon, r.lat)))
+    for (z, x, y), fs in members.items():
+        _, n = mvt.encode_geom_tile_batch(z, x, y, fs, s, maxz=2)
+        assert n == pyr[(z, x, y)], (z, x, y)
+
+
+# Degenerate inputs for the pyramid operators: (feature_id, lon, lat)
+# rows. "one_tile" puts 30 + 10 points in two fine cells of one z4 tile, so
+# the densest-first order differs from the id order.
+_PYR_DEGENERATE = {
+    "empty": [],
+    "one_row": [(7, 12.5, 41.9)],
+    "one_tile": ([(i, 2.0 + 0.01 * (i % 6), 43.0 + 0.01 * (i // 6))
+                  for i in range(30)]
+                 + [(100 + i, 15.0 + 0.01 * i, 48.0) for i in range(10)]),
+    "poles": [(i, -180.0 + 36.0 * i, lat) for i, lat in enumerate(
+        [90.0, -90.0, 90.0, -90.0, 89.99, -89.99, 85.06, -85.06, 90.0,
+         -90.0])],
+    "antimeridian": [(i, lon, -60.0 + 12.0 * i) for i, lon in enumerate(
+        [180.0, -180.0, 180.0, -180.0, 179.9999, -179.9999, 180.0,
+         -180.0, 180.0, -180.0, 0.0])],
+    "duplicate_coords": ([(i, 12.5, 41.9) for i in range(30)]
+                         + [(50 + i, -70.0 + 20 * i, -30.0 + 10 * i)
+                            for i in range(5)]),
+}
+_PYR_CAP, _PYR_MAXZ, _PYR_Z = 5, 4, 2
+_PYR_FUNCS = ["build_pyramid_ids", "build_pyramid_counts",
+              "capped_tile_summary", "density_capped_summary",
+              "coalesce_densest_summary", "guess_max_zoom",
+              "extend_zooms_while_dropping"]
+
+
+def _ref_tiles(rows, z):
+    """{(x, y): sorted feature ids} at zoom z by the NumPy tile math."""
+    out: dict = {}
+    if rows:
+        ids, lon, lat = (np.array(c) for c in zip(*rows))
+        xs, ys = tiles.lonlat_to_tile(lon, lat, z)
+        for i, x, y in zip(ids, xs, ys):
+            out.setdefault((int(x), int(y)), []).append(int(i))
+    return {k: sorted(v) for k, v in out.items()}
+
+
+def _ref_pyramid(rows, with_ids):
+    out = []
+    for z in range(_PYR_MAXZ + 1):
+        for (x, y), ids in _ref_tiles(rows, z).items():
+            kept = ids[:_PYR_CAP]
+            out.append((z, x, y, len(kept)) + (
+                (kept, hashlib.sha256(",".join(map(str, kept)).encode())
+                 .hexdigest()) if with_ids else ()))
+    return sorted(out)
+
+
+def _ref_keep_sets(rows):
+    """{(x, y): (pre-cap count, kept ids)} at _PYR_Z by (density, id)."""
+    cell = {i: c for c, ids in _ref_tiles(rows, _PYR_Z + 4).items()
+            for i in ids}
+    density = {i: len(_ref_tiles(rows, _PYR_Z + 4)[cell[i]]) for i in cell}
+    return {k: (len(ids), sorted(sorted(ids, key=lambda i: (density[i], i))
+                                 [:_PYR_CAP]))
+            for k, ids in _ref_tiles(rows, _PYR_Z).items()}
+
+
+def _ref_lowest_fitting_zoom(rows, lo, hi):
+    for z in range(lo, hi):
+        if max(map(len, _ref_tiles(rows, z).values()), default=0) <= _PYR_CAP:
+            return z
+    return hi
+
+
+@pytest.mark.parametrize("fn", _PYR_FUNCS)
+@pytest.mark.parametrize("case", list(_PYR_DEGENERATE))
+def test_pyramid_degenerate_inputs(spark, case, fn):
+    """Every pyramid operator on an empty frame, one row, all points in
+    one tile, the poles, the antimeridian and duplicate coordinates equals
+    a NumPy/pandas reference: feature_count <= cap, ids sorted and unique,
+    densest-first keep sets, sum(multiplicity) = the pre-cap count, and
+    an empty input fits at the lowest candidate zoom."""
+    from cloudtile_spark.operators import pyramid
+
+    rows = _PYR_DEGENERATE[case]
+    feats = spark.createDataFrame(rows, "feature_id long, lon double, "
+                                        "lat double")
+    s = TilingSettings(**{"maximum-tile-features": _PYR_CAP})
+    if fn.startswith("build_pyramid") or fn == "capped_tile_summary":
+        with_ids = fn != "build_pyramid_counts"
+        if fn == "capped_tile_summary":
+            out = pyramid.capped_tile_summary(
+                assign_xy(explode_zooms(feats, 0, _PYR_MAXZ)), _PYR_CAP)
+        else:
+            out = build_pyramid(feats, settings=s, minz=0, maxz=_PYR_MAXZ,
+                                with_ids=with_ids)
+        got = sorted(tuple(list(v) if isinstance(v, list) else v for v in r)
+                     for r in out.collect())
+        assert got == _ref_pyramid(rows, with_ids)
+        for r in got:
+            assert r[3] <= _PYR_CAP
+            if with_ids:
+                assert r[4] == sorted(set(r[4])) and len(r[4]) == r[3]
+    elif fn == "density_capped_summary":
+        got = {(r.x, r.y): (r.feature_count, list(r.feature_ids))
+               for r in pyramid.density_capped_summary(
+                   feats, z=_PYR_Z, cap=_PYR_CAP).collect()}
+        assert got == {k: (len(kept), kept)
+                       for k, (_, kept) in _ref_keep_sets(rows).items()}
+    elif fn == "coalesce_densest_summary":
+        try:
+            out = pyramid.coalesce_densest_summary(
+                feats, z=_PYR_Z, cap=_PYR_CAP).collect()
+        finally:
+            caching.release_staged()
+        got: dict = {}
+        for r in out:
+            assert r.bbox_w <= r.bbox_e and r.bbox_s <= r.bbox_n
+            n, ids = got.get((r.x, r.y), (0, []))
+            got[(r.x, r.y)] = (n + r.multiplicity, sorted(ids + [r.survivor_id]))
+        assert got == _ref_keep_sets(rows)
+    elif fn == "guess_max_zoom":
+        assert pyramid.guess_max_zoom(feats, _PYR_CAP) == \
+            _ref_lowest_fitting_zoom(rows, 0, 14)
+    else:
+        assert pyramid.extend_zooms_while_dropping(
+            feats, _PYR_CAP, maxz=_PYR_Z) == \
+            _ref_lowest_fitting_zoom(rows, _PYR_Z, 15)
