@@ -16,8 +16,10 @@ Two staging mechanisms, chosen by how the stage is CONSUMED:
   the returned DataFrame OBJECT (DataFrame-API pipelines): Catalyst's
   cache substitution matches the plan subtree and swaps in the
   InMemoryRelation.
-* :func:`stage_view` — ``df.localCheckpoint(eager=False)`` registered
-  under a unique per-invocation temp-view name. Consumers are SQL texts,
+* :func:`stage_view` — ``df.localCheckpoint(eager=True)`` registered
+  under a unique per-invocation temp-view name, so each call runs one
+  Spark job when it is made, while the plan is still being built (the
+  eager form is deliberate; see the function). Consumers are SQL texts,
   and nearly all of them open with a ``WITH`` clause — and a measured
   Spark 4.x behavior (round-6 finding) is that ANY ``WITH`` in the
   consumer query defeats InMemoryRelation substitution for view

@@ -6,18 +6,32 @@ tiles as raw protobuf, reference tippecanoe.yaml:112).
 The MVT wire format is public (Mapbox vector-tile spec 2.1): protobuf with
 varint/zigzag geometry commands (MoveTo=1/LineTo=2/ClosePath=7), layer
 extent 4096. A minimal pure-Python protobuf writer/reader lives here — no
-external deps — and runs per-TILE inside ``applyInPandas``: one Arrow batch
-per (z, x, y) group, features sorted by feature_id before encoding so the
-byte output is deterministic at any parallelism (the property the two-
-cluster-size equivalence check needs).
+external deps.
 
-Geometry semantics folded into the encoder (tippecanoe option parity):
+Two entry points, one per input contract, that differ only in the cover
+step: ``encode_point_tiles`` (feature_id, lon, lat) explodes zooms and
+computes tile xy as column math; ``encode_geom_tiles`` (feature_id,
+geom_type, geom_wkb) runs ``tile_cover``. Everything else is shared:
+
+- one settings reader, ``_TileOptions``: both sources honour the same
+  tiling settings (filters, drop-rate, detail, ordering, tags, ids, cap,
+  byte budget). The exceptions are ``single-precision`` (a float32 cast)
+  and EPSG:3857 input (an inverse-mercator reprojection): both are math on
+  the lon/lat columns, so they apply to point sources only;
+- one prelude, ``_encode``: projection, feature-filter and prefilter before
+  the cover; postfilter and drop-rate/base-zoom on the cover frame;
+- one grouped site: ``groupBy(z, x, y).applyInPandas``, one Arrow batch
+  per tile, running one per-tile kernel, ``_encode_tile``. The kernel
+  orders each tile's rows itself, so the bytes are deterministic at any
+  parallelism.
+
+Geometry semantics folded into the kernel (tippecanoe option parity):
 - clipping to tile bounds + buffer        (yaml:81-84, default buffer=5)
 - Douglas-Peucker simplification          (yaml:70, default tolerance 10,
   in tile units, applied to lines/polygons)
 - tiny-polygon reduction                  (yaml:75-76: polygons under the
   size threshold become their representative point)
-- per-tile feature cap by ascending id    (yaml:105-107, read by
+- per-tile feature cap in in-tile order   (yaml:105-107, read by
                                            pyramid.tile_limits)
 - maximum-tile-bytes drop order           (yaml:106: encode stops adding
   features once the byte budget is hit)
@@ -25,7 +39,7 @@ Geometry semantics folded into the encoder (tippecanoe option parity):
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -35,6 +49,8 @@ from pyspark.sql import types as T
 
 from .. import geom, tiles
 from ..settings import TilingSettings, layer_name
+from .borders import protect_mask, protected_nodes
+from .filters import apply_feature_filter, compile_feature_filter
 from .pmtiles import _read_varint, _varint  # LEB128, as in PMTiles dirs
 from .pyramid import (assign_xy, epsg_code, explode_zooms, project_to_4326,
                       tile_limits)
@@ -107,8 +123,7 @@ def encode_feature(fid: int, gtype: int, parts: Iterable[np.ndarray],
 
 
 def encode_layer(name: str, feature_blobs: list[bytes],
-                 keys: list[str], values: list[str],
-                 extent: int = EXTENT) -> bytes:
+                 keys: list[str], values: list[str], extent: int) -> bytes:
     body = bytearray()
     body += _tag(15, 0) + _varint(2)                        # version
     body += _len_field(1, name.encode())                    # name
@@ -231,7 +246,7 @@ def _decode_geometry(buf: bytes) -> list[list[tuple[int, int]]]:
 
 
 # ---------------------------------------------------------------------------
-# the Spark operator
+# the Spark operator: two entry points, one prelude, one per-tile kernel
 # ---------------------------------------------------------------------------
 
 TILE_SCHEMA = T.StructType([
@@ -241,150 +256,8 @@ TILE_SCHEMA = T.StructType([
     T.StructField("feature_count", T.LongType()),
     T.StructField("mvt", T.BinaryType()),
 ])
-
-
-def encode_point_tiles(
-    features: DataFrame,
-    minz: int,
-    maxz: int,
-    settings: TilingSettings | None = None,
-) -> DataFrame:
-    """Point features -> MVT tiles for z in [minz, maxz].
-
-    Plan: explode zooms (narrow) -> tile xy (codegen) -> groupBy(z,x,y)
-    applyInPandas encoder (one Arrow batch per tile). Deterministic: encoder
-    sorts by feature_id; cap and byte budget drop the HIGHEST ids first.
-    """
-    settings = settings if settings is not None else TilingSettings()
-    features = project_to_4326(features, settings)
-    cap, cap_at_max, max_bytes = tile_limits(settings)
-    # tile resolution: full-detail d => extent 2^d (tippecanoe yaml:31-33;
-    # tippecanoe default d=12 -> 4096)
-    extent = 1 << int(settings.get("full-detail") or 12)
-    # in-tile ordering (tippecanoe yaml:85-94): default ascending
-    # feature_id (== preserve-input-order for our monotone ids); order-by /
-    # order-descending-by sort by a props attribute, id-tiebroken so output
-    # stays deterministic at any parallelism
-    order_key = settings.get("order-by") or settings.get("order-descending-by")
-    order_desc = bool(settings.get("order-descending-by"))
-    has_props = "props" in features.columns
-    if order_key and not has_props:
-        raise ValueError("order-by requires a props column")
-    exclude_all = bool(settings.get("exclude-all"))
-    include = settings.get("include")
-    exclude = settings.get("exclude")
-    layer = layer_name(settings)
-    # settings-driven feature filtering (tippecanoe feature-filter /
-    # feature-filter-file, yaml:47-48): compiled to a Catalyst predicate
-    # BEFORE the zoom explode so it pushes toward the scan
-    from .filters import apply_feature_filter, compile_feature_filter
-    features = apply_feature_filter(features, settings, layer)
-    # prefilter (yaml: prefilter): a second filter stage BEFORE the zoom
-    # explode — tippecanoe's pre-tiling shell filter, re-expressed as the
-    # same legacy-filter JSON, so it stays a pushable Catalyst predicate
-    if settings.get("prefilter"):
-        features = features.filter(compile_feature_filter(
-            settings["prefilter"], features.columns, layer))
-    # single-precision (yaml:53): coordinates pass through float32 — the
-    # storage-halving cast a pipeline applies before wide fan-out
-    if settings.get("single-precision"):
-        features = features.withColumn(
-            "lon", F.col("lon").cast("float").cast("double")
-        ).withColumn("lat", F.col("lat").cast("float").cast("double"))
-    # drop-rate + base-zoom (yaml:54-56, B10 as SETTINGS): below the base
-    # zoom, keep a deterministic hash-sample of rate^(base_zoom - z) —
-    # pure Catalyst predicate on (feature_id, z), no Python
-    drop_rate = settings.get("drop-rate")
-    base_zoom = settings.get("base-zoom")
-    if base_zoom == "g" or base_zoom is None:
-        base_zoom = maxz
-    if settings.get("limit-base-zoom-to-maximum-zoom"):
-        base_zoom = min(int(base_zoom), maxz)
-    cols = ["feature_id", "lon", "lat"] + (["props"] if has_props else [])
-
-    df = assign_xy(explode_zooms(features.select(*cols), minz, maxz))
-    # postfilter (yaml: postfilter): runs on the POST-explode frame, so it
-    # can reference $zoom — per-zoom feature gating without a UDF
-    if settings.get("postfilter"):
-        df = df.filter(compile_feature_filter(
-            settings["postfilter"], df.columns, layer))
-    if drop_rate:
-        keep = (
-            F.when(F.col("z") >= F.lit(int(base_zoom)), F.lit(True))
-            .otherwise(
-                (F.pmod(F.xxhash64("feature_id", "z"), F.lit(1_000_000))
-                 / 1_000_000.0)
-                < F.pow(F.lit(1.0 / float(drop_rate)),
-                        F.lit(int(base_zoom)) - F.col("z"))
-            )
-        )
-        df = df.filter(keep)
-
-    def enc(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        z, x, y = int(key[0]), int(key[1]), int(key[2])
-        eff_cap = cap_at_max if z == maxz else cap
-        if order_key:
-            pdf = pdf.assign(
-                _ok=pdf.props.map(lambda p: (p or {}).get(order_key, ""))
-            ).sort_values(["_ok", "feature_id"],
-                          ascending=[not order_desc, True])
-            pdf = pdf.head(eff_cap)
-        else:
-            # `reverse` (yaml:87): reverse input order — descending ids
-            pdf = pdf.sort_values(
-                "feature_id",
-                ascending=not bool(settings.get("reverse"))).head(eff_cap)
-        px, py = tiles.tile_local_coords(
-            pdf.lon.values, pdf.lat.values, z, x, y, extent=extent)
-        # per-tile attribute tables (MVT layer keys/values, dedup'd);
-        # include/exclude/exclude-all follow tippecanoe yaml:34-37
-        keys: list[str] = []
-        values: list[str] = []
-        kv_idx: dict[tuple[str, str], tuple[int, int]] = {}
-
-        def tag_ids(props) -> list[int]:
-            if exclude_all or not has_props or props is None:
-                return []
-            out = []
-            for k in sorted(props):
-                if include and k not in include:
-                    continue
-                if exclude and k in exclude:
-                    continue
-                v = props[k]
-                if (k, v) not in kv_idx:
-                    if k not in keys:
-                        keys.append(k)
-                    values.append(v)
-                    kv_idx[(k, v)] = (keys.index(k), len(values) - 1)
-                ki, vi = kv_idx[(k, v)]
-                out += [ki, vi]
-            return out
-
-        blobs = []
-        total = 0
-        n = 0
-        props_col = pdf.props.values if has_props else [None] * len(pdf)
-        attr_id = settings.get("use-attribute-for-id")
-        for fid, ix, iy, pr in zip(pdf.feature_id.values, px, py, props_col):
-            # use-attribute-for-id (yaml:52): feature id from an attribute;
-            # stringified numbers convert (yaml:51 semantics)
-            if attr_id and pr is not None and attr_id in pr:
-                fid = int(float(pr[attr_id]))
-            fb = encode_feature(int(fid), 1, [np.array([[ix, iy]])],
-                                tag_ids(pr))
-            if total + len(fb) > max_bytes:
-                break
-            blobs.append(fb)
-            total += len(fb)
-            n += 1
-        tile = encode_layer(layer, blobs, keys, values, extent=extent)
-        return pd.DataFrame(
-            [{"z": z, "x": x, "y": y, "feature_count": n, "mvt": tile}]
-        )
-
-    return df.groupBy("z", "x", "y").applyInPandas(enc, schema=TILE_SCHEMA)
-
+_NO_TILE = pd.DataFrame(columns=TILE_SCHEMA.fieldNames()).astype(
+    {"z": "int32", "x": "int64", "y": "int64", "feature_count": "int64"})
 
 COVER_SCHEMA = T.StructType([
     T.StructField("feature_id", T.LongType()),
@@ -394,51 +267,84 @@ COVER_SCHEMA = T.StructType([
     T.StructField("x", T.LongType()),
     T.StructField("y", T.LongType()),
 ])
+# tile_cover fan-out budget: a feature whose bbox covers more tiles than
+# this at a zoom is skipped at that zoom and deeper
+_MAX_COVER_TILES = 4096
 
 
-def tile_cover(features: DataFrame, minz: int, maxz: int,
-               max_tiles_per_feature: int = 4096,
-               no_duplication: bool = False) -> DataFrame:
-    """Explode WKB geometries to every (z, x, y) their bbox covers.
+class _TileOptions:
+    """Every tiling setting the encoders honour, read once per plan for a
+    pyramid whose max zoom is ``maxz`` (None: every tile is a max-zoom
+    tile), then shipped to the executors with the kernel. The cap and
+    byte budget come from ``pyramid.tile_limits``."""
 
-    Arrow-batched (mapInPandas): WKB parse + bbox + cover are NumPy work.
-    Fan-out control (SURVEY §4 hard part (a)): a feature covering more than
-    ``max_tiles_per_feature`` tiles at a zoom contributes its bbox-cover at
-    the deepest zoom where it fits the budget and is SKIPPED deeper (the
-    tippecanoe analogue is clip+dedup per tile; skipping over-budget deep
-    zooms bounds the blow-up for continent-scale polygons).
+    def __init__(self, s: TilingSettings, maxz: int | None):
+        self.maxz, self.layer, self.epsg = maxz, layer_name(s), epsg_code(s)
+        self.cap, self.cap_at_max, self.max_bytes = tile_limits(s)
+        # the prelude: filters, single-precision, drop-rate + base-zoom
+        # (yaml:54-56; the base zoom defaults to maxz), cover variants
+        self.prefilter = s.get("prefilter")
+        self.postfilter = s.get("postfilter")
+        self.single_precision = bool(s.get("single-precision"))
+        self.drop_rate, base = s.get("drop-rate"), s.get("base-zoom")
+        self.base_zoom = maxz if base in (None, "g") else int(base)
+        if maxz is not None and s.get("limit-base-zoom-to-maximum-zoom"):
+            self.base_zoom = min(self.base_zoom, maxz)
+        self.no_duplication = bool(s.get("no-duplication"))
+        self.share_borders = bool(
+            s.get("detect-shared-borders")
+            or s.get("no-simplification-of-shared-nodes"))
+        # tile resolution (yaml:31-33): extent 2^full-detail at the max
+        # zoom, 2^low-detail below it, clamped at minimum-detail
+        full = int(s.get("full-detail") or 12)
+        self.extent_max = 1 << full
+        self.extent_low = 1 << max(int(s.get("low-detail") or full),
+                                   int(s.get("minimum-detail") or 7))
+        # in-tile order (yaml:85-94) and attributes (yaml:34-37, 51-52)
+        self.order_key = s.get("order-by") or s.get("order-descending-by")
+        self.order_desc = bool(s.get("order-descending-by"))
+        self.area_desc = bool(s.get("order-largest-first"))
+        self.area_order = self.area_desc or bool(s.get("order-smallest-first"))
+        self.reverse = bool(s.get("reverse"))
+        self.tags = not s.get("exclude-all")
+        self.include, self.exclude = s.get("include"), s.get("exclude")
+        self.attr_id = s.get("use-attribute-for-id")
+        # geometry (yaml:57-58, 70-84, 108-109). Simplification: off with
+        # no-line-simplification; at the max zoom, off with
+        # simplify-only-low-zooms, else simplification-at-maximum-zoom
+        # replaces the tolerance
+        self.drop_lines = bool(s.get("drop-lines"))
+        self.drop_polys = bool(s.get("drop-polygons"))
+        no_simp = bool(s.get("no-line-simplification"))
+        self.simp_low = 0.0 if no_simp else float(s.get("simplification") or 0)
+        at_max = s.get("simplification-at-maximum-zoom")
+        self.simp_max = self.simp_low
+        if s.get("simplify-only-low-zooms"):
+            self.simp_max = 0.0
+        elif at_max is not None and not no_simp:
+            self.simp_max = float(at_max)
+        self.visvalingam = bool(s.get("visvalingam"))
+        self.buffer = s.get("buffer") or 5
+        # no-duplication writes the UNCLIPPED feature in its one emitting
+        # tile, so it implies the no-clipping path
+        self.no_clip = bool(s.get("no-clipping")) or self.no_duplication
+        self.tiny = (0 if s.get("no-tiny-polygon-reduction")
+                     else s.get("tiny-polygon-size") or 9)
+        self.label_points = bool(s.get("convert-polygons-to-label-points"))
+        self.source_winding = bool(s.get("use-source-polygon-winding"))
+        self.reverse_winding = bool(s.get("reverse-source-polygon-winding"))
 
-    ``no_duplication`` (tippecanoe yaml: no-duplication): a feature spanning
-    several tiles at a zoom is emitted ONLY in the tile containing its
-    first vertex (unclipped), instead of clipped copies in every tile.
-    """
 
-    def cover(batches):
-        for pdf in batches:
-            rows = []
-            for fid, gt, wkb in zip(pdf.feature_id, pdf.geom_type,
-                                    pdf.geom_wkb):
-                _, coords = geom.wkb_parse(bytes(wkb))
-                xmin, ymin, xmax, ymax = geom.polygon_bbox(coords)
-                for z in range(minz, maxz + 1):
-                    if no_duplication:
-                        fx = tiles.lonlat_to_tile(
-                            coords[:1, 0], coords[:1, 1], z)
-                        rows.append((int(fid), gt, bytes(wkb), z,
-                                     int(fx[0][0]), int(fx[1][0])))
-                        continue
-                    tl = tiles.bbox_tile_cover(xmin, ymin, xmax, ymax, z)
-                    if len(tl) > max_tiles_per_feature:
-                        break
-                    for x, y in tl:
-                        rows.append((int(fid), gt, bytes(wkb), z, x, y))
-            yield pd.DataFrame(
-                rows, columns=["feature_id", "geom_type", "geom_wkb",
-                               "z", "x", "y"],
-            )
-
-    return features.select("feature_id", "geom_type", "geom_wkb") \
-        .mapInPandas(cover, schema=COVER_SCHEMA)
+def encode_point_tiles(
+    features: DataFrame,
+    minz: int,
+    maxz: int,
+    settings: TilingSettings | None = None,
+) -> DataFrame:
+    """Point features (feature_id, lon, lat[, props]) -> MVT tiles for z in
+    [minz, maxz]. Cover: explode zooms (narrow) -> tile xy (codegen); then
+    the shared grouped encode (``_encode``)."""
+    return _encode(features, minz, maxz, settings, points=True)
 
 
 def encode_geom_tiles(
@@ -447,61 +353,128 @@ def encode_geom_tiles(
     maxz: int,
     settings: TilingSettings | None = None,
 ) -> DataFrame:
-    """WKB features (point/linestring/polygon) -> MVT tiles.
+    """WKB features (feature_id, geom_type, geom_wkb[, props]) -> MVT tiles.
+    Cover: ``tile_cover`` (narrow Arrow map); then the shared grouped
+    encode (``_encode``). The grouped stage receives every feature whose
+    bbox touches the tile; exact clipping in the kernel discards
+    bbox-only intersections."""
+    return _encode(features, minz, maxz, settings, points=False)
 
-    tile_cover (narrow Arrow map) -> groupBy(z,x,y) -> per-tile encode with
-    clip/simplify/tiny-polygon (encode_geom_tile_batch). The grouped stage
-    receives only the features whose bbox touches the tile; exact clipping
-    inside the encoder discards bbox-only intersections.
-    """
+
+def _encode(features: DataFrame, minz: int, maxz: int,
+            settings: TilingSettings | None, points: bool) -> DataFrame:
+    """The settings prelude and the one grouped encode of both encoders;
+    ``points`` picks the cover step. Plan: projection -> feature-filter
+    and prefilter (pushable predicates, before the fan-out) -> cover ->
+    postfilter and drop-rate on the cover frame (which has ``z``) ->
+    groupBy(z, x, y) applyInPandas over ``_encode_tile``. Deterministic at
+    any parallelism: the kernel orders each tile's rows itself."""
     settings = settings if settings is not None else TilingSettings()
-    # WKB path: 4326 only (loud) — reprojecting would rewrite every ring
-    # inside the Arrow cover pass; point pipelines also accept EPSG:3857
-    if epsg_code(settings) != "4326":
+    o = _TileOptions(settings, maxz)
+    # projection (yaml:23-24): points reproject EPSG:3857 with column math;
+    # the WKB path is 4326-only (loud), since reprojecting would rewrite
+    # every ring inside the Arrow cover pass
+    if points:
+        features = project_to_4326(features, settings)
+    elif o.epsg != "4326":
         raise NotImplementedError(
-            f"projection {settings['projection']!r} unsupported for WKB "
-            "geometry sources (EPSG:4326 only)")
-    covered = tile_cover(
-        features, minz, maxz,
-        no_duplication=bool(settings.get("no-duplication")))
-    share_borders = bool(settings.get("detect-shared-borders")
-                         or settings.get("no-simplification-of-shared-nodes"))
-    if share_borders:
-        # shared-border topology (operators/borders.py): per-feature
-        # protected-vertex lists ride the cover rows into the grouped
-        # encode — an equi-join on feature_id, no driver-side geometry
-        from .borders import protected_nodes
-        covered = covered.join(protected_nodes(features), "feature_id",
-                               "left")
+            f"projection EPSG:{o.epsg} unsupported for WKB geometry sources "
+            "(EPSG:4326 only)")
+    # feature-filter / -file (yaml:47-48) and prefilter: Catalyst
+    # predicates BEFORE the fan-out, so they push toward the scan
+    features = apply_feature_filter(features, settings, o.layer)
+    if o.prefilter:
+        features = features.filter(compile_feature_filter(
+            o.prefilter, features.columns, o.layer))
+    has_props = "props" in features.columns
+    if o.order_key and not has_props:
+        raise ValueError("order-by requires a props column")
+    if points:
+        # single-precision (yaml:53) is a float32 pass over the lon/lat
+        # columns, so it applies to point sources only
+        if o.single_precision:
+            features = features.withColumn(
+                "lon", F.col("lon").cast("float").cast("double")
+            ).withColumn("lat", F.col("lat").cast("float").cast("double"))
+        cols = ["feature_id", "lon", "lat"] + (["props"] if has_props else [])
+        df = assign_xy(explode_zooms(features.select(*cols), minz, maxz))
+    else:
+        df = tile_cover(features, minz, maxz, no_duplication=o.no_duplication)
+        if o.share_borders:
+            # shared-border topology (operators/borders.py): per-feature
+            # protected-vertex lists ride the cover rows into the kernel
+            df = df.join(protected_nodes(features), "feature_id", "left")
+    # postfilter runs on the cover frame, so it can reference $zoom
+    if o.postfilter:
+        df = df.filter(compile_feature_filter(o.postfilter, df.columns,
+                                              o.layer))
+    if o.drop_rate:
+        # below the base zoom keep a deterministic hash-sample of
+        # rate^(base_zoom - z) per (feature, zoom) — pure Catalyst
+        df = df.filter(
+            (F.col("z") >= F.lit(o.base_zoom))
+            | ((F.pmod(F.xxhash64("feature_id", "z"), F.lit(1_000_000))
+                / 1_000_000.0)
+               < F.pow(F.lit(1.0 / float(o.drop_rate)),
+                       F.lit(o.base_zoom) - F.col("z"))))
 
-    def enc(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        z, x, y = int(key[0]), int(key[1]), int(key[2])
-        feats = [
-            (int(fid), gt, bytes(wkb))
-            for fid, gt, wkb in zip(pdf.feature_id, pdf.geom_type,
-                                    pdf.geom_wkb)
-        ]
-        protected = None
-        if share_borders:
-            protected = {
-                int(fid): set(zip(map(int, px), map(int, py)))
-                for fid, px, py in zip(pdf.feature_id, pdf.prot_x,
-                                       pdf.prot_y)
-                if px is not None and len(px)
-            }
-        blob, n = encode_geom_tile_batch(z, x, y, feats, settings,
-                                         maxz=maxz, protected=protected)
+    # fully annotated, so pyspark infers the grouped-map eval type from the
+    # hints instead of warning that it cannot
+    def enc(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        z, x, y = (int(k) for k in key)
+        blob, n = _encode_tile(z, x, y, pdf, o)
         if n == 0:
-            return pd.DataFrame(
-                columns=["z", "x", "y", "feature_count", "mvt"]
-            ).astype({"z": "int32", "x": "int64", "y": "int64",
-                      "feature_count": "int64"})
-        return pd.DataFrame(
-            [{"z": z, "x": x, "y": y, "feature_count": n, "mvt": blob}]
-        )
+            return _NO_TILE
+        return pd.DataFrame([(z, x, y, n, blob)],
+                            columns=TILE_SCHEMA.fieldNames())
 
-    return covered.groupBy("z", "x", "y").applyInPandas(
-        enc, schema=TILE_SCHEMA)
+    return df.groupBy("z", "x", "y").applyInPandas(enc, schema=TILE_SCHEMA)
+
+
+def tile_cover(features: DataFrame, minz: int, maxz: int,
+               no_duplication: bool = False) -> DataFrame:
+    """Explode WKB geometries to every (z, x, y) their bbox covers; a
+    ``props`` column, when present, rides along.
+
+    Arrow-batched (mapInPandas): WKB parse + bbox + cover are NumPy work.
+    Fan-out control (SURVEY §4 hard part (a)): a feature covering more than
+    ``_MAX_COVER_TILES`` tiles at a zoom contributes its bbox-cover at the
+    deepest zoom where it fits the budget and is SKIPPED deeper (the
+    tippecanoe analogue is clip+dedup per tile; skipping over-budget deep
+    zooms bounds the blow-up for continent-scale polygons).
+
+    ``no_duplication`` (tippecanoe yaml: no-duplication): a feature spanning
+    several tiles at a zoom is emitted ONLY in the tile containing its
+    first vertex (unclipped), instead of clipped copies in every tile.
+    """
+    cols = ["feature_id", "geom_type", "geom_wkb"]
+    src = features.select(*cols, *(["props"] if "props" in features.columns
+                                   else []))
+    schema = T.StructType(COVER_SCHEMA.fields + src.schema.fields[3:])
+
+    def cover(batches):
+        for pdf in batches:
+            take, zs, xs, ys = [], [], [], []
+            for i, wkb in enumerate(pdf["geom_wkb"]):
+                _, coords = geom.wkb_parse(bytes(wkb))
+                xmin, ymin, xmax, ymax = geom.polygon_bbox(coords)
+                for z in range(minz, maxz + 1):
+                    if no_duplication:
+                        fx, fy = tiles.lonlat_to_tile(
+                            coords[:1, 0], coords[:1, 1], z)
+                        cells = [(int(fx[0]), int(fy[0]))]
+                    else:
+                        cells = tiles.bbox_tile_cover(xmin, ymin, xmax,
+                                                      ymax, z)
+                        if len(cells) > _MAX_COVER_TILES:
+                            break
+                    take += [i] * len(cells)
+                    zs += [z] * len(cells)
+                    xs += [cx for cx, _ in cells]
+                    ys += [cy for _, cy in cells]
+            yield pdf.iloc[take].assign(z=zs, x=xs, y=ys)[schema.fieldNames()]
+
+    return src.mapInPandas(cover, schema=schema)
 
 
 def encode_geom_tile_batch(
@@ -509,175 +482,195 @@ def encode_geom_tile_batch(
     feats: list[tuple[int, str, bytes]],
     settings: TilingSettings,
     maxz: int | None = None,
-    protected: dict[int, set[tuple[int, int]]] | None = None,
 ) -> tuple[bytes, int]:
-    """Encode one tile of WKB geometries (point/linestring/polygon) with
-    clip + simplify + tiny-polygon reduction. Used by the generic geometry
-    sink and unit tests (driver-side twin of the grouped UDF body).
+    """Encode one tile of WKB geometries (point/linestring/polygon) on the
+    driver: ``_encode_tile`` over (feature_id, geom_type, wkb) tuples.
+    ``maxz`` None makes (z, x, y) a max-zoom tile."""
+    pdf = pd.DataFrame(feats, columns=["feature_id", "geom_type", "geom_wkb"])
+    return _encode_tile(z, x, y, pdf, _TileOptions(settings, maxz))
 
-    Tile resolution (tippecanoe yaml:31-33): extent = 2^full-detail at the
-    max zoom, 2^low-detail below it, clamped at minimum-detail — coarser
-    grids at low zooms shrink tile bytes where detail is invisible anyway.
 
-    Polygon winding: by default exterior rings are normalized to the MVT
-    spec orientation (positive shoelace area in y-down tile coords);
-    ``use-source-polygon-winding`` keeps the input orientation and
-    ``reverse-source-polygon-winding`` flips it (tippecanoe yaml:108-109).
+def _encode_tile(z: int, x: int, y: int, pdf: pd.DataFrame,
+                 o: _TileOptions) -> tuple[bytes, int]:
+    """The one per-tile kernel: (tile bytes, features written) for the
+    cover rows of tile (z, x, y). Rows are points (lon, lat) or WKB
+    (geom_type, geom_wkb), with an optional ``props`` map and, for shared
+    borders, ``prot_x``/``prot_y``. Point rows cost one vectorized
+    ``tile_local_coords`` call; no WKB is built or parsed for them.
+
+    Steps: drop-lines/-polygons below the max zoom (BEFORE the cap, so
+    dropped rows never eat cap slots) -> in-tile order -> cap -> geometry
+    to tile pixels (clip, simplify, tiny-polygon reduction, winding) ->
+    tags and ids -> byte budget (stop at the first feature that would
+    overflow it).
     """
-    below_max = maxz is not None and z < maxz
-    cap, cap_at_max, max_bytes = tile_limits(settings)
-    cap = cap if below_max else cap_at_max
-    # drop-lines / drop-polygons (tippecanoe yaml:57-58): drop those
-    # geometry types at below-max zooms, like the drop-rate family
-    drop_lines = bool(settings.get("drop-lines")) and below_max
-    drop_polys = bool(settings.get("drop-polygons")) and below_max
-    # tippecanoe drops BEFORE capping: filter dropped geometry types out
-    # first so the cap keeps up to `cap` SURVIVING features (an over-cap
-    # tile must not come out under-filled because dropped rows ate slots)
-    if drop_lines or drop_polys:
-        feats = [f for f in feats
-                 if not ((drop_lines and GEOM_TYPE_CODE[f[1]] == 2)
-                         or (drop_polys and GEOM_TYPE_CODE[f[1]] == 3))]
-    full_detail = int(settings.get("full-detail") or 12)
-    min_detail = int(settings.get("minimum-detail") or 7)
-    low_detail = max(int(settings.get("low-detail") or full_detail),
-                     min_detail)
-    detail = full_detail if (maxz is None or z >= maxz) else low_detail
-    extent = 1 << detail
-    use_src_wind = bool(settings.get("use-source-polygon-winding"))
-    rev_wind = bool(settings.get("reverse-source-polygon-winding"))
-    simp = 0 if settings.get("no-line-simplification") else settings["simplification"]
-    # simplify-only-low-zooms (yaml:80): full fidelity at the max zoom;
-    # simplification-at-maximum-zoom (yaml:78): separate maxz tolerance
-    if not below_max:
-        if settings.get("simplify-only-low-zooms"):
-            simp = 0
-        elif settings.get("simplification-at-maximum-zoom") is not None \
-                and not settings.get("no-line-simplification"):
-            simp = settings["simplification-at-maximum-zoom"]
-    # simplifier choice: Douglas-Peucker (default) or Visvalingam-Whyatt
-    # (tippecanoe `visvalingam`, yaml:77; area threshold ~ tol^2/2)
-    if settings.get("visvalingam"):
-        def _simplify(pts, tol, protect=None):
-            return geom.visvalingam(pts, (tol * tol) / 2.0, protect=protect)
+    below_max = o.maxz is not None and z < o.maxz
+    extent = o.extent_low if below_max else o.extent_max
+    points = "geom_wkb" not in pdf.columns
+    fids = pdf["feature_id"].to_numpy()
+    props = pdf["props"].to_numpy() if "props" in pdf.columns else None
+    codes = (np.ones(len(pdf), np.int64) if points
+             else pdf["geom_type"].map(GEOM_TYPE_CODE).to_numpy(np.int64))
+    rows = np.arange(len(pdf))
+    if below_max and (o.drop_lines or o.drop_polys):
+        rows = rows[~((o.drop_lines & (codes == 2))
+                      | (o.drop_polys & (codes == 3)))]
+    rows = rows[_tile_order(pdf, rows, codes, props, o)]
+    rows = rows[:o.cap if below_max else o.cap_at_max]
+    if points:
+        px, py = tiles.tile_local_coords(
+            pdf["lon"].to_numpy()[rows], pdf["lat"].to_numpy()[rows],
+            z, x, y, extent=extent)
+        lo, hi = -o.buffer, extent + o.buffer
+        near = o.no_clip | ((lo <= px) & (px <= hi) & (lo <= py) & (py <= hi))
+        shapes = ((i, 1, [np.array([[ix, iy]])])
+                  for i, ix, iy, ok in zip(rows, px, py, near) if ok)
     else:
-        _simplify = geom.douglas_peucker
-    buffer_px = settings.get("buffer") or 5
-    # no-duplication writes the UNCLIPPED feature in its single emitting
-    # tile (tippecanoe semantics: renderers reconstruct the full geometry
-    # from the one copy), so it implies the no-clipping encode path
-    no_clip = bool(settings.get("no-clipping")) \
-        or bool(settings.get("no-duplication"))
-    tiny = settings.get("tiny-polygon-size") or 9  # spec default ~3x3 px
-    if settings.get("no-tiny-polygon-reduction"):
-        tiny = 0
-    # convert-polygons-to-label-points (yaml: label points): every polygon
-    # collapses to its representative point
-    label_points = bool(settings.get("convert-polygons-to-label-points"))
-
-    lon_min, lat_min, lon_max, lat_max = (
-        float(v[0]) for v in tiles.tile_bounds(
-            z, np.array([x]), np.array([y]))
-    )
+        shapes = _wkb_shapes(z, x, y, pdf, rows, codes, o, below_max, extent)
+    # per-tile attribute tables (MVT layer keys/values, first-seen order);
+    # include/exclude/exclude-all follow tippecanoe yaml:34-37
+    keys: dict[str, int] = {}
+    values: dict[tuple[str, str], int] = {}
+    n_keys = n_values = total = 0
     blobs: list[bytes] = []
-    total = n = 0
-    # in-tile ordering: default ascending feature_id (preserve-input-order
-    # for monotone ids); order-smallest-first / order-largest-first
-    # (yaml:88-89) rank polygons by ring area so the cap keeps the chosen
-    # end of the size distribution, id-tiebroken for determinism
-    if settings.get("order-smallest-first") or \
-            settings.get("order-largest-first"):
-        desc = bool(settings.get("order-largest-first"))
+    for i, gcode, parts in shapes:
+        pr = props[i] if props is not None else None
+        tag_ids: list[int] = []
+        if o.tags and pr is not None:
+            for k in sorted(pr):
+                if (o.include and k not in o.include) or \
+                        (o.exclude and k in o.exclude):
+                    continue
+                tag_ids += [keys.setdefault(k, len(keys)),
+                            values.setdefault((k, pr[k]), len(values))]
+        fid = fids[i]
+        # use-attribute-for-id (yaml:52): id from an attribute; stringified
+        # numbers convert (yaml:51)
+        if o.attr_id and pr is not None and o.attr_id in pr:
+            fid = float(pr[o.attr_id])
+        fb = encode_feature(int(fid), int(gcode), parts, tag_ids)
+        if total + len(fb) > o.max_bytes:
+            break
+        blobs.append(fb)
+        total += len(fb)
+        n_keys, n_values = len(keys), len(values)
+    # tables as of the last written feature: a feature the byte budget
+    # dropped leaves no keys or values behind
+    tile = encode_layer(o.layer, blobs, list(keys)[:n_keys],
+                        [v for _, v in list(values)[:n_values]], extent)
+    return tile, len(blobs)
 
-        def _area(item):
-            _, gt, wkb_ = item
-            if GEOM_TYPE_CODE[gt] != 3:
-                return 0.0
-            _, c = geom.wkb_parse(wkb_)
-            return abs(geom.shoelace_area(c))
 
-        ordered = sorted(feats,
-                         key=lambda f: (-_area(f) if desc else _area(f),
-                                        f[0]))[:cap]
+def _tile_order(pdf: pd.DataFrame, rows: np.ndarray, codes: np.ndarray,
+                props: np.ndarray | None, o: _TileOptions) -> np.ndarray:
+    """Positions of ``rows`` in in-tile order (yaml:85-94), the order the
+    cap keeps. Default: ascending feature_id (preserve-input-order for
+    monotone ids), descending with ``reverse``. ``order-by`` /
+    ``order-descending-by`` rank by a props attribute and
+    ``order-smallest-first`` / ``-largest-first`` by polygon ring area,
+    both id-tiebroken. Rows with equal ids tie-break on their geometry, so
+    the bytes never depend on arrival order."""
+    fid = pdf["feature_id"].to_numpy()[rows]
+    if "geom_wkb" in pdf.columns:
+        keys = [pdf["geom_wkb"].to_numpy()[rows]]
     else:
-        ordered = sorted(feats)[:cap]
-    for fid, gtype_s, wkb in ordered:
-        gcode = GEOM_TYPE_CODE[gtype_s]
-        _, coords = geom.wkb_parse(wkb)
-        # shared-border nodes (operators/borders.py): mask aligned with
-        # coords rows; simplification never removes a protected vertex
+        keys = [pdf["lat"].to_numpy()[rows], pdf["lon"].to_numpy()[rows]]
+    first = None
+    if o.order_key and props is not None:
+        attr = [(p or {}).get(o.order_key) or "" for p in props[rows]]
+        first = np.unique(np.array(attr, dtype=object),
+                          return_inverse=True)[1].reshape(-1)
+        first = -first if o.order_desc else first
+    elif o.area_order:
+        wkbs = (pdf["geom_wkb"].to_numpy() if "geom_wkb" in pdf.columns
+                else None)  # point rows have area 0 and no WKB
+        first = np.array([
+            abs(geom.shoelace_area(geom.wkb_parse(bytes(wkbs[i]))[1]))
+            if codes[i] == 3 else 0.0 for i in rows], dtype=np.float64)
+        first = -first if o.area_desc else first
+    keys.append(-fid if first is None and o.reverse else fid)
+    return np.lexsort(keys if first is None else keys + [first])
+
+
+def _visvalingam(pts: np.ndarray, tol: float,
+                 protect: np.ndarray | None) -> np.ndarray:
+    """Visvalingam-Whyatt at the area threshold matching a Douglas-Peucker
+    distance ``tol`` (tippecanoe ``visvalingam``, yaml:77)."""
+    return geom.visvalingam(pts, (tol * tol) / 2.0, protect=protect)
+
+
+def _wkb_shapes(z: int, x: int, y: int, pdf: pd.DataFrame, rows: np.ndarray,
+                codes: np.ndarray, o: _TileOptions, below_max: bool,
+                extent: int) -> Iterator[tuple[int, int, list[np.ndarray]]]:
+    """(row, MVT geometry type, parts in tile pixels) for each WKB row of
+    ``rows`` that survives clipping, in order.
+
+    Clip to tile + buffer (yaml:81-84), Douglas-Peucker or
+    Visvalingam-Whyatt simplification (yaml:70, 77) that never removes a
+    shared-border node, tiny-polygon reduction (yaml:75-76) and
+    ``convert-polygons-to-label-points``. Polygon winding: exterior rings
+    are normalized to the MVT spec orientation (positive shoelace area in
+    y-down tile coords); ``use-source-polygon-winding`` keeps the input
+    orientation and ``reverse-source-polygon-winding`` flips it
+    (yaml:108-109).
+    """
+    simp = o.simp_low if below_max else o.simp_max
+    simplify = _visvalingam if o.visvalingam else geom.douglas_peucker
+    lo, hi = -o.buffer, extent + o.buffer
+    wkbs = pdf["geom_wkb"].to_numpy()
+    prot = ((pdf["prot_x"].to_numpy(), pdf["prot_y"].to_numpy())
+            if "prot_x" in pdf.columns else None)
+
+    def near(c: np.ndarray) -> bool:
+        return o.no_clip or (lo <= c[0] <= hi and lo <= c[1] <= hi)
+
+    for i in rows:
+        gcode = int(codes[i])
+        _, coords = geom.wkb_parse(bytes(wkbs[i]))
         prot_mask = None
-        if protected:
-            pk = protected.get(int(fid))
-            if pk:
-                from .borders import protect_mask as _pm
-                m = _pm(coords, pk)
-                prot_mask = m if m.any() else None
+        if prot is not None and prot[0][i] is not None and len(prot[0][i]):
+            m = protect_mask(coords, set(zip(map(int, prot[0][i]),
+                                             map(int, prot[1][i]))))
+            prot_mask = m if m.any() else None
         px, py = tiles.tile_local_coords(coords[:, 0], coords[:, 1], z, x, y,
                                          extent=extent)
         pts = np.c_[px, py].astype(np.float64)
-        lo, hi = -buffer_px, extent + buffer_px
         if gcode == 1:
-            if not no_clip and not (lo <= pts[0, 0] <= hi and lo <= pts[0, 1] <= hi):
+            if not near(pts[0]):
                 continue
             parts = [pts.astype(np.int64)]
         elif gcode == 2:
             if simp:
-                # honor the visvalingam setting for lines too (tippecanoe
-                # applies the chosen simplifier to both geometries)
-                pts = _simplify(pts, float(simp), prot_mask)
-            parts_f = ([pts] if no_clip
+                pts = simplify(pts, simp, prot_mask)
+            parts_f = ([pts] if o.no_clip
                        else geom.clip_line_to_rect(pts, lo, lo, hi, hi))
             parts = [p.round().astype(np.int64) for p in parts_f]
             parts = [p for p in parts if len(p) >= 2]
+        elif o.label_points or abs(geom.shoelace_area(pts)) < o.tiny:
+            # tiny-polygon reduction runs BEFORE simplification (which
+            # would legally collapse a sub-pixel ring to nothing): the ring
+            # becomes its representative point
+            c = pts.mean(axis=0)
+            if not near(c):
+                continue
+            gcode, parts = 1, [np.round(c)[None, :].astype(np.int64)]
         else:
-            # tiny-polygon reduction FIRST (before simplification, which
-            # would legally collapse a sub-pixel ring to nothing): a ring
-            # under the size threshold becomes its representative point
-            raw_area = abs(geom.shoelace_area(pts))
-            if label_points:
-                c = pts.mean(axis=0)
-                if no_clip or (lo <= c[0] <= hi and lo <= c[1] <= hi):
-                    gcode = 1
-                    parts = [np.round(c)[None, :].astype(np.int64)]
-                else:
-                    continue
-            elif raw_area < tiny:
-                c = pts.mean(axis=0)
-                if no_clip or (lo <= c[0] <= hi and lo <= c[1] <= hi):
-                    gcode = 1
-                    parts = [np.round(c)[None, :].astype(np.int64)]
-                else:
-                    continue
+            if simp and len(pts) > 4:
+                simplified = simplify(pts, simp, prot_mask)
+                # ring-survival guard: keep the original if the simplifier
+                # collapsed the ring below a valid polygon
+                if len(simplified) >= 4:
+                    pts = simplified
+            ring = (pts if o.no_clip
+                    else geom.clip_ring_to_rect(pts, lo, lo, hi, hi))
+            if len(ring) < 3:
+                continue
+            area = geom.shoelace_area(ring)
+            if abs(area) < o.tiny:
+                gcode = 1
+                parts = [np.round(ring.mean(axis=0))[None, :].astype(np.int64)]
             else:
-                if simp and len(pts) > 4:
-                    simplified = _simplify(pts, float(simp), prot_mask)
-                    # ring-survival guard: keep the original if DP collapsed
-                    # the ring below a valid polygon
-                    if len(simplified) >= 4:
-                        pts = simplified
-                ring = (pts if no_clip
-                        else geom.clip_ring_to_rect(pts, lo, lo, hi, hi))
-                if len(ring) < 3:
-                    continue
-                area = abs(geom.shoelace_area(ring))
-                if area < tiny:
-                    gcode = 1
-                    parts = [np.round(ring.mean(axis=0))[None, :].astype(np.int64)]
-                else:
-                    # polygon winding (see docstring): spec default is
-                    # positive shoelace in y-down tile coords for exterior
-                    # rings; source/reverse options override
-                    if rev_wind:
-                        ring = ring[::-1]
-                    elif not use_src_wind and geom.shoelace_area(ring) < 0:
-                        ring = ring[::-1]
-                    parts = [np.round(ring).astype(np.int64)]
-        fb = encode_feature(int(fid), gcode, parts, [])
-        if total + len(fb) > max_bytes:
-            break
-        blobs.append(fb)
-        total += len(fb)
-        n += 1
-    return encode_layer(layer_name(settings), blobs, [], [],
-                        extent=extent), n
+                if o.reverse_winding or (not o.source_winding and area < 0):
+                    ring = ring[::-1]
+                parts = [np.round(ring).astype(np.int64)]
+        yield i, gcode, parts

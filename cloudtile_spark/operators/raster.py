@@ -343,6 +343,10 @@ def polygonize_tiles(raster_df: DataFrame, size: int = GRID_SIZE) -> DataFrame:
     local = raster_df.groupBy("z", "x", "y").applyInPandas(
         local_cc, schema=_POLY_LOCAL_SCHEMA)
     from .. import caching
+    # eager stage_view, not a lazy persist: the border self-join below
+    # scans the stage from two map stages at once, and with a lazy persist
+    # building the raster_polygonize plan ran 42 jobs (119 stages), not 40
+    # (101)
     vl = caching.stage_view(local, "poly_local")
     local = raster_df.sparkSession.table(vl)
 

@@ -142,8 +142,10 @@ def test_cli_csv_source_dispatch(tmp_path, spark, monkeypatch):
 
 def test_pmtiles_roundtrip_and_dedup():
     rows = []
-    blob_a = mvt.encode_layer("l", [mvt.encode_feature(1, 1, [np.array([[5, 5]])], [])], [], [])
-    blob_b = mvt.encode_layer("l", [mvt.encode_feature(2, 1, [np.array([[9, 9]])], [])], [], [])
+    blob_a = mvt.encode_layer("l", [mvt.encode_feature(1, 1, [np.array([[5, 5]])], [])], [], [],
+                              mvt.EXTENT)
+    blob_b = mvt.encode_layer("l", [mvt.encode_feature(2, 1, [np.array([[9, 9]])], [])], [], [],
+                              mvt.EXTENT)
     rows.append((1, 0, 0, blob_a))
     rows.append((1, 1, 0, blob_a))  # identical payload -> content-dedup
     rows.append((1, 0, 1, blob_b))

@@ -26,7 +26,8 @@ def test_feature_roundtrip_point_line_polygon():
     line = mvt.encode_feature(8, 2, [np.array([[0, 0], [10, 5], [20, -3]])], [])
     poly = mvt.encode_feature(
         9, 3, [np.array([[0, 0], [50, 0], [50, 50], [0, 50], [0, 0]])], [])
-    tile = mvt.encode_layer("test", [pt, line, poly], ["k"], ["v"])
+    tile = mvt.encode_layer("test", [pt, line, poly], ["k"], ["v"],
+                            mvt.EXTENT)
     dec = mvt.decode_tile(tile)
     assert dec["name"] == "test" and dec["extent"] == mvt.EXTENT
     assert dec["version"] == 2
@@ -633,3 +634,157 @@ def test_simplifiers_honor_protect_mask():
     assert len(geom.visvalingam(line, 20.0)) == 2
     kept_v = geom.visvalingam(line, 20.0, protect=protect)
     assert any((kept_v == line[1]).all(axis=1))
+
+
+def _point_frames(spark, rows):
+    """The same (feature_id, lon, lat) rows as a props-free point frame and
+    as a WKB frame."""
+    pts = spark.createDataFrame(rows, "feature_id long, lon double, "
+                                      "lat double")
+    wkb = spark.createDataFrame(
+        [(i, "point", bytearray(geom.wkb_point(lon, lat)))
+         for i, lon, lat in rows],
+        "feature_id long, geom_type string, geom_wkb binary")
+    return pts, wkb
+
+
+def _tile_rows(df):
+    return sorted((r.z, r.x, r.y, r.feature_count, bytes(r.mvt))
+                  for r in df.collect())
+
+
+# 300 points: 200 packed around two cities (so caps and byte budgets bite)
+# and 100 spread over the world
+_AGREE_ROWS = [
+    (i, float(lon), float(lat)) for i, (lon, lat) in enumerate(
+        [(2.35 + 0.02 * (i % 10), 48.85 + 0.02 * (i // 10))
+         for i in range(100)]
+        + [(-74.0 + 0.03 * (i % 10), 40.7 + 0.03 * (i // 10))
+           for i in range(100)]
+        + [(-170.0 + 3.4 * i, -70.0 + 1.4 * i) for i in range(100)])]
+_AGREE_SETTINGS = {
+    "default": {},
+    "maximum-tile-features": {"maximum-tile-features": 7},
+    "maximum-tile-bytes": {"maximum-tile-bytes": 120},
+    "low-detail": {"low-detail": 10},
+    "reverse-cap": {"reverse": True, "maximum-tile-features": 5},
+    "drop-rate": {"drop-rate": 2, "base-zoom": 3},
+    "feature-filter": {"feature-filter": ["<", "feature_id", 150]},
+    "prefilter": {"prefilter": [">=", "feature_id", 120]},
+    "postfilter": {"postfilter": [">=", "$zoom", 2]},
+}
+
+
+@pytest.mark.parametrize("case", list(_AGREE_SETTINGS))
+def test_encoders_agree(spark, case):
+    """Both encoders read the same tiling settings: points through
+    encode_point_tiles and the same points as WKB through
+    encode_geom_tiles give byte-identical tiles."""
+    pts, wkb = _point_frames(spark, _AGREE_ROWS)
+    s = _AGREE_SETTINGS[case]
+    got_pts = _tile_rows(mvt.encode_point_tiles(
+        pts, 0, 4, settings=TilingSettings(**s)))
+    got_wkb = _tile_rows(mvt.encode_geom_tiles(
+        wkb, 0, 4, settings=TilingSettings(**s)))
+    assert got_pts and got_pts == got_wkb
+
+
+# Degenerate inputs: (feature_id, lon, lat) rows
+_MVT_DEGENERATE = {
+    "empty": [],
+    "one_row": [(7, 12.5, 41.9)],
+    "one_tile": [(i, 2.0 + 0.01 * (i % 6), 43.0 + 0.01 * (i // 6))
+                 for i in range(30)],
+    "poles": [(i, -170.0 + 30.0 * i, lat) for i, lat in enumerate(
+        [90.0, -90.0, 85.0511, -85.0511, 85.06, -85.06, 89.99, -89.99,
+         90.0, -90.0])],
+    "antimeridian": [(i, lon, -60.0 + 12.0 * i) for i, lon in enumerate(
+        [180.0, -180.0, 180.0, -180.0, 179.9999, -179.9999, 180.0,
+         -180.0, 180.0, -180.0, 0.0])],
+    "duplicate_coords": ([(i, 12.5, 41.9) for i in range(30)]
+                         + [(50 + i, -70.0 + 20 * i, -30.0 + 10 * i)
+                            for i in range(5)]),
+}
+
+
+@pytest.mark.parametrize("encoder", ["point", "geom"])
+@pytest.mark.parametrize("case", list(_MVT_DEGENERATE))
+def test_mvt_degenerate_inputs(spark, case, encoder):
+    """Both encoders on an empty frame, one row, all points in one tile,
+    the poles, the antimeridian and duplicate coordinates write the tiles,
+    feature counts and decoded ids of build_pyramid(with_ids=True)."""
+    from cloudtile_spark.operators.pyramid import build_pyramid
+
+    rows = _MVT_DEGENERATE[case]
+    pts, wkb = _point_frames(spark, rows)
+    cap = {"maximum-tile-features": 5}
+    ref = {(r.z, r.x, r.y): (r.feature_count, list(r.feature_ids))
+           for r in build_pyramid(pts, settings=TilingSettings(**cap),
+                                  minz=0, maxz=4, with_ids=True).collect()}
+    if encoder == "point":
+        out = mvt.encode_point_tiles(pts, 0, 4, TilingSettings(**cap))
+    else:
+        out = mvt.encode_geom_tiles(wkb, 0, 4, TilingSettings(**cap))
+    got = {}
+    for r in out.collect():
+        ids = [f["id"] for f in mvt.decode_tile(bytes(r.mvt))["features"]]
+        assert len(ids) == r.feature_count
+        got[(r.z, r.x, r.y)] = (r.feature_count, sorted(ids))
+    assert got == ref
+    assert bool(got) == bool(rows)
+
+
+def test_plan_build_warns_nothing(spark):
+    """Building either encoder's plan raises no UserWarning (pyspark warns
+    when it cannot infer a grouped function's eval type from its hints)."""
+    import warnings
+
+    pts, wkb = _point_frames(spark, _AGREE_ROWS[:10])
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        mvt.encode_point_tiles(pts, 0, 2)
+        mvt.encode_geom_tiles(wkb, 0, 2)
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
+
+
+def test_byte_budget_drops_tags_of_dropped_feature(spark):
+    """The feature the byte budget stops at leaves no keys or values in
+    the layer: every layer value is referenced by a written feature."""
+    feats = extract_features(synth_pages(spark, 300, partitions=2)
+                             .drop("page_id"))
+    for budget in (40, 61, 82, 117, 400):
+        s = TilingSettings(**{"maximum-tile-bytes": budget})
+        r = mvt.encode_point_tiles(feats, 0, 0, settings=s).collect()[0]
+        dec = mvt.decode_tile(bytes(r.mvt))
+        used_k = {t for f in dec["features"] for t in f["tags"][0::2]}
+        used_v = {t for f in dec["features"] for t in f["tags"][1::2]}
+        assert used_k == set(range(len(dec["keys"])))
+        assert used_v == set(range(len(dec["values"])))
+
+
+@pytest.mark.parametrize("case", ["tags", "order-by", "use-attribute-for-id"])
+def test_encoders_agree_with_props(spark, case):
+    """A props column rides the WKB cover, so tags, order-by and
+    use-attribute-for-id give the point encoder's bytes for WKB rows."""
+    rows = [(i, lon, lat, {"rank": str((7 * i) % 13), "nid": str(1000 + i)})
+            for i, lon, lat in _AGREE_ROWS[:60]]
+    pts = spark.createDataFrame(rows, "feature_id long, lon double, "
+                                      "lat double, props map<string,string>")
+    wkb = spark.createDataFrame(
+        [(i, "point", bytearray(geom.wkb_point(lon, lat)), p)
+         for i, lon, lat, p in rows],
+        "feature_id long, geom_type string, geom_wkb binary, "
+        "props map<string,string>")
+    s = {"tags": {"exclude": ["nid"]},
+         "order-by": {"order-descending-by": "rank",
+                      "maximum-tile-features": 4},
+         "use-attribute-for-id": {"use-attribute-for-id": "nid"}}[case]
+    got_pts = _tile_rows(mvt.encode_point_tiles(
+        pts, 0, 2, settings=TilingSettings(**s)))
+    got_wkb = _tile_rows(mvt.encode_geom_tiles(
+        wkb, 0, 2, settings=TilingSettings(**s)))
+    assert got_pts == got_wkb
+    dec = mvt.decode_tile(got_wkb[0][4])
+    assert dec["keys"] == (["rank"] if case == "tags" else ["nid", "rank"])
+    ids = [f["id"] for f in dec["features"]]
+    assert (min(ids) >= 1000) == (case == "use-attribute-for-id")
