@@ -1,4 +1,4 @@
-"""Mapbox-Vector-Tile (MVT) encoding as a grouped Arrow operator — the
+"""Mapbox-Vector-Tile (MVT) encoding as a per-tile Arrow operator — the
 engine's replacement for tippecanoe's tile serializer (reference invokes it
 at src/cloudtile/geofile.py:224-234; `no-tile-compression` default keeps
 tiles as raw protobuf, reference tippecanoe.yaml:112).
@@ -20,10 +20,11 @@ geom_type, geom_wkb) runs ``tile_cover``. Everything else is shared:
   the lon/lat columns, so they apply to point sources only;
 - one prelude, ``_encode``: projection, feature-filter and prefilter before
   the cover; postfilter and drop-rate/base-zoom on the cover frame;
-- one grouped site: ``groupBy(z, x, y).applyInPandas``, one Arrow batch
-  per tile, running one per-tile kernel, ``_encode_tile``. The kernel
-  orders each tile's rows itself, so the bytes are deterministic at any
-  parallelism.
+- one tile-sorted multi-tile mapInPandas (``pyramid._map_tiles``): the
+  cover frame is hash-repartitioned on (z, x, y) to every core and sorted
+  by tile, and each Arrow batch is cut into tile runs that each run one
+  per-tile kernel, ``_encode_tile``. The kernel orders each tile's rows
+  itself, so the bytes are deterministic at any parallelism.
 
 Geometry semantics folded into the kernel (tippecanoe option parity):
 - clipping to tile bounds + buffer        (yaml:81-84, default buffer=5)
@@ -52,8 +53,8 @@ from ..settings import TilingSettings, layer_name
 from .borders import protect_mask, protected_nodes
 from .filters import apply_feature_filter, compile_feature_filter
 from .pmtiles import _read_varint, _varint  # LEB128, as in PMTiles dirs
-from .pyramid import (assign_xy, epsg_code, explode_zooms, project_to_4326,
-                      tile_limits)
+from .pyramid import (_map_tiles, assign_xy, epsg_code, explode_zooms,
+                      project_to_4326, tile_limits)
 
 EXTENT = 4096
 _MOVETO, _LINETO, _CLOSEPATH = 1, 2, 7
@@ -256,8 +257,6 @@ TILE_SCHEMA = T.StructType([
     T.StructField("feature_count", T.LongType()),
     T.StructField("mvt", T.BinaryType()),
 ])
-_NO_TILE = pd.DataFrame(columns=TILE_SCHEMA.fieldNames()).astype(
-    {"z": "int32", "x": "int64", "y": "int64", "feature_count": "int64"})
 
 COVER_SCHEMA = T.StructType([
     T.StructField("feature_id", T.LongType()),
@@ -343,7 +342,7 @@ def encode_point_tiles(
 ) -> DataFrame:
     """Point features (feature_id, lon, lat[, props]) -> MVT tiles for z in
     [minz, maxz]. Cover: explode zooms (narrow) -> tile xy (codegen); then
-    the shared grouped encode (``_encode``)."""
+    the shared encode (``_encode``)."""
     return _encode(features, minz, maxz, settings, points=True)
 
 
@@ -354,8 +353,8 @@ def encode_geom_tiles(
     settings: TilingSettings | None = None,
 ) -> DataFrame:
     """WKB features (feature_id, geom_type, geom_wkb[, props]) -> MVT tiles.
-    Cover: ``tile_cover`` (narrow Arrow map); then the shared grouped
-    encode (``_encode``). The grouped stage receives every feature whose
+    Cover: ``tile_cover`` (narrow Arrow map); then the shared encode
+    (``_encode``). The encode stage receives every feature whose
     bbox touches the tile; exact clipping in the kernel discards
     bbox-only intersections."""
     return _encode(features, minz, maxz, settings, points=False)
@@ -363,12 +362,12 @@ def encode_geom_tiles(
 
 def _encode(features: DataFrame, minz: int, maxz: int,
             settings: TilingSettings | None, points: bool) -> DataFrame:
-    """The settings prelude and the one grouped encode of both encoders;
+    """The settings prelude and the one encode site of both encoders;
     ``points`` picks the cover step. Plan: projection -> feature-filter
     and prefilter (pushable predicates, before the fan-out) -> cover ->
     postfilter and drop-rate on the cover frame (which has ``z``) ->
-    groupBy(z, x, y) applyInPandas over ``_encode_tile``. Deterministic at
-    any parallelism: the kernel orders each tile's rows itself."""
+    tile-sorted multi-tile mapInPandas over ``_encode_tile``. Deterministic
+    at any parallelism: the kernel orders each tile's rows itself."""
     settings = settings if settings is not None else TilingSettings()
     o = _TileOptions(settings, maxz)
     # projection (yaml:23-24): points reproject EPSG:3857 with column math;
@@ -418,17 +417,11 @@ def _encode(features: DataFrame, minz: int, maxz: int,
                < F.pow(F.lit(1.0 / float(o.drop_rate)),
                        F.lit(o.base_zoom) - F.col("z"))))
 
-    # fully annotated, so pyspark infers the grouped-map eval type from the
-    # hints instead of warning that it cannot
-    def enc(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        z, x, y = (int(k) for k in key)
+    def enc(z: int, x: int, y: int, pdf: pd.DataFrame) -> list[tuple]:
         blob, n = _encode_tile(z, x, y, pdf, o)
-        if n == 0:
-            return _NO_TILE
-        return pd.DataFrame([(z, x, y, n, blob)],
-                            columns=TILE_SCHEMA.fieldNames())
+        return [(z, x, y, n, blob)] if n else []
 
-    return df.groupBy("z", "x", "y").applyInPandas(enc, schema=TILE_SCHEMA)
+    return _map_tiles(df, enc, TILE_SCHEMA)
 
 
 def tile_cover(features: DataFrame, minz: int, maxz: int,

@@ -37,10 +37,13 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, Optional
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import caching, tiles
 from ..settings import TilingSettings
@@ -138,6 +141,50 @@ def explode_zooms(df: DataFrame, minz: int, maxz: int) -> DataFrame:
     return df.withColumn(
         "z", F.explode(F.sequence(F.lit(minz), F.lit(maxz)))
     )
+
+
+def _map_tiles(df: DataFrame,
+               kernel: Callable[[int, int, int, pd.DataFrame], list[tuple]],
+               schema: T.StructType) -> DataFrame:
+    """The tile-sorted multi-tile mapInPandas: ``kernel(z, x, y, rows)``
+    returns the output rows of one (z, x, y) tile from all of its rows.
+
+    ``df`` is hash-repartitioned on (z, x, y) to ``defaultParallelism``
+    partitions. That is a REPARTITION_BY_NUM exchange, which AQE does not
+    coalesce by bytes, so a small shuffle feeding CPU-bound Python still
+    runs on every core. Each partition is sorted by (z, x, y) and each
+    Arrow batch is cut into tile runs with numpy. The last run of a batch
+    may go on in the next one, so its pieces are held until the tile ends
+    and joined once. Each batch yields one output frame, however many
+    tiles it holds."""
+    names = schema.fieldNames()
+
+    def run(batches):
+        tile, pieces = None, []  # the open tile run and its row pieces
+        for pdf in batches:
+            key = pdf[["z", "x", "y"]].to_numpy()
+            cuts = np.flatnonzero((key[1:] != key[:-1]).any(axis=1)) + 1
+            out = []
+            for s, e in zip(np.r_[0, cuts], np.r_[cuts, len(pdf)]):
+                k = tuple(map(int, key[s]))
+                if k != tile and pieces:
+                    out += kernel(*tile, _joined(pieces))
+                    pieces = []
+                tile = k
+                pieces.append(pdf.iloc[s:e])
+            yield pd.DataFrame(out, columns=names)
+        if pieces:
+            yield pd.DataFrame(kernel(*tile, _joined(pieces)), columns=names)
+
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return (df.repartition(n, "z", "x", "y")
+            .sortWithinPartitions("z", "x", "y")
+            .mapInPandas(run, schema=schema))
+
+
+def _joined(pieces: list[pd.DataFrame]) -> pd.DataFrame:
+    return (pieces[0] if len(pieces) == 1
+            else pd.concat(pieces, ignore_index=True))
 
 
 def topk_per_tile(

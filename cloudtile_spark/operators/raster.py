@@ -1,6 +1,7 @@
 """Raster <-> vector bridge: rasterize polygon zones into per-tile grids and
 vectorize grids back — NumPy kernels over Arrow batches of tile rows
-(mapInPandas; polygonize groups per tile with applyInPandas).
+(mapInPandas; polygonize runs its per-tile labelling on the tile-sorted
+multi-tile mapInPandas, ``pyramid._map_tiles``).
 
 Grid convention: per (z, x, y) tile, a size x size uint8 mask, row 0 = tile
 top, pixel centers sampled (geom.rasterize_ring). Vectorize returns
@@ -22,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import geom, tiles
+from .pyramid import _map_tiles
 
 GRID_SIZE = 256
 
@@ -313,8 +315,7 @@ def polygonize_tiles(raster_df: DataFrame, size: int = GRID_SIZE) -> DataFrame:
 
     bits = _label_bits(size)
 
-    def local_cc(key, pdf):
-        z, x, y = int(key[0]), int(key[1]), int(key[2])
+    def local_cc(z, x, y, pdf):
         mask = np.zeros((size, size), dtype=bool)
         for g in pdf.grid:
             mask |= np.frombuffer(bytes(g), dtype=np.uint8) \
@@ -338,10 +339,9 @@ def polygonize_tiles(raster_df: DataFrame, size: int = GRID_SIZE) -> DataFrame:
             if labels[i, size - 1] >= 0:   # right edge
                 rows.append(("E", _node_id(z, x, y, int(labels[i, size - 1]), bits),
                              0, f"h:{z}:{x}:{y}:{i}"))
-        return pd.DataFrame(rows, columns=["kind", "nid", "n_pixels", "ekey"])
+        return rows
 
-    local = raster_df.groupBy("z", "x", "y").applyInPandas(
-        local_cc, schema=_POLY_LOCAL_SCHEMA)
+    local = _map_tiles(raster_df, local_cc, _POLY_LOCAL_SCHEMA)
     from .. import caching
     # eager stage_view, not a lazy persist: the border self-join below
     # scans the stage from two map stages at once, and with a lazy persist

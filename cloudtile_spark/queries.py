@@ -4208,7 +4208,8 @@ def _geom_mvt_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "mvt_tiles", None,
-    doc="MVT protobuf tile encode (B14): grouped applyInPandas per (z,x,y), "
+    doc="MVT protobuf tile encode (B14): tile-sorted multi-tile mapInPandas "
+        "over (z,x,y), "
         "deterministic bytes — rows-only here; wire-format roundtrip and "
         "clip/simplify semantics are pytest-gated (tests/test_mvt.py)",
 )

@@ -736,7 +736,7 @@ def test_mvt_degenerate_inputs(spark, case, encoder):
 
 def test_plan_build_warns_nothing(spark):
     """Building either encoder's plan raises no UserWarning (pyspark warns
-    when it cannot infer a grouped function's eval type from its hints)."""
+    when it cannot infer a pandas function's eval type from its hints)."""
     import warnings
 
     pts, wkb = _point_frames(spark, _AGREE_ROWS[:10])
@@ -788,3 +788,78 @@ def test_encoders_agree_with_props(spark, case):
     assert dec["keys"] == (["rank"] if case == "tags" else ["nid", "rank"])
     ids = [f["id"] for f in dec["features"]]
     assert (min(ids) >= 1000) == (case == "use-attribute-for-id")
+
+
+def _props_frames(spark, n):
+    """The first ``n`` agreement points with a props map, as a point frame
+    and as a WKB frame."""
+    rows = [(i, lon, lat, {"rank": str((7 * i) % 13), "nid": str(1000 + i)})
+            for i, lon, lat in _AGREE_ROWS[:n]]
+    pts = spark.createDataFrame(rows, "feature_id long, lon double, "
+                                      "lat double, props map<string,string>")
+    wkb = spark.createDataFrame(
+        [(i, "point", bytearray(geom.wkb_point(lon, lat)), p)
+         for i, lon, lat, p in rows],
+        "feature_id long, geom_type string, geom_wkb binary, "
+        "props map<string,string>")
+    return pts, wkb
+
+
+def test_tiles_spanning_arrow_batches(spark):
+    """Three-row Arrow batches cut most tiles across batches (the z0 tile
+    holds every row): both encoders still write the bytes they write at
+    the default batch size."""
+    pts, wkb = _props_frames(spark, 60)
+
+    def both():
+        return (_tile_rows(mvt.encode_point_tiles(pts, 0, 3)),
+                _tile_rows(mvt.encode_geom_tiles(wkb, 0, 3)))
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    want = both()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = both()
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
+    z0 = [r for r in want[0] if r[0] == 0]
+    assert len(z0) == 1 and z0[0][3] == 60
+
+
+@pytest.mark.parametrize("encoder", ["point", "geom"])
+def test_encode_plan_builds_without_jobs(spark, encoder):
+    """Building and explaining either encoder's plan starts no Spark job."""
+    import uuid
+
+    pts, wkb = _props_frames(spark, 20)
+    sc = spark.sparkContext
+    group = f"plan-mvt-{encoder}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build and explain an MVT encode plan")
+    try:
+        if encoder == "point":
+            mvt.encode_point_tiles(pts, 0, 3).explain()
+        else:
+            mvt.encode_geom_tiles(wkb, 0, 3).explain()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_encode_runs_on_every_core(spark):
+    """After the action, the final adaptive plan of the encode shuffles by
+    number to defaultParallelism partitions (an exchange AQE does not
+    coalesce) and has no grouped-map node."""
+    pts, _ = _props_frames(spark, 60)
+    out = mvt.encode_point_tiles(pts, 0, 3)
+    out.collect()
+    aqe = out._jdf.queryExecution().executedPlan()
+    assert aqe.isFinalPlan()
+    plan = aqe.executedPlan().toString()
+    n = spark.sparkContext.defaultParallelism
+    exchanges = [ln for ln in plan.splitlines() if "REPARTITION_BY_NUM" in ln]
+    assert len(exchanges) == 1 and f", {n}), REPARTITION_BY_NUM" in exchanges[0]
+    # AQEShuffleRead is the node through which AQE coalesces partitions
+    assert "AQEShuffleRead" not in plan
+    assert "FlatMapGroupsInPandas" not in plan
