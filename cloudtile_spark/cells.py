@@ -35,8 +35,12 @@ RES_MASK = (1 << RES_BITS) - 1
 
 def cell_sql(lon: str, lat: str, res: int) -> str:
     """cell_id for a lon/lat column pair at resolution ``res`` (SQL)."""
-    x = tiles.tile_x_sql(lon, str(res))
-    y = tiles.tile_y_sql(lat, str(res))
+    return cell_xy_sql(tiles.tile_x_sql(lon, str(res)),
+                       tiles.tile_y_sql(lat, str(res)), res)
+
+
+def cell_xy_sql(x: str, y: str, res: int) -> str:
+    """cell_id of tile (x, y) at resolution ``res`` (SQL)."""
     return f"(({tiles.morton_sql(x, y)} << {RES_BITS}) | {res})"
 
 

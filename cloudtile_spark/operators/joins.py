@@ -9,7 +9,7 @@ appears only as an Arrow-batched pandas kernel for rings too wide to unroll.
 
 Scale design:
 - PIP has one entry point per join contract, built from the same ring
-  table, cell cover and refine router: :func:`pip_join` broadcasts the
+  table, zone table and refine router: :func:`pip_join` broadcasts the
   (small) zone side, so the 100 TB point side never shuffles;
   :func:`pip_join_shuffle_codegen` shuffles the point side once on its
   cell id and plans no broadcast at all.
@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import caching, cells, geom, tiles
+from .pyramid import _bbox_tiles
 
 EARTH_R = geom.EARTH_RADIUS_M
 
@@ -98,58 +99,43 @@ def _codegen_fits(rt: _Rings) -> bool:
             and rt.max_v * len(rt.zone_id) <= PIP_CODEGEN_MAX_CELLS)
 
 
-def _zone_frame(spark, rt: _Rings, rep: np.ndarray, codegen: bool,
-                cell: np.ndarray | None = None) -> DataFrame:
-    """One zone-table row per index in ``rep``: the cover ``cell`` if
-    given, zone_id, the bbox and, on the codegen route, the vertex
-    columns. Shipped through the Arrow pandas path (a LocalRelation; a
-    list of tuples would be pickled row by row and plan as an RDD scan)."""
-    data = {} if cell is None else {"cell": cell}
-    data["zone_id"] = rt.zone_id[rep]
-    data.update(zip(("xmin", "xmax", "ymin", "ymax"), rt.bbox[rep].T))
+def _zone_frame(spark, rt: _Rings, codegen: bool) -> DataFrame:
+    """The zone table, one row per zone: zone_id, the bbox and, on the
+    codegen route, the vertex columns. Shipped as an Arrow table, so it
+    plans as a LocalTableScan even when empty (a list of tuples, or an
+    empty pandas frame, plans as an RDD scan: one Python-worker task per
+    core on every read)."""
+    import pyarrow as pa
+
+    data = {"zone_id": rt.zone_id}
+    data.update(zip(("xmin", "xmax", "ymin", "ymax"), rt.bbox.T))
     if codegen:
         names = ([f"x{i}" for i in range(rt.max_v)]
                  + [f"y{i}" for i in range(rt.max_v)])
-        data.update(zip(names, rt.xy[rep].T))
+        data.update(zip(names, rt.xy.T))
     schema = ", ".join(f"{c} {'long' if v.dtype.kind == 'i' else 'double'}"
                        for c, v in data.items())
-    return spark.createDataFrame(pd.DataFrame(data), schema)
+    return spark.createDataFrame(pa.table(data), schema)
 
 
-def _cell_cover(bbox: np.ndarray, res: int, width: int):
-    """(eff, rep, cell): every zone's bbox tile cover at resolution ``eff``
-    as zone-row indices and cell ids, built with array ops (same corner
-    calls and x-outer/y-inner order as tiles.bbox_tile_cover).
-
-    ``eff`` is the finest of res+2 .. res whose cover keeps rows x
-    ``width`` under PIP_CODEGEN_MAX_CELLS: at a coarse res the equi-join
-    key has few distinct hot cells (metro hotspots), so a handful of
-    shuffle partitions carry the whole candidate stream — measured 5.1s at
-    res 7 vs 1.0s at res 9 for the SAME ~110M candidates (skew, not
-    volume). Output is invariant to the cover resolution.
+def _cell_cover(bbox: np.ndarray, res: int, width: int) -> int:
+    """The cover resolution: the finest of res+2 .. res whose bbox tile
+    cover keeps rows x ``width`` under PIP_CODEGEN_MAX_CELLS (range sizes
+    from numpy; the cover itself is built in the plan, by
+    ``pyramid._bbox_tiles``). At a coarse res the equi-join key has few
+    distinct hot cells (metro hotspots), so a handful of shuffle
+    partitions carry the whole candidate stream — measured 5.1s at res 7
+    vs 1.0s at res 9 for the SAME ~110M candidates (skew, not volume).
+    Output is invariant to the cover resolution.
     """
-    def ranges(r: int):
-        # (lon_min, lat_min) -> (x0, y1); (lon_max, lat_max) -> (x1, y0)
-        x0, y1 = tiles.lonlat_to_tile(bbox[:, 0], bbox[:, 2], r)
-        x1, y0 = tiles.lonlat_to_tile(bbox[:, 1], bbox[:, 3], r)
-        return x0, x1, y0, y1
-
-    eff = res
     for cand_res in range(min(res + 2, 14), res - 1, -1):
-        x0, x1, y0, y1 = ranges(cand_res)
+        # (lon_min, lat_min) -> (x0, y1); (lon_max, lat_max) -> (x1, y0)
+        x0, y1 = tiles.lonlat_to_tile(bbox[:, 0], bbox[:, 2], cand_res)
+        x1, y0 = tiles.lonlat_to_tile(bbox[:, 1], bbox[:, 3], cand_res)
         if int(np.sum((x1 - x0 + 1) * (y1 - y0 + 1))) * width \
                 <= PIP_CODEGEN_MAX_CELLS:
-            eff = cand_res
-            break
-    x0, x1, y0, y1 = ranges(eff)
-    per_zone = ((x1 - x0 + 1) * (y1 - y0 + 1)).astype(np.int64)
-    rep = np.repeat(np.arange(len(bbox)), per_zone)
-    offs = (np.arange(int(per_zone.sum()), dtype=np.int64)
-            - np.repeat(np.cumsum(per_zone) - per_zone, per_zone))
-    nyr = (y1 - y0 + 1)[rep]
-    xx = x0[rep] + offs // nyr
-    yy = y0[rep] + offs % nyr
-    return eff, rep, (tiles.morton(xx, yy) << cells.RES_BITS) | eff
+            return cand_res
+    return res
 
 
 def _inside_sql(max_v: int) -> str:
@@ -213,8 +199,7 @@ def pip_join(points: DataFrame, zones_pdf: pd.DataFrame) -> DataFrame:
     """
     rt = _ring_table(zones_pdf)
     codegen = _codegen_fits(rt)
-    zt = _zone_frame(points.sparkSession, rt, np.arange(len(rt.zone_id)),
-                     codegen)
+    zt = _zone_frame(points.sparkSession, rt, codegen)
     return _refine(points.join(F.broadcast(zt), F.expr(_BBOX_SQL)),
                    rt, codegen)
 
@@ -225,13 +210,14 @@ def pip_join_shuffle_codegen(
     """Exact point-in-polygon join with NO broadcast: the form for zone
     sides too large to broadcast. Same rows as :func:`pip_join`.
 
-    Plan: the ring table is DENORMALIZED into the cell-cover table
-    driver-side — (cell, zone_id, bbox, vertex columns), one row per
-    (cover cell, zone), still a small table — so the whole join is ONE
-    salted equi-join on the point's cell id followed by the bbox test and
-    the refine. Exactly one shuffle of the point side, keyed on the
-    high-cardinality cell id. A first cut joined a separate ring table on
-    zone_id — that re-shuffles the full candidate set on a
+    Plan: the zone table (zone_id, bbox, vertex columns; one row per
+    zone) is DENORMALIZED into its cell cover IN THE PLAN — each zone
+    explodes to the tiles its bbox touches (``pyramid._bbox_tiles``, the
+    points' tile math), one row per (cover cell, zone) — so the whole
+    join is ONE salted equi-join on the point's cell id followed by the
+    bbox test and the refine. Exactly one shuffle of the point side,
+    keyed on the high-cardinality cell id. A first cut joined a separate
+    ring table on zone_id — that re-shuffles the full candidate set on a
     |zones|-cardinality key (measured 4.5x slower at 200 zones / 94M
     candidates); the denormalized cover keeps the ring constants on the
     small side. Over-budget rings take the Arrow refine, whose rings ride
@@ -240,10 +226,13 @@ def pip_join_shuffle_codegen(
     spark = points.sparkSession
     rt = _ring_table(zones_pdf)
     codegen = _codegen_fits(rt)
-    # the width cap bounds the driver-built cover (rows x columns)
+    # the width cap bounds the cover (rows x columns)
     width = 6 + (2 * rt.max_v if codegen else 0)
-    eff, rep, cell = _cell_cover(rt.bbox, res, width)
-    cover = _zone_frame(spark, rt, rep, codegen, cell=cell)
+    eff = _cell_cover(rt.bbox, res, width)
+    cover = _bbox_tiles(_zone_frame(spark, rt, codegen),
+                        "xmin", "ymin", "xmax", "ymax", str(eff))
+    cover = cover.withColumn("cell", F.expr(cells.cell_xy_sql("x", "y", eff))) \
+        .drop("x", "y")
     pts = points.withColumn("cell", F.expr(cells.cell_sql("lon", "lat", eff)))
     # salt the join key: even at the refined cover resolution a few metro
     # cells hold a large share of the points, and the post-join refine runs
@@ -334,6 +323,7 @@ def _with_cell_xy(df: DataFrame, lon: str, lat: str, res: int) -> DataFrame:
 
 
 _KNN_COLS = ("query_id", "feature_id", "dist", "rank")
+_KNN_TARGET = 64  # candidates the adaptive form's chosen ring must hold
 
 
 def _ring_offsets(ring: int) -> Column:
@@ -412,7 +402,6 @@ def knn_join_adaptive(
     queries: DataFrame,
     k: int = 5,
     res_levels: tuple[int, ...] = (4, 6, 8, 10, 12),
-    target: int = 64,
     ring: int = 1,
 ) -> DataFrame:
     """Exact kNN join: for each query (query_id, qlon, qlat) the k nearest
@@ -428,7 +417,8 @@ def knn_join_adaptive(
          resolution (pyramid-style explode; map-side combine keeps the
          shuffle at one row per non-empty cell);
       2. each query picks the FINEST resolution whose k-ring holds >=
-         ``target`` candidates (broadcast join of ring cells vs counts);
+         ``_KNN_TARGET`` candidates (broadcast join of ring cells vs
+         counts);
       3. ONE candidates join: point side exploded to the used resolutions,
          query ring cells equi-joined on (res, x, y); window top-k;
       4. per-query exactness certificate (kth dist <= conservative distance
@@ -509,8 +499,8 @@ def knn_join_adaptive(
     )
     # ONE aggregation keyed on query_id computes every level's ring count
     # as a conditional sum, and the arg-max ("finest res whose ring holds
-    # >= target candidates, else the coarsest level seen") collapses to a
-    # CASE over those sums — the former groupBy(query_id, res) + window
+    # >= _KNN_TARGET candidates, else the coarsest level seen") collapses
+    # to a CASE over those sums — the former groupBy(query_id, res) + window
     # rank cost a second exchange plus a sort for the same answer
     # (guide §2.4: two operations keyed the same way share one exchange;
     # the selection itself needs no ordering, only 5 comparisons).
@@ -528,7 +518,8 @@ def knn_join_adaptive(
         pick = F.coalesce(pick,
                           F.when(F.col(f"s{r}").isNotNull(), F.lit(r)))
     for r in res_levels:  # finest qualifying level wins
-        pick = F.when(F.col(f"s{r}") >= target, F.lit(r)).otherwise(pick)
+        pick = F.when(F.col(f"s{r}") >= _KNN_TARGET, F.lit(r)) \
+            .otherwise(pick)
     chosen = (
         ring_joined.groupBy("query_id").agg(*per_level)
         .select("query_id", pick.alias("res"))
@@ -593,17 +584,16 @@ def knn_join_shuffle(
     queries: DataFrame,
     k: int = 5,
     res: int = 6,
-    ring: int = 1,
 ) -> DataFrame:
     """Exact kNN with NO broadcast of any data-derived side — the path for
     query sides too large to broadcast (e.g. a kNN SELF-join for geo
     near-dup, where "queries" IS the 100 TB point table).
 
     Plan, at one fixed cell resolution ``res``: each query explodes to
-    its (2*ring+1)^2 k-ring cells (x wraps at the date line; rows beyond
-    the poles are dropped) and equi-joins the points on the cell; window
+    its 3x3 k-ring cells (x wraps at the date line; rows beyond the
+    poles are dropped) and equi-joins the points on the cell; window
     top-k; per-query certificate (see the module docstring). Failures
-    retry once with a 3x-wider ring — a sparse neighborhood needs reach,
+    retry once with the 9x9 ring — a sparse neighborhood needs reach,
     not a full scan — and those that still fail take a SALTED REPLICATED
     brute force, not a broadcast cross join: every residual query
     replicates to ``S = 2 x defaultParallelism`` salt buckets, points take
@@ -622,9 +612,9 @@ def knn_join_shuffle(
     """
     qs = _with_cell_xy(queries, "qlon", "qlat", res)
 
-    exact1, cert1 = _ring_pass(points, qs, k, res, ring)
+    exact1, cert1 = _ring_pass(points, qs, k, res, 1)
     failed1 = qs.join(cert1, "query_id", "left_anti")
-    exact2, cert2 = _ring_pass(points, failed1, k, res, 3 * ring + 1)
+    exact2, cert2 = _ring_pass(points, failed1, k, res, 4)
     failed2 = failed1.join(cert2, "query_id", "left_anti") \
                      .select("query_id", "qlon", "qlat")
 

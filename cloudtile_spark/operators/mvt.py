@@ -53,8 +53,8 @@ from ..settings import TilingSettings, layer_name
 from .borders import protect_mask, protected_nodes
 from .filters import apply_feature_filter, compile_feature_filter
 from .pmtiles import _read_varint, _varint  # LEB128, as in PMTiles dirs
-from .pyramid import (_map_tiles, assign_xy, epsg_code, explode_zooms,
-                      project_to_4326, tile_limits)
+from .pyramid import (_bbox_tiles, _map_tiles, assign_xy, epsg_code,
+                      explode_zooms, project_to_4326, tile_limits)
 
 EXTENT = 4096
 _MOVETO, _LINETO, _CLOSEPATH = 1, 2, 7
@@ -258,16 +258,8 @@ TILE_SCHEMA = T.StructType([
     T.StructField("mvt", T.BinaryType()),
 ])
 
-COVER_SCHEMA = T.StructType([
-    T.StructField("feature_id", T.LongType()),
-    T.StructField("geom_type", T.StringType()),
-    T.StructField("geom_wkb", T.BinaryType()),
-    T.StructField("z", T.IntegerType()),
-    T.StructField("x", T.LongType()),
-    T.StructField("y", T.LongType()),
-])
 # tile_cover fan-out budget: a feature whose bbox covers more tiles than
-# this at a zoom is skipped at that zoom and deeper
+# this at a zoom is skipped at that zoom (and so at every deeper one)
 _MAX_COVER_TILES = 4096
 
 
@@ -353,7 +345,8 @@ def encode_geom_tiles(
     settings: TilingSettings | None = None,
 ) -> DataFrame:
     """WKB features (feature_id, geom_type, geom_wkb[, props]) -> MVT tiles.
-    Cover: ``tile_cover`` (narrow Arrow map); then the shared encode
+    Cover: ``tile_cover`` (an Arrow bbox pass, then zoom and tile
+    explodes in the plan); then the shared encode
     (``_encode``). The encode stage receives every feature whose
     bbox touches the tile; exact clipping in the kernel discards
     bbox-only intersections."""
@@ -429,45 +422,42 @@ def tile_cover(features: DataFrame, minz: int, maxz: int,
     """Explode WKB geometries to every (z, x, y) their bbox covers; a
     ``props`` column, when present, rides along.
 
-    Arrow-batched (mapInPandas): WKB parse + bbox + cover are NumPy work.
-    Fan-out control (SURVEY §4 hard part (a)): a feature covering more than
-    ``_MAX_COVER_TILES`` tiles at a zoom contributes its bbox-cover at the
-    deepest zoom where it fits the budget and is SKIPPED deeper (the
-    tippecanoe analogue is clip+dedup per tile; skipping over-budget deep
-    zooms bounds the blow-up for continent-scale polygons).
+    One Arrow pass (mapInPandas) parses each WKB once and adds its lon/lat
+    bbox; the zoom fan-out (``explode_zooms``) and the tile cover
+    (``pyramid._bbox_tiles``, the points' tile math) are then JVM
+    generators in the plan. Fan-out control (SURVEY §4 hard part (a)): a
+    (feature, zoom) whose cover holds more than ``_MAX_COVER_TILES`` tiles
+    is dropped. The cover never shrinks as z grows, so a feature is
+    covered at every zoom up to the deepest that fits the budget and
+    skipped deeper (the tippecanoe analogue is clip+dedup per tile;
+    skipping over-budget deep zooms bounds the blow-up for
+    continent-scale polygons).
 
     ``no_duplication`` (tippecanoe yaml: no-duplication): a feature spanning
     several tiles at a zoom is emitted ONLY in the tile containing its
-    first vertex (unclipped), instead of clipped copies in every tile.
+    first vertex (unclipped), instead of clipped copies in every tile: its
+    bbox is that vertex.
     """
     cols = ["feature_id", "geom_type", "geom_wkb"]
     src = features.select(*cols, *(["props"] if "props" in features.columns
                                    else []))
-    schema = T.StructType(COVER_SCHEMA.fields + src.schema.fields[3:])
+    bbox = ["_xmin", "_ymin", "_xmax", "_ymax"]
+    schema = T.StructType(src.schema.fields + [
+        T.StructField(c, T.DoubleType()) for c in bbox])
 
-    def cover(batches):
+    def with_bbox(batches):
         for pdf in batches:
-            take, zs, xs, ys = [], [], [], []
+            b = np.empty((len(pdf), 4))
             for i, wkb in enumerate(pdf["geom_wkb"]):
                 _, coords = geom.wkb_parse(bytes(wkb))
-                xmin, ymin, xmax, ymax = geom.polygon_bbox(coords)
-                for z in range(minz, maxz + 1):
-                    if no_duplication:
-                        fx, fy = tiles.lonlat_to_tile(
-                            coords[:1, 0], coords[:1, 1], z)
-                        cells = [(int(fx[0]), int(fy[0]))]
-                    else:
-                        cells = tiles.bbox_tile_cover(xmin, ymin, xmax,
-                                                      ymax, z)
-                        if len(cells) > _MAX_COVER_TILES:
-                            break
-                    take += [i] * len(cells)
-                    zs += [z] * len(cells)
-                    xs += [cx for cx, _ in cells]
-                    ys += [cy for _, cy in cells]
-            yield pdf.iloc[take].assign(z=zs, x=xs, y=ys)[schema.fieldNames()]
+                b[i] = (coords[0].tolist() * 2 if no_duplication
+                        else geom.polygon_bbox(coords))
+            yield pdf.assign(**dict(zip(bbox, b.T)))
 
-    return src.mapInPandas(cover, schema=schema)
+    cover = _bbox_tiles(
+        explode_zooms(src.mapInPandas(with_bbox, schema=schema), minz, maxz),
+        *bbox, max_tiles=_MAX_COVER_TILES)
+    return cover.select(*cols, "z", "x", "y", *src.columns[3:])
 
 
 def encode_geom_tile_batch(

@@ -135,12 +135,29 @@ def explode_zooms(df: DataFrame, minz: int, maxz: int) -> DataFrame:
     """One output row per (feature, zoom) — the pyramid fan-out.
 
     For point features each zoom contributes exactly one tile, so fan-out is
-    (maxz - minz + 1)x, a narrow map with no shuffle. (Polygon/line tile-cover
-    with >1 tile per feature lives in the MVT encode path, operators/mvt.py.)
+    (maxz - minz + 1)x, a narrow map with no shuffle. (Polygons and lines
+    cover more than one tile per zoom: ``_bbox_tiles``.)
     """
     return df.withColumn(
         "z", F.explode(F.sequence(F.lit(minz), F.lit(maxz)))
     )
+
+
+def _bbox_tiles(df: DataFrame, xmin: str, ymin: str, xmax: str, ymax: str,
+                z: str = "z", max_tiles: int | None = None) -> DataFrame:
+    """The one bbox tile cover: one output row per tile (x, y) at zoom
+    ``z`` that each row's lon/lat bbox touches (x outer, y inner). The
+    bbox bounds and ``z`` are SQL expressions over ``df``. x spans the
+    tiles of the min and max lon and y those of the max and min lat, by
+    the ``tiles`` SQL of ``assign_xy``, so a point inside a bbox
+    always lands in one of its cover tiles. A row whose cover holds more
+    than ``max_tiles`` tiles is dropped before the explode."""
+    x0, x1 = (F.expr(tiles.tile_x_sql(v, z)) for v in (xmin, xmax))
+    y0, y1 = (F.expr(tiles.tile_y_sql(v, z)) for v in (ymax, ymin))
+    if max_tiles is not None:
+        df = df.where((x1 - x0 + 1) * (y1 - y0 + 1) <= max_tiles)
+    return df.withColumn("x", F.explode(F.sequence(x0, x1))) \
+             .withColumn("y", F.explode(F.sequence(y0, y1)))
 
 
 def _map_tiles(df: DataFrame,

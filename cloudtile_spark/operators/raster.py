@@ -9,9 +9,10 @@ run-length rectangles in pixel space — exact inverse for cell-count parity
 (sum of rect areas == filled pixels), the FIXTURES.md §6 gate.
 
 Scale shape: the zone list is the small broadcast side (driver pandas ->
-UDF closure); the tile list comes from the zones' bbox tile-cover (pure
-driver math, zones are small); each tile renders independently in an Arrow
-batch -> embarrassingly parallel, no shuffle after the initial repartition.
+UDF closure); the (zone, tile) work list is the zone table exploded to each
+zone's bbox tile cover in the plan (``pyramid._bbox_tiles``); each tile
+renders independently in an Arrow batch -> embarrassingly parallel, no
+shuffle after the initial repartition.
 """
 
 from __future__ import annotations
@@ -23,7 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import geom, tiles
-from .pyramid import _map_tiles
+from .joins import _ring_table, _zone_frame
+from .pyramid import _bbox_tiles, _map_tiles
 
 GRID_SIZE = 256
 
@@ -37,36 +39,17 @@ RASTER_SCHEMA = T.StructType([
 ])
 
 
-def zone_tile_cover(zones_pdf: pd.DataFrame, z: int) -> list[tuple[int, int, int]]:
-    """(zone_id, x, y) tile-cover of every zone bbox at zoom z (driver-side:
-    the zone table is the small dimension)."""
-    out = []
-    for _, r in zones_pdf.iterrows():
-        xmin, ymin, xmax, ymax = geom.polygon_bbox(r.ring)
-        for x, y in tiles.bbox_tile_cover(xmin, ymin, xmax, ymax, z):
-            out.append((int(r.zone_id), x, y))
-    return out
-
-
-def _work_frame(spark: SparkSession, cover: list) -> DataFrame:
-    """The (zone_id, x, y) work list shipped as an Arrow table, so it plans
-    as a LocalTableScan even when empty (a list of tuples, or an empty
-    pandas frame, plans as an RDD scan: one Python-worker task per core on
-    every read)."""
-    import pyarrow as pa
-
-    cols = np.asarray(cover, dtype=np.int64).reshape(-1, 3).T
-    table = pa.table(dict(zip(("zone_id", "x", "y"), cols)))
-    return spark.createDataFrame(table, "zone_id long, x long, y long")
-
-
 def rasterize_zones(
     spark: SparkSession, zones_pdf: pd.DataFrame, z: int,
     size: int = GRID_SIZE,
 ) -> DataFrame:
     """One row per (tile, zone) with the zone's coverage mask in that tile."""
-    work = _work_frame(spark, zone_tile_cover(zones_pdf, z)) \
-        .repartition("x", "y")
+    # the work list: the zone table exploded to each zone's bbox tile cover
+    # in the plan (an Arrow-backed zone table plans as a LocalTableScan even
+    # when empty, so no read wakes a Python worker per core)
+    zt = _zone_frame(spark, _ring_table(zones_pdf), codegen=False)
+    work = _bbox_tiles(zt, "xmin", "ymin", "xmax", "ymax", str(z)) \
+        .select("zone_id", "x", "y").repartition("x", "y")
     rings = {int(r.zone_id): np.asarray(r.ring, dtype=np.float64)
              for _, r in zones_pdf.iterrows()}
 

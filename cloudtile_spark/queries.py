@@ -882,43 +882,28 @@ def _zone_overlap_area_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _overlay_poly_result(cand)
 
 
-_OVERLAY_CELL_DEG = 11.25  # candidate-generation grid (32 x 16 world)
-
-
-def _overlay_cell_cover(df: DataFrame, xlo, xhi, ylo, yhi) -> DataFrame:
-    """Explode a bbox to the lon/lat grid cells it touches (plain-degree
-    grid — only candidate generation, exactness comes from the kernel)."""
-    c = _OVERLAY_CELL_DEG
-    return df.withColumn("cxc", F.explode(F.sequence(
-        F.floor((xlo + F.lit(180.0)) / c).cast("int"),
-        F.floor((xhi + F.lit(180.0)) / c).cast("int")))) \
-        .withColumn("cyc", F.explode(F.sequence(
-            F.floor((ylo + F.lit(90.0)) / c).cast("int"),
-            F.floor((yhi + F.lit(90.0)) / c).cast("int"))))
-
-
 @_register(
     "zone_overlap_area_poly_shuffle",
     None,  # same golden oracle as zone_overlap_area_poly (alias below)
     doc="NO-BROADCAST overlay-poly twin (the 100 TB-zones path, same "
         "family shape as pip_shuffle_join/knn_shuffle_k5): both sides "
-        "explode their bbox onto a coarse lon/lat grid, candidates come "
+        "explode their bbox onto the z5 tile grid, candidates come "
         "from a cell EQUI-join (shuffle, AQE-splittable) + exact bbox "
         "refine + distinct, then the identical clip kernel. Output equals "
         "the broadcast variant exactly — gated by the same golden",
 )
 def _zone_overlap_area_poly_shuffle(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
+    from .operators.pyramid import _bbox_tiles
+
     g, zones = _overlay_poly_inputs(spark, sf_dir)
-    gc = _overlay_cell_cover(
-        g, F.col("lon") - F.col("r_out"), F.col("lon") + F.col("r_out"),
-        F.col("lat") - F.col("r_out"), F.col("lat") + F.col("r_out"))
-    zc = _overlay_cell_cover(
-        zones.selectExpr("zone_id", "cx", "cy", "zr"),
-        F.col("cx") - F.col("zr"), F.col("cx") + F.col("zr"),
-        F.col("cy") - F.col("zr"), F.col("cy") + F.col("zr"))
+    # the z5 tile grid only generates candidates (32 x 32 world): the
+    # exact bbox filter, distinct and the clip kernel decide the output
+    gc = _bbox_tiles(g, "lon - r_out", "lat - r_out",
+                     "lon + r_out", "lat + r_out", "5")
+    zc = _bbox_tiles(zones, "cx - zr", "cy - zr", "cx + zr", "cy + zr", "5")
     cand = (
-        gc.join(zc, ["cxc", "cyc"])  # plain equi-join: no broadcast hint
+        gc.join(zc, ["x", "y"])  # plain equi-join: no broadcast hint
         .where((F.col("lon") - F.col("r_out") < F.col("cx") + F.col("zr"))
                & (F.col("lon") + F.col("r_out") > F.col("cx") - F.col("zr"))
                & (F.col("lat") - F.col("r_out") < F.col("cy") + F.col("zr"))
@@ -1229,7 +1214,7 @@ def _knn_shuffle_k5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("query_id"),
                 F.col("lon").alias("qlon"), F.col("lat").alias("qlat"))
     )
-    out = knn_join_shuffle(pts, qs, k=5, res=6, ring=1)
+    out = knn_join_shuffle(pts, qs, k=5, res=6)
     return out.select(
         "query_id", F.col("feature_id").alias("neighbor_id"), "rank"
     )
@@ -1263,7 +1248,7 @@ def _knn_self_join_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = g.withColumnRenamed("doc_id", "feature_id")
     qs = g.select(F.col("doc_id").alias("query_id"),
                   F.col("lon").alias("qlon"), F.col("lat").alias("qlat"))
-    out = knn_join_shuffle(pts, qs, k=3, res=6, ring=1)
+    out = knn_join_shuffle(pts, qs, k=3, res=6)
     return out.select(
         "query_id", F.col("feature_id").alias("neighbor_id"), "rank"
     )
@@ -4588,14 +4573,13 @@ def _init_graph_triangles() -> None:
     raw_duck = raw_cte(
         "(SELECT doc_id, unnest([0, 1, 2, 3]) AS k FROM documents)")
 
-# canon is referenced FOUR times downstream (degree union x2, the
+    # canon is referenced FOUR times downstream (degree union x2, the
     # orientation join, the wedge closure) and oriented TWICE (the wedge
     # self-join) — Catalyst inlines CTEs, so a single WITH statement
     # would recompute the DISTINCT edge set per reference (the plan
     # audit counted 141 documents-scan mentions in that shape). Both
-    # stages are persisted via caching.stage_view (the repo's staged-
-    # pipeline contract: CTE-free / single-ref-CTE statements so cache
-    # substitution actually fires).
+    # stages are materialized once by caching.stage_view, an eager
+    # localCheckpoint that every reference, CTE or not, reads.
     oracle = f"""
     WITH {raw_duck}
     SELECT node, cast(count(*) as bigint) AS n_triangles
@@ -4620,12 +4604,6 @@ def _init_graph_triangles() -> None:
         load_views(spark, sf_dir)
         canon = caching.stage_view(
             spark.sql(f"WITH {raw} SELECT u, v FROM canon"), "tri_canon")
-        # oriented is SELF-joined; a persisted view self-joined under AQE
-        # trips a Spark internal error (NoSuchElementException: key not
-        # found) on the reused cached exchange, so this stage uses the
-        # repo's other materialization — eager localCheckpoint, exactly
-        # like the CC/PageRank iteration frames — which truncates the
-        # plan to RDD blocks AQE handles fine.
         od = spark.sql(f"""
             WITH deg AS (
               SELECT node, cast(count(*) as bigint) AS d
@@ -4636,7 +4614,7 @@ def _init_graph_triangles() -> None:
                    {orient_case.format(lo='v', hi='u')} AS dst
             FROM {canon} c
             JOIN deg du ON du.node = c.u
-            JOIN deg dv ON dv.node = c.v""").localCheckpoint(eager=True)
+            JOIN deg dv ON dv.node = c.v""")
         oriented = caching.stage_view(od, "tri_oriented")
         return spark.sql(f"""
             WITH wedge AS (SELECT o1.src AS a, o1.dst AS b, o2.dst AS c

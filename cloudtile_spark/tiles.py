@@ -9,8 +9,10 @@ Two faces of the same math:
    the correctness oracle). This is the hot path: point -> (z, x, y) needs no
    UDF at all, so a 100 TB scan never leaves Tungsten.
 2. **NumPy kernels** — the same formulas vectorized for use inside
-   Arrow-batched pandas UDFs (polygon tile-cover, clipping, MVT encode),
-   and for oracle tests.
+   Arrow-batched pandas UDFs (clipping, MVT encode, raster render), for
+   picking the PIP cover resolution before a plan is built, and for oracle
+   tests. Bbox tile covers are built in the plan from the SQL face
+   (``operators/pyramid._bbox_tiles``).
 
 All formulas are the standard public slippy-map / EPSG:3857 equations:
     n = 2^z
@@ -196,20 +198,6 @@ def hilbert_d(z: int, x: np.ndarray, y: np.ndarray) -> np.ndarray:
         x, y = x_new, y_new
         s >>= 1
     return d
-
-
-def bbox_tile_cover(
-    lon_min: float, lat_min: float, lon_max: float, lat_max: float, z: int
-) -> list[tuple[int, int]]:
-    """All (x, y) tiles at zoom z intersecting a lon/lat bbox (scalar helper
-    for polygon tile-cover inside grouped UDFs)."""
-    x0, y1 = lonlat_to_tile(np.array([lon_min]), np.array([lat_min]), z)
-    x1, y0 = lonlat_to_tile(np.array([lon_max]), np.array([lat_max]), z)
-    return [
-        (xx, yy)
-        for xx in range(int(x0[0]), int(x1[0]) + 1)
-        for yy in range(int(y0[0]), int(y1[0]) + 1)
-    ]
 
 
 def tile_local_coords(

@@ -288,14 +288,39 @@ def test_pip_shuffle_codegen_no_broadcast_no_python(spark, feats,
 @pytest.mark.parametrize("route", ["codegen", "arrow"])
 def test_pip_empty_zone_set(spark, feats, impl, route, monkeypatch):
     """An empty zone set yields an empty join with the usual schema on
-    both refine routes (the Arrow route forced by a negative budget)."""
+    both refine routes (the Arrow route forced by a negative budget). It
+    ships as an empty local table, not an RDD scan whose every read wakes
+    one Python worker per core."""
     if route == "arrow":
         monkeypatch.setattr(joins, "PIP_CODEGEN_MAX_VERTS", -1)
     for zones in (synth_zones(0), synth_zones(25).head(0)):
         out = impl(feats, zones)
+        assert "ExistingRDD" not in _plan(out)
         assert out.schema.simpleString() == (
             "struct<feature_id:bigint,lon:double,lat:double,zone_id:bigint>")
         assert out.count() == 0
+
+
+def _local_relation_rows(df) -> list[int]:
+    """Row counts of the LocalRelation leaves of ``df``'s optimized plan."""
+    rows, todo = [], [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.getClass().getSimpleName() == "LocalRelation":
+            rows.append(node.data().size())
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return rows
+
+
+def test_pip_shuffle_cover_built_in_plan(spark, feats, no_broadcast):
+    """The no-broadcast PIP ships one zone-table row per zone: the cell
+    cover is exploded in the plan, so no local relation in it holds more
+    rows than there are zones."""
+    zones = synth_zones(25)
+    rows = _local_relation_rows(
+        pip_join_shuffle_codegen(feats, zones, res=7))
+    assert rows and max(rows) <= len(zones)
 
 
 def test_knn_shuffle_no_broadcast_no_python(spark, feats, no_broadcast):

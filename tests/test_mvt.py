@@ -863,3 +863,22 @@ def test_encode_runs_on_every_core(spark):
     # AQEShuffleRead is the node through which AQE coalesces partitions
     assert "AQEShuffleRead" not in plan
     assert "FlatMapGroupsInPandas" not in plan
+
+
+def test_cover_budget_skips_zooms_from_the_first_over_budget_one(spark):
+    """A polygon whose bbox cover first holds more than _MAX_COVER_TILES
+    tiles at zoom zb is covered, with its full bbox cover, at every zoom
+    below zb and at none from zb up."""
+    ring = np.array([[-10.0, -8.0], [9.0, -8.0], [9.0, 7.0], [-10.0, 7.0]])
+    sizes = []  # bbox cover size per zoom, from the NumPy tile math
+    for z in range(16):
+        x0, y1 = tiles.lonlat_to_tile(np.array([-10.0]), np.array([-8.0]), z)
+        x1, y0 = tiles.lonlat_to_tile(np.array([9.0]), np.array([7.0]), z)
+        sizes.append(int((x1 - x0 + 1)[0] * (y1 - y0 + 1)[0]))
+    zb = next(z for z, n in enumerate(sizes) if n > mvt._MAX_COVER_TILES)
+    df = spark.createDataFrame(
+        [(1, "polygon", bytearray(geom.wkb_polygon(ring)))],
+        "feature_id long, geom_type string, geom_wkb binary")
+    got = {r.z: r["count"] for r in
+           mvt.tile_cover(df, 0, zb + 1).groupBy("z").count().collect()}
+    assert got == {z: sizes[z] for z in range(zb)}

@@ -95,7 +95,10 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
-    spark = get_spark("correctness", cores=8, shuffle_partitions=8)
+    # no console progress bars: they would share stdout's lines with the
+    # PASS/FAIL lines and hide them in captured output
+    spark = get_spark("correctness", cores=8, shuffle_partitions=8,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     failures = []
     for name, q in REGISTRY.items():
         if only and name not in only:
