@@ -21,13 +21,14 @@ consecutive tiles, and offset dedup for byte-identical payloads.
 
 Assembly is STREAMED: ``write_pmtiles_stream`` consumes a tid-sorted
 iterator (the CLI feeds it ``sorted_tile_stream``: one global ``orderBy``
-on tid walked with ``toLocalIterator`` — never a ``collect``), spills the
-data section to a sidecar file as it goes, and holds only the directory
-entries (16 B/tile logical) plus a content-hash dedup map in driver
-memory — a z0-z12 pyramid (~1.5M tiles) assembles in O(entries) memory,
-not O(bytes). Tile payloads arrive one AQE-coalesced range partition at a
-time: about max(AQE's coalescing byte target, archive bytes /
-``spark.sql.shuffle.partitions``) of payload, never less than one tile.
+on a tid computed in Spark SQL, walked with ``toLocalIterator`` — never a
+``collect``), spills the data section to a sidecar file as it goes, and
+holds only the directory entries (16 B/tile logical) plus a content-hash
+dedup map in driver memory — a z0-z12 pyramid (~1.5M tiles) assembles in
+O(entries) memory, not O(bytes). Tile payloads arrive one AQE-coalesced
+range partition at a time: about max(AQE's coalescing byte target, archive
+bytes / ``spark.sql.shuffle.partitions``) of payload, never less than one
+tile.
 """
 
 from __future__ import annotations
@@ -59,6 +60,11 @@ def tile_id(z: int, x: int, y: int) -> int:
     """Cumulative Hilbert tile id (spec: sum of tiles above + hilbert)."""
     acc = (4 ** z - 1) // 3  # sum_{i<z} 4^i
     return acc + int(tiles.hilbert_d(z, np.array([x]), np.array([y]))[0])
+
+
+# tile_id over a frame's (z, x, y) columns, in Spark SQL
+TILE_ID_SQL = ("(shiftleft(1L, 2 * z) - 1) div 3 + "
+               + tiles.hilbert_d_sql("z", "x", "y"))
 
 
 def _varint(v: int) -> bytes:
@@ -135,8 +141,10 @@ def _decode_directory(buf: bytes) -> list[tuple[int, int, int, int]]:
 def tilestats(features_df, settings=None) -> dict:
     """tippecanoe-style ``tilestats`` metadata (the tile-stats-* options,
     reference tippecanoe.yaml:113-116): per-layer attribute inventory with
-    sampled values, computed as Spark aggregations over the feature table
-    (explode the props map -> per-key count + bounded distinct sample).
+    sampled values, computed as one Spark aggregation over the feature
+    table (posexplode the props map -> per-key feature count, entry count
+    and bounded distinct sample); the key order and attribute limit are
+    applied on the driver.
 
     Honors: no-tile-stats (returns {}), tile-stats-attributes-limit,
     tile-stats-values-limit (tippecanoe defaults 1000 / 100).
@@ -153,30 +161,35 @@ def tilestats(features_df, settings=None) -> dict:
                     or settings.get("tile-stats-sample-values-limit")
                     or 100)
     if "props" not in features_df.columns:
-        attributes = []
+        attributes, count = [], features_df.count()
     else:
-        rows = (
-            features_df.select(F.explode("props").alias("k", "v"))
-            .groupBy("k")
-            .agg(F.count("*").alias("n"),
-                 F.slice(F.sort_array(F.collect_set("v")), 1, val_limit)
+        # one aggregation: every feature has exactly one row with pos 0
+        # (or a null pos, when its props are empty or null)
+        pos = F.col("pos")
+        groups = (
+            features_df.select(F.posexplode_outer("props"))
+            .groupBy("key")
+            .agg(F.count_if((pos == 0) | pos.isNull()).alias("nf"),
+                 F.count("key").alias("n"),
+                 F.slice(F.sort_array(F.collect_set("value")), 1, val_limit)
                   .alias("vals"))
-            .orderBy("k")
-            .limit(attr_limit)
             .collect()
         )
+        count = sum(r.nf for r in groups)
+        rows = sorted((r for r in groups if r.key is not None),
+                      key=lambda r: r.key)[:attr_limit]
         descs = settings.get("attribute-description") or {}
         attributes = [
-            {"attribute": r.k, "count": r.n, "type": "string",
+            {"attribute": r.key, "count": r.n, "type": "string",
              "values": list(r.vals),
-             **({"description": descs[r.k]} if r.k in descs else {})}
+             **({"description": descs[r.key]} if r.key in descs else {})}
             for r in rows
         ]
     return {
         "layerCount": 1,
         "layers": [{
             "layer": layer_name(settings),
-            "count": features_df.count(),
+            "count": count,
             "geometry": "Point",
             "attributeCount": len(attributes),
             "attributes": attributes,
@@ -312,10 +325,10 @@ def write_pmtiles(
 
 def sorted_tile_stream(tiles_df) -> Iterator[tuple[int, bytes]]:
     """tiles(z, x, y, mvt) DataFrame -> tid-ascending (tile_id, bytes)
-    iterator WITHOUT a driver collect: tile ids are computed by an
-    Arrow-batched pandas UDF, one global ``orderBy("tid")`` range-shuffles
-    the frame into ``spark.sql.shuffle.partitions`` sorted ranges, and AQE
-    merges contiguous ranges up to its coalescing byte target (at most
+    iterator WITHOUT a driver collect: ``TILE_ID_SQL`` computes tile ids in
+    the JVM, one global ``orderBy("tid")`` range-shuffles the frame into
+    ``spark.sql.shuffle.partitions`` sorted ranges, and AQE merges
+    contiguous ranges up to its coalescing byte target (at most
     ``spark.sql.adaptive.advisoryPartitionSizeInBytes``; merging keeps
     range order). ``toLocalIterator`` then walks the coalesced partitions
     in order, one Spark job each: a small archive streams from one
@@ -323,32 +336,10 @@ def sorted_tile_stream(tiles_df) -> Iterator[tuple[int, bytes]]:
     payloads in driver memory at a time — about max(byte target, archive
     bytes / shuffle partitions), never less than one tile — so archive
     size is bounded by disk, not driver heap."""
-    import pandas as pd
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
 
-    def _tid_fn(z, x, y):
-        zv = z.to_numpy(np.int64)
-        xv = x.to_numpy(np.int64)
-        yv = y.to_numpy(np.int64)
-        out = np.empty(len(zv), dtype=np.int64)
-        for zz in np.unique(zv):
-            m = zv == zz
-            acc = (4 ** int(zz) - 1) // 3
-            out[m] = acc + tiles.hilbert_d(int(zz), xv[m], yv[m])
-        return pd.Series(out)
-
-    # real annotation objects (PEP 563 stringified hints from this module's
-    # `from __future__ import annotations` break pandas_udf inference)
-    _tid_fn.__annotations__ = {
-        "z": pd.Series, "x": pd.Series, "y": pd.Series, "return": pd.Series}
-    _tid = pandas_udf(_tid_fn, "long")
-
-    ordered = (
-        tiles_df.select(
-            _tid(F.col("z"), F.col("x"), F.col("y")).alias("tid"), "mvt")
+    ordered = tiles_df.select(F.expr(TILE_ID_SQL).alias("tid"), "mvt") \
         .orderBy("tid")
-    )
     for row in ordered.toLocalIterator():
         yield int(row.tid), bytes(row.mvt)
 

@@ -578,28 +578,6 @@ _shared_sql(
 )
 
 
-def _hilbert_sql(xor, z: int = 6) -> str:
-    """Hilbert-curve distance fully unrolled into SQL CTE levels (one per
-    bit, standard public xy->d rotation algorithm). ``xor(a,b)`` is the only
-    dialect difference."""
-    steps = []
-    for i, s in enumerate(1 << p for p in range(z - 1, -1, -1)):
-        prev = "h0" if i == 0 else f"h{i}"
-        rx = f"(case when (x & {s}) > 0 then 1 else 0 end)"
-        ry = f"(case when (y & {s}) > 0 then 1 else 0 end)"
-        flip = f"({ry} = 0 AND {rx} = 1)"
-        swap_x = (f"(case when {ry} = 0 then (case when {rx} = 1 "
-                  f"then {s} - 1 - y else y end) else x end)")
-        swap_y = (f"(case when {ry} = 0 then (case when {rx} = 1 "
-                  f"then {s} - 1 - x else x end) else y end)")
-        steps.append(
-            f"h{i + 1} AS (SELECT doc_id, "
-            f"{swap_x} AS x, {swap_y} AS y, "
-            f"d + {s} * {s} * {xor(f'(3 * {rx})', ry)} AS d FROM {prev})"
-        )
-    return ",\n".join(steps)
-
-
 @_register(
     "coalesce_densest_cap",
     f"""
@@ -681,35 +659,44 @@ def _coalesce_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "bbox_w", "bbox_e", "bbox_s", "bbox_n")
 
 
-def _init_hilbert() -> None:
-    z = 6
-    base = (
-        f"h0 AS (SELECT doc_id, {tiles.tile_x_sql('lon', str(z))} AS x, "
-        f"{tiles.tile_y_sql('lat', str(z))} AS y, cast(0 as bigint) AS d "
-        f"FROM geo WHERE doc_id % 4 = 0)"
-    )
-    tmpl = "WITH {geo},\n{base},\n{steps}\nSELECT doc_id, d AS hilbert_d FROM h{z}"
-    spark_sql = tmpl.format(
-        geo=_GEO_CTE, base=base, z=z,
-        steps=_hilbert_sql(lambda a, b: f"({a} ^ {b})", z),
-    )
-    duck_sql = tmpl.format(
-        geo=_GEO_CTE, base=base, z=z,
-        steps=_hilbert_sql(lambda a, b: f"xor(cast({a} as bigint), cast({b} as bigint))", z),
-    )
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        load_views(spark, sf_dir)
-        return spark.sql(spark_sql)
-
-    REGISTRY["hilbert_order"] = Query(
-        "hilbert_order", fn, duck_sql,
-        "Hilbert-curve ordering key (B13, tippecanoe.yaml:89) — the xy->d "
-        "rotation algorithm unrolled per bit into pure SQL, no UDF",
-    )
+def _hilbert_sql(z: int) -> str:
+    """DuckDB Hilbert-curve distance fully unrolled into SQL CTE levels (one
+    per bit, standard public xy->d rotation algorithm): the oracle side of
+    ``hilbert_order``, whose Spark side folds the same rotation with
+    ``tiles.hilbert_d_sql``."""
+    steps = []
+    for i, s in enumerate(1 << p for p in range(z - 1, -1, -1)):
+        prev = "h0" if i == 0 else f"h{i}"
+        rx = f"(case when (x & {s}) > 0 then 1 else 0 end)"
+        ry = f"(case when (y & {s}) > 0 then 1 else 0 end)"
+        swap_x = (f"(case when {ry} = 0 then (case when {rx} = 1 "
+                  f"then {s} - 1 - y else y end) else x end)")
+        swap_y = (f"(case when {ry} = 0 then (case when {rx} = 1 "
+                  f"then {s} - 1 - x else x end) else y end)")
+        steps.append(
+            f"h{i + 1} AS (SELECT doc_id, "
+            f"{swap_x} AS x, {swap_y} AS y, "
+            f"d + {s} * {s} * xor(cast((3 * {rx}) as bigint), "
+            f"cast({ry} as bigint)) AS d FROM {prev})"
+        )
+    return ",\n".join(steps)
 
 
-_init_hilbert()
+_HILBERT_H0 = (
+    f"h0 AS (SELECT doc_id, {tiles.tile_x_sql('lon', '6')} AS x, "
+    f"{tiles.tile_y_sql('lat', '6')} AS y, cast(0 as bigint) AS d "
+    f"FROM geo WHERE doc_id % 4 = 0)"
+)
+_shared_sql(
+    "hilbert_order",
+    f"WITH {_GEO_CTE},\n{_HILBERT_H0}\nSELECT doc_id, "
+    f"{tiles.hilbert_d_sql('6', 'x', 'y')} AS hilbert_d FROM h0",
+    doc="Hilbert-curve ordering key (B13, tippecanoe.yaml:89) — the xy->d "
+        "rotation algorithm folded over the bits in one SQL expression "
+        "(the oracle unrolls it per bit), no UDF",
+    oracle_sql_text=f"WITH {_GEO_CTE},\n{_HILBERT_H0},\n{_hilbert_sql(6)}"
+                    f"\nSELECT doc_id, d AS hilbert_d FROM h6",
+)
 
 
 # ===========================================================================

@@ -7,12 +7,14 @@ Two faces of the same math:
 1. **SQL expression builders** (``*_expr`` / ``*_sql``) — emit arithmetic that
    runs JVM-side inside whole-stage codegen (and, identically, in DuckDB for
    the correctness oracle). This is the hot path: point -> (z, x, y) needs no
-   UDF at all, so a 100 TB scan never leaves Tungsten.
+   UDF at all, so a 100 TB scan never leaves Tungsten. ``hilbert_d_sql`` is
+   Spark-only (DuckDB has no ``aggregate`` lambda); it orders the PMTiles
+   archive stream and keys the ``hilbert_order`` query.
 2. **NumPy kernels** — the same formulas vectorized for use inside
    Arrow-batched pandas UDFs (clipping, MVT encode, raster render), for
-   picking the PIP cover resolution before a plan is built, and for oracle
-   tests. Bbox tile covers are built in the plan from the SQL face
-   (``operators/pyramid._bbox_tiles``).
+   picking the PIP cover resolution before a plan is built, and as the
+   reference the SQL builders are tested against. Bbox tile covers are
+   built in the plan from the SQL face (``operators/pyramid._bbox_tiles``).
 
 All formulas are the standard public slippy-map / EPSG:3857 equations:
     n = 2^z
@@ -73,6 +75,28 @@ def tile_y_sql(lat: str, z: str) -> str:
     n = f"cast(pow(2.0, {z}) as bigint)"
     raw = f"cast(floor((1.0 - {merc} / pi()) / 2.0 * pow(2.0, {z})) as bigint)"
     return f"least(greatest({raw}, 0), {n} - 1)"
+
+
+def hilbert_d_sql(z: str, x: str, y: str) -> str:
+    """Hilbert-curve distance of tile (x, y) at zoom ``z`` (all may be SQL
+    exprs): :func:`hilbert_d`'s per-bit rotation folded with ``aggregate``
+    over the bits, top bit first, in one JVM expression.
+
+    Spark only: DuckDB has no ``aggregate`` lambda, so the oracle text
+    (``queries._hilbert_sql``) unrolls the same rotation per bit.
+    """
+    rx, ry = "(shiftright(a.x, i) & 1)", "(shiftright(a.y, i) & 1)"
+
+    def turn(c: str, o: str) -> str:  # coordinate c after level i's rotation
+        return (f"case when {ry} = 1 then a.{c} when {rx} = 1 "
+                f"then shiftleft(1L, i) - 1 - a.{o} else a.{o} end")
+
+    return (f"aggregate(sequence(greatest(({z}) - 1, 0), 0, -1), "
+            f"named_struct('x', cast({x} as bigint), "
+            f"'y', cast({y} as bigint), 'd', 0L), "
+            f"(a, i) -> named_struct('x', {turn('x', 'y')}, "
+            f"'y', {turn('y', 'x')}, "
+            f"'d', a.d + shiftleft((3 * {rx}) ^ {ry}, 2 * i)), a -> a.d)")
 
 
 def quadkey_sql(x: str, y: str, z: int) -> str:
@@ -177,8 +201,9 @@ def hilbert_d(z: int, x: np.ndarray, y: np.ndarray) -> np.ndarray:
     """Vectorized Hilbert-curve distance of tile (x, y) at order z.
 
     Standard public xy->d algorithm (rot/reflect per level), vectorized over
-    arrays. Used for tippecanoe's ``hilbert`` ordering option
-    (reference tippecanoe.yaml:89).
+    arrays: the reference for :func:`hilbert_d_sql`, which serves
+    tippecanoe's ``hilbert`` ordering option (reference tippecanoe.yaml:89)
+    and the PMTiles tile id.
     """
     x = np.asarray(x, dtype=np.int64).copy()
     y = np.asarray(y, dtype=np.int64).copy()

@@ -263,6 +263,26 @@ def test_sorted_tile_stream_job_count(spark, tile_rows):
     assert jobs <= 3
 
 
+def test_sorted_tile_stream_has_no_python_udf(spark, tile_rows,
+                                              monkeypatch):
+    """The tile ids are computed in the JVM: the executed plan of the
+    streamed frame holds no Python evaluation node."""
+    frame = spark.createDataFrame(tile_rows, _TILE_SCHEMA)
+    streamed = []
+    walk = type(frame).toLocalIterator
+
+    def spy(self, *args, **kwargs):
+        streamed.append(self)
+        return walk(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(frame), "toLocalIterator", spy)
+    got, _ = _drain(spark, frame)
+    assert len(got) == 43 and len(streamed) == 1
+    plan = streamed[0]._jdf.queryExecution().executedPlan().toString()
+    assert "Sort" in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
 def _root_entries(path: str) -> list[tuple[int, int, int, int]]:
     """(tile_id, offset, length, run_length) of an archive's root
     directory."""
@@ -365,6 +385,34 @@ def test_tilestats_attribute_description(spark):
     attrs = {a["attribute"]: a for a in ts["layers"][0]["attributes"]}
     assert attrs["lang"]["description"] == "ISO language code"
     assert "description" not in attrs["city"]
+
+
+def test_tilestats_counts_features_without_props(spark):
+    """Features whose props are empty or null still count in the layer,
+    and the attribute limit keeps the first keys in key order. A null
+    value counts for its key but is not a sampled value."""
+    from cloudtile_spark.operators.pmtiles import tilestats
+    from cloudtile_spark.settings import TilingSettings
+
+    feats = spark.createDataFrame(
+        [(1, {"b": "x", "a": "1"}), (2, {"c": "y", "a": "2"}), (3, {}),
+         (4, None), (5, {"a": "1", "d": None})],
+        "feature_id long, props map<string, string>")
+    s = TilingSettings()
+    s["tile-stats-attributes-limit"] = 2
+    layer = tilestats(feats, s)["layers"][0]
+    assert layer["count"] == 5
+    assert layer["attributeCount"] == 2
+    assert layer["attributes"] == [
+        {"attribute": "a", "count": 3, "type": "string",
+         "values": ["1", "2"]},
+        {"attribute": "b", "count": 1, "type": "string", "values": ["x"]},
+    ]
+    s["tile-stats-attributes-limit"] = 10
+    attrs = tilestats(feats, s)["layers"][0]["attributes"]
+    assert [(a["attribute"], a["count"], a["values"]) for a in attrs] == [
+        ("a", 3, ["1", "2"]), ("b", 1, ["x"]), ("c", 1, ["y"]),
+        ("d", 1, [])]
 
 
 def test_order_by_option(spark):

@@ -2,6 +2,9 @@
 mirror of the driver's CORRECTNESS gate; tools/check_correctness.py runs the
 same comparison at sf0.01)."""
 
+import hashlib
+import json
+
 import duckdb
 import pytest
 
@@ -43,6 +46,19 @@ def test_query_matches_oracle(spark, duck, name):
     dh, dn = table_hash(dcols, drows)
     assert sn == dn, f"rowcount {sn} vs {dn}"
     assert sh == dh, "value hash mismatch"
+
+
+# sha256 of the sorted (name, oracle SQL) pairs of the registry. The oracle
+# texts are the correctness gate: a change to any of them must be deliberate,
+# and it updates this pin in the same change.
+_ORACLE_TEXTS_SHA256 = \
+    "6441f0d1df8f7ed1ed9639cb2e6945340ebc64544fd88ac652effd9755716ae4"
+
+
+def test_oracle_texts_are_pinned():
+    pairs = sorted((name, q.oracle) for name, q in REGISTRY.items())
+    digest = hashlib.sha256(json.dumps(pairs).encode()).hexdigest()
+    assert digest == _ORACLE_TEXTS_SHA256
 
 
 def test_skyline_two_phase_equals_brute_force(spark):

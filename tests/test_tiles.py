@@ -184,3 +184,45 @@ def test_geohash_sql_canonical_vectors(spark):
         got_s = spark.sql(f"SELECT {expr} AS gh").collect()[0].gh
         got_d = con.sql(f"SELECT {expr} AS gh").fetchone()[0]
         assert got_s == got_d == want == ref(lat, lon, p), (lat, lon, p)
+
+
+def test_sql_tile_id_matches_pmtiles_tile_id(spark):
+    """The archive's Spark tile id (``hilbert_d_sql`` behind the level
+    offset) equals ``pmtiles.tile_id`` on every tile of z0-8 and on the
+    corners and seeded random tiles of z9-30."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from cloudtile_spark.operators import pmtiles
+
+    levels = []
+    for z in range(9):
+        xs, ys = np.meshgrid(np.arange(1 << z), np.arange(1 << z),
+                             indexing="ij")
+        levels.append(pd.DataFrame({"z": z, "x": xs.ravel(),
+                                    "y": ys.ravel()}))
+    rng = np.random.default_rng(30)
+    for z in range(9, 31):
+        top = (1 << z) - 1
+        levels.append(pd.DataFrame({
+            "z": z,
+            "x": np.concatenate([[0, 0, top, top],
+                                 rng.integers(0, top + 1, 200)]),
+            "y": np.concatenate([[0, top, 0, top],
+                                 rng.integers(0, top + 1, 200)])}))
+    pdf = pd.concat(levels, ignore_index=True).astype("int32")
+    pdf["i"] = np.arange(len(pdf))
+    got = (spark.createDataFrame(pdf)
+           .select("i", F.expr(pmtiles.TILE_ID_SQL).alias("tid"))
+           .toPandas().sort_values("i"))
+    assert got.i.tolist() == pdf.i.tolist()
+    # pmtiles.tile_id is the level offset plus tiles.hilbert_d: it is called
+    # per tile above z8 and vectorized over the 87,381 tiles of z0-8
+    want = []
+    for z in range(9):
+        lvl = pdf[pdf.z == z]
+        want += ((4 ** z - 1) // 3
+                 + tiles.hilbert_d(z, lvl.x, lvl.y)).tolist()
+    want += [pmtiles.tile_id(z, x, y) for z, x, y in
+             pdf[pdf.z > 8][["z", "x", "y"]].itertuples(index=False)]
+    assert got.tid.tolist() == want
