@@ -316,10 +316,16 @@ def write_pmtiles(
     metadata: dict | None = None,
 ) -> None:
     """tile_rows: (z, x, y, mvt_bytes). In-memory list convenience wrapper
-    over the streaming writer (tests / small archives)."""
+    over the streaming writer (tests / small archives). Tile ids are
+    :func:`tile_id`'s, computed with one ``hilbert_d`` call per zoom."""
+    z, x, y = (np.array([r[i] for r in tile_rows], dtype=np.int64)
+               for i in range(3))
+    tid = (4 ** z - 1) // 3
+    for level in np.unique(z):
+        at = z == level
+        tid[at] += tiles.hilbert_d(int(level), x[at], y[at])
     entries_raw = sorted(
-        (tile_id(z, x, y), bytes(b)) for z, x, y, b in tile_rows
-    )
+        zip(tid.tolist(), (bytes(r[3]) for r in tile_rows)))
     write_pmtiles_stream(path, entries_raw, minzoom, maxzoom, metadata)
 
 

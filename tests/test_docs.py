@@ -1,6 +1,6 @@
-"""Documentation hygiene: the README and the BENCH/ records only cite
-tools that exist. A removed script is named by bare file name plus the
-commit to recover it from, never as a ``tools/`` path."""
+"""Documentation hygiene: the README, the ROADMAP and the BENCH/ records
+only cite tools that exist. A removed script is named by bare file name
+plus the commit to recover it from, never as a ``tools/`` path."""
 
 import glob
 import os
@@ -10,7 +10,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_docs_cite_existing_tools():
-    docs = [os.path.join(ROOT, "README.md"),
+    docs = [os.path.join(ROOT, "README.md"), os.path.join(ROOT, "ROADMAP.md"),
             *sorted(glob.glob(os.path.join(ROOT, "BENCH", "*.md")))]
     missing = []
     for doc in docs:

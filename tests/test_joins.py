@@ -1,14 +1,14 @@
 """Spatial-join tests: PIP vs NumPy brute oracle; kNN cell-path vs brute
-force including the uncertified-fallback path; no Spark job while a join
-plan is only being built."""
+force including the uncertified-fallback path; results that do not move
+with the salt count."""
 
 import re
-import uuid
 from collections import Counter
 from itertools import product
 
 import numpy as np
 import pytest
+from pyspark import SparkContext
 from pyspark.sql import functions as F, Window
 
 from cloudtile_spark import caching, geom
@@ -130,14 +130,20 @@ def test_knn_adaptive_equals_brute_force(spark, feats, res_levels, ring):
     assert got == _knn_rows(_brute_knn(spark, feats, qs, 5))
 
 
+def _polar_queries(spark, feats):
+    """The kNN queries plus one at (0, -85), 25 degrees of latitude beyond
+    every point, which no ring certifies."""
+    polar = spark.createDataFrame(
+        [(-1, 0.0, -85.0)], "query_id long, qlon double, qlat double")
+    return _queries(feats).unionByName(polar)
+
+
 def test_knn_fallback_engages_on_sparse_queries(spark, feats):
     """A query at (0, -85) lies 25 degrees of latitude beyond every point
     (they span -60..69), so no ring at any level can certify it: both kNN
     forms must return its 5 brute-force rows, and stay exact for the rest
     at a fine resolution where many rings come back sparse."""
-    polar = spark.createDataFrame(
-        [(-1, 0.0, -85.0)], "query_id long, qlon double, qlat double")
-    qs = _queries(feats).unionByName(polar)
+    qs = _polar_queries(spark, feats)
     expect = _knn_rows(_brute_knn(spark, feats, qs, 5))
     assert sum(r[0] == -1 for r in expect) == 5
     for out in (knn_join_adaptive(feats, qs, k=5, res_levels=(10,)),
@@ -145,27 +151,41 @@ def test_knn_fallback_engages_on_sparse_queries(spark, feats):
         assert _knn_rows(out) == expect
 
 
-_JOIN_PLANS = {
-    "pip_join": lambda f, q: pip_join(f, synth_zones(25)),
-    "pip_join_shuffle_codegen":
-        lambda f, q: pip_join_shuffle_codegen(f, synth_zones(25)),
-    "knn_join_adaptive": lambda f, q: knn_join_adaptive(f, q, k=5),
-    "knn_join_shuffle": lambda f, q: knn_join_shuffle(f, q, k=5),
-}
+def _at_64_cores(monkeypatch):
+    """defaultParallelism 64, so both no-broadcast joins size their salt
+    as on a 64-core cluster: the PIP salt is 16, the kNN brute salt 128."""
+    monkeypatch.setattr(SparkContext, "defaultParallelism",
+                        property(lambda self: 64))
 
 
-@pytest.mark.parametrize("name", list(_JOIN_PLANS))
-def test_join_plan_builds_without_jobs(spark, feats, name):
-    """Building a join plan and explaining it starts no Spark job: no
-    operator probes its data while the plan is only being built."""
-    sc = spark.sparkContext
-    group = f"plan-{name}-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "build and explain a join plan")
-    try:
-        _JOIN_PLANS[name](feats, _queries(feats)).explain()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_pip_shuffle_salt_invariant(spark, feats, monkeypatch):
+    """The no-broadcast PIP returns the same rows at salt 16 as at the
+    session's salt (2 on 4 cores): the salt only spreads a hot cell's
+    candidates over reducers."""
+    zones = synth_zones(25)
+    want = _pairs(pip_join_shuffle_codegen(feats, zones))
+    _at_64_cores(monkeypatch)
+    out = pip_join_shuffle_codegen(feats, zones)
+    assert re.search(r"pmod\(feature_id#\d+L, 16\)", _optimized(out))
+    assert _pairs(out) == want
+
+
+def test_knn_shuffle_salt_invariant(spark, feats, monkeypatch):
+    """The no-broadcast kNN returns the same rows at brute salt 128 as at
+    the session's salt (8 on 4 cores). The polar query fails both rings,
+    so the salted brute pass runs."""
+    qs = _polar_queries(spark, feats)
+    want = _knn_rows(knn_join_shuffle(feats, qs, k=5, res=10))
+    assert sum(r[0] == -1 for r in want) == 5
+    _at_64_cores(monkeypatch)
+    out = knn_join_shuffle(feats, qs, k=5, res=10)
+    assert re.search(r"pmod\(xxhash64\(feature_id#\d+L, 42\), 128\)",
+                     _optimized(out))
+    assert _knn_rows(out) == want
 
 
 def test_knn_adaptive_stages_topk(spark, feats):

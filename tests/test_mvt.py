@@ -828,25 +828,6 @@ def test_tiles_spanning_arrow_batches(spark):
     assert len(z0) == 1 and z0[0][3] == 60
 
 
-@pytest.mark.parametrize("encoder", ["point", "geom"])
-def test_encode_plan_builds_without_jobs(spark, encoder):
-    """Building and explaining either encoder's plan starts no Spark job."""
-    import uuid
-
-    pts, wkb = _props_frames(spark, 20)
-    sc = spark.sparkContext
-    group = f"plan-mvt-{encoder}-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "build and explain an MVT encode plan")
-    try:
-        if encoder == "point":
-            mvt.encode_point_tiles(pts, 0, 3).explain()
-        else:
-            mvt.encode_geom_tiles(wkb, 0, 3).explain()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-
-
 def test_encode_runs_on_every_core(spark):
     """After the action, the final adaptive plan of the encode shuffles by
     number to defaultParallelism partitions (an exchange AQE does not
