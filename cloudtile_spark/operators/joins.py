@@ -14,7 +14,7 @@ Scale design:
   :func:`pip_join_shuffle_codegen` shuffles the point side once on its
   cell id and plans no broadcast at all.
 - kNN likewise has one entry point per join contract, built from the same
-  ring-offset generator, window top-k and certificate:
+  ring-cell generator and window top-k with its certificate:
   :func:`knn_join_adaptive` broadcasts the (small) query side and picks a
   cell resolution per query; :func:`knn_join_shuffle` broadcasts nothing
   data-derived and shuffles both sides at one fixed resolution. Candidate
@@ -35,7 +35,7 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import caching, cells, geom, tiles
@@ -263,9 +263,10 @@ def pip_join_shuffle_codegen(
 # kNN join (cell k-ring expansion + certified-exact fallback)
 # ---------------------------------------------------------------------------
 
-def _ring_bound_sql(ring: int, n: str, deg: str) -> str:
+def _ring_bound_sql(ring: int, res: str) -> str:
     """SQL expr: conservative lower bound (meters) on the distance from a
-    query point inside cell (cx, cy) to the OUTSIDE of its k-ring.
+    query point inside cell (cx, cy) at resolution ``res`` (SQL: a column
+    or a literal) to the OUTSIDE of its k-ring.
 
     All four terms are exact spherical geometry, so no flat-earth safety
     factor is needed (a 1-2e-3 margin absorbs double rounding only):
@@ -284,11 +285,9 @@ def _ring_bound_sql(ring: int, n: str, deg: str) -> str:
       due north/south.
     - if the ring wraps the full globe in x (coarse res), the east/west
       boundary does not exist -> Infinity (lat terms alone constrain).
-
-    ``n`` and ``deg`` are SQL sub-expressions (cells per side, degrees per
-    cell) so the same builder serves fixed-res (constants) and adaptive
-    (res-dependent columns) callers.
     """
+    n = f"pow(2.0, {res})"
+    deg = f"(360.0 / {n})"
     west = f"(cx - {ring}) * {deg} - 180.0"
     east = f"(cx + {ring} + 1) * {deg} - 180.0"
     north_lat = (
@@ -317,61 +316,86 @@ def _ring_bound_sql(ring: int, n: str, deg: str) -> str:
     )
 
 
-def _with_cell_xy(df: DataFrame, lon: str, lat: str, res: int) -> DataFrame:
-    return df.withColumn("cx", F.expr(tiles.tile_x_sql(lon, str(res)))) \
-             .withColumn("cy", F.expr(tiles.tile_y_sql(lat, str(res))))
+def _with_cell_xy(df: DataFrame, lon: str, lat: str, res: str,
+                  x: str = "cx", y: str = "cy") -> DataFrame:
+    """``df`` plus the cell ``x``, ``y`` of (lon, lat) at resolution ``res``
+    (SQL: a column or a literal), in one projection."""
+    return df.selectExpr("*", f"{tiles.tile_x_sql(lon, res)} AS {x}",
+                         f"{tiles.tile_y_sql(lat, res)} AS {y}")
 
 
+# The kNN ring, level and window steps are SQL text: each Column-API call
+# is one driver round trip to the JVM, and a generator spelled as nested
+# lit/struct/alias calls cost ~0.1 s of plan build per use; one selectExpr
+# is one.
 _KNN_COLS = ("query_id", "feature_id", "dist", "rank")
 _KNN_TARGET = 64  # candidates the adaptive form's chosen ring must hold
 
 
-def _ring_offsets(ring: int) -> Column:
-    """The (dx, dy) cell offsets of a (2*ring+1)^2 k-ring, as a JVM
-    generator over literals: ``df.select("*", _ring_offsets(r))`` fans each
-    row out to its ring cells with no literal frame to scan or broadcast
-    (a list-of-tuples frame plans as an RDD scan, one Python-worker task
-    per core on every read)."""
-    return F.inline(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx in range(-ring, ring + 1) for dy in range(-ring, ring + 1)
-    ]))
-
-
-def _top_k(cand: DataFrame, k: int) -> DataFrame:
-    """The k nearest candidates per query: drops self-pairs, adds the
-    haversine ``dist`` and keeps ``rank <= k`` in (dist, feature_id) order,
-    the brute-force oracle's tie-break, so output is deterministic."""
-    w = Window.partitionBy("query_id").orderBy("dist", "feature_id")
+def _ring_cells(qs: DataFrame, ring: int, res: str) -> DataFrame:
+    """Query rows (query_id, qlon, qlat) fanned out to the cells (nx, ny)
+    of the (2*ring+1)^2 k-ring around their own cell (cx, cy) at
+    resolution ``res`` (SQL: a column or a literal): x wraps at the date
+    line, rows beyond the poles drop. The ring is a JVM generator over
+    literal offsets, so there is no literal frame to scan or broadcast (a
+    list-of-tuples frame plans as an RDD scan, one Python-worker task per
+    core on every read)."""
+    n = f"shiftleft(1L, {res})"
+    cells = ", ".join(
+        f"named_struct('nx', pmod(cx + {dx}, {n}), 'ny', cy + {dy})"
+        for dx in range(-ring, ring + 1) for dy in range(-ring, ring + 1))
     return (
-        cand.filter(F.col("feature_id") != F.col("query_id"))
-        .withColumn("dist",
-                    F.expr(geom.haversine_sql("qlon", "qlat", "lon", "lat")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        _with_cell_xy(qs, "qlon", "qlat", res)
+        .selectExpr("*", f"inline(array({cells}))")
+        .filter(f"ny >= 0 AND ny < {n}")
     )
 
 
-def _certify(
-    topk: DataFrame, k: int, ring: int, n_sql: str, deg_sql: str,
-) -> tuple[DataFrame, DataFrame]:
-    """(exact top-k rows, ids) of the queries whose ring answer is provably
-    exact: >= k candidates and a k-th distance within the exact-spherical
-    lower bound of the distance to the ring boundary (_ring_bound_sql at
-    ``n_sql`` cells per side, ``deg_sql`` degrees per cell).
+def _level_cells(x: str, y: str, finest: int, levels: tuple[int, ...],
+                 names: tuple[str, str, str]) -> str:
+    """SQL generator: one (level, x, y) row, named ``names``, per entry of
+    ``levels``, from the cell (x, y) at level ``finest`` by integer parent
+    math. floor(v * 2^f) >> (f - r) == floor(v * 2^r) exactly, and the
+    [0, 2^z - 1] clamp commutes with the shift, so the cells are
+    bit-identical to re-evaluating the ln/tan tile math per level."""
+    r_, x_, y_ = names
+    return "inline(array({}))".format(", ".join(
+        f"named_struct('{r_}', {r}, '{x_}', shiftright({x}, {finest - r}), "
+        f"'{y_}', shiftright({y}, {finest - r}))" for r in levels))
 
-    Window columns over ``topk``, which the rank window already
-    partitioned by query_id, so the certificate adds zero exchanges. A
-    certified query has n_cand >= k >= 1 rows, so its rank-1 row names it
-    exactly once."""
-    wq = Window.partitionBy("query_id")
-    bound = F.expr(_ring_bound_sql(ring, n_sql, deg_sql))
-    ok = (
-        topk.withColumn("n_cand", F.count("*").over(wq))
-        .withColumn("kth_dist", F.max("dist").over(wq))
-        .filter((F.col("n_cand") >= k) & (F.col("kth_dist") <= bound))
+
+def _top_k(cand: DataFrame, k: int, bound: str | None = None) -> DataFrame:
+    """The k nearest candidates per query as ``_KNN_COLS``: drops
+    self-pairs, adds the haversine ``dist`` and keeps ``rank <= k`` in
+    (dist, feature_id) order, the brute-force oracle's tie-break, so output
+    is deterministic.
+
+    With a ring ``bound`` (_ring_bound_sql over the candidates' query
+    columns) it adds ``ok``, the exactness certificate, as one window over
+    the rank window's own query_id partitions (no exchange, no sort): a
+    ring answer is provably exact iff the query has a rank-k row (>= k
+    candidates) and that row's dist, the k-th distance, is within the
+    bound."""
+    top = (
+        cand.filter("feature_id != query_id")
+        .selectExpr("*", geom.haversine_sql("qlon", "qlat", "lon", "lat")
+                    + " AS dist")
+        .selectExpr("*", "row_number() OVER (PARTITION BY query_id"
+                         " ORDER BY dist, feature_id) AS rank")
+        .filter(f"rank <= {k}")
     )
-    return ok.select(*_KNN_COLS), ok.filter("rank = 1").select("query_id")
+    if bound is None:
+        return top.select(*_KNN_COLS)
+    return top.selectExpr(*_KNN_COLS, f"max(rank = {k} AND dist <= {bound})"
+                                      " OVER (PARTITION BY query_id) AS ok")
+
+
+def _certify(topk: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(exact top-k rows, ids) of the queries whose ``ok`` certificate
+    holds in a certified :func:`_top_k` frame. A certified query has k >= 1
+    rows, so its rank-1 row names it exactly once."""
+    return (topk.filter("ok").select(*_KNN_COLS),
+            topk.filter("ok AND rank = 1").select("query_id"))
 
 
 def _ring_pass(
@@ -379,22 +403,11 @@ def _ring_pass(
 ) -> tuple[DataFrame, DataFrame]:
     """One certified k-ring pass at (res, ring): (exact top-k rows for
     certified queries, certified query ids); callers decide how to join
-    the certified-id frame. qs must carry (query_id, qlon, qlat, cx,
-    cy)."""
-    pts = _with_cell_xy(points, "lon", "lat", res) \
-        .withColumnRenamed("cx", "px").withColumnRenamed("cy", "py")
-    n = 1 << res
-    q_cells = (
-        qs.select("*", _ring_offsets(ring))
-        .withColumn("nx", (F.col("cx") + F.col("dx") + n) % n)
-        .withColumn("ny", F.col("cy") + F.col("dy"))
-        .filter((F.col("ny") >= 0) & (F.col("ny") < n))
-    )
-    cand = q_cells.join(
-        pts,
-        (q_cells.nx == pts.px) & (q_cells.ny == pts.py),
-    )
-    return _certify(_top_k(cand, k), k, ring, f"{n}.0", str(360.0 / n))
+    the certified-id frame."""
+    pts = _with_cell_xy(points, "lon", "lat", str(res), "px", "py")
+    cand = _ring_cells(qs, ring, str(res)).join(pts, F.expr(
+        "nx = px AND ny = py"))
+    return _certify(_top_k(cand, k, _ring_bound_sql(ring, str(res))))
 
 
 def knn_join_adaptive(
@@ -414,29 +427,36 @@ def knn_join_adaptive(
     region-coverer idea as DataFrame ops):
 
       1. ONE aggregation computes cell counts for every candidate
-         resolution (pyramid-style explode; map-side combine keeps the
-         shuffle at one row per non-empty cell);
+         resolution (the finest level's counts, exploded to every level
+         by integer parent math);
       2. each query picks the FINEST resolution whose k-ring holds >=
-         ``_KNN_TARGET`` candidates (broadcast join of ring cells vs
-         counts);
-      3. ONE candidates join: point side exploded to the used resolutions,
-         query ring cells equi-joined on (res, x, y); window top-k;
-      4. per-query exactness certificate (kth dist <= conservative distance
-         to the chosen ring boundary); the few failures brute-force in ONE
-         final pass. Output equals brute force exactly, ties broken by
-         (dist, feature_id).
+         ``_KNN_TARGET`` candidates: a broadcast join of every level's
+         ring cells against the counts, then one aggregation by (query_id,
+         qlon, qlat), so the chosen level's ring cells come from that
+         aggregate's own rows with no join back to the ring table;
+      3. ONE candidates join: the point side exploded to every level,
+         probing the broadcast ring cells on (res, x, y), so levels no
+         query chose drop in the probe; window top-k;
+      4. per-query exactness certificate (k-th dist <= conservative
+         distance to the chosen ring boundary) as one more window over
+         the top-k partitions; the few failures brute-force in ONE final
+         pass. Output equals brute force exactly, ties broken by (dist,
+         feature_id).
 
     A single level, ``res_levels=(r,)``, is a fixed-resolution cell kNN:
     every query whose ring holds any point takes level r, and the
     certificate plus the brute-force pass keep sparse regions exact.
 
     Cost profile: 2 scans of the point side (counts + candidates join) plus
-    a fallback scan; ONE read of the caller's query side, staged for the
-    ring counts, the candidates join and the certificate anti-join; no
-    literal frames (levels and ring offsets are generator expressions on
-    the query rows, so no Python worker and no literal broadcast); no
-    driver-side collect; all joins against the (small) query side are
-    broadcast. Building or explaining the plan runs no Spark job.
+    a fallback scan; 4 shuffles (finest counts, the level pick, the top-k
+    window, the fallback window) and 4 broadcasts (ring cells twice,
+    certified ids, failed queries); ONE read of the caller's query side,
+    staged for the ring counts and the certificate anti-join; the top-k
+    rows with their certificate staged for the exact rows and the
+    certified ids; no literal frames (levels and ring offsets are
+    generator expressions, so no Python worker and no literal broadcast);
+    no driver-side collect. Building or explaining the plan runs no Spark
+    job.
 
     SIZE CONTRACT — the QUERY side must be broadcastable (same contract
     as pip_join's zone side): the query ring-cell table is shipped to
@@ -446,133 +466,73 @@ def knn_join_adaptive(
     equi-join formulation with identical output — bench.py headlines
     BOTH so the trade is measured, not assumed.
     """
-    # the pick loops below assume ascending levels
+    # `finest` and the level pick below assume ascending levels
     res_levels = tuple(sorted(set(res_levels)))
-    n_sql = "cast(pow(2.0, res) as bigint)"
-    # the query side feeds the ring counts, the candidates join and the
-    # certificate anti-join: read it once (the size contract already
-    # requires it to fit executor memory; persist is lazy, so building the
-    # plan still runs no job)
+    finest = res_levels[-1]
+    # the query side feeds the ring counts and the certificate anti-join:
+    # read it once (the size contract already requires it to fit executor
+    # memory; persist is lazy, so building the plan still runs no job)
     qs = caching.stage(queries.select("query_id", "qlon", "qlat"))
 
-    # 1. cell counts at every resolution — hierarchically: ONE scan of the
-    # point side at the FINEST resolution, then every coarser level derives
-    # from the (tiny) finest-level counts by integer parent math. The
-    # derivation is a single explode + re-aggregation (each finest cell
-    # emits its (level, parent) keys for all levels at once) — the former
-    # per-level rollup loop planned one aggregation branch per level plus
-    # a union, ~4 extra stages whose scheduling latency dominated this
-    # phase at bench scale (r6 measurement: 2.4s -> mostly stage latency).
-    finest = max(res_levels)
-    base = (
-        _with_cell_xy(points.select("lon", "lat"), "lon", "lat", finest)
-        .groupBy(F.col("cx").alias("kx"), F.col("cy").alias("ky"))
-        .count()
+    # 1. cell counts at every resolution: ONE scan of the point side at the
+    # finest level, exploded to each level's parent cell. No per-level
+    # aggregation: the only consumer is the ring join + per-query sum
+    # below, and summing finest-cell counts after the broadcast probe gives
+    # the same sums with one exchange fewer.
+    counts = (
+        _with_cell_xy(points.select("lon", "lat"), "lon", "lat", str(finest))
+        .groupBy("cx", "cy").count()
+        .selectExpr(_level_cells("cx", "cy", finest, res_levels,
+                                 ("kres", "kx", "ky")), "count")
     )
-    lvl_structs = F.array(*[
-        F.struct(
-            F.lit(r).alias("kres"),
-            F.shiftright("kx", finest - r).alias("kx"),
-            F.shiftright("ky", finest - r).alias("ky"),
-        )
-        for r in res_levels
-    ])
-    # NO intermediate (level, cell) aggregation: the only consumer is the
-    # ring join + per-query sum below, and summing base-cell counts AFTER
-    # the broadcast probe is algebraically identical (the per-cell rollup
-    # only pre-reduced rows that a cheap broadcast-hash probe filters
-    # anyway) — one full exchange of the exploded row set removed
-    # (guide §2.4: remove shuffles outright).
-    counts = base.select(F.explode(lvl_structs).alias("s"), "count") \
-        .select(F.col("s.kres").alias("kres"), F.col("s.kx").alias("kx"),
-                F.col("s.ky").alias("ky"), "count")
 
-    # 2. ring cells per (query, res); pick finest res with enough candidates
-    q_ring = (
-        qs.withColumn("res", F.explode(F.array(*map(F.lit, res_levels))))
-        .withColumn("cx", F.expr(tiles.tile_x_sql("qlon", "res")))
-        .withColumn("cy", F.expr(tiles.tile_y_sql("qlat", "res")))
-        .select("*", _ring_offsets(ring))
-        .withColumn("nx", F.expr(f"pmod(cx + dx, {n_sql})"))
-        .withColumn("ny", F.col("cy") + F.col("dy"))
-        .filter((F.col("ny") >= 0) & (F.col("ny") < F.expr(n_sql)))
-    )
-    # ONE aggregation keyed on query_id computes every level's ring count
+    # 2. ring cells per (query, res); pick finest res with enough candidates.
+    # ONE aggregation keyed on the query computes every level's ring count
     # as a conditional sum, and the arg-max ("finest res whose ring holds
-    # >= _KNN_TARGET candidates, else the coarsest level seen") collapses
-    # to a CASE over those sums — the former groupBy(query_id, res) + window
-    # rank cost a second exchange plus a sort for the same answer
-    # (guide §2.4: two operations keyed the same way share one exchange;
-    # the selection itself needs no ordering, only 5 comparisons).
+    # >= _KNN_TARGET candidates, else the coarsest level seen") is a CASE
+    # over those sums: no second exchange, no sort.
+    levels = ", ".join(map(str, res_levels))
+    q_ring = _ring_cells(
+        qs.selectExpr("*", f"explode(array({levels})) AS res"), ring, "res")
     ring_joined = counts.join(
-        F.broadcast(q_ring.select("query_id", "res", "nx", "ny")),
-        on=(F.col("kres") == F.col("res")) & (F.col("kx") == F.col("nx"))
-        & (F.col("ky") == F.col("ny")),
-    )
-    per_level = [
-        F.sum(F.when(F.col("res") == r, F.col("count"))).alias(f"s{r}")
-        for r in res_levels
-    ]
-    pick = F.lit(None).cast("int")
-    for r in res_levels:  # coarsest-first fallback: first level with rows
-        pick = F.coalesce(pick,
-                          F.when(F.col(f"s{r}").isNotNull(), F.lit(r)))
-    for r in res_levels:  # finest qualifying level wins
-        pick = F.when(F.col(f"s{r}") >= _KNN_TARGET, F.lit(r)) \
-            .otherwise(pick)
+        F.broadcast(q_ring.select("query_id", "qlon", "qlat", "res",
+                                  "nx", "ny")),
+        F.expr("kres = res AND kx = nx AND ky = ny"))
+    per_level = [F.expr(f"sum(if(res = {r}, count, NULL)) AS s{r}")
+                 for r in res_levels]
+    # the finest qualifying level wins, else the coarsest level with rows
+    pick = " ".join(
+        [f"WHEN s{r} >= {_KNN_TARGET} THEN {r}" for r in res_levels[::-1]]
+        + [f"WHEN s{r} IS NOT NULL THEN {r}" for r in res_levels])
     chosen = (
-        ring_joined.groupBy("query_id").agg(*per_level)
-        .select("query_id", pick.alias("res"))
+        ring_joined.groupBy("query_id", "qlon", "qlat").agg(*per_level)
+        .selectExpr("query_id", "qlon", "qlat", f"CASE {pick} END AS res")
     )
+    q_cells = _ring_cells(chosen, ring, "res").select(
+        "query_id", "qlon", "qlat", "res", "cx", "cy", "nx", "ny")
 
-    # 3. single candidates join at each query's chosen res. The point side
-    # explodes only to resolutions some query actually chose — derived
-    # IN-PLAN as a broadcast distinct over `chosen` (typically 1-3 of the 5
-    # levels survive, cutting the explode proportionally). No driver
-    # collect: the whole join is one action, so the counts/selection
-    # subtree runs as a broadcast stage instead of a serial pre-job.
-    chosen = caching.stage(chosen)
-    used_levels = chosen.select("res").distinct()
-    q_cells = (
-        q_ring.join(F.broadcast(chosen), ["query_id", "res"])
-        .select("query_id", "qlon", "qlat", "res", "cx", "cy", "nx", "ny")
-    )
-    # finest-level tile ints once per point, coarser levels by shiftright:
-    # floor(v * 2^f) >> (f - r) == floor(v * 2^r) exactly (and the [0,
-    # 2^z-1] clamp commutes with the shift), so px/py are bit-identical to
-    # re-evaluating the ln/tan tile math per (point x level) — that math
-    # ran on every exploded row, inflating the candidates-join input stage
-    # (same identity the counts rollup above already exploits).
-    pts = (
-        points
-        .withColumn("fx", F.expr(tiles.tile_x_sql("lon", str(finest))))
-        .withColumn("fy", F.expr(tiles.tile_y_sql("lat", str(finest))))
-        .crossJoin(F.broadcast(used_levels))
-        .withColumn("px", F.expr(f"shiftright(fx, {finest} - res)"))
-        .withColumn("py", F.expr(f"shiftright(fy, {finest} - res)"))
-        .drop("fx", "fy")
-        .withColumnRenamed("res", "pres")
-    )
-    cand = pts.join(
-        F.broadcast(q_cells),
-        (pts.pres == q_cells.res) & (pts.px == q_cells.nx)
-        & (pts.py == q_cells.ny),
-    )
+    # 3. single candidates join at each query's chosen res: finest-level
+    # tile ints once per point, every level by shiftright; the broadcast
+    # probe drops the levels no query chose.
+    pts = _with_cell_xy(points, "lon", "lat", str(finest), "fx", "fy") \
+        .selectExpr("feature_id", "lon", "lat", _level_cells(
+            "fx", "fy", finest, res_levels, ("pres", "px", "py")))
+    cand = pts.join(F.broadcast(q_cells),
+                    F.expr("pres = res AND px = nx AND py = ny"))
     # persist: topk is tiny (|queries| * k rows) but sits downstream of the
     # expensive candidates join, and is consumed twice (certified rows +
-    # failed ids) — without this the join lineage recomputes.
-    topk = caching.stage(_top_k(cand, k))
+    # certified ids) — without this the join lineage recomputes.
+    topk = caching.stage(_top_k(cand, k, _ring_bound_sql(ring, "res")))
 
-    # 4. certificate with res-dependent geometry (n = 2^res as a column).
-    exact, certified = _certify(topk, k, ring, "pow(2.0, res)",
-                                "(360.0 / pow(2.0, res))")
+    # 4. certified rows; the failed queries brute-force. The brute-force
+    # branch is always planned: probing `failed` for rows here would run
+    # the whole counts -> candidates -> top-k pipeline while the plan is
+    # only being built. When every query certifies, AQE prunes the empty
+    # branch once its broadcast side comes back empty.
+    exact, certified = _certify(topk)
     failed = qs.join(F.broadcast(certified), "query_id", "left_anti")
-    # The brute-force branch is always planned: probing `failed` for rows
-    # here would run the whole counts -> candidates -> top-k pipeline
-    # while the plan is only being built. When every query certifies, AQE
-    # prunes the empty branch once its broadcast side comes back empty.
     brute = _top_k(points.crossJoin(F.broadcast(failed)), k)
-    return exact.unionByName(brute.select(*_KNN_COLS))
+    return exact.unionByName(brute)
 
 
 # ---------------------------------------------------------------------------
@@ -610,10 +570,8 @@ def knn_join_shuffle(
     Output equals :func:`knn_join_adaptive` / the brute-force oracle
     exactly.
     """
-    qs = _with_cell_xy(queries, "qlon", "qlat", res)
-
-    exact1, cert1 = _ring_pass(points, qs, k, res, 1)
-    failed1 = qs.join(cert1, "query_id", "left_anti")
+    exact1, cert1 = _ring_pass(points, queries, k, res, 1)
+    failed1 = queries.join(cert1, "query_id", "left_anti")
     exact2, cert2 = _ring_pass(points, failed1, k, res, 4)
     failed2 = failed1.join(cert2, "query_id", "left_anti") \
                      .select("query_id", "qlon", "qlat")
@@ -626,5 +584,5 @@ def knn_join_shuffle(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
     pts_s = points.withColumn(
         "_salt", F.pmod(F.xxhash64("feature_id"), F.lit(n_salt)).cast("int"))
-    brute = _top_k(pts_s.join(q_rep, "_salt"), k).select(*_KNN_COLS)
+    brute = _top_k(pts_s.join(q_rep, "_salt"), k)
     return exact1.unionByName(exact2).unionByName(brute)

@@ -189,8 +189,9 @@ def test_knn_shuffle_salt_invariant(spark, feats, monkeypatch):
 
 
 def test_knn_adaptive_stages_topk(spark, feats):
-    """The adaptive top-k frame feeds both the certified rows and the
-    failed-query ids, so it stays persisted: both readers scan the cache
+    """The adaptive top-k frame, with its certificate flag, feeds both the
+    certified rows and the certified ids (whose anti-join leaves the
+    failed queries), so it stays persisted: both readers scan the cache
     instead of recomputing the candidates join."""
     caching.release_staged()
     try:
@@ -201,7 +202,7 @@ def test_knn_adaptive_stages_topk(spark, feats):
         plan = out._jdf.queryExecution().withCachedData().toString()
         reads = [ln for ln in plan.splitlines()
                  if "InMemoryRelation [" in ln and "rank#" in ln]
-        assert len(reads) == 2  # certified rows + failed ids
+        assert len(reads) == 2  # certified rows + certified ids
     finally:
         caching.release_staged()
 
@@ -395,6 +396,13 @@ _DEGENERATE = {
     # of the ring: only the certificate stops the ring answer
     "outside_ring": ([(i, 11.0, 0.01 * i) for i in range(70)]
                      + [(70, -5.7, 0.0)], [(1000, 0.01, 0.01)]),
+    # the query IS point 7 and every other point lies far outside its
+    # coarsest ring: the self-pair is its only ring candidate and drops,
+    # so the query reaches top-k with no rows and only brute force
+    # answers it
+    "self_only_ring": ([(7, 10.0, 10.0)]
+                       + [(i, -120.0, 50.0 + 0.1 * i) for i in range(6)],
+                       [(7, 10.0, 10.0)]),
 }
 
 
@@ -405,8 +413,9 @@ def test_knn_degenerate_inputs(spark, case, impl):
     side, k above the point count, a single point, 50 points on one
     coordinate (ties broken by feature_id, the self-pair dropped),
     queries on the antimeridian with points on both sides of it,
-    queries on the poles, and a full ring whose answer misses a nearer
-    point just outside it."""
+    queries on the poles, a full ring whose answer misses a nearer
+    point just outside it, and a query whose only ring candidate is
+    itself."""
     rows, qrows = _DEGENERATE[case]
     pts = spark.createDataFrame(rows, _PTS)
     qs = spark.createDataFrame(qrows, _QS)

@@ -8,8 +8,9 @@ Two tables:
   capped summaries, no parquet scan under the staged self-joins (every
   read goes through the checkpointed stage), the filter queries'
   predicates in the scan's ``PushedFilters``, no broadcast in the as-of
-  join and the connected-components star round at threshold -1, and no
-  Python operator on the all-JVM query paths.
+  join and the connected-components star round at threshold -1, the
+  adaptive kNN's exchange and window counts, and no Python operator on
+  the all-JVM query paths.
 * ``_BUILDERS``: building and explaining a public operator's plan starts
   no Spark job.
 
@@ -112,6 +113,13 @@ _CLAIMS = [
            zero=("BroadcastExchange",)),
     # the bbox range join is a broadcast nested-loop join by design
     _claim("pip_codegen_join", zero=(_PYTHON,)),
+    # the adaptive kNN picks its level and ring cells in one aggregation
+    # (no join back to the ring table, no level distinct) and certifies in
+    # one window: shuffles for the finest counts, the level pick and the
+    # ring and brute-force top-k windows; broadcasts for the two ring
+    # tables, the certified ids and the failed queries
+    _claim("knn_adaptive_k5", count={
+        "Exchange": 4, "BroadcastExchange": 4, "Window": 3}),
     *(_claim(n, zero=(_PYTHON, _NESTED)) for n in (
         "text_tfidf_topk", "geo_radius_pairs_join", "pareto_skyline",
         "graph_triangles", "trajectory_tile_length",
