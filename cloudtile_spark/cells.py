@@ -13,7 +13,6 @@ Morton interleave of (x, y) with the resolution:
 Properties this buys (same ones H3/S2 are used for):
   * ``parent(cell)``   = drop two Morton bits      -> hierarchy / rollups
   * prefix ordering    = spatial locality          -> range-partition keys
-  * ``k_ring(cell, k)``= the (2k+1)^2 neighborhood -> kNN candidate expansion
   * pure integer math  -> JVM-side codegen in Spark AND the DuckDB oracle
 
 All builders emit SQL valid in both Spark SQL and DuckDB (parity unit-tested).
@@ -87,24 +86,3 @@ def parent(cells: np.ndarray, steps: int = 1) -> np.ndarray:
     cells = np.asarray(cells, dtype=np.int64)
     res = cells & RES_MASK
     return (((cells >> RES_BITS) >> (2 * steps)) << RES_BITS) | (res - steps)
-
-
-def k_ring(cells: np.ndarray, k: int) -> np.ndarray:
-    """For each cell, the (2k+1)^2 cells of its k-ring (incl. itself).
-
-    Returns shape ``(len(cells), (2k+1)^2)``. X wraps toroidally (date line);
-    y clamps at the poles (out-of-range rows are set to the center cell so the
-    ring never contains invalid ids — duplicates are fine for join expansion).
-    """
-    res, x, y = cell_to_xy(np.asarray(cells, dtype=np.int64))
-    n = (np.int64(1) << res.astype(np.int64))
-    offs = np.arange(-k, k + 1, dtype=np.int64)
-    dx, dy = np.meshgrid(offs, offs, indexing="ij")
-    dx = dx.ravel()[None, :]
-    dy = dy.ravel()[None, :]
-    nx = (x[:, None] + dx) % n[:, None]
-    ny = y[:, None] + dy
-    valid = (ny >= 0) & (ny < n[:, None])
-    ny = np.where(valid, ny, y[:, None])
-    nx = np.where(valid, nx, x[:, None])
-    return (tiles.morton(nx, ny) << RES_BITS) | res[:, None]

@@ -120,8 +120,6 @@ def _settings_from_args(args) -> TilingSettings:
     s = TilingSettings(cfg_path=args.config) if args.config \
         else TilingSettings()
     s.override_settings(**parse_tc_kwargs(args.tc_kwargs))
-    s["minimum-zoom"] = args.minimum_zoom
-    s["maximum-zoom"] = args.maximum_zoom
     return s
 
 
@@ -154,6 +152,7 @@ def main(argv: Optional[list[str]] = None) -> int:
     from pyspark.sql import SparkSession
 
     from .operators.extract import extract_features
+    from .operators.pyramid import tiling_input
     from .session import get_spark
     from .sources.readers import load_features
 
@@ -186,12 +185,12 @@ def main(argv: Optional[list[str]] = None) -> int:
             feats = load_features(spark, args.src)
         keep = [c for c in ("feature_id", "lon", "lat", "props")
                 if c in feats.columns]
-        feats = feats.select(*keep)
-        maxz = settings["maximum-zoom"]
-        if maxz == "g":
-            from .operators.pyramid import guess_max_zoom, tile_limits
-            maxz = guess_max_zoom(feats, tile_limits(settings)[1])
-        name = output_name(stem, settings["minimum-zoom"], maxz, args.suffix)
+        # the zoom args win over the settings' zooms; the name carries
+        # the resolved range (a "g" guess reads the reprojected features)
+        feats, settings = tiling_input(feats.select(*keep), settings,
+                                       args.minimum_zoom, args.maximum_zoom)
+        minz, maxz = settings["minimum-zoom"], settings["maximum-zoom"]
+        name = output_name(stem, minz, maxz, args.suffix)
         out = args.out or str(Path.cwd() / name)  # JVM-cwd-proof default
         # force / allow-existing (tippecanoe yaml:12-13; force is the
         # reference's ACTIVE default): without either, an existing output
@@ -203,8 +202,7 @@ def main(argv: Optional[list[str]] = None) -> int:
                 f"allow-existing=true to proceed")
 
         from .operators.mvt import encode_point_tiles
-        tiles_df = encode_point_tiles(
-            feats, settings["minimum-zoom"], maxz, settings=settings)
+        tiles_df = encode_point_tiles(feats, minz, maxz, settings=settings)
         tiles_df.write.mode("overwrite").partitionBy("z").parquet(out)
         print(f"wrote tiles table: {out}")
         if args.pmtiles:
@@ -223,8 +221,8 @@ def main(argv: Optional[list[str]] = None) -> int:
                 if settings.get(mk):
                     meta[mk] = settings[mk]
             stats = write_pmtiles_stream(
-                pm, sorted_tile_stream(tiles_src),
-                settings["minimum-zoom"], maxz, metadata=meta)
+                pm, sorted_tile_stream(tiles_src), minz, maxz,
+                metadata=meta)
             print(f"wrote archive: {pm} "
                   f"({stats['n_addressed']} tiles, {stats['leaves']} leaves)")
         return 0

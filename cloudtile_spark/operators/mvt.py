@@ -18,8 +18,9 @@ geom_type, geom_wkb) runs ``tile_cover``. Everything else is shared:
   byte budget). The exceptions are ``single-precision`` (a float32 cast)
   and EPSG:3857 input (an inverse-mercator reprojection): both are math on
   the lon/lat columns, so they apply to point sources only;
-- one prelude, ``_encode``: projection, feature-filter and prefilter before
-  the cover; postfilter and drop-rate/base-zoom on the cover frame;
+- one prelude, ``_encode``: ``pyramid.tiling_input`` (projection and zoom
+  range, as for every tiler), feature-filter and prefilter before the
+  cover; postfilter and drop-rate/base-zoom on the cover frame;
 - one tile-sorted multi-tile mapInPandas (``pyramid._map_tiles``): the
   cover frame is hash-repartitioned on (z, x, y) to every core and sorted
   by tile, and each Arrow batch is cut into tile runs that each run one
@@ -53,8 +54,8 @@ from ..settings import TilingSettings, layer_name
 from .borders import protect_mask, protected_nodes
 from .filters import apply_feature_filter, compile_feature_filter
 from .pmtiles import _read_varint, _varint  # LEB128, as in PMTiles dirs
-from .pyramid import (_bbox_tiles, _map_tiles, assign_xy, epsg_code,
-                      explode_zooms, project_to_4326, tile_limits)
+from .pyramid import (_bbox_tiles, _map_tiles, assign_xy, explode_zooms,
+                      tile_limits, tiling_input)
 
 EXTENT = 4096
 _MOVETO, _LINETO, _CLOSEPATH = 1, 2, 7
@@ -270,7 +271,7 @@ class _TileOptions:
     byte budget come from ``pyramid.tile_limits``."""
 
     def __init__(self, s: TilingSettings, maxz: int | None):
-        self.maxz, self.layer, self.epsg = maxz, layer_name(s), epsg_code(s)
+        self.maxz, self.layer = maxz, layer_name(s)
         self.cap, self.cap_at_max, self.max_bytes = tile_limits(s)
         # the prelude: filters, single-precision, drop-rate + base-zoom
         # (yaml:54-56; the base zoom defaults to maxz), cover variants
@@ -329,7 +330,7 @@ class _TileOptions:
 def encode_point_tiles(
     features: DataFrame,
     minz: int,
-    maxz: int,
+    maxz: int | str,
     settings: TilingSettings | None = None,
 ) -> DataFrame:
     """Point features (feature_id, lon, lat[, props]) -> MVT tiles for z in
@@ -353,25 +354,18 @@ def encode_geom_tiles(
     return _encode(features, minz, maxz, settings, points=False)
 
 
-def _encode(features: DataFrame, minz: int, maxz: int,
+def _encode(features: DataFrame, minz: int, maxz: int | str,
             settings: TilingSettings | None, points: bool) -> DataFrame:
     """The settings prelude and the one encode site of both encoders;
-    ``points`` picks the cover step. Plan: projection -> feature-filter
-    and prefilter (pushable predicates, before the fan-out) -> cover ->
-    postfilter and drop-rate on the cover frame (which has ``z``) ->
-    tile-sorted multi-tile mapInPandas over ``_encode_tile``. Deterministic
-    at any parallelism: the kernel orders each tile's rows itself."""
-    settings = settings if settings is not None else TilingSettings()
+    ``points`` picks the cover step. Plan: ``pyramid.tiling_input``
+    (projection and zoom range) -> feature-filter and prefilter
+    (pushable predicates, before the fan-out) -> cover -> postfilter and
+    drop-rate on the cover frame (which has ``z``) -> tile-sorted
+    multi-tile mapInPandas over ``_encode_tile``. Deterministic at any
+    parallelism: the kernel orders each tile's rows itself."""
+    features, settings = tiling_input(features, settings, minz, maxz)
+    minz, maxz = settings["minimum-zoom"], settings["maximum-zoom"]
     o = _TileOptions(settings, maxz)
-    # projection (yaml:23-24): points reproject EPSG:3857 with column math;
-    # the WKB path is 4326-only (loud), since reprojecting would rewrite
-    # every ring inside the Arrow cover pass
-    if points:
-        features = project_to_4326(features, settings)
-    elif o.epsg != "4326":
-        raise NotImplementedError(
-            f"projection EPSG:{o.epsg} unsupported for WKB geometry sources "
-            "(EPSG:4326 only)")
     # feature-filter / -file (yaml:47-48) and prefilter: Catalyst
     # predicates BEFORE the fan-out, so they push toward the scan
     features = apply_feature_filter(features, settings, o.layer)

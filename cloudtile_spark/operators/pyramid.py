@@ -14,9 +14,16 @@ Plan shape (all relational until the optional MVT encode):
                                                the north rule calls out)
       -> z, x, y summary                      (count, sorted ids, checksum)
 
-The cap itself is decided once, by ``tile_limits`` (the only reader of the
-cap and byte-budget settings); every tiler — this module, plans/lineage.py,
-operators/mvt.py, the CLI's zoom guess — asks it.
+Two decisions are made once, here, and every tiler — ``build_pyramid``,
+plans/lineage.py's ``resume_pyramid``, operators/mvt.py's encoders and
+the CLI — asks for them:
+
+- ``tiling_input`` resolves the tiler's input: the projection (EPSG:3857
+  reprojects to lon/lat degrees) and the zoom range (explicit args win,
+  a missing zoom raises, ``maximum-zoom: g`` is guessed and
+  ``extend-zooms-if-still-dropping`` extends, both on the reprojected
+  coordinates and never below the minimum zoom);
+- ``tile_limits`` is the only reader of the cap and byte-budget settings.
 
 Scale notes (100 TB / 1000 executors):
 - The explode is a narrow map — no shuffle until the top-cap.
@@ -37,6 +44,7 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import copy
 from typing import Callable, Optional
 
 import numpy as np
@@ -111,16 +119,66 @@ def project_to_4326(df: DataFrame, settings: Optional[TilingSettings],
     """EPSG:4326 (default) passes through; EPSG:3857 coordinates
     (web-mercator meters in the lon/lat columns) reproject with the shared
     inverse-mercator SQL builders — pure column math, codegen-friendly, no
-    UDF. Anything else fails loudly rather than silently mis-projecting."""
+    UDF. Anything else fails loudly rather than silently mis-projecting,
+    and so does any projection but EPSG:4326 on a WKB source (its
+    geometry is not lon/lat columns: reprojecting would rewrite every
+    ring)."""
     code = epsg_code(settings)
     if code == "4326":
         return df
+    if lon not in df.columns or "geom_wkb" in df.columns:
+        raise NotImplementedError(
+            f"projection EPSG:{code} unsupported for WKB geometry sources "
+            "(EPSG:4326 only)")
     if code == "3857":
         return df.withColumn(lon, F.expr(tiles.merc_to_lon_sql(lon))) \
                  .withColumn(lat, F.expr(tiles.merc_to_lat_sql(lat)))
     raise NotImplementedError(
         f"projection {settings['projection']!r} unsupported "
         "(EPSG:4326 or EPSG:3857 input)")
+
+
+def tiling_input(
+    features: DataFrame,
+    settings: Optional[TilingSettings] = None,
+    minz: Optional[int] = None,
+    maxz: Optional[int | str] = None,
+) -> tuple[DataFrame, TilingSettings]:
+    """The one tiler prelude: (features in EPSG:4326, settings with
+    concrete zooms) for every tiler, as tippecanoe resolves them
+    (reference src/cloudtile/geofile.py:194-234).
+
+    Works on a copy: the caller's settings are never changed. Explicit
+    ``minz``/``maxz`` win over the settings' zooms; a zoom missing from
+    both raises TypeError. The features reproject first, so the searches
+    below read degrees. ``maximum-zoom: g`` (cli/parsers.py:146-150) is
+    the lowest zoom in [minz, 14] whose densest tile fits the max-zoom
+    cap; ``extend-zooms-if-still-dropping`` (tippecanoe.yaml:27) then
+    deepens the max zoom up to z15 while the densest tile still drops
+    features after the drop strategy. Each search is one Spark job.
+
+    The returned settings say EPSG:4326, hold both zooms as ints and have
+    the extension cleared, so a second call on the output changes nothing
+    and runs no job."""
+    s = copy.copy(settings) if settings is not None else TilingSettings()
+    lo = minz if minz is not None else s.get("minimum-zoom")
+    hi = maxz if maxz is not None else s.get("maximum-zoom")
+    if lo is None or hi is None:
+        raise TypeError("minimum-zoom and maximum-zoom are required to tile")
+    features = project_to_4326(features, s)
+    cap = tile_limits(s)[1]
+    if hi == "g":
+        hi = _lowest_fitting_zoom(features, cap, lo, _GUESS_MAX_ZOOM)
+    if s.get("extend-zooms-if-still-dropping"):
+        hi = _lowest_fitting_zoom(features, cap, hi, _EXTEND_MAX_ZOOM, s)
+    # drop both zooms first: the order validator compares each with the
+    # other, and the caller's pair may sit anywhere
+    s.pop("minimum-zoom", None)
+    s.pop("maximum-zoom", None)
+    s.update({"minimum-zoom": lo, "maximum-zoom": hi,
+              "projection": "EPSG:4326",
+              "extend-zooms-if-still-dropping": False})
+    return features, s
 
 
 def assign_xy(df: DataFrame, z_expr: str = "z",
@@ -300,32 +358,12 @@ def build_pyramid(
     maxz: Optional[int | str] = None,
     with_ids: bool = True,
 ) -> DataFrame:
-    """features -> tiles(z, x, y, feature_count[, feature_ids, checksum]).
-
-    Zoom plumbing mirrors the reference (src/cloudtile/geofile.py:194-216):
-    explicit args win; missing zooms at tiling time raise TypeError; maxz="g"
-    triggers the guess pass (tippecanoe's ``maximum-zoom: g``,
-    cli/parsers.py:146-150).
-    """
-    settings = settings if settings is not None else TilingSettings()
-    if minz is not None:
-        settings["minimum-zoom"] = minz
-    if maxz is not None:
-        settings["maximum-zoom"] = maxz
-    if "minimum-zoom" not in settings or "maximum-zoom" not in settings:
-        raise TypeError(
-            "minimum-zoom and maximum-zoom are required to build a pyramid"
-        )
-    lo = settings["minimum-zoom"]
-    hi = settings["maximum-zoom"]
-    # Reproject BEFORE the zoom guess: with projection=EPSG:3857 the raw
-    # coords are web-mercator meters, which the density heuristic would
-    # otherwise misread as degrees (ADVICE r3).
-    features = project_to_4326(features, settings)
-    if hi == "g":
-        hi = guess_max_zoom(features, tile_limits(settings)[1])
+    """features -> tiles(z, x, y, feature_count[, feature_ids, checksum])
+    over the zoom range and projection ``tiling_input`` resolves."""
+    features, s = tiling_input(features, settings, minz, maxz)
+    lo, hi = s["minimum-zoom"], s["maximum-zoom"]
     df = assign_xy(explode_zooms(features, lo, hi))
-    return capped_tile_summary(df, tile_cap(settings, hi), with_ids=with_ids)
+    return capped_tile_summary(df, tile_cap(s, hi), with_ids=with_ids)
 
 
 def _lowest_fitting_zoom(
@@ -335,8 +373,8 @@ def _lowest_fitting_zoom(
     """The lowest zoom in [lo, hi] whose densest tile holds <= ``cap``
     features after the drop strategy, else ``hi``. One aggregate job over
     every candidate zoom at once — a driver decision over a tiny result,
-    not a per-zoom loop. Empty input fits at ``lo`` (its densest tile
-    holds 0 features).
+    not a per-zoom loop; none when ``lo >= hi``, which answers ``lo``.
+    Empty input fits at ``lo`` (its densest tile holds 0 features).
 
     Drop-strategy FEEDBACK (round-2 verdict B17): density is measured
     AFTER the configured merge/thinning strategy, not on raw counts — a
@@ -351,6 +389,8 @@ def _lowest_fitting_zoom(
       ceil(n^(1/gamma)), so effective density is the sum of retained
       counts per tile.
     """
+    if lo >= hi:
+        return lo
     exploded = assign_xy(explode_zooms(features.select("lon", "lat"), lo, hi))
     cd = settings.get("cluster-distance") if settings else None
     gamma = settings.get("gamma") if settings else None
@@ -388,26 +428,6 @@ def _lowest_fitting_zoom(
     while z < hi and per_z_max.get(z, 0) > cap:
         z += 1
     return z
-
-
-def guess_max_zoom(features: DataFrame, cap: int) -> int:
-    """tippecanoe's ``maximum-zoom: g``: the lowest zoom in [0, 14] at
-    which the densest tile holds <= cap features (14 if none does)."""
-    return _lowest_fitting_zoom(features, cap, 0, _GUESS_MAX_ZOOM)
-
-
-def extend_zooms_while_dropping(
-    features: DataFrame,
-    cap: int,
-    maxz: int,
-    settings: Optional[TilingSettings] = None,
-) -> int:
-    """tippecanoe ``extend-zooms-if-still-dropping`` (reference
-    tippecanoe.yaml:27): if the deepest requested zoom still drops features
-    (densest tile > cap after the drop strategy), extend max zoom until
-    nothing drops or z15."""
-    return _lowest_fitting_zoom(features, cap, maxz, _EXTEND_MAX_ZOOM,
-                                settings)
 
 
 def _with_density(features: DataFrame, z: int) -> DataFrame:

@@ -26,7 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.pyramid import assign_xy, capped_tile_summary, tile_cap
+from ..operators.pyramid import (assign_xy, capped_tile_summary, tile_cap,
+                                 tiling_input)
 from ..settings import TilingSettings
 
 LINEAGE_SCHEMA = (
@@ -55,7 +56,7 @@ def resume_pyramid(
     out_dir: str,
     run_id: str,
     minz: int,
-    maxz: int,
+    maxz: int | str,
     settings: TilingSettings | None = None,
 ) -> list[int]:
     """Build (or resume) a tile pyramid with per-zoom commit points.
@@ -64,10 +65,13 @@ def resume_pyramid(
     zooms are skipped — the resume contract of FIXTURES.md §8). Output data
     is identical to an uninterrupted run because every stage is
     deterministic and zoom partitions are overwritten atomically
-    (partitionOverwriteMode=dynamic).
+    (partitionOverwriteMode=dynamic). Projection and zoom range come from
+    ``tiling_input``, as for every tiler.
     """
     spark = features.sparkSession
-    cap = tile_cap(settings, maxz)
+    features, s = tiling_input(features, settings, minz, maxz)
+    minz, maxz = s["minimum-zoom"], s["maximum-zoom"]
+    cap = tile_cap(s, maxz)
     done = committed_zooms(spark, out_dir)
     todo = [z for z in range(minz, maxz + 1) if z not in done]
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -77,7 +81,12 @@ def resume_pyramid(
         )
         tiles_z.write.mode("overwrite").partitionBy("z") \
             .parquet(f"{out_dir}/tiles")
-        lin = tiles_z.select(
+        # lineage rows from the partition just written, not from tiles_z:
+        # that plan is uncached and would run the top-cap again. The
+        # schema is given, so the read infers nothing (no job)
+        written = spark.read.schema(tiles_z.schema) \
+            .parquet(f"{out_dir}/tiles").where(F.col("z") == z)
+        lin = written.select(
             F.lit(run_id).alias("run_id"),
             F.lit("tile").alias("stage"),
             "z", "x", "y",

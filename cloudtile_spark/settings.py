@@ -116,7 +116,7 @@ class TilingSettings(UserDict):
 
 
 def _check_max_zoom(s: TilingSettings, value: Any) -> None:
-    if value == "g":  # "guess": resolved by guess_max_zoom at plan time
+    if value == "g":  # "guess": pyramid.tiling_input resolves it
         return
     if "minimum-zoom" in s and value < s["minimum-zoom"]:
         raise ValueError("Maximum zoom cannot be less than minimum zoom.")

@@ -63,3 +63,20 @@ def test_lineage_rows_match_tiles(spark, feats, tmp_path_factory):
         | (lin.checksum != tiles.checksum)
     )
     assert bad.count() == 0
+
+
+def test_resume_runs_one_top_cap_per_zoom(spark, feats, tmp_path_factory):
+    """Each zoom's top-cap aggregation runs once: the lineage rows are read
+    back from the zoom partition just written, so the features are scanned
+    once per zoom (counted by an accumulator in a pass-through map)."""
+    scanned = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            scanned.add(len(pdf))
+            yield pdf
+
+    counted = feats.mapInPandas(count_rows, feats.schema)
+    d = str(tmp_path_factory.mktemp("once"))
+    assert resume_pyramid(counted, d, "once", 0, 2) == [0, 1, 2]
+    assert scanned.value == 3 * feats.count()

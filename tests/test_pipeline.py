@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from cloudtile_spark import caching, tiles
 from cloudtile_spark.operators.extract import extract_features, extracted_text
 from cloudtile_spark.operators.pyramid import (
-    build_pyramid, guess_max_zoom, topk_per_tile, assign_xy, explode_zooms,
+    build_pyramid, tiling_input, topk_per_tile, assign_xy, explode_zooms,
     tile_summary,
 )
 from cloudtile_spark.settings import TilingSettings
@@ -148,8 +148,14 @@ def test_salt_buckets_scale_with_parallelism(spark, features, monkeypatch):
     assert outs[0] == outs[1] == outs[2]
 
 
+def _resolved_maxz(features, minz, maxz, **settings):
+    """The max zoom ``tiling_input`` resolves for these settings."""
+    return tiling_input(features, TilingSettings(**settings),
+                        minz, maxz)[1]["maximum-zoom"]
+
+
 def test_guess_max_zoom(features):
-    zg = guess_max_zoom(features, cap=100)
+    zg = _resolved_maxz(features, 0, "g", **{"maximum-tile-features": 100})
     assert 0 < zg <= 14
     # at zg the densest tile is under cap; at zg-1 it is not
     for z, ok in ((zg, True), (zg - 1, False)):
@@ -212,15 +218,26 @@ def test_coalesce_union_merge_conserves_features(features):
     assert bad == 0
 
 
-def test_extend_zooms_while_dropping(features):
-    from cloudtile_spark.operators.pyramid import extend_zooms_while_dropping
+def _extended(features, cap, maxz, **settings):
+    """The max zoom after ``extend-zooms-if-still-dropping`` from ``maxz``
+    at feature cap ``cap``."""
+    return _resolved_maxz(features, 0, maxz, **{
+        "maximum-tile-features": cap,
+        "extend-zooms-if-still-dropping": True, **settings})
 
+
+def test_extend_zooms_while_dropping(features):
     # with a tiny cap, z3 still drops -> extended beyond
-    z = extend_zooms_while_dropping(features, cap=20, maxz=3)
+    z = _extended(features, cap=20, maxz=3)
     assert z > 3
     # huge cap: nothing drops at maxz -> unchanged
-    z2 = extend_zooms_while_dropping(features, cap=10**6, maxz=3)
+    z2 = _extended(features, cap=10**6, maxz=3)
     assert z2 == 3
+    # already beyond the z15 limit: unchanged
+    assert _extended(features, cap=20, maxz=16) == 16
+    # without the setting the max zoom stays as asked
+    assert _resolved_maxz(features, 0, 3,
+                          **{"maximum-tile-features": 20}) == 3
 
 
 def test_extend_zooms_drop_strategy_feedback(features):
@@ -228,25 +245,18 @@ def test_extend_zooms_drop_strategy_feedback(features):
     see POST-strategy density. With a cluster distance so coarse that each
     tile collapses to ~1 cluster, no zoom 'still drops' — the chosen max
     zoom is LOWER than the raw-density answer at the same cap."""
-    from cloudtile_spark.operators.pyramid import extend_zooms_while_dropping
-
-    raw = extend_zooms_while_dropping(features, cap=20, maxz=3)
+    raw = _extended(features, cap=20, maxz=3)
     assert raw > 3
 
-    s = TilingSettings()
     # 64-px snap at zoom z: a 256-px tile holds <= 16 clusters < cap=20
-    s["cluster-distance"] = 64
-    clustered = extend_zooms_while_dropping(
-        features, cap=20, maxz=3, settings=s)
+    clustered = _extended(features, cap=20, maxz=3,
+                          **{"cluster-distance": 64})
     assert clustered == 3 < raw
 
     # gamma thinning: sqrt retention per pixel bucket lowers effective
     # density, so the extension stops at or before the raw answer — and
     # with a cap the thinned density still exceeds at maxz, it extends
-    s2 = TilingSettings()
-    s2["gamma"] = 2
-    thinned = extend_zooms_while_dropping(
-        features, cap=20, maxz=3, settings=s2)
+    thinned = _extended(features, cap=20, maxz=3, gamma=2)
     assert 3 <= thinned <= raw
 
 
@@ -453,6 +463,112 @@ def test_tilers_agree_on_cap(spark, tmp_path, case):
         assert n == pyr[(z, x, y)], (z, x, y)
 
 
+# Tiler-input cases: (settings, minz, maxz, (lo, hi, cap)). The max zoom
+# every tiler must resolve is the NumPy reference search over [lo, hi] at
+# ``cap`` on the 300 EPSG:4326 points; ``hi`` itself when lo == hi.
+_INPUT_CASES = {
+    "guess": ({"maximum-tile-features": 50}, 0, "g", (0, 14, 50)),
+    "minz_above_guess": ({"maximum-tile-features": 200}, 3, "g",
+                         (3, 14, 200)),
+    "extend": ({"maximum-tile-features": 50,
+                "extend-zooms-if-still-dropping": True}, 0, 2, (2, 15, 50)),
+    "caller_zooms_kept": ({"minimum-zoom": 1, "maximum-zoom": 4}, 0, 3,
+                          (3, 3, 0)),
+    "caller_max_below_minz": ({"maximum-zoom": 2}, 5, 8, (8, 8, 0)),
+}
+
+_TILERS = ["build_pyramid", "resume_pyramid", "encode_point_tiles", "cli"]
+
+
+@pytest.fixture(scope="module")
+def input_points(spark):
+    """300 extracted points: the EPSG:4326 frame, its rows and the
+    forward-projected EPSG:3857 (web-mercator meters) frame."""
+    feats = extract_features(synth_pages(spark, 300, partitions=2)
+                             .drop("page_id")) \
+        .select("feature_id", "lon", "lat").cache()
+    merc = feats.selectExpr(
+        "feature_id", f"{tiles.lon_to_merc_sql('lon')} AS lon",
+        f"{tiles.lat_to_merc_sql('lat')} AS lat")
+    yield feats, [tuple(r) for r in feats.collect()], merc
+    feats.unpersist()
+
+
+def _tile_counts(df):
+    return {(r.z, r.x, r.y): r.feature_count
+            for r in df.select("z", "x", "y", "feature_count").collect()}
+
+
+@pytest.mark.parametrize("tiler", _TILERS)
+@pytest.mark.parametrize("case", list(_INPUT_CASES))
+def test_tilers_agree_on_input(spark, tmp_path, monkeypatch, input_points,
+                               case, tiler):
+    """Every tiler (build_pyramid, resume_pyramid, encode_point_tiles and
+    the CLI's features2tiles), fed forward-projected EPSG:3857 points,
+    resolves the zoom range of the NumPy reference over the EPSG:4326
+    points and gives the EPSG:4326 run's tiles: no tile below the minimum
+    zoom, the resolved range in the CLI's output name, and the caller's
+    settings object unchanged."""
+    from cloudtile_spark.cli import main
+    from cloudtile_spark.operators import mvt
+    from cloudtile_spark.plans.lineage import read_tiles, resume_pyramid
+
+    kw, minz, maxz, ref = _INPUT_CASES[case]
+    feats, rows, merc = input_points
+    want_maxz = _ref_lowest_fitting_zoom(rows, *ref)
+    want = _tile_counts(build_pyramid(feats, TilingSettings(**kw), minz,
+                                      maxz, with_ids=False))
+    assert {z for z, _, _ in want} == set(range(minz, want_maxz + 1))
+    s = TilingSettings(projection="EPSG:3857", **kw)
+    before = dict(s)
+    if tiler == "build_pyramid":
+        got = _tile_counts(build_pyramid(merc, s, minz, maxz))
+    elif tiler == "encode_point_tiles":
+        got = _tile_counts(mvt.encode_point_tiles(merc, minz, maxz,
+                                                  settings=s))
+    elif tiler == "resume_pyramid":
+        resume_pyramid(merc, str(tmp_path), "r", minz, maxz, settings=s)
+        got = _tile_counts(read_tiles(spark, str(tmp_path)))
+    else:
+        monkeypatch.chdir(tmp_path)
+        merc.write.parquet(str(tmp_path / "merc.parquet"))
+        kwargs = [f"{k}={str(v).lower()}" for k, v in s.items()
+                  if k in kw or k == "projection"]
+        assert main(["convert", "features2tiles",
+                     str(tmp_path / "merc.parquet"), str(minz), str(maxz),
+                     "--cores", "2", "--tc-kwargs", *kwargs]) == 0
+        names = [p.name for p in tmp_path.glob("merc-*")]
+        assert names == [f"merc-{minz}-{want_maxz}"]
+        got = _tile_counts(spark.read.parquet(str(tmp_path / names[0])))
+    assert got == want
+    assert dict(s) == before
+
+
+def test_tiling_input_on_its_output_is_a_no_op(spark, input_points):
+    """tiling_input's output settings say EPSG:4326, hold int zooms and
+    have the extension cleared, so a second call returns the same frame
+    (no second projection) and settings, and runs no Spark job."""
+    import uuid
+
+    _, _, merc = input_points
+    s = TilingSettings(projection="EPSG:3857",
+                       **{"maximum-tile-features": 50,
+                          "extend-zooms-if-still-dropping": True})
+    feats, s1 = tiling_input(merc, s, 0, "g")
+    assert (s1["projection"], s1["extend-zooms-if-still-dropping"]) == \
+        ("EPSG:4326", False)
+    assert isinstance(s1["maximum-zoom"], int)
+    sc = spark.sparkContext
+    group = f"again-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "tiling_input on its own output")
+    try:
+        again, s2 = tiling_input(feats, s1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert again is feats and dict(s2) == dict(s1)
+
+
 # Degenerate inputs for the pyramid operators: (feature_id, lon, lat)
 # rows. "one_tile" puts 30 + 10 points in two fine cells of one z4 tile, so
 # the densest-first order differs from the id order.
@@ -473,6 +589,8 @@ _PYR_DEGENERATE = {
                             for i in range(5)]),
 }
 _PYR_CAP, _PYR_MAXZ, _PYR_Z = 5, 4, 2
+# the last two rows are tiling_input's zoom searches: the "g" guess and
+# extend-zooms-if-still-dropping
 _PYR_FUNCS = ["build_pyramid_ids", "build_pyramid_counts",
               "capped_tile_summary", "density_capped_summary",
               "coalesce_densest_summary", "guess_max_zoom",
@@ -511,9 +629,9 @@ def _ref_keep_sets(rows):
             for k, ids in _ref_tiles(rows, _PYR_Z).items()}
 
 
-def _ref_lowest_fitting_zoom(rows, lo, hi):
+def _ref_lowest_fitting_zoom(rows, lo, hi, cap=_PYR_CAP):
     for z in range(lo, hi):
-        if max(map(len, _ref_tiles(rows, z).values()), default=0) <= _PYR_CAP:
+        if max(map(len, _ref_tiles(rows, z).values()), default=0) <= cap:
             return z
     return hi
 
@@ -566,9 +684,9 @@ def test_pyramid_degenerate_inputs(spark, case, fn):
             got[(r.x, r.y)] = (n + r.multiplicity, sorted(ids + [r.survivor_id]))
         assert got == _ref_keep_sets(rows)
     elif fn == "guess_max_zoom":
-        assert pyramid.guess_max_zoom(feats, _PYR_CAP) == \
+        assert tiling_input(feats, s, 0, "g")[1]["maximum-zoom"] == \
             _ref_lowest_fitting_zoom(rows, 0, 14)
     else:
-        assert pyramid.extend_zooms_while_dropping(
-            feats, _PYR_CAP, maxz=_PYR_Z) == \
+        s["extend-zooms-if-still-dropping"] = True
+        assert tiling_input(feats, s, 0, _PYR_Z)[1]["maximum-zoom"] == \
             _ref_lowest_fitting_zoom(rows, _PYR_Z, 15)

@@ -115,21 +115,6 @@ def test_cell_sql_matches_numpy():
     assert np.array_equal(cells.parent(expect), cells.cell(lon, lat, 8))
 
 
-def test_k_ring():
-    c = cells.cell(np.array([10.0]), np.array([50.0]), 6)
-    ring = cells.k_ring(c, 1)
-    assert ring.shape == (1, 9)
-    assert len(set(ring[0].tolist())) == 9  # interior cell: all distinct
-    res, x, y = cells.cell_to_xy(ring[0])
-    cx, cy = cells.cell_to_xy(c)[1][0], cells.cell_to_xy(c)[2][0]
-    assert np.all(np.abs(x - cx) <= 1) and np.all(np.abs(y - cy) <= 1)
-    # pole clamp: y=0 row keeps ids valid
-    top = (tiles.morton(np.array([3]), np.array([0])) << cells.RES_BITS) | 6
-    ring2 = cells.k_ring(top, 1)
-    r2, _, y2 = cells.cell_to_xy(ring2[0])
-    assert np.all(y2 >= 0) and np.all(r2 == 6)
-
-
 def test_norm_lon_sql():
     con = duckdb.connect()
     got = con.execute(
