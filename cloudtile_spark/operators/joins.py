@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import caching, cells, geom, tiles
+from ..session import salt_buckets
 from .pyramid import _bbox_tiles
 
 EARTH_R = geom.EARTH_RADIUS_M
@@ -158,17 +159,22 @@ def _inside_sql(max_v: int) -> str:
 
 
 def _refine(cand: DataFrame, rt: _Rings, codegen: bool) -> DataFrame:
-    """Exact refine of (point, zone) bbox candidates.
+    """Exact filter of (point, zone) candidate pairs: the bbox test, then
+    the ray cast.
 
-    codegen: a filter on the unrolled ray cast over the vertex columns the
-    zone table carries, so join and refine run inside WholeStageCodegen
-    with no Python worker. Otherwise: one mapInPandas kernel
-    (geom.points_in_polygon per zone group) with the ring table in its
-    closure, keyed by zone_id; it streams the candidates with no extra
-    exchange.
+    codegen: ONE filter, the bbox compares AND the unrolled ray cast over
+    the vertex columns the zone table carries, so join and refine run
+    inside WholeStageCodegen with no Python worker. It is one predicate
+    because Catalyst pushes a filter over a join into the join condition
+    AHEAD of the join's own condition: a bbox join condition under a ray
+    cast filter ray-casts every pair. Otherwise: the bbox filter, then one
+    mapInPandas kernel (geom.points_in_polygon per zone group) with the
+    ring table in its closure, keyed by zone_id; it streams the
+    candidates with no extra exchange.
     """
     if codegen:
-        return cand.where(F.expr(_inside_sql(rt.max_v))).select(*_PIP_COLS)
+        refine = f"{_BBOX_SQL} AND {_inside_sql(rt.max_v)}"
+        return cand.where(refine).select(*_PIP_COLS)
     row = {int(z): i for i, z in enumerate(rt.zone_id)}
     xy, v = rt.xy, rt.max_v
 
@@ -181,7 +187,8 @@ def _refine(cand: DataFrame, rt: _Rings, codegen: bool) -> DataFrame:
                 keep[idx] = geom.points_in_polygon(lon[idx], lat[idx], ring)
             yield pdf[keep]
 
-    return cand.select(*_PIP_COLS).mapInPandas(kernel, schema=_PIP_SCHEMA)
+    return cand.where(_BBOX_SQL).select(*_PIP_COLS) \
+        .mapInPandas(kernel, schema=_PIP_SCHEMA)
 
 
 def pip_join(points: DataFrame, zones_pdf: pd.DataFrame) -> DataFrame:
@@ -190,8 +197,8 @@ def pip_join(points: DataFrame, zones_pdf: pd.DataFrame) -> DataFrame:
     ``zones_pdf`` is a driver-side pandas frame (zone_id, ring) where ring
     is an (n, 2) float64 array — the polygon side of a PIP join is the
     small dimension (admin boundaries), so its ring table is broadcast and
-    the point side streams through a bbox range join (scan ->
-    broadcast-join -> filter, zero shuffles), then the exact refine.
+    the point side streams through a broadcast nested-loop join whose
+    condition is ``_refine``'s (zero shuffles).
 
     Returns (feature_id, lon, lat, zone_id): inner-join semantics,
     multi-match on overlapping zones preserved. Same rows as
@@ -200,8 +207,7 @@ def pip_join(points: DataFrame, zones_pdf: pd.DataFrame) -> DataFrame:
     rt = _ring_table(zones_pdf)
     codegen = _codegen_fits(rt)
     zt = _zone_frame(points.sparkSession, rt, codegen)
-    return _refine(points.join(F.broadcast(zt), F.expr(_BBOX_SQL)),
-                   rt, codegen)
+    return _refine(points.join(F.broadcast(zt)), rt, codegen)
 
 
 def pip_join_shuffle_codegen(
@@ -237,25 +243,25 @@ def pip_join_shuffle_codegen(
     # salt the join key: even at the refined cover resolution a few metro
     # cells hold a large share of the points, and the post-join refine runs
     # inside the join stage — a deterministic per-row salt on the point
-    # side (cover rows replicate to every salt) spreads each hot cell's
-    # candidates over `salt` reducers (results salt-invariant).
-    salt = max(2, min(16, spark.sparkContext.defaultParallelism // 2))
+    # side spreads each hot cell's candidates over `salt` reducers (results
+    # salt-invariant). Every salt replicates every cover row, so this site
+    # takes a quarter of the session's salt: at 4 cores and 400 zones the
+    # full salt (8, not 2) took 1.7x the task time (3.7 -> 6.3 s) for no
+    # wall-time gain.
+    salt = max(1, salt_buckets(spark) // 4)
     # explode (not a broadcast crossJoin): keeps the plan free of ANY
     # BroadcastExchange, preserving the operator's no-broadcast contract
     cover = cover.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
     pts = pts.withColumn(
         "_salt", F.pmod(F.col("feature_id"), F.lit(salt)).cast("int"))
-    # bbox short-circuit BEFORE the refine: a cover cell is up to a full
-    # cell wider than the zone's bbox, so cheap compares drop those
-    # candidates before the V-term even-odd expression evaluates (the two
-    # filters combine into one AND, which short-circuits in codegen).
+    # _refine's bbox compares short-circuit the ray cast: a cover cell is
+    # up to a full cell wider than the zone's bbox.
     # shuffle_hash on the cover side: builds the per-partition hash map on
     # the small side instead of sorting the full point side (SortMergeJoin)
     # — measured ~8% faster at 4M points / 200 zones — and pins the
     # operator to its no-broadcast contract at ANY threshold setting.
-    cand = pts.join(cover.hint("shuffle_hash"), ["cell", "_salt"]) \
-        .where(F.expr(_BBOX_SQL))
+    cand = pts.join(cover.hint("shuffle_hash"), ["cell", "_salt"])
     return _refine(cand, rt, codegen)
 
 
@@ -556,7 +562,7 @@ def knn_join_shuffle(
     retry once with the 9x9 ring — a sparse neighborhood needs reach,
     not a full scan — and those that still fail take a SALTED REPLICATED
     brute force, not a broadcast cross join: every residual query
-    replicates to ``S = 2 x defaultParallelism`` salt buckets, points take
+    replicates to ``S = session.salt_buckets`` salt buckets, points take
     pmod(hash, S), and an equi-join on the salt spreads the all-pairs work
     over S reducers. AQE prunes the empty escalation branches at run time.
 
@@ -576,8 +582,7 @@ def knn_join_shuffle(
     failed2 = failed1.join(cert2, "query_id", "left_anti") \
                      .select("query_id", "qlon", "qlat")
 
-    sc = points.sparkSession.sparkContext
-    n_salt = max(8, min(1024, 2 * sc.defaultParallelism))
+    n_salt = salt_buckets(points.sparkSession)
     # explode (not a broadcast crossJoin of a salt frame): the plan holds
     # no BroadcastExchange at all when the threshold is off
     q_rep = failed2.withColumn(

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import caching, cells, geom, tiles
+from .session import parallelism
 from .sources.pages import lat_sql, lon_sql
 
 TABLES = [
@@ -50,10 +51,9 @@ def _hint_documents(sql: str, spark: SparkSession, count: int = 1) -> str:
     gopher 1.21->0.53s, chunks 0.92->0.73s; the cheap scans measured
     SLOWER hinted — the exchange costs more than it buys). A /*+ */ hint
     changes no results; oracle texts stay unhinted."""
-    par = spark.sparkContext.defaultParallelism
     return sql.replace(
         "FROM documents",
-        f"FROM (SELECT /*+ REPARTITION({par}, doc_id) */ * "
+        f"FROM (SELECT /*+ REPARTITION({parallelism(spark)}, doc_id) */ * "
         f"FROM documents) _d",
         count)
 
@@ -1611,7 +1611,7 @@ def _init_dedup_queries() -> None:
         # session parallelism (single-row-group input scans as one task);
         # band rows and verification shingle sets both derive from it
         par_cte = dd.with_repartition_hint(
-            dd.PLANTED_CORPUS_CTE, spark.sparkContext.defaultParallelism)
+            dd.PLANTED_CORPUS_CTE, parallelism(spark))
         vh = caching.stage_view(
             spark.sql(dd.minhash_hashed_sql(dd.SPARK, par_cte)),
             "lsh_h")
@@ -1830,7 +1830,7 @@ def _init_dedup_queries() -> None:
 
         load_views(spark, sf_dir)
         par_cte = dd.with_repartition_hint(
-            dd.PLANTED_CORPUS_CTE, spark.sparkContext.defaultParallelism)
+            dd.PLANTED_CORPUS_CTE, parallelism(spark))
         vh = caching.stage_view(
             spark.sql(dd.minhash_hashed_sql(dd.SPARK, par_cte)),
             "cc_h")
@@ -2202,8 +2202,7 @@ def _init_ann_lsh() -> None:
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_views(spark, sf_dir)
-        stage_sql = ann_lsh_bucket_table_sql(
-            "spark", par=spark.sparkContext.defaultParallelism)
+        stage_sql = ann_lsh_bucket_table_sql("spark", par=parallelism(spark))
         vt = caching.stage_view(spark.sql(stage_sql), "lsh_t")
         return spark.sql("WITH " + ann_lsh_rerank_body_sql("spark", vt))
 
@@ -2230,8 +2229,7 @@ def _init_ann_pq() -> None:
         # encode ONCE into a materialized codes table (8 small ints/vector
         # — the stage a deployment writes out; ~32x smaller than raw
         # vectors) at session parallelism, then ADC-search against it
-        codes_sql = pq_codes_sql(
-            "spark", par=spark.sparkContext.defaultParallelism)
+        codes_sql = pq_codes_sql("spark", par=parallelism(spark))
         vt = caching.stage_view(spark.sql(codes_sql), "pq_codes")
         return spark.sql(pq_adc_body_sql("spark", vt))
 

@@ -9,6 +9,10 @@ ones that matter at 100 TB and are harmless at test scale:
 - Arrow on (every Python touchpoint is an Arrow batch)
 - shuffle partitions sized to cores locally; on a real cluster this should be
   2-3x total executor cores (or left to AQE's coalesce from a higher number).
+
+It also owns the one sizing rule of the operators: ``parallelism`` is the
+only reading of the session's core count, and ``salt_buckets`` the one salt
+count built on it.
 """
 
 from __future__ import annotations
@@ -51,3 +55,19 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def parallelism(spark: SparkSession) -> int:
+    """How many pieces this session splits work into: its core count
+    (``defaultParallelism``). Every repartition width is this number."""
+    return spark.sparkContext.defaultParallelism
+
+
+def salt_buckets(spark: SparkSession) -> int:
+    """The one salt rule: 2x ``parallelism``, so a hot key's work spreads
+    over every core with stragglers interleaved. The pyramid top-cap and
+    the kNN brute pass salt at this; the no-broadcast PIP, whose every salt
+    replicates the zone cover, at a quarter of it. Every salted output is
+    salt-invariant (tests pin each operator at two salts), so this moves
+    only the spread, never a result."""
+    return 2 * parallelism(spark)

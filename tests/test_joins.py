@@ -14,6 +14,7 @@ from pyspark.sql import functions as F, Window
 from cloudtile_spark import caching, geom
 from cloudtile_spark.operators.extract import extract_features
 from cloudtile_spark.operators import joins
+from cloudtile_spark.session import salt_buckets
 from cloudtile_spark.operators.joins import (
     knn_join_adaptive, knn_join_shuffle, pip_join, pip_join_shuffle_codegen)
 from cloudtile_spark.sources.pages import synth_pages
@@ -151,11 +152,13 @@ def test_knn_fallback_engages_on_sparse_queries(spark, feats):
         assert _knn_rows(out) == expect
 
 
-def _at_64_cores(monkeypatch):
+def _at_64_cores(spark, monkeypatch) -> int:
     """defaultParallelism 64, so both no-broadcast joins size their salt
-    as on a 64-core cluster: the PIP salt is 16, the kNN brute salt 128."""
+    as on a 64-core cluster; returns the session's salt there (128: the
+    kNN brute salt, and four times the PIP salt)."""
     monkeypatch.setattr(SparkContext, "defaultParallelism",
                         property(lambda self: 64))
+    return salt_buckets(spark)
 
 
 def _optimized(df) -> str:
@@ -163,27 +166,27 @@ def _optimized(df) -> str:
 
 
 def test_pip_shuffle_salt_invariant(spark, feats, monkeypatch):
-    """The no-broadcast PIP returns the same rows at salt 16 as at the
-    session's salt (2 on 4 cores): the salt only spreads a hot cell's
+    """The no-broadcast PIP returns the same rows at its 64-core salt (32)
+    as at its 4-core salt (2): the salt only spreads a hot cell's
     candidates over reducers."""
     zones = synth_zones(25)
     want = _pairs(pip_join_shuffle_codegen(feats, zones))
-    _at_64_cores(monkeypatch)
+    salt = _at_64_cores(spark, monkeypatch) // 4
     out = pip_join_shuffle_codegen(feats, zones)
-    assert re.search(r"pmod\(feature_id#\d+L, 16\)", _optimized(out))
+    assert re.search(rf"pmod\(feature_id#\d+L, {salt}\)", _optimized(out))
     assert _pairs(out) == want
 
 
 def test_knn_shuffle_salt_invariant(spark, feats, monkeypatch):
-    """The no-broadcast kNN returns the same rows at brute salt 128 as at
-    the session's salt (8 on 4 cores). The polar query fails both rings,
-    so the salted brute pass runs."""
+    """The no-broadcast kNN returns the same rows at its 64-core brute salt
+    as at the session's salt (8 on 4 cores). The polar query fails both
+    rings, so the salted brute pass runs."""
     qs = _polar_queries(spark, feats)
     want = _knn_rows(knn_join_shuffle(feats, qs, k=5, res=10))
     assert sum(r[0] == -1 for r in want) == 5
-    _at_64_cores(monkeypatch)
+    salt = _at_64_cores(spark, monkeypatch)
     out = knn_join_shuffle(feats, qs, k=5, res=10)
-    assert re.search(r"pmod\(xxhash64\(feature_id#\d+L, 42\), 128\)",
+    assert re.search(rf"pmod\(xxhash64\(feature_id#\d+L, 42\), {salt}\)",
                      _optimized(out))
     assert _knn_rows(out) == want
 

@@ -112,40 +112,68 @@ def test_feature_cap_enforced(features):
     assert max(z0.feature_ids) < N  # sanity
 
 
-def test_topk_salted_equals_plain_window(spark, features):
+def _at_salt(monkeypatch, n: int) -> None:
+    """Size every pyramid salt at ``n`` instead of the session's rule."""
+    from cloudtile_spark.operators import pyramid
+    monkeypatch.setattr(pyramid, "salt_buckets", lambda _spark: n)
+
+
+def test_topk_salted_equals_plain_window(spark, features, monkeypatch):
     df = assign_xy(explode_zooms(features, 0, 3))
-    salted = topk_per_tile(df, 20, salt_buckets=8)
-    plain = topk_per_tile(df, 20, salt_buckets=1)
-    a = sorted(map(tuple, salted.select("z", "x", "y", "feature_id").collect()))
-    b = sorted(map(tuple, plain.select("z", "x", "y", "feature_id").collect()))
-    assert a == b
-    # salt=256 (wider than any tile here) also identical — the parallelism-
-    # derived default (salt_buckets_for) can never change results
-    wide = topk_per_tile(df, 20, salt_buckets=256)
-    c = sorted(map(tuple, wide.select("z", "x", "y", "feature_id").collect()))
-    assert a == c
+    rows = {}
+    for sb in (8, 1, 256):  # salt 256 is wider than any tile here
+        with monkeypatch.context() as m:
+            _at_salt(m, sb)
+            rows[sb] = sorted(map(tuple, topk_per_tile(df, 20)
+                                  .select("z", "x", "y", "feature_id")
+                                  .collect()))
+    # salted == plain window: the session's salt can never change results
+    assert rows[8] == rows[1] == rows[256]
 
 
 def test_salt_buckets_scale_with_parallelism(spark, features, monkeypatch):
-    from cloudtile_spark.operators import pyramid
-    from cloudtile_spark.operators.pyramid import (
-        DEFAULT_SALT_BUCKETS, capped_tile_summary, salt_buckets_for,
-    )
-    n = salt_buckets_for(features)
-    par = spark.sparkContext.defaultParallelism
-    assert n == max(DEFAULT_SALT_BUCKETS, min(4096, 2 * par))
-    # capped summary output is salt-invariant: explicit 8 vs 256 vs default
+    from pyspark import SparkContext
+
+    from cloudtile_spark.operators.pyramid import capped_tile_summary
+    from cloudtile_spark.session import parallelism, salt_buckets
+
+    with monkeypatch.context() as m:
+        m.setattr(SparkContext, "defaultParallelism",
+                  property(lambda self: 64))
+        assert (parallelism(spark), salt_buckets(spark)) == (64, 128)
+    assert salt_buckets(spark) == 2 * spark.sparkContext.defaultParallelism
+    # capped summary output is salt-invariant: 8 vs 256 vs the session's
     df = assign_xy(explode_zooms(features, 0, 2))
     outs = []
     for sb in (8, 256, None):
         with monkeypatch.context() as m:
             if sb is not None:
-                m.setattr(pyramid, "salt_buckets_for", lambda _df, sb=sb: sb)
+                _at_salt(m, sb)
             outs.append(sorted(map(tuple, capped_tile_summary(df, 20)
                                    .select("z", "x", "y", "feature_count",
                                            "checksum")
                                    .collect())))
     assert outs[0] == outs[1] == outs[2]
+
+
+def test_session_is_the_one_reader_of_the_core_count():
+    """``session.parallelism`` is the only code under cloudtile_spark/ that
+    reads ``defaultParallelism``: every salt and repartition width asks it,
+    directly or through ``session.salt_buckets``."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "cloudtile_spark"
+    session = pkg / "session.py"
+    others = [str(p.relative_to(pkg)) for p in sorted(pkg.rglob("*.py"))
+              if p != session and "defaultParallelism" in p.read_text()]
+    assert others == []
+    readers = [f.name for f in ast.walk(ast.parse(session.read_text()))
+               if isinstance(f, ast.FunctionDef)
+               and any(isinstance(a, ast.Attribute)
+                       and a.attr == "defaultParallelism"
+                       for a in ast.walk(f))]
+    assert readers == ["parallelism"]
 
 
 def _resolved_maxz(features, minz, maxz, **settings):
@@ -477,7 +505,8 @@ _INPUT_CASES = {
     "caller_max_below_minz": ({"maximum-zoom": 2}, 5, 8, (8, 8, 0)),
 }
 
-_TILERS = ["build_pyramid", "resume_pyramid", "encode_point_tiles", "cli"]
+_TILERS = ["build_pyramid", "resume_pyramid", "encode_point_tiles", "cli",
+           "encode_geom_tiles"]
 
 
 @pytest.fixture(scope="module")
@@ -508,7 +537,10 @@ def test_tilers_agree_on_input(spark, tmp_path, monkeypatch, input_points,
     resolves the zoom range of the NumPy reference over the EPSG:4326
     points and gives the EPSG:4326 run's tiles: no tile below the minimum
     zoom, the resolved range in the CLI's output name, and the caller's
-    settings object unchanged."""
+    settings object unchanged. encode_geom_tiles, fed the EPSG:4326 points
+    as WKB, gives the same tiles at explicit zooms and refuses a zoom
+    search, which reads lon/lat columns a WKB source does not have."""
+    from cloudtile_spark import geom
     from cloudtile_spark.cli import main
     from cloudtile_spark.operators import mvt
     from cloudtile_spark.plans.lineage import read_tiles, resume_pyramid
@@ -519,9 +551,21 @@ def test_tilers_agree_on_input(spark, tmp_path, monkeypatch, input_points,
     want = _tile_counts(build_pyramid(feats, TilingSettings(**kw), minz,
                                       maxz, with_ids=False))
     assert {z for z, _, _ in want} == set(range(minz, want_maxz + 1))
-    s = TilingSettings(projection="EPSG:3857", **kw)
+    s = TilingSettings(**({} if tiler == "encode_geom_tiles"
+                          else {"projection": "EPSG:3857"}), **kw)
     before = dict(s)
-    if tiler == "build_pyramid":
+    if tiler == "encode_geom_tiles":
+        wkb = spark.createDataFrame(
+            [(f, "point", bytearray(geom.wkb_point(lon, lat)))
+             for f, lon, lat in rows],
+            "feature_id long, geom_type string, geom_wkb binary")
+        if maxz == "g" or "extend-zooms-if-still-dropping" in kw:
+            with pytest.raises(NotImplementedError, match="WKB source"):
+                mvt.encode_geom_tiles(wkb, minz, maxz, settings=s)
+            return
+        got = _tile_counts(mvt.encode_geom_tiles(wkb, minz, maxz,
+                                                 settings=s))
+    elif tiler == "build_pyramid":
         got = _tile_counts(build_pyramid(merc, s, minz, maxz))
     elif tiler == "encode_point_tiles":
         got = _tile_counts(mvt.encode_point_tiles(merc, minz, maxz,

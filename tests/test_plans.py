@@ -14,6 +14,9 @@ Two tables:
 * ``_BUILDERS``: building and explaining a public operator's plan starts
   no Spark job.
 
+Besides the tables, one join-condition claim: both PIP forms test the
+bbox before the ray cast (``test_pip_tests_bbox_before_ray_cast``).
+
 Plan claims pinned elsewhere, not repeated here: the no-broadcast PIP and
 kNN at threshold -1 (``test_joins.py``:
 ``test_pip_shuffle_codegen_no_broadcast_no_python``,
@@ -229,3 +232,21 @@ def test_plan_builds_without_jobs(spark, inputs, name):
         sc.setLocalProperty("spark.jobGroup.id", None)
         caching.release_staged()
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize("name", ["pip_join", "pip_join_shuffle_codegen"])
+def test_pip_tests_bbox_before_ray_cast(spark, inputs, name):
+    """Both PIP forms test the zone bbox before the ray cast: in the join
+    condition the four bbox compares come before the first ``CASE WHEN``
+    of the unrolled ray cast, so the cheap compares short-circuit it for
+    every pair outside the bbox."""
+    plan = _BUILDERS[name](spark, inputs)._jdf.queryExecution() \
+        .executedPlan().toString()
+    cond = next(ln for ln in plan.splitlines()
+                if re.search(r"(BroadcastNestedLoop|ShuffledHash)Join", ln))
+    ray = cond.index("CASE WHEN")
+    bbox = [re.search(rf"\({c}#\d+ {op} {b}#\d+\)", cond)
+            for c, op, b in (("lon", ">=", "xmin"), ("lon", "<=", "xmax"),
+                             ("lat", ">=", "ymin"), ("lat", "<=", "ymax"))]
+    assert all(bbox), cond
+    assert max(m.start() for m in bbox) < ray, cond
