@@ -324,14 +324,12 @@ def polygonize_tiles(raster_df: DataFrame, size: int = GRID_SIZE) -> DataFrame:
                              0, f"h:{z}:{x}:{y}:{i}"))
         return rows
 
-    local = _map_tiles(raster_df, local_cc, _POLY_LOCAL_SCHEMA)
-    from .. import caching
-    # eager stage_view, not a lazy persist: the border self-join below
+    # an eager checkpoint, not a lazy persist: the border self-join below
     # scans the stage from two map stages at once, and with a lazy persist
     # building the raster_polygonize plan ran 42 jobs (119 stages), not 40
     # (101)
-    vl = caching.stage_view(local, "poly_local")
-    local = raster_df.sparkSession.table(vl)
+    local = _map_tiles(raster_df, local_cc, _POLY_LOCAL_SCHEMA) \
+        .localCheckpoint(eager=True)
 
     stats = local.where(F.col("kind") == "S").select("nid", "n_pixels")
     borders = (local.where(F.col("kind") == "E")

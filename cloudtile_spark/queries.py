@@ -140,11 +140,10 @@ class Query:
     doc: str = ""
 
     def __post_init__(self):
-        # persist lifecycle (caching.py): release the PREVIOUS query's
-        # staged caches on entry, so back-to-back registry runs (driver
-        # gate, bench) don't accumulate cached relations in executor
-        # memory; this query's own staged frames live until the next one
-        # starts — long enough for the caller to materialize the result.
+        # staging rule (caching.py): release the persisted stages on
+        # entry, so back-to-back registry runs (driver gate, bench) don't
+        # accumulate cached relations in executor memory; a result built
+        # earlier still collects (a released persist recomputes).
         inner = self.spark_fn
 
         def wrapped(spark: SparkSession, sf_dir: str,
@@ -976,18 +975,16 @@ def _geo_dbscan_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.graph import connected_components
 
     load_views(spark, sf_dir)
-    dense = caching.stage_view(
-        spark.sql(f"WITH {_GEO_CTE}, {_dbscan_prefix_ctes()} "
-                  "SELECT x, y, n, min_doc, nid FROM dense"),
-        "dbs_dense")
+    dense = spark.sql(f"WITH {_GEO_CTE}, {_dbscan_prefix_ctes()} "
+                      "SELECT x, y, n, min_doc, nid FROM dense") \
+        .localCheckpoint(eager=True)
     edges = spark.sql(
         f"WITH {_GEO_CTE}, {_dbscan_prefix_ctes()} "
         "SELECT nid_a, nid_b FROM e")
     cc = connected_components(edges, "nid_a", "nid_b") \
         .selectExpr("node AS nid", "component")
-    d = spark.table(dense)
     return (
-        d.join(cc, "nid", "left")
+        dense.join(cc, "nid", "left")
         .select(F.coalesce("component", "nid").alias("cluster"),
                 "n", "min_doc")
         .groupBy("cluster")
@@ -1599,29 +1596,31 @@ def _init_dedup_queries() -> None:
     from .operators import dedup as dd
 
     # minhash: STAGED on the Spark side — the band-rows stage (shingle
-    # hashing + 16 perms) is persisted and referenced 3x by name; inlined
+    # hashing + 16 perms) is checkpointed and referenced 3x; inlined
     # CTEs would recompute it per reference (measured: 20 parquet scans,
     # ~4-16s -> one scan per stage). Oracle stays the single statement
     # (identical algorithm; DuckDB materializes CTEs itself).
     duck_sql = dd.minhash_lsh_pairs_sql(dd.DUCK, dd.PLANTED_CORPUS_CTE)
 
-    def minhash_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        load_views(spark, sf_dir)
-        # the shingle+md5 text pass runs ONCE (staged stage-0), spread to
-        # session parallelism (single-row-group input scans as one task);
-        # band rows and verification shingle sets both derive from it
+    def minhash_stages(spark: SparkSession) -> dict[str, DataFrame]:
+        """The verify inputs ``vb`` (band rows) and ``vs`` (shingle sets),
+        both checkpointed from ONE checkpointed shingle+md5 text pass,
+        spread to session parallelism (single-row-group input scans as
+        one task)."""
         par_cte = dd.with_repartition_hint(
             dd.PLANTED_CORPUS_CTE, parallelism(spark))
-        vh = caching.stage_view(
-            spark.sql(dd.minhash_hashed_sql(dd.SPARK, par_cte)),
-            "lsh_h")
-        vb = caching.stage_view(
-            spark.sql(dd.minhash_band_rows_from_hashed_sql(dd.SPARK, vh)),
-            "lsh_b")
-        vs = caching.stage_view(
-            spark.sql(dd.minhash_shingles_from_hashed_sql(dd.SPARK, vh)),
-            "lsh_shs")
-        return spark.sql(dd.minhash_verify_sql(dd.SPARK, vb, vs))
+        vh = spark.sql(dd.minhash_hashed_sql(dd.SPARK, par_cte)) \
+            .localCheckpoint(eager=True)
+        return {
+            "vb": spark.sql(dd.minhash_band_rows_from_hashed_sql(
+                dd.SPARK, "{vh}"), vh=vh).localCheckpoint(eager=True),
+            "vs": spark.sql(dd.minhash_shingles_from_hashed_sql(
+                dd.SPARK, "{vh}"), vh=vh).localCheckpoint(eager=True)}
+
+    def minhash_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        load_views(spark, sf_dir)
+        return spark.sql(dd.minhash_verify_sql(dd.SPARK, "{vb}", "{vs}"),
+                         **minhash_stages(spark))
 
     REGISTRY["dedup_minhash_lsh"] = Query(
         "dedup_minhash_lsh", minhash_fn, duck_sql,
@@ -1630,15 +1629,13 @@ def _init_dedup_queries() -> None:
         "band-colliding candidates; hot buckets capped; signature stage "
         "persisted once on the Spark side",
     )
-    # simhash / ngram: same staging pattern — persist the expensive stage
-    # once on the Spark side; oracle keeps the single statement
+    # simhash / ngram: same staging pattern — checkpoint the expensive
+    # stage once on the Spark side; oracle keeps the single statement
     def simhash_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_views(spark, sf_dir)
-        vb = caching.stage_view(
-            spark.sql(dd.simhash_band_rows_sql(dd.SPARK,
-                                               dd.PLANTED_CORPUS_CTE)),
-            "sim_b")
-        return spark.sql(dd.simhash_verify_sql(dd.SPARK, vb))
+        vb = spark.sql(dd.simhash_band_rows_sql(
+            dd.SPARK, dd.PLANTED_CORPUS_CTE)).localCheckpoint(eager=True)
+        return spark.sql(dd.simhash_verify_sql(dd.SPARK, "{vb}"), vb=vb)
 
     REGISTRY["dedup_simhash"] = Query(
         "dedup_simhash", simhash_fn,
@@ -1650,14 +1647,12 @@ def _init_dedup_queries() -> None:
 
     def ngram_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_views(spark, sf_dir)
-        vs = caching.stage_view(
-            spark.sql(dd.ngram_shingles_sql(dd.SPARK,
-                                            dd.PLANTED_CORPUS_CTE)),
-            "ng_shs")
-        vi = caching.stage_view(
-            spark.sql(f"SELECT doc_id, explode(sh) AS s FROM {vs}"),
-            "ng_inv")
-        return spark.sql(dd.ngram_verify_sql(dd.SPARK, vs, vi))
+        vs = spark.sql(dd.ngram_shingles_sql(
+            dd.SPARK, dd.PLANTED_CORPUS_CTE)).localCheckpoint(eager=True)
+        vi = spark.sql("SELECT doc_id, explode(sh) AS s FROM {vs}",
+                       vs=vs).localCheckpoint(eager=True)
+        return spark.sql(dd.ngram_verify_sql(dd.SPARK, "{vs}", "{vi}"),
+                         vs=vs, vi=vi)
 
     REGISTRY["dedup_ngram_jaccard"] = Query(
         "dedup_ngram_jaccard", ngram_fn,
@@ -1829,18 +1824,8 @@ def _init_dedup_queries() -> None:
         from .operators.graph import connected_components
 
         load_views(spark, sf_dir)
-        par_cte = dd.with_repartition_hint(
-            dd.PLANTED_CORPUS_CTE, parallelism(spark))
-        vh = caching.stage_view(
-            spark.sql(dd.minhash_hashed_sql(dd.SPARK, par_cte)),
-            "cc_h")
-        vb = caching.stage_view(
-            spark.sql(dd.minhash_band_rows_from_hashed_sql(dd.SPARK, vh)),
-            "cc_b")
-        vs = caching.stage_view(
-            spark.sql(dd.minhash_shingles_from_hashed_sql(dd.SPARK, vh)),
-            "cc_shs")
-        pairs = spark.sql(dd.minhash_verify_sql(dd.SPARK, vb, vs))
+        pairs = spark.sql(dd.minhash_verify_sql(dd.SPARK, "{vb}", "{vs}"),
+                          **minhash_stages(spark))
         cc = connected_components(pairs, "doc_a", "doc_b")
         w = Window.partitionBy("component")
         return cc.select(
@@ -2203,8 +2188,9 @@ def _init_ann_lsh() -> None:
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_views(spark, sf_dir)
         stage_sql = ann_lsh_bucket_table_sql("spark", par=parallelism(spark))
-        vt = caching.stage_view(spark.sql(stage_sql), "lsh_t")
-        return spark.sql("WITH " + ann_lsh_rerank_body_sql("spark", vt))
+        vt = spark.sql(stage_sql).localCheckpoint(eager=True)
+        return spark.sql(
+            "WITH " + ann_lsh_rerank_body_sql("spark", "{vt}"), vt=vt)
 
     REGISTRY["ann_lsh_topk"] = Query(
         "ann_lsh_topk", fn, duck_sql,
@@ -2230,8 +2216,8 @@ def _init_ann_pq() -> None:
         # — the stage a deployment writes out; ~32x smaller than raw
         # vectors) at session parallelism, then ADC-search against it
         codes_sql = pq_codes_sql("spark", par=parallelism(spark))
-        vt = caching.stage_view(spark.sql(codes_sql), "pq_codes")
-        return spark.sql(pq_adc_body_sql("spark", vt))
+        vt = spark.sql(codes_sql).localCheckpoint(eager=True)
+        return spark.sql(pq_adc_body_sql("spark", "{vt}"), vt=vt)
 
     REGISTRY["ann_pq_topk"] = Query(
         "ann_pq_topk", fn, duck_sql,
@@ -3604,14 +3590,14 @@ def _init_embedding_neardup() -> None:
     )
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_views(spark, sf_dir)
-        vt = caching.stage_view(spark.sql(stage_sql), "emb_t")
+        vt = spark.sql(stage_sql).localCheckpoint(eager=True)
         return spark.sql(f"""
             WITH cand AS (
               SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {sim_spark} AS sim
-              FROM {vt} a JOIN {vt} b
+              FROM {{vt}} a JOIN {{vt}} b
                 ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
             SELECT vec_a, vec_b FROM cand WHERE sim >= 0.999
-        """)
+        """, vt=vt)
 
     REGISTRY["dedup_embedding_cosine"] = Query(
         "dedup_embedding_cosine", fn, duck_sql,
@@ -4563,8 +4549,8 @@ def _init_graph_triangles() -> None:
     # self-join) — Catalyst inlines CTEs, so a single WITH statement
     # would recompute the DISTINCT edge set per reference (the plan
     # audit counted 141 documents-scan mentions in that shape). Both
-    # stages are materialized once by caching.stage_view, an eager
-    # localCheckpoint that every reference, CTE or not, reads.
+    # stages are materialized once by an eager localCheckpoint that every
+    # reference, CTE or not, reads (caching.py).
     oracle = f"""
     WITH {raw_duck}
     SELECT node, cast(count(*) as bigint) AS n_triangles
@@ -4587,21 +4573,21 @@ def _init_graph_triangles() -> None:
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_views(spark, sf_dir)
-        canon = caching.stage_view(
-            spark.sql(f"WITH {raw} SELECT u, v FROM canon"), "tri_canon")
-        od = spark.sql(f"""
+        canon = spark.sql(f"WITH {raw} SELECT u, v FROM canon") \
+            .localCheckpoint(eager=True)
+        oriented = spark.sql(f"""
             WITH deg AS (
               SELECT node, cast(count(*) as bigint) AS d
-              FROM (SELECT u AS node FROM {canon}
-                    UNION ALL SELECT v FROM {canon})
+              FROM (SELECT u AS node FROM {{canon}}
+                    UNION ALL SELECT v FROM {{canon}})
               GROUP BY node)
             SELECT {orient_case.format(lo='u', hi='v')} AS src,
                    {orient_case.format(lo='v', hi='u')} AS dst
-            FROM {canon} c
+            FROM {{canon}} c
             JOIN deg du ON du.node = c.u
-            JOIN deg dv ON dv.node = c.v""")
-        oriented = caching.stage_view(od, "tri_oriented")
-        return spark.sql(f"""
+            JOIN deg dv ON dv.node = c.v""", canon=canon) \
+            .localCheckpoint(eager=True)
+        return spark.sql("""
             WITH wedge AS (SELECT o1.src AS a, o1.dst AS b, o2.dst AS c
                            FROM {oriented} o1 JOIN {oriented} o2
                              ON o1.src = o2.src AND o1.dst < o2.dst),
@@ -4613,7 +4599,7 @@ def _init_graph_triangles() -> None:
             FROM (SELECT a AS node FROM tri
                   UNION ALL SELECT b FROM tri
                   UNION ALL SELECT c FROM tri)
-            GROUP BY node""")
+            GROUP BY node""", canon=canon, oriented=oriented)
 
     REGISTRY["graph_triangles"] = Query(
         "graph_triangles", fn, oracle,
@@ -4811,22 +4797,21 @@ def _init_temporal_and_densify() -> None:
                  cast(floor(unix_micros(cast(ts as timestamp))
                             / 3600000000.0) as bigint)
             """)
-        vh = caching.stage_view(hourly, "gapfill_hourly")
         return spark.sql(f"""
-            WITH bounds AS (SELECT min(hr) AS lo, max(hr) AS hi FROM {vh}),
+            WITH bounds AS (SELECT min(hr) AS lo, max(hr) AS hi FROM {{vh}}),
             spine AS (SELECT explode(sequence(lo, hi)) AS hr FROM bounds),
-            types AS (SELECT DISTINCT event_type FROM {vh}),
+            types AS (SELECT DISTINCT event_type FROM {{vh}}),
             grid AS (SELECT t.event_type, s.hr
                      FROM types t CROSS JOIN spine s),
             j AS (SELECT g.event_type, g.hr, h.hr_sum,
                          coalesce(h.n_obs, cast(0 as bigint)) AS n_obs
-                  FROM grid g LEFT JOIN {vh} h
+                  FROM grid g LEFT JOIN {{vh}} h
                     ON h.event_type = g.event_type AND h.hr = g.hr)
             SELECT event_type, hr AS hour_bucket, n_obs,
                    coalesce(last_value(hr_sum, true) {_OVER_LOCF},
                             cast(-1 as bigint)) AS locf_sum_u
             FROM j
-            """)
+            """, vh=hourly.localCheckpoint(eager=True))
 
     REGISTRY["ts_gap_fill"] = Query(
         "ts_gap_fill", gapfill_fn, duck_gapfill,

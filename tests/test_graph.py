@@ -2,6 +2,9 @@
 
 import random
 
+import pytest
+
+from cloudtile_spark.operators import graph
 from cloudtile_spark.operators.graph import connected_components
 
 
@@ -218,3 +221,52 @@ def test_bfs_random_graph_matches_python_relaxation(spark):
         got = {r["node"]: r["dist"]
                for r in bfs_distances(df, nd, source=0, rounds=4).collect()}
         assert got == expect
+
+
+def _cc(edges, nodes):
+    return graph.connected_components(edges, "u", "v")
+
+
+def _pagerank(edges, nodes):
+    return graph.pagerank_quantized(
+        edges.selectExpr("u AS src", "v AS dst", "1L AS out_deg"), nodes)
+
+
+# (operator, edges (u, v), nodes, expected rows)
+_DEGENERATE = {
+    "cc_empty": (_cc, [], [], []),
+    "cc_lone_self_loop": (_cc, [(5, 5)], [], [(5, 5)]),
+    "cc_one_edge": (_cc, [(1, 2)], [], [(1, 1), (2, 1)]),
+    "cc_duplicate_edges": (_cc, [(1, 2), (1, 2), (2, 1)], [],
+                           [(1, 1), (2, 1)]),
+    # no inflow: an isolated node keeps only the teleport share
+    "pagerank_isolated_node": (_pagerank, [], [1],
+                               [(1, 150_000_000)]),
+    "pagerank_no_edges": (_pagerank, [], [], []),
+    # an isolated node has no neighbor label to adopt (docstring)
+    "lpa_isolated_nodes": (
+        lambda e, n: graph.label_propagation_sync(e, n, rounds=3),
+        [], [1, 2, 3], []),
+    "lpa_no_edges": (
+        lambda e, n: graph.label_propagation_sync(e, n, rounds=3),
+        [], [], []),
+    "bfs_source_absent": (
+        lambda e, n: graph.bfs_distances(e, n, source=9, rounds=3),
+        [(1, 2), (2, 1)], [1, 2], []),
+    "bfs_no_edges": (
+        lambda e, n: graph.bfs_distances(e, n, source=1, rounds=3),
+        [], [], []),
+    "kcore_no_edges": (
+        lambda e, n: graph.kcore_residual(e, k=2, rounds=3), [], [], []),
+}
+
+
+@pytest.mark.parametrize("case", list(_DEGENERATE))
+def test_graph_degenerate_inputs(spark, case):
+    """Every graph operator on degenerate input: no edges, no nodes, a
+    lone self-loop, one edge, duplicate edges, isolated nodes and a BFS
+    source that is not in the graph."""
+    fn, edges, nodes, want = _DEGENERATE[case]
+    out = fn(spark.createDataFrame(edges, "u long, v long"),
+             spark.createDataFrame([(n,) for n in nodes], "node long"))
+    assert sorted(map(tuple, out.collect())) == want

@@ -199,8 +199,7 @@ def test_knn_adaptive_stages_topk(spark, feats):
     caching.release_staged()
     try:
         out = knn_join_adaptive(feats, _queries(feats), k=5)
-        topk = [e[1] for e in caching._STAGED
-                if e[0] == "persist" and "rank" in e[1].columns]
+        topk = [df for df in caching._STAGED if "rank" in df.columns]
         assert len(topk) == 1 and topk[0].is_cached
         plan = out._jdf.queryExecution().withCachedData().toString()
         reads = [ln for ln in plan.splitlines()
@@ -217,8 +216,8 @@ def test_knn_adaptive_stages_query_side(spark, feats):
     caching.release_staged()
     try:
         out = knn_join_adaptive(feats, _queries(feats), k=5)
-        staged = [e[1] for e in caching._STAGED if e[0] == "persist"
-                  and e[1].columns == ["query_id", "qlon", "qlat"]]
+        staged = [df for df in caching._STAGED
+                  if df.columns == ["query_id", "qlon", "qlat"]]
         assert len(staged) == 1 and staged[0].is_cached
         plan = out._jdf.queryExecution().withCachedData().toString()
         reads = re.findall(

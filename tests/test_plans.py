@@ -213,7 +213,7 @@ _BUILDERS = {
         lambda s, i: raster.polygonize_tiles(_raster(s), 64),
 }
 _PLAN_TIME_JOBS = pytest.mark.xfail(strict=True, reason=(
-    "40 plan-time jobs: the eager stage_view and one _checksum action per "
+    "40 plan-time jobs: the eager checkpoint and one _checksum action per "
     "connected-components round (CHANGES.md FOUND, ROADMAP item 7)"))
 
 

@@ -5,10 +5,14 @@ schema, and an order-insensitive value hash.
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
        python tools/check_correctness.py --twice [sf_dir] [query ...]
 
---twice runs each selected Spark query TWICE back-to-back in the same
-session and fails on any hash drift between the invocations — catches
-caching/staged-view state bugs of the kind the serial contract in
-caching.py documents (r4 verdict Next #8).
+--twice invokes each selected Spark query a second time BEFORE collecting
+the first invocation's frame, collects the second frame and then the first,
+and fails on an error or on any hash drift between them — catches staging
+bugs where a later query frees or rebinds a stage that an earlier result
+still reads (caching.py).
+
+The session's driver memory is a quarter of the host's physical memory, so
+the gate can run next to the pytest suite without starving it.
 """
 
 from __future__ import annotations
@@ -97,29 +101,32 @@ def main() -> int:
         )
     # no console progress bars: they would share stdout's lines with the
     # PASS/FAIL lines and hide them in captured output
+    quarter_mb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+                  // 4 // 2**20)
     spark = get_spark("correctness", cores=8, shuffle_partitions=8,
-                      extra_conf={"spark.ui.showConsoleProgress": "false"})
+                      extra_conf={"spark.ui.showConsoleProgress": "false",
+                                  "spark.driver.memory": f"{quarter_mb}m"})
     failures = []
     for name, q in REGISTRY.items():
         if only and name not in only:
             continue
         try:
             sdf = q.spark_fn(spark, sf_dir)
-            srows = [tuple(r) for r in sdf.collect()]
-            scols = [f.lower() for f in sdf.columns]
-            stypes = {f.name.lower(): type_family(f.dataType.simpleString())
-                      for f in sdf.schema.fields}
-            sh, sn = table_hash(scols, srows)
             if twice:
                 sdf2 = q.spark_fn(spark, sf_dir)
                 sh2, sn2 = table_hash(
                     [f.lower() for f in sdf2.columns],
                     [tuple(r) for r in sdf2.collect()])
-                if (sh2, sn2) != (sh, sn):
-                    failures.append(name)
-                    print(f"FAIL {name}: second invocation drift "
-                          f"rows {sn}->{sn2} hash {sh[:12]}->{sh2[:12]}")
-                    continue
+            srows = [tuple(r) for r in sdf.collect()]
+            scols = [f.lower() for f in sdf.columns]
+            stypes = {f.name.lower(): type_family(f.dataType.simpleString())
+                      for f in sdf.schema.fields}
+            sh, sn = table_hash(scols, srows)
+            if twice and (sh2, sn2) != (sh, sn):
+                failures.append(name)
+                print(f"FAIL {name}: second invocation drift "
+                      f"rows {sn}->{sn2} hash {sh[:12]}->{sh2[:12]}")
+                continue
         except Exception as e:
             failures.append(name)
             print(f"FAIL {name}: spark error: {str(e)[:300]}")
