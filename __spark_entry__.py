@@ -29,7 +29,8 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: deterministic geo extraction over the documents table ->
     z0-8 tile pyramid with per-tile feature caps and checksums."""
     sf_dir = "/root/testdata/sf0.001"
-    feats = _q.docs_geo(spark, sf_dir).withColumnRenamed("doc_id", "feature_id")
+    _q.load_views(spark, sf_dir)
+    feats = _q.docs_geo(spark).withColumnRenamed("doc_id", "feature_id")
     return build_pyramid(feats, minz=0, maxz=8).select(
         "z", "x", "y", "feature_count", "checksum"
     ).orderBy("z", "x", "y")

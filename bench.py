@@ -302,7 +302,7 @@ def main() -> None:
         t, _ = timed(lambda: _materialize(q.spark_fn(spark, sf_dir), name),
                      warmup=name in WARM_LEGS)
         times[name] = round(t, 3)
-    # the last query's staged caches (Query wrapper releases on ENTRY only)
+    # the last query's staged caches (the registry entry releases on entry)
     caching.release_staged()
 
     spark.stop()

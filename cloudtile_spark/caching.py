@@ -30,9 +30,10 @@ that a live plan still reads.
   reads it only costs a recompute: staging is an optimization, never a
   correctness dependency.
 
-Registry queries (``queries.Query``) call :func:`release_staged` on entry,
-so back-to-back queries in one long-lived session (the correctness gate,
-bench repeats) do not accumulate persisted relations in executor memory.
+The registry entry (``queries._register``) calls :func:`release_staged`
+once per query call, before the builder runs, so back-to-back queries in
+one long-lived session (the correctness gate, bench repeats) do not
+accumulate persisted relations in executor memory.
 Releasing is safe at any time and from any session: a result built
 before the release still collects the same rows.
 """

@@ -617,3 +617,30 @@ def decode_png(payload: bytes) -> np.ndarray:
             raise ValueError(f"unsupported PNG filter {ftype}")
         out[y] = rec % 256
     return out.astype(np.uint8)
+
+
+def channel_stats(px: np.ndarray) -> tuple[int, int, int, int]:
+    """(sum_r, sum_g, sum_b, moment) of an (h, w, 3) pixel array. The
+    moment sum((3x + 7y) * (r + g + b)) weights each pixel by its position,
+    so a row flip, an axis swap or a dropped row changes it."""
+    px = px.astype(np.int64)
+    h, w, _ = px.shape
+    x = np.arange(w, dtype=np.int64)[None, :]
+    y = np.arange(h, dtype=np.int64)[:, None]
+    r, g, b = (int(v) for v in px.sum(axis=(0, 1)))
+    return r, g, b, int(((3 * x + 7 * y) * px.sum(axis=2)).sum())
+
+
+def map_media_ids(ids: DataFrame, rows_of, schema: str) -> DataFrame:
+    """Decode per media id on the executors: ``rows_of(media_id)`` returns
+    the output rows of one id of ``ids.media_id``, as tuples in the order
+    of ``schema`` (a DDL string)."""
+    cols = [field.split()[0] for field in schema.split(",")]
+
+    def kernel(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                [row for mid in pdf.media_id for row in rows_of(int(mid))],
+                columns=cols)
+
+    return ids.mapInPandas(kernel, schema=schema)

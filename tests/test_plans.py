@@ -31,16 +31,20 @@ import uuid
 from collections import Counter
 from contextlib import contextmanager
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from cloudtile_spark import caching, geom
-from cloudtile_spark.operators import mvt, pyramid, raster
+from cloudtile_spark.operators import borders, mvt, pyramid, raster
+from cloudtile_spark.operators.attributes import accumulate_attributes
 from cloudtile_spark.operators.extract import extract_features
 from cloudtile_spark.operators.graph import _large_star, _small_star
 from cloudtile_spark.operators.joins import (
     knn_join_adaptive, knn_join_shuffle, pip_join, pip_join_shuffle_codegen)
-from cloudtile_spark.queries import REGISTRY, docs_geo
+from cloudtile_spark.operators.temporal import asof_join
+from cloudtile_spark.queries import REGISTRY, docs_geo, load_views
+from cloudtile_spark.settings import TilingSettings
 from cloudtile_spark.sources.pages import synth_pages
 from cloudtile_spark.sources.zones import synth_zones
 
@@ -83,6 +87,11 @@ def _claim(name, build=None, threshold=None, zero=(), count=None, pushed=()):
     return pytest.param(build, threshold, zero, count or {}, pushed, id=name)
 
 
+def _docs_features(spark):
+    load_views(spark, SF_DIR)
+    return docs_geo(spark).withColumnRenamed("doc_id", "feature_id")
+
+
 def _staged(name, n):
     return _claim(name, zero=("Scan parquet",),
                   count={"Scan ExistingRDD": n})
@@ -91,8 +100,7 @@ def _staged(name, n):
 _CLAIMS = [
     # the cap is a salted two-phase hash agg, not a window sort
     _claim("build_pyramid", lambda spark: pyramid.build_pyramid(
-        docs_geo(spark, SF_DIR).withColumnRenamed("doc_id", "feature_id"),
-        minz=0, maxz=8), zero=(_SORT, _WINDOW)),
+        _docs_features(spark), minz=0, maxz=8), zero=(_SORT, _WINDOW)),
     # the skew-sensitive cap and merge paths: a window here is one reducer
     # sorting the z0 hot tile
     *(_claim(n, zero=(_WINDOW, _SORT)) for n in (
@@ -188,6 +196,34 @@ def _raster(spark):
     return raster.rasterize_zones(spark, synth_zones(10), z=7, size=64)
 
 
+def _asof(spark):
+    """Odd events joined as of the even ones, per user."""
+    ev = spark.range(40).select(
+        (F.col("id") % 4).alias("user_id"), F.col("id").alias("event_id"),
+        F.timestamp_seconds(F.col("id") * 60).alias("ts"))
+    even, odd = ev.where("event_id % 2 = 0"), ev.where("event_id % 2 = 1")
+    return asof_join(even, odd, on="ts", by="user_id",
+                     right_cols=("event_id",), tiebreak="event_id")
+
+
+def _accumulate(pts):
+    s = TilingSettings()
+    s["attribute-type"] = {"rank": "int"}
+    s["accumulate-attribute"] = {"rank": "sum"}
+    return accumulate_attributes(
+        pts.withColumn("grp", F.col("feature_id") % 3), s, ["grp"])
+
+
+def _squares(spark):
+    """Two unit squares sharing the edge x = 1, as WKB polygons."""
+    rings = [[(x, 0.0), (x + 1, 0.0), (x + 1, 1.0), (x, 1.0), (x, 0.0)]
+             for x in (0.0, 1.0)]
+    return spark.createDataFrame(
+        [(i, "polygon", bytearray(geom.wkb_polygon(np.array(r))))
+         for i, r in enumerate(rings)],
+        "feature_id long, geom_type string, geom_wkb binary")
+
+
 _BUILDERS = {
     "pip_join": lambda s, i: pip_join(i["feats"], synth_zones(25)),
     "pip_join_shuffle_codegen":
@@ -211,6 +247,10 @@ _BUILDERS = {
     "zonal_stats": lambda s, i: raster.zonal_stats(_raster(s), 64),
     "polygonize_tiles":
         lambda s, i: raster.polygonize_tiles(_raster(s), 64),
+    "asof_join": lambda s, i: _asof(s),
+    "accumulate_attributes": lambda s, i: _accumulate(i["pts"]),
+    "protected_nodes": lambda s, i: borders.protected_nodes(_squares(s)),
+    "tile_cover": lambda s, i: mvt.tile_cover(i["wkb"], 0, 3),
 }
 _PLAN_TIME_JOBS = pytest.mark.xfail(strict=True, reason=(
     "40 plan-time jobs: the eager checkpoint and one _checksum action per "

@@ -32,6 +32,8 @@ def duck():
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_matches_oracle(spark, duck, name):
     q = REGISTRY[name]
+    for t in TABLES:  # the entry registers the views it reads
+        spark.catalog.dropTempView(t)
     sdf = q.spark_fn(spark, SF_DIR)
     srows = [tuple(r) for r in sdf.collect()]
     scols = [c.lower() for c in sdf.columns]
@@ -59,6 +61,45 @@ def test_oracle_texts_are_pinned():
     pairs = sorted((name, q.oracle) for name, q in REGISTRY.items())
     digest = hashlib.sha256(json.dumps(pairs).encode()).hexdigest()
     assert digest == _ORACLE_TEXTS_SHA256
+
+
+def test_registry_wraps_each_builder_once():
+    """Every entry's ``spark_fn`` is the one registry wrapper: its
+    ``__wrapped__`` is the builder itself, not a second wrapper (which
+    would release the staged frames twice per call)."""
+    twice = [name for name, q in REGISTRY.items()
+             if hasattr(q.spark_fn.__wrapped__, "__wrapped__")]
+    assert twice == []
+
+
+def test_registry_entry_is_the_one_caller_of_load_views():
+    """Under cloudtile_spark/ only the registry entry calls ``load_views``:
+    it registers the views once per query call, and builders and helpers
+    read the views it left."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "cloudtile_spark"
+    callers = []
+
+    class Calls(ast.NodeVisitor):
+        def __init__(self, path):
+            self.path, self.scope = path, []
+
+        def visit_FunctionDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        def visit_Call(self, node):
+            f = node.func
+            if getattr(f, "id", getattr(f, "attr", None)) == "load_views":
+                callers.append((self.path, ".".join(self.scope)))
+            self.generic_visit(node)
+
+    for path in sorted(pkg.rglob("*.py")):
+        Calls(str(path.relative_to(pkg))).visit(ast.parse(path.read_text()))
+    assert callers == [("queries.py", "_register.deco.entry")]
 
 
 def test_skyline_two_phase_equals_brute_force(spark):
@@ -266,12 +307,13 @@ def test_sketch_aggregates_error_bounds(spark):
     observed value range and near the exact median."""
     from pyspark.sql import functions as F
 
-    from cloudtile_spark.queries import REGISTRY, docs_geo
+    from cloudtile_spark.queries import REGISTRY, docs_geo, load_views
     from cloudtile_spark import tiles
 
     approx = {r["x"]: r for r in
               REGISTRY["tile_approx_stats"].spark_fn(spark, SF_DIR).collect()}
-    g = docs_geo(spark, SF_DIR)
+    load_views(spark, SF_DIR)
+    g = docs_geo(spark)
     t = spark.read.parquet(f"{SF_DIR}/documents.parquet").join(g, "doc_id")
     exact = {r["x"]: r for r in (
         t.withColumn("x", F.expr(tiles.tile_x_sql("lon", "3")))
