@@ -42,7 +42,7 @@ def asof_join(
     """Attach to every `left` row the `right` row with the greatest
     `on` <= left.`on` (direction="backward"; "forward" = smallest >=)
     within the same `by` group. Left rows with no match keep NULLs
-    (left-outer semantics).
+    (left-outer semantics). A NULL `on` or `by` value matches nothing.
 
     `on` must be a TimestampType column in both inputs. `right_cols` are
     the right-side payload columns to carry (emitted as `<col><suffix>`);
@@ -60,6 +60,9 @@ def asof_join(
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward: {direction}")
     by_keys = [by] if isinstance(by, str) else list(by)
+    # a right row with no time or a NULL key matches no left row, as in
+    # an ASOF LEFT JOIN; left rows keep theirs and match nothing
+    right = right.dropna(subset=[on, *by_keys])
     left_payload = [c for c in left.columns if c not in by_keys]
 
     # parquet event times are TIMESTAMP_NTZ; unix_micros wants TIMESTAMP.

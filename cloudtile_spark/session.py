@@ -10,6 +10,13 @@ ones that matter at 100 TB and are harmless at test scale:
 - shuffle partitions sized to cores locally; on a real cluster this should be
   2-3x total executor cores (or left to AQE's coalesce from a higher number).
 
+Python workers run under ``cloudtile_spark.pydaemon``, PySpark's daemon
+with zip archives re-read only when they change (a reused worker otherwise
+re-parses ``pyspark.zip`` and the jars before every task). Workers import
+the engine from the driver's package root, which goes into
+``spark.executorEnv.PYTHONPATH``, whatever the driver's working directory
+or ``PYTHONPATH``.
+
 It also owns the one sizing rule of the operators: ``parallelism`` is the
 only reading of the session's core count, and ``salt_buckets`` the one salt
 count built on it.
@@ -20,6 +27,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory holding the package, on every Python worker's path
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -44,6 +54,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "cloudtile_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
         # shuffle/spill on tmpfs: on this single-node proxy the OS disk is
         # one shared spindle; a real cluster has per-node shuffle disks that

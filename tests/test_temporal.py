@@ -2,6 +2,7 @@
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from cloudtile_spark.operators.temporal import asof_join
@@ -170,3 +171,58 @@ def test_asof_forward_with_tolerance(spark):
     # 200 at 00:00 -> nearest-after is 05:00 (5 h, out) -> NULL
     assert _collect(out) == {100: 12, 101: 12, 102: None,
                              200: None, 300: None}
+
+
+_BASE = dt.datetime(2024, 1, 1)
+_BASE_US = int(_BASE.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6)
+
+
+def _at(s):
+    return None if s is None else _BASE + dt.timedelta(seconds=s)
+
+
+# case -> (left (k, t, id), right (k, t, v), tiebreak, checked column,
+#          want backward, want forward); want = sorted (id, value) pairs
+_DEGENERATE = {
+    "empty_left": ([], [(1, 0, 10)], None, "v_r", [], []),
+    "empty_right": ([(1, 5, 1)], [], None, "v_r", [(1, None)], [(1, None)]),
+    "one_row_each": ([(1, 5, 1)], [(1, 3, 10)], None, "v_r",
+                     [(1, 10)], [(1, None)]),
+    "dup_right_ts_tiebreak": (
+        [(1, 5, 1)], [(1, 5, 10), (1, 5, 12), (1, 5, 11)], "v", "v_r",
+        [(1, 12)], [(1, 12)]),
+    "dup_right_ts_no_tiebreak": (
+        [(1, 5, 1)], [(1, 5, 10), (1, 5, 12), (1, 5, 11)], None, "ts_r",
+        [(1, 5)], [(1, 5)]),
+    "dup_left_rows": ([(1, 5, 1), (1, 5, 1)], [(1, 3, 10), (1, 7, 20)],
+                      None, "v_r", [(1, 10), (1, 10)], [(1, 20), (1, 20)]),
+    "null_on_right": ([(1, 5, 1)], [(1, None, 10)], None, "v_r",
+                      [(1, None)], [(1, None)]),
+    "null_on_left": ([(1, None, 1), (1, 5, 2)], [(1, 3, 10), (1, 7, 20)],
+                     None, "v_r", [(1, None), (2, 10)], [(1, None), (2, 20)]),
+    "null_by_key": (
+        [(None, 5, 1), (1, 5, 2)],
+        [(None, 3, 10), (None, 7, 11), (1, 3, 20), (1, 7, 21)], None, "v_r",
+        [(1, None), (2, 20)], [(1, None), (2, 21)]),
+}
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+@pytest.mark.parametrize("case", sorted(_DEGENERATE))
+def test_temporal_degenerate_inputs(spark, case, direction):
+    """The as-of join on degenerate input, both directions: an empty side,
+    one row each, duplicate right timestamps with and without a
+    tiebreak, duplicate left rows, and a NULL time or key on either
+    side. A NULL matches nothing, as in DuckDB's ASOF LEFT JOIN."""
+    lrows, rrows, tiebreak, col, back, fwd = _DEGENERATE[case]
+    left = spark.createDataFrame([(k, _at(t), i) for k, t, i in lrows],
+                                 "k long, ts timestamp, id long")
+    right = spark.createDataFrame([(k, _at(t), v) for k, t, v in rrows],
+                                  "k long, ts timestamp, v long")
+    out = asof_join(left, right, on="ts", by="k", right_cols=("v",),
+                    tiebreak=tiebreak, direction=direction)
+    got = [(r.id, r[col]) for r in out.collect()]
+    if col == "ts_r":
+        got = [(i, None if t is None else (t - _BASE_US) // 1_000_000)
+               for i, t in got]
+    assert sorted(got, key=repr) == (back if direction == "backward" else fwd)
